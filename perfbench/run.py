@@ -35,10 +35,12 @@ ROOT = os.path.dirname(HERE)
 
 CORES = 4
 
-E2E_UNITS = {"setup_s": "s", "cpu_ms_per_op": "ms", "jobs_per_op": "count",
+E2E_UNITS = {"setup_s": "s", "jobs_per_op": "count", "tasks_per_op": "count",
              "peak_rss_mb": "MB"}
 EXT = ("exact_dedup", "minhash_pairs", "components", "sample_pack")
 LAYER_UNITS = {
+    "op.p50_ms": "ms", "executor.cpu_ms_per_op": "ms",
+    "process.cpu_ms_per_op": "ms",
     "engine.query_ms": "ms", "engine.query_jobs": "count",
     "operators.collect_ms": "ms", "operators.jobs_per_read": "count",
     "operators.tasks_per_read": "count", "operators.cpu_ms_per_read": "ms",
@@ -112,9 +114,11 @@ def _session(work: str):
     return spark
 
 
-def _stop(spark, sampler) -> None:
+def _stop(spark) -> None:
     """Stop Spark, end the JVM and wait until every process this run
     started has exited."""
+    from spans import descendants
+
     proc = getattr(spark.sparkContext._gateway, "proc", None)
     try:
         spark.stop()
@@ -127,9 +131,9 @@ def _stop(spark, sampler) -> None:
                 proc.kill()
                 proc.wait()
     deadline = time.time() + 30
-    while sampler.descendants() and time.time() < deadline:
+    while descendants() and time.time() < deadline:
         time.sleep(0.2)
-    for pid in sampler.descendants():
+    for pid in descendants():
         try:
             os.kill(pid, 9)
         except OSError:
@@ -154,13 +158,14 @@ def _mean(xs) -> float:
 
 def e2e_metrics(ops: list[dict], setup: list[float],
                 rss_mb: float) -> dict:
-    # Wall-clock latency and throughput are not among them: on a shared
-    # 4-core host they swung by 30-60% between runs of the same code,
-    # more than any bound allows.  They go to standard error instead.
+    # Wall-clock latency and throughput, and CPU time per operation, are
+    # not among them: on a shared 4-core host they moved by 10-60%
+    # between runs of the same code, more than the largest bound.  The
+    # traced run reports them per layer.
     return {
         "setup_s": statistics.median(setup),
-        "cpu_ms_per_op": _mean(o["counters"].cpu_ns for o in ops) / 1e6,
         "jobs_per_op": _mean(o["counters"].jobs for o in ops),
+        "tasks_per_op": _mean(o["counters"].tasks for o in ops),
         "peak_rss_mb": rss_mb,
     }
 
@@ -189,6 +194,13 @@ def layer_metrics(wl, tracer, ops: list[dict]) -> dict:
     m = {k: 0.0 for k in LAYER_UNITS}
     traced = [o for o in ops if o["traced"]]
     dur = (lambda r: r["end"] - r["start"])
+
+    # whole operations, from the untraced ones
+    plain = [o for o in ops if not o["traced"]]
+    m["op.p50_ms"] = _pct([o["wall"] for o in plain], 0.5) * 1e3
+    m["executor.cpu_ms_per_op"] = _mean(
+        o["counters"].cpu_ns for o in plain) / 1e6
+    m["process.cpu_ms_per_op"] = _mean(o["cpu_s"] for o in plain) * 1e3
 
     # reads: a read_warm op, or a maintain_mixed step's "read" span
     reads = []
@@ -342,7 +354,10 @@ def main() -> int:
         sys.stderr.write(
             f"setup_s {[round(x, 2) for x in setup]} layer "
             f"{ {k: v for k, v in wl.layer.items() if isinstance(v, list)} }"
-            f" ops_s {[round(o['wall'], 2) for o in ops]} "
+            f" ops_s {[round(o['wall'], 2) for o in ops]} executor_cpu_s "
+            f"{[round(o['counters'].cpu_ns / 1e9, 2) for o in ops]} "
+            f"process_cpu_s {[round(o['cpu_s'], 2) for o in ops]} "
+            f"tasks {[o['counters'].tasks for o in ops]} "
             f"{_latency_line(ops)}\n")
         for o in failed[:5]:
             sys.stderr.write(f"failed {o['kind']}: {o['error']}\n")
@@ -359,8 +374,12 @@ def main() -> int:
         if sampler.is_alive():
             sampler.stop()
         if spark is not None:
-            _stop(spark, sampler)
+            _stop(spark)
         shutil.rmtree(work, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(work))
+        except OSError:
+            pass  # another run's directory is still there
     print(json.dumps({
         "correct": not failed,
         "attempted": len(wl.ops),

@@ -11,7 +11,7 @@ status-store walk); job, stage and task counts from the public
 
 ``RssSampler`` sums the resident memory of this process and all of its
 descendants (the JVM and its Python workers) from ``/proc`` on one
-thread and keeps the peak.
+thread and keeps the peak; ``tree_cpu_s`` sums their CPU time.
 """
 
 from __future__ import annotations
@@ -45,6 +45,12 @@ class GroupCounters:
         return self
 
 
+def drain_events(spark) -> None:
+    """Wait until the status store has taken in every listener event
+    sent so far, so that counters of finished jobs are complete."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
 def group_counters(spark, group: str) -> GroupCounters:
     tracker = spark.sparkContext.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
@@ -55,9 +61,12 @@ def group_counters(spark, group: str) -> GroupCounters:
             continue
         for sid in ji.stageIds:
             si = tracker.getStageInfo(sid)
-            if si is not None and si.numTasks:
+            # tasks that ran: a stage skipped for a reused shuffle has
+            # numTasks but none completed
+            n = si.numCompletedTasks + si.numFailedTasks if si else 0
+            if n:
                 stages += 1
-                tasks += si.numTasks
+                tasks += n
     cpu, shuffle = _group_metrics(spark, group)
     return GroupCounters(len(jobs), stages, tasks, cpu, shuffle)
 
@@ -66,6 +75,7 @@ def ungrouped_totals(spark) -> tuple[int, int]:
     """(jobs run outside any job group, executor CPU ns of every stage)
     — whole-store figures for set-up, whose thread pools drop the job
     group."""
+    drain_events(spark)
     jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
     return jobs, _store_totals(spark)[0]
 
@@ -117,6 +127,7 @@ class Tracer:
     def collect_counters(self, since: int = 0) -> None:
         """Attach job-group counters to spans ``since`` onwards (called
         after an operation, outside its timed span)."""
+        drain_events(self.spark)
         for rec in self.spans[since:]:
             if rec["group"] and "counters" not in rec:
                 rec["counters"] = group_counters(self.spark, rec["group"])
@@ -160,6 +171,67 @@ class Tracer:
             fh.write(json.dumps({"self_s": self.self_times()}) + "\n")
 
 
+_PAGE = os.sysconf("SC_PAGE_SIZE")
+_HZ = os.sysconf("SC_CLK_TCK")
+
+
+def _procs() -> dict[int, tuple[int, int, int, int]]:
+    """``pid -> (ppid, CPU ticks, vsize, resident pages)`` of every live
+    process.  The CPU ticks are user plus system time of the process and
+    of its children that have exited and been waited for."""
+    out = {}
+    for d in os.listdir("/proc"):
+        if not d.isdigit():
+            continue
+        try:
+            with open(f"/proc/{d}/stat") as fh:
+                # comm may hold spaces; the fields after ')' are fixed
+                f = fh.read().rsplit(")", 1)[1].split()
+            out[int(d)] = (int(f[1]), sum(int(x) for x in f[11:15]),
+                           int(f[20]), int(f[21]))
+        except (OSError, IndexError, ValueError):
+            continue
+    return out
+
+
+def _tree(procs: dict) -> set[int]:
+    """This process and every live process below it."""
+    tree = {os.getpid()}
+    grew = True
+    while grew:
+        grew = False
+        for pid, (ppid, *_) in procs.items():
+            if ppid in tree and pid not in tree:
+                tree.add(pid)
+                grew = True
+    return tree
+
+
+def descendants() -> set[int]:
+    """Pids of every live process below this one."""
+    return _tree(_procs()) - {os.getpid()}
+
+
+def tree_cpu_s() -> float:
+    """CPU seconds used so far by this process tree: the Python driver,
+    the JVM and the Python workers."""
+    procs = _procs()
+    return sum(procs[p][1] for p in _tree(procs)) / _HZ
+
+
+def _tree_rss() -> int:
+    procs = _procs()
+    total = 0
+    for pid in _tree(procs):
+        ppid, _, vsize, rss = procs[pid]
+        # a child that still shares its parent's address space (the JVM
+        # starts helpers with vfork) would count the parent twice
+        if procs.get(ppid, (0, 0, None, None))[2:] == (vsize, rss):
+            continue
+        total += rss * _PAGE
+    return total
+
+
 class RssSampler(threading.Thread):
     """Peak summed RSS of this process tree, sampled every ``period``
     seconds."""
@@ -169,49 +241,14 @@ class RssSampler(threading.Thread):
         self.period = period
         self.peak = 0
         self._stop_ev = threading.Event()
-        self._page = os.sysconf("SC_PAGE_SIZE")
-
-    def descendants(self) -> set[int]:
-        """Pids of every live process below this one."""
-        parent = {}
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as fh:
-                    st = fh.read()
-                # comm may hold spaces; the fields after ')' are fixed
-                parent[int(d)] = int(st.rsplit(")", 1)[1].split()[1])
-            except (OSError, IndexError, ValueError):
-                continue
-        me = os.getpid()
-        tree = {me}
-        grew = True
-        while grew:
-            grew = False
-            for pid, ppid in parent.items():
-                if ppid in tree and pid not in tree:
-                    tree.add(pid)
-                    grew = True
-        return tree - {me}
-
-    def _tree_rss(self) -> int:
-        total = 0
-        for pid in self.descendants() | {os.getpid()}:
-            try:
-                with open(f"/proc/{pid}/statm") as fh:
-                    total += int(fh.read().split()[1]) * self._page
-            except (OSError, IndexError, ValueError):
-                continue
-        return total
 
     def run(self) -> None:
         while not self._stop_ev.is_set():
-            self.peak = max(self.peak, self._tree_rss())
+            self.peak = max(self.peak, _tree_rss())
             self._stop_ev.wait(self.period)
 
     def stop(self) -> float:
         self._stop_ev.set()
         self.join()
-        self.peak = max(self.peak, self._tree_rss())
+        self.peak = max(self.peak, _tree_rss())
         return self.peak / 2**20

@@ -27,7 +27,7 @@ import time
 import duckdb
 
 import datagen
-from spans import GroupCounters, ungrouped_totals
+from spans import GroupCounters, tree_cpu_s, ungrouped_totals
 
 # read_warm: the Inventory's warm queries, minus q18 (a rebuild
 # equivalence check: it builds views rather than reading them) and q33
@@ -93,6 +93,7 @@ class Workload:
         since = len(tr.spans)
         err = None
         result = None
+        cpu0 = tree_cpu_s()
         with tr.span("op", op=kind, group=True, always=True) as rec:
             t0 = time.perf_counter()
             try:
@@ -100,6 +101,7 @@ class Workload:
             except Exception as e:  # a failed op, not a crashed run
                 err = e
             wall = time.perf_counter() - t0
+        cpu_s = tree_cpu_s() - cpu0
         tr.enabled = False
         tr.collect_counters(since)
         ok = err is None
@@ -108,8 +110,8 @@ class Workload:
                 ok = bool(check(result))
             except Exception as e:
                 ok, err = False, e
-        op = {"kind": kind, "wall": wall, "ok": ok, "items": items,
-              "traced": traced, "span": rec,
+        op = {"kind": kind, "wall": wall, "cpu_s": cpu_s, "ok": ok,
+              "items": items, "traced": traced, "span": rec,
               "counters": tr.op_counters(rec)}
         if not ok:
             op["error"] = repr(err)[:300] if err else "wrong answer"
@@ -403,7 +405,7 @@ def _load_expected() -> dict:
 class CorpusPrep(Workload):
     name = "corpus_prep"
     # its set-up takes half a second, so take more for a steady median
-    setup_reps = 5
+    setup_reps = 9
 
     def prepare(self) -> None:
         self.corpus = self.seed % datagen.CORPORA
