@@ -1039,122 +1039,19 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def _pointer_jump(e: DataFrame, jumps: int = 8
-                  ) -> tuple[DataFrame, DataFrame]:
-    """One pointer-doubling contraction round — the classic PRAM
-    path-doubling lever, interleaved into the Kiveris alternation
-    (VERDICT r13 #3).  Returns ``(edges, pointer_frame)``: the caller
-    must :func:`~mapreduce_spark.extensions.util.release_local_checkpoint`
-    the pointer frame once the round built on ``edges`` has
-    materialized (its blocks feed the returned lazy plan).
-
-    ``p(u) = min(Γ(u) ∪ {u})`` over the symmetric edge set, then up to
-    ``jumps`` rounds of doubling ``p ← min(p, p∘p)``: after k rounds a
-    pointer has jumped 2^k hops, so every chain flattens onto its
-    LOCAL minimum (a node smaller than all its neighbors) in
-    log₂(depth) rounds.  The doubling stops early the moment an
-    iteration improves nothing, so shallow graphs pay one no-op
-    iteration, never ``jumps``.  Output edges = every input edge
-    rewritten through its endpoints' flattened pointer p*, plus the
-    ``(u → p*(u))`` pointer edges — the local-minima quotient graph, a
-    Borůvka-style contraction that collapses deep trees in one round
-    (a single grandparent hop measurably does not: round 14 left the
-    400k-node megatree at the pure path's 6 rounds).
-
-    Component-preserving both ways: every output edge stays inside its
-    component (u—p(u)—p(p(u))—… is a witness path), and every input
-    edge (u,v) stays connected through u—p*(u)—p*(v)—v.  A star forest
-    rooted at component minima is a fixed point (p*(u) = root for every
-    member), so interleaving this never disturbs the alternation's
-    convergence target.
-
-    Each doubling iteration is CHECKPOINTED: the self-join references
-    its input twice, so a lazy chain re-executes its children once per
-    reference — 2^k copies of the groupBy by iteration k (measured
-    round 14: 449 s for what the materialized form does in ~2 s).  The
-    stability probe doubles as the checkpoint materializer (one
-    node-frame job per iteration); each iteration releases its
-    predecessor's blocks, so at most two pointer frames are ever held.
-
-    Cost: one groupBy(min) (map-side partial agg — hot roots pre-fold
-    per task exactly like the star rounds' groupBy), ~log₂(depth)
-    node-frame self-joins, two edge⋈node equi-joins — keyed shuffles
-    in the same size class as one star round, with no new skew surface
-    (AQE splits hot-root join partitions the same way it does for the
-    stars).
-    """
-    sym = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    p2 = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("p2")
-    ).localCheckpoint(eager=False)
-    for _ in range(jumps):
-        gp = p2.select(
-            F.col("src").alias("p2"), F.col("p2").alias("_gp")
-        )
-        nxt = p2.join(gp, "p2", "left").select(
-            "src",
-            F.least("p2", F.coalesce("_gp", "p2")).alias("p2"),
-        ).localCheckpoint(eager=False)
-        # one job: materializes nxt's checkpoint AND answers whether
-        # this doubling still shortened any pointer.  count(), NOT
-        # isEmpty(): isEmpty is a limit-1 probe that stops at the
-        # first surviving row, leaving nxt's checkpoint PARTIALLY
-        # materialized — releasing p2 below would then strand nxt's
-        # uncomputed partitions behind a truncated lineage whose
-        # source blocks are gone (recompute storms at best, lost-block
-        # failures at worst).  count() scans every partition, so nxt
-        # is fully snapshotted before its predecessor is dropped.
-        stable = nxt.join(
-            p2.select("src", F.col("p2").alias("_old")), "src"
-        ).filter(F.col("p2") < F.col("_old")).count() == 0
-        release_local_checkpoint(p2)
-        p2 = nxt
-        if stable:
-            break
-    ptr = p2.select("src", F.col("p2").alias("dst"))
-    lhs = p2.select(F.col("src").alias("_lk"), F.col("p2").alias("_lp"))
-    rhs = p2.select(F.col("src").alias("_rk"), F.col("p2").alias("_rp"))
-    rewritten = (
-        e.join(lhs, F.col("src") == F.col("_lk"))
-        .join(rhs, F.col("dst") == F.col("_rk"))
-        .select(
-            F.greatest("_lp", "_rp").alias("src"),
-            F.least("_lp", "_rp").alias("dst"),
-        )
-    )
-    out = (
-        rewritten.union(ptr)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return out, p2
-
-
 def connected_components(edges: DataFrame, src: str = "id_a",
                          dst: str = "id_b",
-                         max_iter: int = 25,
-                         shortcut_every: int = 0) -> DataFrame:
+                         max_iter: int = 25) -> DataFrame:
     """(node, root) for every node of ``edges``: root = the minimum
     node id of the node's connected component (roots map to
     themselves).
 
     Alternating large-star/small-star until the edge-set fingerprint
     (count + xxhash64 bit_xor — detection only, never in the output) is
-    stable.  ``shortcut_every`` interleaves a pointer-doubling
-    contraction (:func:`_pointer_jump`) every that-many rounds —
-    MEASURED NOT TO PAY and therefore default-off (round 14): on the
-    10M-edge megatree rehearsal the contraction does cut convergence
-    from 7 rounds to 4, but one jump costs ~2.5 star-rounds of keyed
-    shuffles (fresh-session A/B: pure 83.2 s vs jump-interleaved
-    94.3 s; loop-only 51.6 vs 62-63 s across adaptive/eager/once
-    schedules), and the deep-tree multiplier the lever targets is
-    already bounded and FALLING at scale (1.11× uniform at 1M, ~5× at
-    10M, 1.64× at 100M — per-round cost, not round count, dominates
-    where it matters).  The flag stays for corpora whose pair graphs
-    are pathologically chain-shaped (the bare 400k-node tree was the
-    one shape measured to win, 12.2 vs 15.0 s); each round is
+    stable.  Interleaved pointer doubling was measured in round 14 as a
+    loss (pure 83.2 s vs jump-interleaved 94.3 s on the 10M-edge
+    megatree) and removed by the commit after 37e4000 ("Delete the
+    rejected levers and the one-off rehearsal tools").  Each round is
     localCheckpoint()ed so the iterative plan
     doesn't grow without bound (on a real cluster this is a reliable
     checkpoint to the cluster FS — same call shape), and the previous
@@ -1185,25 +1082,8 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     )
     prev = None
     prev_frame = None
-    force_pure = False
-    for i in range(max_iter):
-        # every `shortcut_every`-th round from round `shortcut_every`
-        # ON (0 disables — the pure Kiveris alternation) opens with a
-        # pointer-doubling contraction.  The delayed start keeps the
-        # common star-like dup graphs — which converge in ≤4 rounds —
-        # on the cheap pure path for their whole run (including their
-        # LAST round, which an i%k==k-1 schedule would tax), while
-        # deep trees, which reveal themselves by still being alive,
-        # start collapsing from round `shortcut_every` at the
-        # contraction rate instead of the alternation tail.
-        stepped, pure, jump_ptr = e, True, None
-        if (shortcut_every and not force_pure and i >= shortcut_every
-                and (i - shortcut_every) % shortcut_every == 0):
-            stepped, jump_ptr = _pointer_jump(e)
-            pure = False
-        new = _small_star(
-            _large_star(stepped)
-        ).localCheckpoint(eager=False)
+    for _ in range(max_iter):
+        new = _small_star(_large_star(e)).localCheckpoint(eager=False)
         n, h = new.agg(
             F.count("*"), F.bit_xor(F.xxhash64("src", "dst"))
         ).first()
@@ -1217,30 +1097,10 @@ def connected_components(edges: DataFrame, src: str = "id_a",
         # blocks — see util.release_local_checkpoint.
         if prev_frame is not None:
             release_local_checkpoint(prev_frame)
-        if jump_ptr is not None:
-            # the shortcut's internal pointer frame fed `new`'s plan;
-            # it is dead now that `new` materialized
-            release_local_checkpoint(jump_ptr)
         prev_frame = new
         e = new
-        # only a PURE star round may declare convergence: the Kiveris
-        # fixed-point theorem (stable alternation state = star forest
-        # rooted at component minima) is what makes the final `links`
-        # projection correct, and it speaks about the alternation
-        # operator alone.  A shortcut round that happens to reproduce
-        # its input fingerprint proves nothing about star shape; the
-        # next pure round breaks one iteration later at worst.
         if prev == (n, h):
-            if pure:
-                break
-            # the fingerprint went stable on a SHORTCUT round, which
-            # proves nothing about star shape — suppress the next
-            # round's shortcut so a pure alternation pass can witness
-            # the fixed point and break (otherwise shortcut_every=1
-            # would never see a pure round and always run max_iter)
-            force_pure = True
-        else:
-            force_pure = False
+            break
         prev = (n, h)
     # fixed points of the alternation are star forests rooted at the
     # component minimum: every non-root has exactly one (node → root)

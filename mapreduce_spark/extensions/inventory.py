@@ -27,6 +27,7 @@ from mapreduce_spark.extensions import (
     similarity,
     text,
 )
+from mapreduce_spark.extensions.util import normalized_vectors
 
 JACCARD_T = 0.5
 # deterministic pseudo-benchmark for the decontamination check: every
@@ -287,7 +288,7 @@ def x_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # share one persisted normalized corpus — half the scan/normalize
     # work; Spark's LRU block manager reclaims it
     emb = _emb(spark, sf_dir)
-    nd = similarity.normalized(emb).persist()
+    nd = normalized_vectors(emb).persist()
     return _recall_rows(
         similarity.rp_lsh_topk(emb, TOPK_QUERIES, TOPK_K, nd=nd),
         similarity.cosine_topk(emb, TOPK_QUERIES, TOPK_K, nd=nd),
@@ -296,7 +297,7 @@ def x_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def x_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    nd = similarity.normalized(emb).persist()
+    nd = normalized_vectors(emb).persist()
     return _recall_rows(
         similarity.ivf_topk(emb, TOPK_QUERIES, TOPK_K, nd=nd),
         similarity.cosine_topk(emb, TOPK_QUERIES, TOPK_K, nd=nd),

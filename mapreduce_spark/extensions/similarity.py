@@ -52,11 +52,6 @@ N_PLANES = 32
 LSH_BAND_BITS = 4
 
 
-def normalized(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding") -> DataFrame:
-    return normalized_vectors(emb, id_col, vec_col)
-
-
 def cosine_topk(emb: DataFrame, query_ids: list[int], k: int,
                 id_col: str = "vec_id",
                 vec_col: str = "embedding",
@@ -73,7 +68,7 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int,
     exact one) so the normalize+scan work isn't duplicated.
     """
     if nd is None:
-        nd = normalized(emb, id_col, vec_col)
+        nd = normalized_vectors(emb, id_col, vec_col)
     q = nd.filter(F.col("vid").isin(query_ids)).select(
         F.col("vid").alias("qid"), F.col("nv").alias("qv")
     )
@@ -131,7 +126,7 @@ def rp_lsh_candidates(emb: DataFrame, query_ids: list[int],
     query.  The join key is (band, band-bits) — uniformly distributed,
     so the self-join never sees the quadratic blowup of all-pairs."""
     if nd is None:
-        nd = normalized(emb, id_col, vec_col)
+        nd = normalized_vectors(emb, id_col, vec_col)
     # band values via the Arrow-batched sign kernel (_band_values):
     # one numpy sign(M @ Pᵀ) + bit-pack per batch — value-identical to
     # the per-plane column fold (plane i → band i//bits, weight
@@ -245,7 +240,7 @@ def near_dup_lsh(emb: DataFrame, threshold: float,
     buckets) + candidate distinct + two verification joins — the same
     candidates-then-verify shape as MinHash LSH.
     """
-    sigs = normalized(emb, id_col, vec_col).withColumn(
+    sigs = normalized_vectors(emb, id_col, vec_col).withColumn(
         "bands", _band_values(n_planes, band_bits)(F.col("nv"))
     ).persist()
     buckets = sigs.select(
@@ -321,7 +316,7 @@ def ivf_centroids(emb: DataFrame, k: int = 16, iters: int = 2,
     returns — bounding the fan-in at ~3n rows regardless of cluster
     width (exact-count fallback if the sketch undershoots)."""
     if nd is None:
-        nd = normalized(emb, id_col, vec_col)
+        nd = normalized_vectors(emb, id_col, vec_col)
     src = nd.select("vid", "nv")
     n = k * TRAIN_PER_CELL
 
@@ -499,7 +494,7 @@ def ivf_index(emb: DataFrame, n_cells: int | None = None,
         n = emb.count()
         n_cells = max(8, min(4096, int(n ** 0.5)))
     if nd is None:
-        nd = normalized(emb, id_col, vec_col)
+        nd = normalized_vectors(emb, id_col, vec_col)
     cents = ivf_centroids(
         emb, n_cells, id_col=id_col, vec_col=vec_col, nd=nd
     )
@@ -873,7 +868,7 @@ def ivf_append(path: str, new_emb: DataFrame,
         with open(cent_path) as f:
             cents = json.load(f)
         if nd is None:
-            nd = normalized(new_emb, id_col, vec_col)
+            nd = normalized_vectors(new_emb, id_col, vec_col)
         obs = Observation()
         fit = _cell_fit(cents)
         # inherit the bundle's multi-assignment width: a batch appended
@@ -1149,7 +1144,7 @@ def ivf_topk(emb: DataFrame | None, query_ids: list[int] | None,
                 nprobe = max(4, n_cells // 4)
 
         if nd is None:
-            nd = normalized(emb, id_col, vec_col)
+            nd = normalized_vectors(emb, id_col, vec_col)
         # the sizing count above doubles as ivf_centroids'
         # corpus_count, so training never re-counts the corpus
         cents = ivf_centroids(

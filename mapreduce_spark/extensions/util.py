@@ -5,8 +5,6 @@ from __future__ import annotations
 import os
 import warnings
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -56,8 +54,8 @@ def dot_col(x: Column, y: Column) -> Column:
 
     NB: higher-order-function lambdas are CodegenFallback — evaluated
     by the expression interpreter once per ELEMENT.  That sounds like
-    a reason to batch through Arrow (:func:`dot_pairs`), but the r15
-    interleaved A/B on the exact top-k shape measured the kernel as a
+    a reason to batch through an Arrow kernel, but the r15
+    interleaved A/B on the exact top-k shape measured one as a
     LOSS at pair-scoring sites (wall 1.56 → 2.25 s, JVM CPU 0.81 →
     1.22 + uncounted Python-worker CPU): a pair row carries BOTH
     d-dim arrays, so the Python boundary ships 2·d doubles per pair
@@ -71,41 +69,6 @@ def dot_col(x: Column, y: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def dot_pairs(x: Column, y: Column) -> Column:
-    """Arrow-batched Σ xᵢ·yᵢ over two array<double> columns.
-
-    One ``np.einsum`` per Arrow batch instead of an interpreted HOF
-    fold per element.  MEASURED AND REJECTED as the default for the
-    pair-scoring paths (r15): at bench scale (2k vectors × 64 dims ×
-    5 queries) it ships 2·d doubles per PAIR across the Python
-    boundary and loses ~45% wall to :func:`dot_col` — see that
-    docstring for the numbers.  Kept because the trade flips when the
-    per-pair payload is reused across many pairs on one side (dense
-    candidate lists per query at high dim), and because its
-    value-tolerance story is established: summation order differs
-    from the sequential fold only in the last float64 bits — the same
-    tolerance class as the DuckDB oracle's ``list_cosine_similarity``
-    (its own SIMD order); hash-equality of all four sim/embedding
-    contract rows was verified at sf0.01 AND sf0.1 with this kernel
-    wired in before the A/B reverted it.
-    """
-    @F.pandas_udf("double")
-    def _dot_kernel(a: pd.Series, b: pd.Series) -> pd.Series:
-        if not len(a):
-            return pd.Series([], dtype="float64")
-        A = np.array(a.tolist(), dtype=np.float64)
-        B = np.array(b.tolist(), dtype=np.float64)
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-
-    # the near-dup consumers filter on the produced column; without
-    # this the optimizer pushes that filter below the projection and
-    # evaluates the kernel TWICE (one ArrowEvalPython under the
-    # Filter, one above — guide §4.4 shape, observed on
-    # embedding_near_dup).  The kernel is pure, but nondeterministic
-    # marking is the documented lever that pins a single evaluation.
-    return _dot_kernel.asNondeterministic()(x, y)
 
 
 def norm_col(x: Column) -> Column:

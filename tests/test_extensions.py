@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_spark.extensions import dedup, multimodal, similarity, text
+from mapreduce_spark.extensions.util import normalized_vectors
 
 
 @pytest.fixture(scope="module")
@@ -16,37 +17,6 @@ def docs(spark, sf_dir):
 @pytest.fixture(scope="module")
 def emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-
-
-# ---------------------------------------------------------------------------
-# util kernels
-# ---------------------------------------------------------------------------
-
-def test_dot_pairs_matches_hof_fold(emb):
-    """The Arrow pair-dot kernel (kept as the documented alternative
-    to the JVM fold — see util.dot_col's r15 A/B note) agrees with
-    the fold to float64 reorder tolerance, and evaluates ONCE under a
-    filter on its output column (the §4.4 duplicate-evaluation shape
-    it guards against)."""
-    from mapreduce_spark.extensions.util import (
-        dot_col,
-        dot_pairs,
-        normalized_vectors,
-    )
-
-    nd = normalized_vectors(emb).limit(200)
-    both = nd.select(
-        dot_col(F.col("nv"), F.col("nv")).alias("h"),
-        dot_pairs(F.col("nv"), F.col("nv")).alias("a"),
-    ).collect()
-    assert both
-    assert all(abs(r.h - r.a) < 1e-9 for r in both)
-
-    filtered = nd.select(
-        "vid", dot_pairs(F.col("nv"), F.col("nv")).alias("d")
-    ).filter(F.col("d") >= 0.5)
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1
 
 
 # ---------------------------------------------------------------------------
@@ -258,9 +228,10 @@ def _uf_min_labels(edges):
 
 def test_connected_components_equals_union_find(spark):
     """Alternating large-star/small-star vs a driver-side union-find
-    on seeded random graphs plus a 64-node path — the worst case for
+    on seeded random graphs, a 64-node path — the worst case for
     naive min-label propagation (diameter-many rounds) that the star
-    alternation must close in O(log n)."""
+    alternation must close in O(log n) — and a 400-node random
+    recursive tree (the deep megatree shape)."""
     import random
 
     cases = []
@@ -273,6 +244,8 @@ def test_connected_components_equals_union_find(spark):
         ]
         cases.append([e for e in edges if e[0] != e[1]])
     cases.append([(i, i + 1) for i in range(63)])  # path-64
+    rng = random.Random(7)
+    cases.append([(i, rng.randrange(i)) for i in range(1, 400)])
     for edges in cases:
         want = _uf_min_labels(edges)
         df = spark.createDataFrame(edges, "id_a long, id_b long")
@@ -316,9 +289,9 @@ def test_cluster_representatives_keep_best(spark):
 
 
 def test_connected_components_mega_component(spark):
-    """VERDICT r12 #1 (correctness pin for the skew rehearsal —
-    tools/cc_skew_rehearsal.py carries the timing claim): one
-    component holding ~40% of all nodes, in both adversarial shapes:
+    """VERDICT r12 #1 (correctness pin for the skew rehearsal, whose
+    timings are in BASELINE.md): one component holding ~40% of all
+    nodes, in both adversarial shapes:
 
     - ``megastar``: pre-collapsed star on the min node — maximum
       groupBy/join key concentration from round 1;
@@ -635,8 +608,7 @@ def test_ivf_append_incremental(emb, tmp_path, spark):
     # (~0.13 cosine), which IS drift as the metric defines it
 
     # equivalence: full corpus assigned to the SAME centroids
-    full_idx = similarity._assign_cells(similarity.normalized(emb),
-                                        cents)
+    full_idx = similarity._assign_cells(normalized_vectors(emb), cents)
     dest2 = str(tmp_path / "full")
     similarity.write_ivf_index(full_idx, cents, dest2)
     b1 = similarity.read_ivf_index(spark, dest)
@@ -1739,7 +1711,6 @@ def test_centroid_sample_escalates_on_quantile_undershoot(spark):
     # patch the CLASSIC class — df.stat instantiates it, not the parent
     from pyspark.sql.classic.dataframe import DataFrameStatFunctions
 
-    from mapreduce_spark.extensions.util import normalized_vectors
 
     emb = spark.range(3000).select(
         F.col("id").alias("vec_id"),
@@ -1801,82 +1772,3 @@ def test_release_local_checkpoint_warns_once_on_internal_drift(spark):
         )
     finally:
         util._release_warned = False
-
-
-def test_connected_components_shortcut_paths_equal_union_find(spark):
-    """VERDICT r13 #3: the pointer-doubling contraction interleaved
-    into the star alternation must label IDENTICALLY to the pure path
-    (shortcut_every=0) and the driver union-find oracle — including on
-    the shapes the shortcut exists for (deep path, random recursive
-    tree) and with the jump firing every round (the harshest
-    interleaving)."""
-    import random
-
-    cases = [[(i, i + 1) for i in range(63)]]  # path-64
-    rng = random.Random(7)
-    cases.append(  # random recursive tree, 400 nodes (megatree shape)
-        [(i, rng.randrange(i)) for i in range(1, 400)]
-    )
-    for seed in (1, 3):
-        rng = random.Random(seed)
-        n = rng.choice([20, 120])
-        cases.append([
-            (a, b) for a, b in (
-                (rng.randrange(n), rng.randrange(n))
-                for _ in range(n * 2)
-            ) if a != b
-        ])
-    for edges in cases:
-        want = _uf_min_labels(edges)
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        for every in (0, 1, 4):
-            got = {
-                r["node"]: r["root"]
-                for r in dedup.connected_components(
-                    df, shortcut_every=every
-                ).collect()
-            }
-            assert got == want, f"shortcut_every={every}"
-
-
-def test_pointer_jump_preserves_components_and_fixed_point(spark):
-    """_pointer_jump alone: (a) same components as its input on a
-    random graph (checked through the full CC of the jumped edge set);
-    (b) a min-rooted star forest passes through unchanged (the
-    alternation's convergence target must be a fixed point of the
-    interleaved step too)."""
-    import random
-
-    rng = random.Random(11)
-    edges = [
-        (a, b) for a, b in (
-            (rng.randrange(60), rng.randrange(60)) for _ in range(90)
-        ) if a != b
-    ]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    e = df.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    jumped, _ptr = dedup._pointer_jump(e)
-    jumped = jumped.select(
-        F.col("src").alias("id_a"), F.col("dst").alias("id_b")
-    )
-    want = _uf_min_labels(edges)
-    got = {
-        r["node"]: r["root"]
-        for r in dedup.connected_components(jumped).collect()
-    }
-    # nodes can legitimately drop out of the EDGE set only if they
-    # became roots with all neighbors rewritten onto them — compare on
-    # the intersection, then check no component was split or merged
-    assert all(got[n] == want[n] for n in got), "components changed"
-
-    star = spark.createDataFrame(
-        [(i, 0) for i in range(1, 9)] + [(i, 20) for i in range(21, 25)],
-        "src long, dst long",
-    ).select(F.col("src"), F.col("dst"))
-    jstar, _p2 = dedup._pointer_jump(star)
-    back = {(r.src, r.dst) for r in jstar.collect()}
-    assert back == {(i, 0) for i in range(1, 9)} | {
-        (i, 20) for i in range(21, 25)
-    }, "min-rooted star forest must be a fixed point"

@@ -19,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_spark.extensions import similarity
+from mapreduce_spark.extensions.util import normalized_vectors
 
 DIM = 16
 N = 1500
@@ -42,7 +43,7 @@ def rnd_emb(spark):
 
 
 def test_assign_cells_r2_matches_numpy_top2(rnd_emb):
-    nd = similarity.normalized(rnd_emb)
+    nd = normalized_vectors(rnd_emb)
     cents = similarity.ivf_centroids(rnd_emb, 16, nd=nd)
     got = defaultdict(list)
     for r in similarity._assign_cells(nd, cents, r=2).collect():
@@ -55,7 +56,7 @@ def test_assign_cells_r2_matches_numpy_top2(rnd_emb):
 
 
 def test_assign_r_clamped_to_codebook(rnd_emb, tmp_path):
-    nd = similarity.normalized(rnd_emb).limit(50)
+    nd = normalized_vectors(rnd_emb).limit(50)
     cents = similarity.ivf_centroids(rnd_emb, 8, nd=nd)
     rows = similarity._assign_cells(nd, cents, r=99).collect()
     per = defaultdict(set)

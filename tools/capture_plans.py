@@ -11,9 +11,21 @@ times); extension queries plan straight from the parquet inputs.
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _printable(plan: str) -> str:
+    """Escape control characters other than newline and tab as
+    ``\\xNN``: a regex literal in a plan can carry a NUL, which makes
+    git store the capture as binary and refuse to diff it."""
+    return re.sub(
+        r"[\x00-\x08\x0b-\x1f\x7f]",
+        lambda m: f"\\x{ord(m.group()):02x}",
+        plan,
+    )
 
 
 def main():
@@ -73,7 +85,7 @@ def main():
             plan = f"EXPLAIN FAILED: {type(e).__name__}: {e}"
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(_printable(plan))
         print(f"wrote {path} ({len(plan)} bytes)")
 
 
