@@ -38,92 +38,40 @@ import json
 import os
 import shutil
 import statistics
-import sys
 import tempfile
 import time
 
+from mapreduce_spark.metrics import measure, stage_records
 
-def _group_metrics(spark, group: str) -> tuple[int, int]:
-    """(executor CPU ns, shuffle-write bytes) summed over every stage
-    of the jobs tagged with ``group`` — read from the JVM
-    AppStatusStore, so it costs a few py4j calls per stage of THAT
-    query only.
 
-    This is the attribution signal the ±40% whole-run steal band
-    cannot wash out (BASELINE.md): wall clock on this box swings with
-    co-tenant load, executor CPU time and shuffle bytes do not."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    gw = sc._gateway
-    ss = sc._jsc.sc().statusStore()
-    cpu = sw = 0
-    for jid in tracker.getJobIdsForGroup(group):
-        ji = tracker.getJobInfo(jid)
-        if ji is None:
-            continue
-        for sid in ji.stageIds:
-            try:
-                seq = ss.stageData(
-                    sid, False, gw.jvm.java.util.ArrayList(), False,
-                    gw.new_array(gw.jvm.double, 0),
-                )
-            except Exception:
-                continue  # skipped stage (reused exchange): no attempt
-            it = seq.iterator()
-            while it.hasNext():
-                st = it.next()
-                cpu += st.executorCpuTime()
-                sw += st.shuffleWriteBytes()
-    return cpu, sw
+def _group_metrics(spark, group: str | None = None) -> tuple[int, int]:
+    """(executor CPU ns, shuffle-write bytes) over the stages of
+    ``group``'s jobs, or of every stage in the status store."""
+    recs = stage_records(spark, group)
+    return (sum(r["cpu_ns"] for r in recs),
+            sum(r["shuffle_write"] for r in recs))
 
 
 def _store_totals(spark) -> tuple[int, int]:
-    """(executor CPU ns, shuffle-write bytes) over EVERY stage in the
-    status store.  Used only around the cold build: job-group
-    attribution misses work submitted from engine thread pools (a
-    plain Python thread's JVM twin does not inherit the group under
-    pinned-thread mode), and at session start the store is near-empty
-    so the full walk is cheap."""
-    sc = spark.sparkContext
-    gw = sc._gateway
-    ss = sc._jsc.sc().statusStore()
-    stages = ss.stageList(
-        gw.jvm.java.util.ArrayList(), False, False,
-        gw.new_array(gw.jvm.double, 0), gw.jvm.java.util.ArrayList(),
-    )
-    cpu = sw = 0
-    it = stages.iterator()
-    while it.hasNext():
-        st = it.next()
-        cpu += st.executorCpuTime()
-        sw += st.shuffleWriteBytes()
-    return cpu, sw
+    """``_group_metrics`` over every stage in the status store."""
+    return _group_metrics(spark)
 
 
 def _timed_samples(spark, fn, runs: int, label: str,
                    before=None) -> dict:
     """Median {wall, cpu, shuffle} over ``runs`` invocations of ``fn``
-    (each tagged with its own job group for metric attribution)."""
-    sc = spark.sparkContext
-    walls, cpus, shuffles = [], [], []
+    (each measured under its own job group)."""
+    ms = []
     for i in range(runs):
         if before is not None:
             before()
-        g = f"{label}-{i}"
-        sc.setJobGroup(g, g)
-        try:
-            t = time.time()
+        with measure(spark, f"{label}-{i}") as m:
             fn()
-            walls.append(time.time() - t)
-        finally:
-            sc._jsc.clearJobGroup()
-        cpu, sw = _group_metrics(spark, g)
-        cpus.append(cpu)
-        shuffles.append(sw)
+        ms.append(m)
     return {
-        "wall": round(statistics.median(walls), 4),
-        "cpu": round(statistics.median(cpus) / 1e9, 4),
-        "shuffle": int(statistics.median(shuffles)),
+        "wall": round(statistics.median(m["wall"] for m in ms), 4),
+        "cpu": round(statistics.median(m["cpu_ns"] for m in ms) / 1e9, 4),
+        "shuffle": int(statistics.median(m["shuffle_write"] for m in ms)),
     }
 
 
@@ -132,9 +80,6 @@ def _layered_read_overhead(spark, sf_dir: str, runs: int) -> dict:
     build one view as base + 9 (tomb, delta) layers, time a grouped
     read on the 10-piece stack, compact, time it again.  Reported as
     {layered_read_sec, compacted_read_sec, layered_read_ratio}."""
-    import statistics
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from mapreduce_spark.engine import Engine
@@ -195,7 +140,6 @@ def main() -> None:
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import SparkSession
 
     spark = (
@@ -227,12 +171,8 @@ def main() -> None:
         eng = Engine(spark, sf_dir, store)
         inv = Inventory(spark, sf_dir, engine=eng, warm=True)
 
-        c0, s0 = _store_totals(spark)
-        t0 = time.time()
-        inv.materialize()
-        cold_sec = time.time() - t0
-        c1, s1 = _store_totals(spark)
-        cold_cpu, cold_shuffle = c1 - c0, s1 - s0
+        with measure(spark, "cold-build") as cold:
+            inv.materialize()
 
         per_query: dict[str, float] = {}
         query_metrics: dict[str, dict] = {}
@@ -286,7 +226,7 @@ def main() -> None:
             "unit": "sec",
             "queries": {k: round(v, 3) for k, v in per_query.items()},
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "cold_build_sec": round(cold_sec, 2),
+            "cold_build_sec": round(cold["wall"], 2),
             "maintenance_q18_sec": maintenance_q18,
             "cpus": int(cpus),
             # the two CPU scalars the driver record needs to
@@ -297,7 +237,7 @@ def main() -> None:
                 m.get("cpu", 0.0) or 0.0
                 for k, m in query_metrics.items() if k != "q18"
             ), 2),
-            "cold_build_cpu_sec": round(cold_cpu / 1e9, 2),
+            "cold_build_cpu_sec": round(cold["cpu_ns"] / 1e9, 2),
         }
         # per-query medians of {wall s, executor-CPU s, shuffle-write
         # bytes}: CPU/shuffle are the attribution signal the box's
@@ -308,8 +248,8 @@ def main() -> None:
         detail = dict(
             summary,
             query_metrics=query_metrics,
-            cold_build_cpu_sec=round(cold_cpu / 1e9, 4),
-            cold_build_shuffle_bytes=int(cold_shuffle),
+            cold_build_cpu_sec=round(cold["cpu_ns"] / 1e9, 4),
+            cold_build_shuffle_bytes=int(cold["shuffle_write"]),
             runs=runs,
             **layered,
         )

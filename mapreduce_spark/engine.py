@@ -34,10 +34,11 @@ import logging
 import os
 import shutil
 import tempfile
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any, Callable
 
-from pyspark import StorageLevel
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -379,10 +380,56 @@ class Engine:
         same-view builds).  This is the deployment shape for "refresh
         all design docs" — wall time ≈ slowest view, not the sum.
         """
-        from concurrent.futures import ThreadPoolExecutor
+        self._run_pooled(max_parallel,
+                         [(self.update_view, n) for n in names])
 
+    def _run_pooled(self, max_parallel: int, tasks: list[tuple]) -> list:
+        """Run each ``(fn, *args)`` of ``tasks`` on a thread pool and
+        return the results in order.  Every task runs with the calling
+        thread's Spark local properties, so its jobs carry the caller's
+        job group and description.  Each task gets its own copy: Spark
+        sets per-query properties on a thread while a query runs."""
         with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            list(ex.map(self.update_view, names))
+            futs = [
+                ex.submit(inheritable_thread_target(self.spark)(fn), *args)
+                for fn, *args in tasks
+            ]
+            return [f.result() for f in futs]
+
+    def _ddoc_groups(
+        self, ddoc: str, built: bool
+    ) -> tuple[list[list[tuple[str, ViewDef]]], list[str]]:
+        """Split a design doc's views for a fused build (``built``
+        False) or refresh (True): ``groups`` of two or more fusable
+        ``(name, ViewDef)`` pairs over one table whose index is built
+        iff ``built``, and the names of every other view in ``rest``.
+        Identical definitions share one index (registry contract), so
+        each is listed once."""
+        by_table: dict[str, list[tuple[str, ViewDef]]] = {}
+        rest: list[str] = []
+        seen_sigs: set[str] = set()
+        for name, sig in self.registry.design_views(ddoc).items():
+            if sig in seen_sigs:
+                continue
+            seen_sigs.add(sig)
+            vdef = self._defs.get(sig)
+            entry = self.registry.get_view(sig)
+            has_index = entry is not None and bool(
+                entry.get("base") is not None or entry.get("layers")
+            )
+            if (
+                vdef is not None
+                and has_index == built
+                and vdef._fusable_specs is not None
+            ):
+                by_table.setdefault(vdef.table, []).append(
+                    (f"{ddoc}/{name}", vdef)
+                )
+            else:
+                rest.append(f"{ddoc}/{name}")
+        groups = [g for g in by_table.values() if len(g) > 1]
+        rest += [g[0][0] for g in by_table.values() if len(g) == 1]
+        return groups, rest
 
     def build_ddoc(self, ddoc: str, max_parallel: int = 4) -> None:
         """Materialize ALL views of a design doc — from ONE source
@@ -402,32 +449,7 @@ class Engine:
         refreshes — falls back to the per-view path, as does the whole
         group on a raw-doc contract drift.
         """
-        views = self.registry.design_views(ddoc)
-        fusable: list[tuple[str, ViewDef]] = []
-        rest: list[str] = []
-        seen_sigs: set[str] = set()
-        for name, sig in views.items():
-            if sig in seen_sigs:
-                # identical definitions share one index (registry
-                # contract): build the shared view once
-                continue
-            seen_sigs.add(sig)
-            vdef = self._defs.get(sig)
-            entry = self.registry.get_view(sig)
-            built = entry is not None and (
-                entry.get("base") is not None or entry.get("layers")
-            )
-            if (
-                vdef is not None
-                and not built
-                and vdef._fusable_specs is not None
-            ):
-                fusable.append((f"{ddoc}/{name}", vdef))
-            else:
-                rest.append(f"{ddoc}/{name}")
-        by_table: dict[str, list[tuple[str, ViewDef]]] = {}
-        for name, vdef in fusable:
-            by_table.setdefault(vdef.table, []).append((name, vdef))
+        groups, rest = self._ddoc_groups(ddoc, built=False)
 
         def run_group(group: list[tuple[str, ViewDef]]) -> list[str]:
             """Fuse one table's views; returns the names needing the
@@ -449,24 +471,14 @@ class Engine:
                 )
                 return [n for n, _ in group]
 
-        groups = []
-        for table, group in by_table.items():
-            if len(group) < 2:
-                rest.extend(n for n, _ in group)
-            else:
-                groups.append(group)
         # table groups and per-view builds are independent jobs —
         # overlap them on the scheduler like build_views does
-        from concurrent.futures import ThreadPoolExecutor
-
-        fallback: list[str] = []
-        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            futs = [ex.submit(run_group, g) for g in groups]
-            rest_futs = [ex.submit(self.update_view, n) for n in rest]
-            for f in futs:
-                fallback.extend(f.result())
-            for f in rest_futs:
-                f.result()
+        done = self._run_pooled(
+            max_parallel,
+            [(run_group, g) for g in groups]
+            + [(self.update_view, n) for n in rest],
+        )
+        fallback = [n for names in done[:len(groups)] for n in names]
         if fallback:
             self.build_views(fallback, max_parallel)
 
@@ -652,27 +664,7 @@ class Engine:
         re-aligns them).  Everything else — unbuilt views, interpreted
         views, other tables — takes the per-view ``update_view`` path,
         as does the whole group on a raw-doc contract drift."""
-        views = self.registry.design_views(ddoc)
-        fusable: list[tuple[str, ViewDef]] = []
-        rest: list[str] = []
-        seen_sigs: set[str] = set()
-        for name, sig in views.items():
-            if sig in seen_sigs:
-                continue
-            seen_sigs.add(sig)
-            vdef = self._defs.get(sig)
-            entry = self.registry.get_view(sig)
-            built = entry is not None and (
-                entry.get("base") is not None or entry.get("layers")
-            )
-            if vdef is not None and built \
-                    and vdef._fusable_specs is not None:
-                fusable.append((f"{ddoc}/{name}", vdef))
-            else:
-                rest.append(f"{ddoc}/{name}")
-        by_table: dict[str, list[tuple[str, ViewDef]]] = {}
-        for name, vdef in fusable:
-            by_table.setdefault(vdef.table, []).append((name, vdef))
+        groups, rest = self._ddoc_groups(ddoc, built=True)
 
         def run_group(group: list[tuple[str, ViewDef]]) -> list[str]:
             try:
@@ -694,25 +686,12 @@ class Engine:
                 )
                 return [n for n, _ in group]
 
-        groups = []
-        for table, group in by_table.items():
-            if len(group) < 2:
-                rest.extend(n for n, _ in group)
-            else:
-                groups.append(group)
-        from concurrent.futures import ThreadPoolExecutor
-
-        fallback: list[str] = []
-        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            futs = [ex.submit(run_group, g) for g in groups]
-            rest_futs = [
-                ex.submit(self.update_view, n, None, to_seq)
-                for n in rest
-            ]
-            for f in futs:
-                fallback.extend(f.result())
-            for f in rest_futs:
-                f.result()
+        done = self._run_pooled(
+            max_parallel,
+            [(run_group, g) for g in groups]
+            + [(self.update_view, n, None, to_seq) for n in rest],
+        )
+        fallback = [n for names in done[:len(groups)] for n in names]
         for n in fallback:
             self.update_view(n, None, to_seq)
 

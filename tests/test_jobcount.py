@@ -30,9 +30,12 @@ import pytest
 
 from mapreduce_spark.engine import Engine
 from mapreduce_spark.inventory import VIEW_DEFS, Inventory
+from mapreduce_spark.metrics import measure
 
-# Measured with tools/jobcount.py at sf0.001 AND sf0.01 (2026-08-15,
-# round 12): identical job counts at both scales.
+# Measured at sf0.001 AND sf0.01 (2026-08-15, round 12): identical job
+# counts at both scales.  test_warm_read_path_job_ceilings prints every
+# query's count (pytest -s or -rA shows it; SPARK_GRAFT_TEST_SF sets
+# the scale).
 JOB_CEILINGS = {
     "q01": 2, "q02": 3, "q04": 2, "q05": 2, "q06": 2, "q07": 1,
     "q08": 2, "q09": 3, "q10": 1, "q11": 6, "q12": 4, "q13": 2,
@@ -58,24 +61,21 @@ def test_warm_read_path_job_ceilings(spark, warm_inventory):
     """Every warm inventory query must stay at or below its pinned
     Spark-job ceiling.  One warmup run per query (first-touch
     schema/stat caches), then one measured run in a job group."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     over = []
     under = []
+    counts = {}
     for name, fn in warm_inventory.all_queries().items():
         fn().collect()  # warmup: one-time cache fills are not the gate
-        group = f"jobgate-{name}"
-        sc.setJobGroup(group, group)
-        try:
+        with measure(spark, f"jobgate-{name}") as m:
             fn().collect()
-        finally:
-            sc._jsc.clearJobGroup()
-        jobs = len(tracker.getJobIdsForGroup(group))
+        jobs = counts[name] = m["jobs"]
         ceiling = JOB_CEILINGS[name]
         if jobs > ceiling:
             over.append(f"{name}: {jobs} jobs > ceiling {ceiling}")
         elif jobs < ceiling:
             under.append(f"{name}: {jobs} < {ceiling}")
+    print("warm read-path jobs per query: " +
+          ", ".join(f"{k}={v}" for k, v in counts.items()))
     assert not over, (
         "warm read-path job-count regression (the r8-r10 wall-drift "
         "failure mode):\n  " + "\n  ".join(over)

@@ -1,0 +1,85 @@
+"""mapreduce_spark.metrics: job-group attribution of refreshes, queries
+and fused ddoc builds, and restoring the caller's job group."""
+
+from pyspark.sql import functions as F
+
+from mapreduce_spark.engine import Engine
+from mapreduce_spark.metrics import measure
+from mapreduce_spark.operators.mapphase import MapSpec
+
+
+def _last_job(spark) -> int:
+    """Id of a marker job run now.  Job ids are consecutive, so the
+    ids between two markers are every job the store gained."""
+    with measure(spark, "marker") as m:
+        spark.range(1).collect()
+    return max(r["job"] for r in m["stages_detail"])
+
+
+def _jobs(m) -> set[int]:
+    return {r["job"] for r in m["stages_detail"]}
+
+
+def test_refresh_then_query_metrics(spark, sf_dir, tmp_path):
+    eng = Engine(spark, sf_dir, str(tmp_path / "views"))
+    eng.put_design("m", {"qty": {
+        "map": MapSpec("lineitem", ("str", "l_returnflag"),
+                       ("num", "l_quantity")),
+        "reduce": "_sum",
+    }})
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    first = F.col("l_orderkey") % 2 == 0
+    eng.update_view("m/qty", changes=raw.filter(first))
+
+    lo = _last_job(spark)
+    with measure(spark, "refresh-query") as m:
+        eng.update_view("m/qty", changes=raw.filter(~first))
+        rows = eng.query("m/qty", group=True, stale="ok").rows()
+    hi = _last_job(spark)
+
+    assert rows
+    assert m["jobs"] > 0
+    assert _jobs(m) == set(range(lo + 1, hi))
+    assert m["jobs"] == hi - lo - 1
+    assert m["tasks"] > 0 and m["cpu_ns"] > 0 and m["wall"] > 0
+    recs = m["stages_detail"]
+    assert m["stages"] == sum(1 for r in recs if r["tasks"]) > 0
+    for k in ("tasks", "cpu_ns", "shuffle_read", "shuffle_write"):
+        assert m[k] == sum(r[k] for r in recs), k
+
+
+def test_fused_ddoc_build_jobs_keep_the_callers_group(
+        spark, sf_dir, tmp_path):
+    """build_ddoc runs the fused table group on a pool thread; its jobs
+    must still land in the caller's job group."""
+    eng = Engine(spark, sf_dir, str(tmp_path / "views"))
+    eng.put_design("dd", {
+        "by_flag": {"map": MapSpec("lineitem", ("str", "l_returnflag"),
+                                   ("num", "l_quantity"))},
+        "big_qty": {"map": MapSpec("lineitem", ("num", "l_quantity"),
+                                   None, where="l_quantity > 45")},
+    })
+    lo = _last_job(spark)
+    with measure(spark, "build") as m:
+        eng.build_ddoc("dd")
+    hi = _last_job(spark)
+    assert hi - lo - 1 > 0
+    assert _jobs(m) == set(range(lo + 1, hi))
+    assert m["jobs"] == hi - lo - 1
+
+
+def test_measure_restores_the_enclosing_job_group(spark):
+    sc = spark.sparkContext
+    with measure(spark, "bare"):
+        spark.range(2).collect()
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+    sc.setJobGroup("outer", "outer job")
+    try:
+        with measure(spark, "inner") as m:
+            spark.range(2).collect()
+        assert m["jobs"] > 0
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer"
+        assert sc.getLocalProperty("spark.job.description") == "outer job"
+    finally:
+        sc._jsc.clearJobGroup()

@@ -5,54 +5,19 @@ Usage:
   python tools/profile_query.py q18 [runs]
 
 Runs the named query (EXT_BENCH_QUERIES or Inventory warm-mode qNN)
-under its own job group, then prints every stage of that group with
-{name, tasks, executorRunTime, executorCpuTime, shuffle read/write,
-python eval time} so CPU can be attributed to a specific operator in
-the plan.  Action = .write.format("noop") (guide §1.4) unless --collect
-is passed (bench parity).
+under ``mapreduce_spark.metrics.measure``, then prints the 25 stages of
+that run with the most executor CPU, each with {job, stage, tasks, CPU,
+run time, shuffle read/write MB, name}, so CPU can be attributed to a
+specific operator in the plan.  Action = .write.format("noop")
+(guide §1.4) unless --collect is passed (bench parity).
 """
 
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def stage_rows(spark, group):
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    gw = sc._gateway
-    ss = sc._jsc.sc().statusStore()
-    rows = []
-    for jid in sorted(tracker.getJobIdsForGroup(group)):
-        ji = tracker.getJobInfo(jid)
-        if ji is None:
-            continue
-        for sid in sorted(ji.stageIds):
-            try:
-                seq = ss.stageData(
-                    sid, False, gw.jvm.java.util.ArrayList(), False,
-                    gw.new_array(gw.jvm.double, 0),
-                )
-            except Exception:
-                continue
-            it = seq.iterator()
-            while it.hasNext():
-                st = it.next()
-                rows.append({
-                    "job": jid,
-                    "stage": sid,
-                    "name": st.name(),
-                    "tasks": st.numCompleteTasks(),
-                    "run_ms": st.executorRunTime(),
-                    "cpu_ms": st.executorCpuTime() / 1e6,
-                    "sr_mb": st.shuffleReadBytes() / 1e6,
-                    "sw_mb": st.shuffleWriteBytes() / 1e6,
-                })
-    return rows
 
 
 def main():
@@ -81,6 +46,8 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from mapreduce_spark.metrics import measure
+
     if name.startswith("q"):
         import tempfile
 
@@ -90,10 +57,7 @@ def main():
         eng = Engine(spark, sf_dir, tempfile.mkdtemp(prefix="prof-"))
         inv = Inventory(spark, sf_dir, engine=eng, warm=True)
         inv.materialize()
-        fn = inv.all_queries()[name]
-
-        def mk():
-            return fn()
+        mk = inv.all_queries()[name]
     else:
         from mapreduce_spark.extensions.inventory import EXT_BENCH_QUERIES
 
@@ -107,24 +71,19 @@ def main():
             df.write.format("noop").mode("overwrite").save()
 
     act(mk())  # warmup
-    sc = spark.sparkContext
     for i in range(runs):
         spark.catalog.clearCache()
-        g = f"prof-{name}-{i}"
-        sc.setJobGroup(g, g)
-        t0 = time.time()
-        act(mk())
-        wall = time.time() - t0
-        sc._jsc.clearJobGroup()
-        rows = stage_rows(spark, g)
-        print(f"\n=== run {i}: wall {wall:.3f}s  "
-              f"stages {len(rows)}  "
-              f"cpu {sum(r['cpu_ms'] for r in rows)/1e3:.2f}s ===")
-        for r in sorted(rows, key=lambda r: -r["cpu_ms"])[:25]:
-            nm = r["name"][:70]
+        with measure(spark, f"prof-{name}-{i}") as m:
+            act(mk())
+        print(f"\n=== run {i}: wall {m['wall']:.3f}s  "
+              f"stages {m['stages']}  cpu {m['cpu_ns'] / 1e9:.2f}s ===")
+        top = sorted(m["stages_detail"], key=lambda r: -r["cpu_ns"])
+        for r in top[:25]:
             print(f"  j{r['job']:<4} s{r['stage']:<5} t{r['tasks']:<4} "
-                  f"cpu {r['cpu_ms']/1e3:7.2f}s run {r['run_ms']/1e3:7.2f}s "
-                  f"sr {r['sr_mb']:6.2f} sw {r['sw_mb']:6.2f}  {nm}")
+                  f"cpu {r['cpu_ns'] / 1e9:7.2f}s "
+                  f"run {r['run_ms'] / 1e3:7.2f}s "
+                  f"sr {r['shuffle_read'] / 1e6:6.2f} "
+                  f"sw {r['shuffle_write'] / 1e6:6.2f}  {r['name'][:70]}")
 
 
 if __name__ == "__main__":
