@@ -85,6 +85,15 @@ log = logging.getLogger("mapreduce_spark.engine")
 _FANOUT_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 1 << 20)
 )
+# Per-doc emit-count files (base counts, layer lcounts) of at most this
+# many rows are written as ONE sorted file: same parquet min/max id
+# pruning, minus the partition spray or the range partitioner's
+# bounds-sampling job.
+_ONE_FILE_MAX_ROWS = 1_000_000
+# Change batches of at most this many docs semi-join the count metadata
+# against a broadcast of their ids; larger ones shuffle instead (the
+# build side must fit executor memory).
+_BROADCAST_MAX_IDS = 10_000_000
 
 
 def observed(obs: Observation) -> dict | None:
@@ -704,8 +713,9 @@ class Engine:
         Emit rows are tagged ``_vw`` ∈ [0, K); every changed doc also
         yields exactly one ``_vw = -1`` sentinel whose ``value_num``
         holds its seq (deleted docs included — they tombstone without
-        emitting).  Metrics (rows_i, w_i, n_i, mx) ride the same pass
-        so no piece of the refresh re-reads the source."""
+        emitting).  Metrics (rows_i, w_i, keys_i, n_i, lo_i, hi_i, mx)
+        ride the same pass so no piece of the refresh re-reads the
+        source."""
         t = TABLES[vdefs[0].table]
         if changes is not None:
             src = changes
@@ -767,6 +777,10 @@ class Engine:
                 is_sent & (F.col("value_num") > int(ls))
             )
             metrics.append(F.count(F.when(n_pred, 1)).alias(f"n{i}"))
+            # the changed ids' [lo, hi]: _write_lcounts' pruning bounds
+            changed = F.when(n_pred, F.col("id"))
+            metrics.append(F.min(changed).alias(f"lo{i}"))
+            metrics.append(F.max(changed).alias(f"hi{i}"))
         return frame, metrics
 
     def _refresh_fused(self, vdefs: list[ViewDef],
@@ -775,10 +789,10 @@ class Engine:
         """Fused-refresh body: one delta scan → per-view layer appends.
 
         Per view the outcome is identical to ``_update_view_impl``'s
-        incremental branch (delta layer, lcounts/tombstone file,
-        O(changes) removed-count accounting, stats and ``last_seq``
-        bump, compaction trigger) — the metamorphic test pins
-        fused ≡ per-view ≡ rebuild."""
+        incremental branch: the delta layer, then ``_append_layer``
+        (lcounts/tombstone file carrying the superseded-row count,
+        stats and ``last_seq`` bump, compaction trigger) — the
+        metamorphic test pins fused ≡ per-view ≡ rebuild."""
         import tempfile as _tf
 
         sigs = [v.sig for v in vdefs]
@@ -821,8 +835,7 @@ class Engine:
                 sig = vdef.sig
                 vdir = self.registry.view_dir(sig)
                 batch = entry["next_batch"]
-                delta_rel = f"delta-{batch}"
-                delta_path = os.path.join(vdir, delta_rel)
+                delta_path = os.path.join(vdir, f"delta-{batch}")
                 part = os.path.join(tmp, f"_vw={i}")
                 shutil.rmtree(delta_path, ignore_errors=True)
                 if os.path.isdir(part):
@@ -838,79 +851,11 @@ class Engine:
                     ids = ids.filter(
                         F.col("value_num") > int(last_seqs[i])
                     )
-                tomb_ids = ids.select("id").distinct()
-                lcounts_rel = f"lcounts-{batch}"
-                tomb_path = os.path.join(vdir, lcounts_rel)
-                # (changed ids as 0) ∪ (delta rows as 1) → sum per id:
-                # one exchange instead of distinct+groupBy+join (same
-                # rewrite as update_view — round 14; duplicate ids add
-                # zeros, so the result is row-identical)
-                lc = (
-                    ids.select(
-                        "id", F.lit(0).cast("long").alias("n")
-                    )
-                    .union(
-                        self.spark.read.schema(VIEW_SCHEMA)
-                        .parquet(delta_path)
-                        .select(
-                            "id", F.lit(1).cast("long").alias("n")
-                        )
-                    )
-                    .groupBy("id")
-                    .agg(F.sum("n").cast("long").alias("n"))
+                self._append_layer(
+                    sig, entry, batch, ids.select("id"), n_i,
+                    (m[f"lo{i}"], m[f"hi{i}"]), mx,
+                    {k: m[f"{k}{i}"] for k in ("rows", "w", "keys")},
                 )
-                lobs = Observation()
-                lc = lc.observe(
-                    lobs, F.min("id").alias("lo"),
-                    F.max("id").alias("hi"),
-                )
-                if n_i <= 1_000_000:
-                    lc = lc.coalesce(1)
-                lc.write.mode("overwrite").parquet(tomb_path)
-                lb = observed(lobs)
-                removed = 0
-                if entry.get("stats") is not None:
-                    self._ensure_counts(entry, vdir)
-                    removed = self._removed_count(
-                        entry, vdir, tomb_path, n_i,
-                        bounds=(lb["lo"], lb["hi"]) if lb else None,
-                    )
-                    if removed is None:
-                        removed = (
-                            self._assemble_view(sig)
-                            .select("id")
-                            .join(F.broadcast(tomb_ids), "id",
-                                  "left_semi")
-                            .count()
-                        )
-                entry["layers"].append(
-                    {"batch": batch, "delta": delta_rel,
-                     "tomb": lcounts_rel, "lcounts": lcounts_rel}
-                )
-                entry["next_batch"] = batch + 1
-                entry["last_seq"] = max(entry["last_seq"], mx)
-                prev = entry.get("stats")
-                if prev is not None:
-                    w_i = m[f"w{i}"]
-                    dw = int(w_i) if w_i is not None else -1
-                    entry["stats"] = {
-                        "rows": prev["rows"]
-                        + int(m[f"rows{i}"] or 0) - removed,
-                        "sum_w": max(prev["sum_w"], dw),
-                        # additive upper bound (deletes only shrink
-                        # the distinct set); compaction re-observes
-                        # the exact layout and tightens it
-                        "keys": (
-                            prev["keys"] + int(m[f"keys{i}"] or 0)
-                            if prev.get("keys") is not None else None
-                        ),
-                    }
-                self.registry.set_view(sig, entry)
-                if len(entry["layers"]) >= self.compact_after:
-                    if entry.get("manifest") is not None:
-                        self._compact_scoped_locked(sig, entry)
-                    else:
-                        self._compact(sig, entry)
         finally:
             if tmp is not None:
                 shutil.rmtree(tmp, ignore_errors=True)
@@ -1372,18 +1317,21 @@ class Engine:
             src = changes if changes is not None else self._source_df(
                 vdef, since=entry["last_seq"], to_seq=to_seq
             )
-            # probe (did anything change? new checkpoint seq) rides the
-            # delta-write scan instead of a scan of its own; count is
-            # safe here because the delta write is single-pass
+            # probe (did anything change? new checkpoint seq, the
+            # changed ids' [lo, hi] for _write_lcounts' pruning) rides
+            # the delta-write scan instead of a scan of its own; count
+            # is safe here because the delta write is single-pass
+            doc_id = doc_id_col(vdef.table)
             obs = Observation()
             src_obs = src.observe(
                 obs,
                 F.max(seq_col).alias("mx"),
                 F.count(F.lit(1)).alias("n"),
+                F.min(doc_id).alias("lo"),
+                F.max(doc_id).alias("hi"),
             )
             batch = entry["next_batch"]
-            delta_rel = f"delta-{batch}"
-            delta_path = os.path.join(vdir, delta_rel)
+            delta_path = os.path.join(vdir, f"delta-{batch}")
             # delta stats ride the delta-write pass (single-pass scan,
             # so count is safe without an exchange barrier)
             dobs = Observation()
@@ -1397,103 +1345,78 @@ class Engine:
             if probe is None or not probe["n"]:
                 shutil.rmtree(delta_path, ignore_errors=True)
                 return
-            # ONE (id, n) file per batch serves both roles: the n ≥ 0
-            # per-doc emit counts (future refreshes look up superseded
-            # row counts in O(changes) instead of scanning the view)
-            # AND the doc-id tombstone set — the tombstone ids are
-            # exactly lcounts' id column (n = 0 rows are deletes /
-            # no-longer-emitting docs), and every tombstone reader
-            # projects ``schema("id string")`` so parquet column
-            # pruning never materializes n.  Folding the two files
-            # saves a write job + a source re-scan per refresh.
-            lcounts_rel = tomb_rel = f"lcounts-{batch}"
-            tomb_path = os.path.join(vdir, lcounts_rel)
-            # (changed ids as 0) ∪ (delta rows as 1) → sum per id: the
-            # emit count for emitters, an explicit 0 for tombstone-only
-            # docs.  ONE exchange end to end — the previous
-            # distinct(src) ⟕ groupBy(delta) join shape paid three
-            # (distinct, groupBy, join) plus a broadcast, ~2 extra AQE
-            # jobs per refresh on q18's scheduling-latency-bound path
-            # (round 14); duplicate src rows only add zeros, so the
-            # result is row-identical to the join form.
-            lc = (
-                src.select(
-                    doc_id_col(vdef.table).alias("id"),
-                    F.lit(0).cast("long").alias("n"),
-                )
-                .union(
-                    self.spark.read.schema(VIEW_SCHEMA)
-                    .parquet(delta_path)
-                    .select("id", F.lit(1).cast("long").alias("n"))
-                )
-                .groupBy("id")
-                .agg(F.sum("n").cast("long").alias("n"))
+            self._append_layer(
+                sig, entry, batch, src.select(doc_id.alias("id")),
+                int(probe["n"]), (probe["lo"], probe["hi"]),
+                int(probe["mx"]), dobs.get,
             )
-            # tombstone-id [min,max] rides the lcounts write pass —
-            # _removed_count's pruning bounds without a job of its own
-            lobs = Observation()
-            lc = lc.observe(
-                lobs, F.min("id").alias("lo"), F.max("id").alias("hi")
+
+    def _append_layer(self, sig: str, entry: dict, batch: int,
+                      ids: DataFrame, n: int, bounds: tuple, mx: int,
+                      delta: dict) -> None:
+        """Commit a refresh batch whose ``delta-<batch>`` is written:
+        its lcounts/tombstone file, the layer, ``last_seq`` and stats,
+        then compaction once the stack reaches ``compact_after``.
+
+        ``ids`` are the batch's changed doc ids (duplicates allowed),
+        ``n`` bounds their number, ``bounds`` = their (min, max) and
+        ``delta`` = the delta write's observed (rows, w, keys).
+
+        A refresh that is about to fully compact skips the
+        superseded-row count: ``_compact`` re-observes exact stats, so
+        the layer is recorded with ``stats=None`` (unknown; readers
+        fall back to a count) rather than a row total that omits the
+        rows this batch supersedes — a crash before the compaction
+        lands leaves an honest registry."""
+        vdir = self.registry.view_dir(sig)
+        compacts = len(entry["layers"]) + 1 >= self.compact_after
+        scoped = entry.get("manifest") is not None
+        prev = entry.get("stats") if scoped or not compacts else None
+        lcounts_rel = f"lcounts-{batch}"
+        removed = self._write_lcounts(
+            entry, vdir, batch, ids, n, bounds, prior=prev is not None
+        )
+        if removed is None:
+            # pre-metadata storage layout: legacy one-shot id-pruned
+            # view scan (tombstone ids = the lcounts id column just
+            # written, like every other reader)
+            tomb_ids = self.spark.read.schema("id string").parquet(
+                os.path.join(vdir, lcounts_rel)
             )
-            if int(probe["n"] or 0) <= 1_000_000:
-                # typical refresh: one small file beats partition spray
-                lc = lc.coalesce(1)
-            lc.write.mode("overwrite").parquet(tomb_path)
-            lb = observed(lobs)
-            # rows this batch supersedes: live (pre-batch) emits of the
-            # changed docs, answered from the per-doc emit-count
-            # metadata (counts file / manifest sidecar / layer lcounts)
-            # in O(changes) — keeping total_rows a zero-job registry
-            # lookup at query time (the reference's index-metadata
-            # shape) without the old O(view) id-column scan.
-            removed = 0
-            if entry.get("stats") is not None:
-                self._ensure_counts(entry, vdir)
-                removed = self._removed_count(
-                    entry, vdir, tomb_path, int(probe["n"] or 0),
-                    bounds=(lb["lo"], lb["hi"]) if lb else None,
-                )
-                if removed is None:
-                    # pre-metadata storage layout: legacy one-shot
-                    # id-pruned view scan (tombstone ids = the lcounts
-                    # id column just written, like every other reader)
-                    tomb_ids = (
-                        self.spark.read.schema("id string")
-                        .parquet(tomb_path)
-                    )
-                    removed = (
-                        self._assemble_view(sig)
-                        .select("id")
-                        .join(F.broadcast(tomb_ids), "id", "left_semi")
-                        .count()
-                    )
-            entry["layers"].append(
-                {"batch": batch, "delta": delta_rel, "tomb": tomb_rel,
-                 "lcounts": lcounts_rel}
+            removed = (
+                self._assemble_view(sig)
+                .select("id")
+                .join(F.broadcast(tomb_ids), "id", "left_semi")
+                .count()
             )
-            entry["next_batch"] = batch + 1
-            entry["last_seq"] = max(entry["last_seq"], int(probe["mx"]))
-            dm = dobs.get
-            prev = entry.get("stats")
-            if prev is not None:
-                dw = int(dm["w"]) if dm["w"] is not None else -1
-                entry["stats"] = {
-                    "rows": prev["rows"] + int(dm["rows"] or 0) - removed,
-                    # max over live pieces; exact width is re-observed
-                    # at every compaction (see _compact)
-                    "sum_w": max(prev["sum_w"], dw),
-                    # additive distinct-key upper bound (see fused path)
-                    "keys": (
-                        prev["keys"] + int(dm["keys"] or 0)
-                        if prev.get("keys") is not None else None
-                    ),
-                }
-            self.registry.set_view(sig, entry)
-            if len(entry["layers"]) >= self.compact_after:
-                if entry.get("manifest") is not None:
-                    self._compact_scoped_locked(sig, entry)
-                else:
-                    self._compact(sig, entry)
+        entry["layers"].append(
+            {"batch": batch, "delta": f"delta-{batch}",
+             "tomb": lcounts_rel, "lcounts": lcounts_rel}
+        )
+        entry["next_batch"] = batch + 1
+        entry["last_seq"] = max(entry["last_seq"], mx)
+        entry["stats"] = None if prev is None else {
+            "rows": prev["rows"] + int(delta["rows"] or 0) - removed,
+            # max over live pieces; exact width is re-observed at every
+            # compaction (see _compact)
+            "sum_w": max(
+                prev["sum_w"],
+                int(delta["w"]) if delta["w"] is not None else -1,
+            ),
+            # additive distinct-key upper bound (deletes only shrink
+            # the distinct set); compaction re-observes the exact
+            # layout and tightens it
+            "keys": (
+                prev["keys"] + int(delta["keys"] or 0)
+                if prev.get("keys") is not None else None
+            ),
+        }
+        self.registry.set_view(sig, entry)
+        if compacts:
+            if scoped:
+                self._compact_scoped_locked(sig, entry)
+            else:
+                self._compact(sig, entry)
 
     def _write_sorted(self, view: DataFrame, path: str) -> dict:
         """Persist a view sorted+range-partitioned by key_enc so Parquet
@@ -1546,15 +1469,15 @@ class Engine:
         parquet min/max stats (the reference keeps the same per-doc
         emit bookkeeping in its index metadata).
 
-        Small views (``rows_bound`` ≤ 1M, registry stats) write ONE
-        sorted file instead: same min/max pruning, minus the range
-        partitioner's bounds-sampling job and its double execution of
-        the aggregation."""
+        Small views (``rows_bound`` ≤ ``_ONE_FILE_MAX_ROWS``, registry
+        stats) write ONE sorted file instead: same min/max pruning,
+        minus the range partitioner's bounds-sampling job and its
+        double execution of the aggregation."""
         counts = (
             self.spark.read.schema(VIEW_SCHEMA).parquet(data_path)
             .groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        if rows_bound is not None and rows_bound <= 1_000_000:
+        if rows_bound is not None and rows_bound <= _ONE_FILE_MAX_ROWS:
             counts = counts.coalesce(1)
         else:
             counts = counts.repartitionByRange("id")
@@ -1582,91 +1505,111 @@ class Engine:
             )
             entry["counts"] = counts_rel
 
-    def _base_counts(self, entry: dict, vdir: str) -> DataFrame | None:
-        """(id, n) live emit counts of the BASE piece, or None when the
-        storage predates count metadata (caller falls back)."""
+    def _count_pieces(self, entry: dict, vdir: str) -> list | None:
+        """(id, n, _rk) live emit counts per piece, oldest first: the
+        base counts (counts file / manifest sidecar) at rank 0, each
+        layer's lcounts at rank = its batch number.  The newest piece
+        holding a doc has its live emit count.  None when any piece
+        predates count metadata (the caller falls back)."""
         if entry.get("manifest") is not None:
             if not entry.get("sidecar_n"):
                 return None
-            side = self.spark.read.schema(
+            base = self.spark.read.schema(
                 "id string, file string, n long"
-            ).parquet(os.path.join(vdir, entry["sidecar"]))
-            return side.groupBy("id").agg(
-                F.sum("n").cast("long").alias("n")
+            ).parquet(os.path.join(vdir, entry["sidecar"])).groupBy(
+                "id"
+            ).agg(F.sum("n").cast("long").alias("n"))
+        elif entry["base"] is None:
+            base = self.spark.createDataFrame([], "id string, n long")
+        elif entry.get("counts") is None:
+            return None
+        else:
+            base = self.spark.read.schema("id string, n long").parquet(
+                os.path.join(vdir, entry["counts"])
             )
-        if entry["base"] is None:
-            return self.spark.createDataFrame([], "id string, n long")
-        c = entry.get("counts")
-        if c is None:
-            return None
-        return self.spark.read.schema("id string, n long").parquet(
-            os.path.join(vdir, c)
-        )
-
-    def _removed_count(self, entry: dict, vdir: str, tomb_path: str,
-                       n_hint: int,
-                       bounds: tuple | None = None) -> int | None:
-        """Live (pre-batch) emits of the changed docs, in O(changes).
-
-        The newest piece containing a doc holds its live emit count:
-        base counts (counts file / manifest sidecar) rank 0, each
-        layer's lcounts rank = its batch number.  Small change sets
-        collect to an ``isin`` predicate (pushed into the id-sorted
-        counts parquet → row-group pruning); large ones keep a
-        broadcast semi-join (amortized by the batch size).  Returns
-        None when any piece predates count metadata."""
-        base_counts = self._base_counts(entry, vdir)
-        if base_counts is None:
-            return None
-        tomb = self.spark.read.schema("id string").parquet(tomb_path)
-        pieces = [base_counts.withColumn("_rk", F.lit(0))]
+        pieces = [base.withColumn("_rk", F.lit(0).cast("long"))]
         for l in entry["layers"]:
-            lc = l.get("lcounts")
-            if lc is None:
+            if l.get("lcounts") is None:
                 return None
             pieces.append(
                 self.spark.read.schema("id string, n long")
-                .parquet(os.path.join(vdir, lc))
-                .withColumn("_rk", F.lit(l["batch"]))
+                .parquet(os.path.join(vdir, l["lcounts"]))
+                .withColumn("_rk", F.lit(l["batch"]).cast("long"))
             )
-        allc = pieces[0]
-        for p in pieces[1:]:
-            allc = allc.unionByName(p)
-        # Measured (PLANS.md round-7 "isin vs broadcast-semi"): an
-        # isin with k literal ids costs O(k) in plan compile/codegen —
-        # 0.7 s at 1k ids, 9.6 s at 20k, 50 s at 100k — while a
-        # broadcast left-semi is flat ~0.6 s at every k.  The only
-        # thing isin bought was parquet row-group pruning on the
-        # id-sorted counts file; a [min,max] BETWEEN derived from the
-        # change batch (one tiny agg over the one-file lcounts) keeps
-        # exactly that pruning with an O(1)-size plan and beat isin at
-        # EVERY measured size, clustered or random ids.  Huge batches
-        # (≳10M changed docs) skip the broadcast (build-side memory)
-        # for a shuffle semi-join.
-        # the [lo,hi] pruning bounds normally ride the lcounts write
-        # as an Observation (zero jobs — round 14); the agg fallback
-        # covers callers without a fresh write pass to piggyback on
-        if bounds is None:
-            b = tomb.agg(F.min("id").alias("lo"),
-                         F.max("id").alias("hi")).collect()[0]
-            bounds = (b["lo"], b["hi"])
-        lo, hi = bounds
-        if lo is None:
-            return 0
-        allc = allc.filter(F.col("id").between(lo, hi))
-        if n_hint <= 10_000_000:
-            allc = allc.join(F.broadcast(tomb), "id", "left_semi")
-        else:
-            allc = allc.join(tomb, "id", "left_semi")
-        from pyspark.sql import Window
+        return pieces
 
-        w = Window.partitionBy("id").orderBy(F.col("_rk").desc())
-        live = (
-            allc.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
+    def _write_lcounts(self, entry: dict, vdir: str, batch: int,
+                       ids: DataFrame, n: int, bounds: tuple,
+                       prior: bool) -> int | None:
+        """Write ``lcounts-<batch>``, the batch's (id, n) file, and
+        return the rows the batch supersedes (0 unless ``prior``).
+
+        ONE file serves two roles: the n ≥ 0 per-doc emit counts
+        (later refreshes look up superseded rows in O(changes) instead
+        of scanning the view) and the doc-id tombstone set — the
+        tombstone ids are exactly its id column (n = 0 rows are
+        deletes / no-longer-emitting docs), and every tombstone reader
+        projects ``schema("id string")`` so column pruning never
+        materializes n.
+
+        One exchange computes both: (changed ids, n=0) ∪ (delta rows,
+        n=1) ∪ (prior count pieces, n=0) → groupBy(id) gives the new
+        count ``sum(n)`` and the live pre-batch count ``prev`` = the
+        newest piece's n; ``Σ prev`` rides the write as an
+        Observation.  Duplicate ids only add zeros.  With ``prior``
+        the pieces are first cut to the batch's [lo, hi] (parquet
+        row-group pruning on the id-sorted counts files) and
+        semi-joined to the changed ids map-side, so the shuffle stays
+        O(changes × layer depth).  The semi-join broadcasts the ids:
+        an ``isin`` of k literal ids costs O(k) in plan compile
+        (measured 0.7 s at 1k ids, 50 s at 100k, PLANS.md round 7)
+        while the broadcast stays flat; past ``_BROADCAST_MAX_IDS`` it
+        shuffles instead.  Returns None when the storage predates
+        count metadata."""
+        pieces = None
+        if prior:
+            self._ensure_counts(entry, vdir)
+            pieces = self._count_pieces(entry, vdir)
+        lo, hi = bounds
+        pc = "struct<_rk:long,pn:long>"
+        parts = [
+            ids.select("id", F.lit(0).cast("long").alias("n"),
+                       F.lit(None).cast(pc).alias("_pc")),
+            self.spark.read.schema(VIEW_SCHEMA)
+            .parquet(os.path.join(vdir, f"delta-{batch}"))
+            .select("id", F.lit(1).cast("long").alias("n"),
+                    F.lit(None).cast(pc).alias("_pc")),
+        ]
+        if pieces and lo is not None:
+            allc = pieces[0]
+            for p in pieces[1:]:
+                allc = allc.unionByName(p)
+            allc = allc.filter(F.col("id").between(lo, hi)).join(
+                F.broadcast(ids) if n <= _BROADCAST_MAX_IDS else ids,
+                "id", "left_semi",
+            )
+            parts.append(allc.select(
+                "id", F.lit(0).cast("long").alias("n"),
+                F.struct("_rk", F.col("n").alias("pn")).alias("_pc"),
+            ))
+        lc = parts[0]
+        for p in parts[1:]:
+            lc = lc.unionByName(p)
+        lc = lc.groupBy("id").agg(
+            F.sum("n").cast("long").alias("n"),
+            F.max("_pc").getField("pn").alias("prev"),
         )
-        row = live.agg(F.sum("n").alias("s")).collect()[0]
-        return int(row["s"] or 0)
+        obs = Observation()
+        lc = lc.observe(obs, F.sum("prev").alias("removed"))
+        if n <= _ONE_FILE_MAX_ROWS:
+            # typical refresh: one small file beats partition spray
+            lc = lc.coalesce(1)
+        lc.select("id", "n").write.mode("overwrite").parquet(
+            os.path.join(vdir, f"lcounts-{batch}")
+        )
+        if prior and pieces is None:
+            return None
+        return int((observed(obs) or {}).get("removed") or 0)
 
     def _compact(self, sig: str, entry: dict) -> None:
         """Fold base+layers into a new base version (X7 auto_compaction)."""

@@ -48,6 +48,37 @@ def test_refresh_then_query_metrics(spark, sf_dir, tmp_path):
         assert m[k] == sum(r[k] for r in recs), k
 
 
+# Spark jobs per update_view of lineitem at sf0.001 with compact_after=2.
+# The superseded-row count rides the lcounts write (one broadcast of the
+# changed ids instead of a four-job count after it), and a refresh that
+# compacts skips it: 9 -> 6 for the first layer (which also writes the
+# base counts file) and 12 -> 8 for the compacting second layer.
+REFRESH_JOB_CEILINGS = {"layer": 6, "compacting": 8}
+
+
+def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
+    eng = Engine(spark, sf_dir, str(tmp_path / "views"), compact_after=2)
+    eng.put_design("m", {"qty": {
+        "map": MapSpec("lineitem", ("str", "l_returnflag"),
+                       ("num", "l_quantity")),
+        "reduce": "_sum",
+    }})
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = F.col("l_orderkey") % 3
+    eng.update_view("m/qty", changes=raw.filter(part == 0))
+    jobs = {}
+    for phase, k in (("layer", 1), ("compacting", 2)):
+        with measure(spark, f"refresh-{phase}") as m:
+            eng.update_view("m/qty", changes=raw.filter(part == k))
+        jobs[phase] = m["jobs"]
+    print(f"refresh jobs: {jobs}")
+    entry = eng.registry.get_view(eng.registry.resolve("m", "qty"))
+    assert not entry["layers"] and entry["base_version"] == 2
+    assert entry["stats"]["rows"] == raw.count()
+    over = {p: n for p, n in jobs.items() if n > REFRESH_JOB_CEILINGS[p]}
+    assert not over, f"refresh job count above ceiling: {over}"
+
+
 def test_fused_ddoc_build_jobs_keep_the_callers_group(
         spark, sf_dir, tmp_path):
     """build_ddoc runs the fused table group on a pool thread; its jobs
