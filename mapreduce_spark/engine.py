@@ -85,11 +85,44 @@ log = logging.getLogger("mapreduce_spark.engine")
 _FANOUT_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 1 << 20)
 )
-# Per-doc emit-count files (base counts, layer lcounts) of at most this
-# many rows are written as ONE sorted file: same parquet min/max id
-# pruning, minus the partition spray or the range partitioner's
-# bounds-sampling job.
+# Engine writes whose SCANNED input the registry bounds, before they
+# run, by at most their limit's rows run as ONE task writing ONE
+# sorted file (``_one_task``): ``coalesce(1)`` goes below the aggregate
+# or sort, so the plan has no exchange and no range partitioner's
+# bounds-sampling job.  ``_ONE_FILE_MAX_ROWS`` bounds the id-only count writes (base
+# counts, layer lcounts); ``_ONE_TASK_SORT_MAX_ROWS`` the full-row
+# sorted view write at compaction, where one task sorting every column
+# loses to the range path's parallel scan and sort sooner.  Each limit
+# sits near its crossover, measured on a 4-core box at local[4] over
+# sf0.1 lineitem views (median of 3, one task vs range path): sorted
+# write 0.64 vs 0.95 s at 60k rows, 0.83 vs 0.94 s at 100k, 1.01 vs
+# 0.83 s at 150k, 2.6 vs 1.6 s at 600k (the range path then writes 4
+# files); counts write 0.42 vs 0.70 s at 150k rows, 1.16 vs 1.11 s at
+# 600k, 1.77 vs 1.58 s at 1M.
 _ONE_FILE_MAX_ROWS = 1_000_000
+_ONE_TASK_SORT_MAX_ROWS = 100_000
+
+
+def _one_task(rows_bound: int | None, max_rows: int) -> bool:
+    """True when a write whose scanned input is bounded by
+    ``rows_bound`` rows (None: unknown) runs as one task."""
+    return rows_bound is not None and rows_bound <= max_rows
+
+
+def _registry_rows(entry: dict, layer_key: str) -> int | None:
+    """A view entry's ``base_rows`` plus every layer's ``layer_key``:
+    ``"rows"`` (delta rows) bounds what a full compaction scans,
+    ``"n"`` (changed ids) the count pieces (a base counts file holds
+    at most ``base_rows`` rows, a layer's lcounts at most its ``n``).
+    None when any is unknown (storage written before they were
+    recorded) or the base is a manifest (not ``base_rows``)."""
+    if entry.get("manifest") is not None:
+        return None
+    rows = [entry.get("base_rows")]
+    rows += [layer.get(layer_key) for layer in entry["layers"]]
+    return None if None in rows else sum(rows)
+
+
 # Change batches of at most this many docs semi-join the count metadata
 # against a broadcast of their ids; larger ones shuffle instead (the
 # build side must fit executor memory).
@@ -628,10 +661,12 @@ class Engine:
                     self.spark.createDataFrame(
                         [], VIEW_SCHEMA
                     ).write.mode("overwrite").parquet(dest)
+                rows = int(m[f"rows{i}"] or 0)
                 entry.update(
                     base=base_rel, base_version=1, last_seq=mx,
+                    base_rows=rows,
                     stats={
-                        "rows": int(m[f"rows{i}"] or 0),
+                        "rows": rows,
                         "sum_w": (
                             int(m[f"w{i}"])
                             if m[f"w{i}"] is not None else -1
@@ -828,22 +863,15 @@ class Engine:
                 return
             mx = int(m["mx"] or 0)
             ids_part = os.path.join(tmp, "_vw=-1")
+            ns = [int(m[f"n{i}"] or 0) for i in range(len(vdefs))]
             for i, (vdef, entry) in enumerate(zip(vdefs, entries)):
-                n_i = int(m[f"n{i}"] or 0)
-                if n_i == 0:
+                if ns[i] == 0:
                     continue
                 sig = vdef.sig
                 vdir = self.registry.view_dir(sig)
                 batch = entry["next_batch"]
-                delta_path = os.path.join(vdir, f"delta-{batch}")
-                part = os.path.join(tmp, f"_vw={i}")
-                shutil.rmtree(delta_path, ignore_errors=True)
-                if os.path.isdir(part):
-                    os.rename(part, delta_path)
-                else:  # changed docs exist but none passed the guards
-                    self.spark.createDataFrame(
-                        [], VIEW_SCHEMA
-                    ).write.mode("overwrite").parquet(delta_path)
+                self._take_delta(os.path.join(tmp, f"_vw={i}"),
+                                 os.path.join(vdir, f"delta-{batch}"))
                 ids = self.spark.read.schema(
                     "id string, value_num double"
                 ).parquet(ids_part)
@@ -851,8 +879,10 @@ class Engine:
                     ids = ids.filter(
                         F.col("value_num") > int(last_seqs[i])
                     )
+                # the view with the oldest checkpoint counts every
+                # sentinel: max(ns) bounds the rows of the ids file
                 self._append_layer(
-                    sig, entry, batch, ids.select("id"), n_i,
+                    sig, entry, batch, ids.select("id"), max(ns),
                     (m[f"lo{i}"], m[f"hi{i}"]), mx,
                     {k: m[f"{k}{i}"] for k in ("rows", "w", "keys")},
                 )
@@ -1309,7 +1339,7 @@ class Engine:
                 entry.update(
                     base=base_rel, base_version=1,
                     last_seq=int((m0 or {}).get("mx") or 0),
-                    stats=stats, counts=None,
+                    stats=stats, counts=None, base_rows=stats["rows"],
                 )
                 self.registry.set_view(sig, entry)
                 return
@@ -1317,39 +1347,67 @@ class Engine:
             src = changes if changes is not None else self._source_df(
                 vdef, since=entry["last_seq"], to_seq=to_seq
             )
-            # probe (did anything change? new checkpoint seq, the
-            # changed ids' [lo, hi] for _write_lcounts' pruning) rides
-            # the delta-write scan instead of a scan of its own; count
-            # is safe here because the delta write is single-pass
+            # ONE write pass lays out the delta (_vw=0) and the changed
+            # ids (_vw=-1, one row per source row), like the fused
+            # refresh's sentinels: _append_layer reads the ids from that
+            # small file, never the source again.  The probe (did
+            # anything change? new checkpoint seq, the ids' [lo, hi]
+            # for _write_lcounts' pruning) rides the id branch and the
+            # delta stats the emit branch; both are single-pass, so
+            # count is safe without an exchange barrier
             doc_id = doc_id_col(vdef.table)
             obs = Observation()
-            src_obs = src.observe(
+            ids = src.observe(
                 obs,
                 F.max(seq_col).alias("mx"),
                 F.count(F.lit(1)).alias("n"),
                 F.min(doc_id).alias("lo"),
                 F.max(doc_id).alias("hi"),
-            )
-            batch = entry["next_batch"]
-            delta_path = os.path.join(vdir, f"delta-{batch}")
-            # delta stats ride the delta-write pass (single-pass scan,
-            # so count is safe without an exchange barrier)
+            ).select(doc_id.alias("id"), F.lit(-1).alias("_vw"))
             dobs = Observation()
-            self._build(vdef, src_obs).observe(
+            emits = self._build(vdef, src).observe(
                 dobs,
                 F.count(F.lit(1)).alias("rows"),
                 F.max(F.size("value_num_arr")).alias("w"),
                 F.approx_count_distinct("key_enc").alias("keys"),
+            ).withColumn("_vw", F.lit(0))
+            batch = entry["next_batch"]
+            tmp = tempfile.mkdtemp(prefix="refresh-",
+                                   dir=self.registry.storage_dir)
+            try:
+                (
+                    emits.unionByName(ids, allowMissingColumns=True)
+                    .write.partitionBy("_vw").mode("overwrite")
+                    .parquet(tmp)
+                )
+                probe = observed(obs)
+                if probe is None or not probe["n"]:
+                    return
+                self._take_delta(os.path.join(tmp, "_vw=0"),
+                                 os.path.join(vdir, f"delta-{batch}"))
+                self._append_layer(
+                    sig, entry, batch,
+                    self.spark.read.schema("id string").parquet(
+                        os.path.join(tmp, "_vw=-1")
+                    ),
+                    int(probe["n"]), (probe["lo"], probe["hi"]),
+                    int(probe["mx"]),
+                    # None: the emit branch saw no rows (see observed())
+                    observed(dobs) or {"rows": 0, "w": None, "keys": 0},
+                )
+            finally:
+                shutil.rmtree(tmp, ignore_errors=True)
+
+    def _take_delta(self, part: str, delta_path: str) -> None:
+        """Move a refresh write's emit partition ``part`` to
+        ``delta_path``; an empty delta when no changed doc emitted."""
+        shutil.rmtree(delta_path, ignore_errors=True)
+        if os.path.isdir(part):
+            os.rename(part, delta_path)
+        else:
+            self.spark.createDataFrame(
+                [], VIEW_SCHEMA
             ).write.mode("overwrite").parquet(delta_path)
-            probe = observed(obs)
-            if probe is None or not probe["n"]:
-                shutil.rmtree(delta_path, ignore_errors=True)
-                return
-            self._append_layer(
-                sig, entry, batch, src.select(doc_id.alias("id")),
-                int(probe["n"]), (probe["lo"], probe["hi"]),
-                int(probe["mx"]), dobs.get,
-            )
 
     def _append_layer(self, sig: str, entry: dict, batch: int,
                       ids: DataFrame, n: int, bounds: tuple, mx: int,
@@ -1358,9 +1416,13 @@ class Engine:
         its lcounts/tombstone file, the layer, ``last_seq`` and stats,
         then compaction once the stack reaches ``compact_after``.
 
-        ``ids`` are the batch's changed doc ids (duplicates allowed),
-        ``n`` bounds their number, ``bounds`` = their (min, max) and
-        ``delta`` = the delta write's observed (rows, w, keys).
+        ``ids`` are the batch's changed doc ids (duplicates allowed,
+        possibly filtered from a larger file), ``n`` bounds the rows
+        ``ids`` scans, ``bounds`` = their (min, max) and ``delta`` =
+        the delta write's observed (rows, w, keys).  The layer records
+        ``rows`` (delta rows) and ``n`` (bounds its lcounts rows): with
+        ``base_rows`` they bound what later writes scan
+        (``_registry_rows``).
 
         A refresh that is about to fully compact skips the
         superseded-row count: ``_compact`` re-observes exact stats, so
@@ -1373,8 +1435,10 @@ class Engine:
         scoped = entry.get("manifest") is not None
         prev = entry.get("stats") if scoped or not compacts else None
         lcounts_rel = f"lcounts-{batch}"
+        delta_rows = int(delta["rows"] or 0)
         removed = self._write_lcounts(
-            entry, vdir, batch, ids, n, bounds, prior=prev is not None
+            entry, vdir, batch, ids, n, bounds, delta_rows,
+            prior=prev is not None,
         )
         if removed is None:
             # pre-metadata storage layout: legacy one-shot id-pruned
@@ -1391,12 +1455,13 @@ class Engine:
             )
         entry["layers"].append(
             {"batch": batch, "delta": f"delta-{batch}",
-             "tomb": lcounts_rel, "lcounts": lcounts_rel}
+             "tomb": lcounts_rel, "lcounts": lcounts_rel,
+             "rows": delta_rows, "n": n}
         )
         entry["next_batch"] = batch + 1
         entry["last_seq"] = max(entry["last_seq"], mx)
         entry["stats"] = None if prev is None else {
-            "rows": prev["rows"] + int(delta["rows"] or 0) - removed,
+            "rows": prev["rows"] + delta_rows - removed,
             # max over live pieces; exact width is re-observed at every
             # compaction (see _compact)
             "sum_w": max(
@@ -1418,21 +1483,31 @@ class Engine:
             else:
                 self._compact(sig, entry)
 
-    def _write_sorted(self, view: DataFrame, path: str) -> dict:
+    def _write_sorted(self, view: DataFrame, path: str,
+                      rows_bound: int | None = None) -> dict:
         """Persist a view sorted+range-partitioned by key_enc so Parquet
         row-group min/max stats give index-like range pruning (X1/X3).
+
+        When ``view`` scans at most ``rows_bound`` rows and that is at
+        most ``_ONE_TASK_SORT_MAX_ROWS`` (``_one_task``), one task
+        writes it as one sorted file instead: no exchange, no bounds
+        sampling, and a single pass over ``view``.
 
         Returns view statistics observed on the write pass itself (zero
         extra scans): exact row count and max ``value_num_arr`` width —
         the registry metadata that lets ``total_rows`` and dynamic-view
-        ``_sum`` answer without a probe job later.  The CollectMetrics
-        node sits ABOVE the range exchange, so the partitioner's extra
-        sampling pass over the child never double-counts.
+        ``_sum`` answer without a probe job later.  On the range path
+        the CollectMetrics node sits ABOVE the range exchange, so the
+        partitioner's extra sampling pass over the child never
+        double-counts.
         """
         obs = Observation()
+        if _one_task(rows_bound, _ONE_TASK_SORT_MAX_ROWS):
+            view = view.coalesce(1)
+        else:
+            view = view.repartitionByRange("key_enc", "id")
         (
-            view.repartitionByRange("key_enc", "id")
-            .observe(
+            view.observe(
                 obs,
                 F.count(F.lit(1)).alias("rows"),
                 F.max(F.size("value_num_arr")).alias("w"),
@@ -1469,17 +1544,18 @@ class Engine:
         parquet min/max stats (the reference keeps the same per-doc
         emit bookkeeping in its index metadata).
 
-        Small views (``rows_bound`` ≤ ``_ONE_FILE_MAX_ROWS``, registry
-        stats) write ONE sorted file instead: same min/max pruning,
-        minus the range partitioner's bounds-sampling job and its
-        double execution of the aggregation."""
-        counts = (
-            self.spark.read.schema(VIEW_SCHEMA).parquet(data_path)
-            .groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("n"))
+        A base of at most ``rows_bound`` rows (``_one_task``,
+        ``_ONE_FILE_MAX_ROWS``) is counted and written by ONE task as
+        one sorted file instead: the id scan is coalesced below the
+        aggregation, so the plan has no exchange at all."""
+        ids = self.spark.read.schema(VIEW_SCHEMA).parquet(data_path)
+        one = _one_task(rows_bound, _ONE_FILE_MAX_ROWS)
+        if one:
+            ids = ids.coalesce(1)
+        counts = ids.groupBy("id").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
         )
-        if rows_bound is not None and rows_bound <= _ONE_FILE_MAX_ROWS:
-            counts = counts.coalesce(1)
-        else:
+        if not one:
             counts = counts.repartitionByRange("id")
         (
             counts.sortWithinPartitions("id")
@@ -1501,7 +1577,7 @@ class Engine:
             self._write_counts(
                 os.path.join(vdir, entry["base"]),
                 os.path.join(vdir, counts_rel),
-                rows_bound=(entry.get("stats") or {}).get("rows"),
+                rows_bound=entry.get("base_rows"),
             )
             entry["counts"] = counts_rel
 
@@ -1540,7 +1616,7 @@ class Engine:
 
     def _write_lcounts(self, entry: dict, vdir: str, batch: int,
                        ids: DataFrame, n: int, bounds: tuple,
-                       prior: bool) -> int | None:
+                       delta_rows: int, prior: bool) -> int | None:
         """Write ``lcounts-<batch>``, the batch's (id, n) file, and
         return the rows the batch supersedes (0 unless ``prior``).
 
@@ -1552,20 +1628,24 @@ class Engine:
         projects ``schema("id string")`` so column pruning never
         materializes n.
 
-        One exchange computes both: (changed ids, n=0) ∪ (delta rows,
-        n=1) ∪ (prior count pieces, n=0) → groupBy(id) gives the new
-        count ``sum(n)`` and the live pre-batch count ``prev`` = the
-        newest piece's n; ``Σ prev`` rides the write as an
-        Observation.  Duplicate ids only add zeros.  With ``prior``
-        the pieces are first cut to the batch's [lo, hi] (parquet
-        row-group pruning on the id-sorted counts files) and
-        semi-joined to the changed ids map-side, so the shuffle stays
-        O(changes × layer depth).  The semi-join broadcasts the ids:
-        an ``isin`` of k literal ids costs O(k) in plan compile
-        (measured 0.7 s at 1k ids, 50 s at 100k, PLANS.md round 7)
-        while the broadcast stays flat; past ``_BROADCAST_MAX_IDS`` it
-        shuffles instead.  Returns None when the storage predates
-        count metadata."""
+        One aggregation computes both: (changed ids, n=0) ∪ (delta
+        rows, n=1) ∪ (prior count pieces, n=0) → groupBy(id) gives the
+        new count ``sum(n)`` and the live pre-batch count ``prev`` =
+        the newest piece's n; ``Σ prev`` rides the write as an
+        Observation.  Duplicate ids only add zeros.  When the rows it
+        scans (``n`` ids, ``delta_rows``, the pieces' ``_registry_rows``)
+        add up to at most ``_ONE_FILE_MAX_ROWS``, it aggregates in one
+        task with no exchange (``_one_task``); otherwise the scans run
+        in parallel, and a batch of at most that many ids still writes
+        one file.  With ``prior`` the pieces are first
+        cut to the batch's [lo, hi] (parquet row-group pruning on the
+        id-sorted counts files) and semi-joined to the changed ids
+        map-side, so the aggregation input stays O(changes × layer
+        depth).  The semi-join broadcasts the ids: an ``isin`` of k
+        literal ids costs O(k) in plan compile (measured 0.7 s at 1k
+        ids, 50 s at 100k, PLANS.md round 7) while the broadcast stays
+        flat; past ``_BROADCAST_MAX_IDS`` it shuffles instead.  Returns
+        None when the storage predates count metadata."""
         pieces = None
         if prior:
             self._ensure_counts(entry, vdir)
@@ -1580,7 +1660,9 @@ class Engine:
             .select("id", F.lit(1).cast("long").alias("n"),
                     F.lit(None).cast(pc).alias("_pc")),
         ]
+        scanned = [n, delta_rows]
         if pieces and lo is not None:
+            scanned.append(_registry_rows(entry, "n"))
             allc = pieces[0]
             for p in pieces[1:]:
                 allc = allc.unionByName(p)
@@ -1595,14 +1677,19 @@ class Engine:
         lc = parts[0]
         for p in parts[1:]:
             lc = lc.unionByName(p)
+        one = _one_task(
+            None if None in scanned else sum(scanned), _ONE_FILE_MAX_ROWS
+        )
+        if one:
+            # typical refresh: one task, no exchange, one small file
+            lc = lc.coalesce(1)
         lc = lc.groupBy("id").agg(
             F.sum("n").cast("long").alias("n"),
             F.max("_pc").getField("pn").alias("prev"),
         )
         obs = Observation()
         lc = lc.observe(obs, F.sum("prev").alias("removed"))
-        if n <= _ONE_FILE_MAX_ROWS:
-            # typical refresh: one small file beats partition spray
+        if not one and n <= _ONE_FILE_MAX_ROWS:
             lc = lc.coalesce(1)
         lc.select("id", "n").write.mode("overwrite").parquet(
             os.path.join(vdir, f"lcounts-{batch}")
@@ -1612,13 +1699,17 @@ class Engine:
         return int((observed(obs) or {}).get("removed") or 0)
 
     def _compact(self, sig: str, entry: dict) -> None:
-        """Fold base+layers into a new base version (X7 auto_compaction)."""
+        """Fold base+layers into a new base version (X7 auto_compaction).
+
+        The fold scans the base and every delta: their registry row
+        counts (``_registry_rows``) pick ``_write_sorted``'s path."""
         vdir = self.registry.view_dir(sig)
         assembled = self._assemble_view(sig)
         newv = entry["base_version"] + 1
         base_rel = f"base-v{newv}"
         entry["stats"] = self._write_sorted(
-            assembled, os.path.join(vdir, base_rel)
+            assembled, os.path.join(vdir, base_rel),
+            rows_bound=_registry_rows(entry, "rows"),
         )
         old_counts = [entry["counts"]] if entry.get("counts") else []
         if entry.get("manifest") is not None:
@@ -1647,7 +1738,7 @@ class Engine:
         # counts=None: the new base's counts file re-materializes
         # lazily on the next refresh (_ensure_counts)
         entry.update(base=base_rel, base_version=newv, layers=[],
-                     counts=None)
+                     counts=None, base_rows=entry["stats"]["rows"])
         entry["garbage"] = entry.get("garbage", []) + old
         self.registry.set_view(sig, entry)
 

@@ -3,11 +3,14 @@ envelope options — the parts the DuckDB oracle can't see."""
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+import mapreduce_spark.engine as engine_mod
 from mapreduce_spark.engine import Engine
 from mapreduce_spark.functions import sandbox
+from mapreduce_spark.metrics import measure
 from mapreduce_spark.operators.mapphase import MapSpec
 
 VIEW = {
@@ -1435,6 +1438,175 @@ def test_compacting_refresh_stats_exact_and_crash_recovers(
     ref.update_view("dd/by_flag")
     assert (_rows(eng.query("dd/by_flag", group_level=2, stale="ok"))
             == _rows(ref.query("dd/by_flag", group_level=2, stale="ok")))
+
+
+def test_small_compaction_is_one_task_and_range_path_agrees(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Refreshes of a small view (registry row counts under
+    ``_ONE_FILE_MAX_ROWS`` and ``_ONE_TASK_SORT_MAX_ROWS``) write their
+    count files and the compacted base with no exchange; the base is
+    one parquet file sorted by (key_enc, id), with exact stats.  With
+    both limits at 0 the same sequence takes the range / exchange path
+    (shuffles, more jobs) and gives the same answer and stats."""
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    part = F.col("l_orderkey") % 3
+
+    def run(store):
+        eng = Engine(spark, sf_dir, store, compact_after=2)
+        eng.put_design("d", {"v": VIEW})
+        eng.update_view("d/v", changes=raw.filter(part == 0))
+        # a first layer, then a compacting refresh; each re-sends the
+        # previous batch's docs, so both supersede rows
+        with measure(spark, "refreshes") as m:
+            eng.update_view("d/v", changes=raw.filter(part != 2))
+            eng.update_view("d/v", changes=raw.filter(part != 0))
+        sig = eng.registry.resolve("d", "v")
+        entry = eng.registry.get_view(sig)
+        assert not entry["layers"] and entry["base_version"] == 2
+        assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
+        grouped = _rows(eng.query("d/v", group_level=2, stale="ok"))
+        return eng.registry.view_dir(sig), entry, grouped, m
+
+    vdir, entry, grouped, m = run(str(tmp_path / "one"))
+    # base counts, both lcounts and the compaction: no exchange at all
+    assert m["shuffle_write"] == 0
+    assert entry["stats"]["rows"] == raw.count()
+    base = os.path.join(vdir, entry["base"])
+    files = [f for f in os.listdir(base) if f.endswith(".parquet")]
+    assert len(files) == 1
+    rows = pq.read_table(
+        os.path.join(base, files[0]), columns=["key_enc", "id"]
+    ).to_pylist()
+    keys = [(r["key_enc"], r["id"]) for r in rows]
+    assert len(keys) == entry["stats"]["rows"]
+    assert keys == sorted(keys)
+
+    monkeypatch.setattr(engine_mod, "_ONE_FILE_MAX_ROWS", 0)
+    monkeypatch.setattr(engine_mod, "_ONE_TASK_SORT_MAX_ROWS", 0)
+    _, rentry, rgrouped, rm = run(str(tmp_path / "range"))
+    assert rentry["stats"]["rows"] == entry["stats"]["rows"]
+    assert rgrouped == grouped
+    assert rm["shuffle_write"] > 0 and rm["jobs"] > m["jobs"]
+
+
+@pytest.mark.parametrize(
+    "fused", [False, True], ids=["update_view", "refresh_ddoc"]
+)
+def test_count_writes_crash_before_layer_commit_recovers(
+    spark, sf_dir, tmp_path, monkeypatch, fused
+):
+    """A refresh that crashes after its count files are on disk (the
+    base's ``counts-*`` and the batch's ``lcounts-<batch>``) but before
+    its layer commits leaves only orphan files: a fresh Engine on the
+    same storage keeps the old ``last_seq`` and answers like a
+    from-scratch build, and the retried refresh overwrites the orphans
+    and keeps ``stats.rows`` exact."""
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    seq = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
+    top = raw.agg(F.max(seq)).collect()[0][0]
+    cuts = [top // 3, 2 * top // 3]
+    names = ["dd/by_flag", "dd/big_qty"] if fused else ["dd/by_flag"]
+    store = str(tmp_path / "views")
+
+    def open_engine(path=store):
+        eng = Engine(spark, sf_dir, path, compact_after=3)
+        eng.put_design("dd", REFRESH_VIEWS)
+        return eng
+
+    def refresh(eng, to_seq):
+        if fused:
+            eng.refresh_ddoc("dd", to_seq=to_seq)
+        else:
+            eng.update_view(names[0], None, to_seq)
+
+    def grouped(eng):
+        return _rows(eng.query("dd/by_flag", group_level=2, stale="ok"))
+
+    def no_dup_ids(path):
+        ids = spark.read.parquet(path).select("id")
+        return ids.count() == ids.distinct().count()
+
+    eng = open_engine()
+    for n in names:
+        eng.update_view(n, None, cuts[0])
+    sig = eng.registry.resolve("dd", "by_flag")
+    vdir = eng.registry.view_dir(sig)
+    built = eng.registry.get_view(sig)
+    counts = os.path.join(vdir, f"counts-{built['base']}")
+    lcounts = os.path.join(vdir, f"lcounts-{built['next_batch']}")
+
+    def crash(sig, entry):
+        raise RuntimeError("crash before the layer commit")
+
+    monkeypatch.setattr(eng.registry, "set_view", crash)
+    with pytest.raises(RuntimeError, match="crash before"):
+        refresh(eng, cuts[1])
+    monkeypatch.undo()
+    assert os.path.isdir(counts) and os.path.isdir(lcounts)
+
+    eng = open_engine()
+    entry = eng.registry.get_view(sig)
+    assert entry["last_seq"] == built["last_seq"]
+    assert not entry["layers"] and entry.get("counts") is None
+    ref = open_engine(str(tmp_path / "ref"))
+    ref.update_view("dd/by_flag", None, built["last_seq"])
+    assert grouped(eng) == grouped(ref)
+
+    refresh(eng, cuts[1])  # retried: rewrites both orphans
+    for n in names:
+        nsig = eng.registry.resolve(*n.split("/"))
+        entry = eng.registry.get_view(nsig)
+        assert len(entry["layers"]) == 1, n
+        assert entry["last_seq"] > built["last_seq"], n
+        assert (entry["stats"]["rows"]
+                == eng._assemble_view(nsig).count()), n
+    assert no_dup_ids(counts) and no_dup_ids(lcounts)
+    ref.update_view("dd/by_flag", None, cuts[1])
+    assert grouped(eng) == grouped(ref)
+
+
+@pytest.mark.parametrize(
+    "fused", [False, True], ids=["update_view", "refresh_ddoc"]
+)
+def test_registry_rows_bound_the_scanned_files(
+    spark, sf_dir, tmp_path, fused
+):
+    """The row counts a refresh records (``base_rows``, each layer's
+    delta ``rows`` and ``n``) bound the files the one-task writes scan:
+    a compaction reads the base and every delta, the count pieces the
+    base counts and every layer's lcounts."""
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    seq = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
+    top = raw.agg(F.max(seq)).collect()[0][0]
+    names = ["dd/by_flag", "dd/big_qty"] if fused else ["dd/by_flag"]
+    eng = Engine(spark, sf_dir, str(tmp_path), compact_after=3)
+    eng.put_design("dd", REFRESH_VIEWS)
+    for n in names:
+        eng.update_view(n, None, top // 3)
+    for to_seq in (top // 2, 2 * top // 3):  # two layers, no compaction
+        if fused:
+            eng.refresh_ddoc("dd", to_seq=to_seq)
+        else:
+            eng.update_view(names[0], None, to_seq)
+    for n in names:
+        sig = eng.registry.resolve(*n.split("/"))
+        vdir = eng.registry.view_dir(sig)
+        entry = eng.registry.get_view(sig)
+
+        def rows(rel):
+            return spark.read.parquet(os.path.join(vdir, rel)).count()
+
+        assert len(entry["layers"]) == 2, n
+        assert entry["base_rows"] == rows(entry["base"]), n
+        assert rows(entry["counts"]) <= entry["base_rows"], n
+        for layer in entry["layers"]:
+            assert layer["rows"] == rows(layer["delta"]), n
+            assert layer["n"] >= rows(layer["lcounts"]), n
+        assert engine_mod._registry_rows(entry, "rows") == (
+            rows(entry["base"])
+            + sum(rows(layer["delta"]) for layer in entry["layers"])
+        ), n
 
 
 def test_fused_sort_gate_round11(spark, sf_dir, tmp_path):

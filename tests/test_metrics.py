@@ -52,8 +52,10 @@ def test_refresh_then_query_metrics(spark, sf_dir, tmp_path):
 # The superseded-row count rides the lcounts write (one broadcast of the
 # changed ids instead of a four-job count after it), and a refresh that
 # compacts skips it: 9 -> 6 for the first layer (which also writes the
-# base counts file) and 12 -> 8 for the compacting second layer.
-REFRESH_JOB_CEILINGS = {"layer": 6, "compacting": 8}
+# base counts file) and 12 -> 8 for the compacting second layer.  The
+# small count writes and the compaction's sorted write then ran as one
+# task with no exchange: 6 -> 4 and 8 -> 5.
+REFRESH_JOB_CEILINGS = {"layer": 4, "compacting": 5}
 
 
 def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
