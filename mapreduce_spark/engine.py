@@ -24,7 +24,11 @@ compaction folds layers into a new base version.  ``last_seq`` in the
 registry is the exactly-once checkpoint (atomic JSON rename).  At 100 TB
 this mirrors an LSM / lakehouse MERGE: refresh cost is O(changes), the
 read path adds only broadcast anti-joins against small tombstone sets,
-and compaction restores pristine range-pruned scans.
+and compaction restores pristine range-pruned scans.  A view whose
+registry row counts stay under ``_ONE_TASK_VIEW_MAX_ROWS`` is instead
+assembled in one task with a window over tombstone batches — no
+exchange, no broadcast — for reads and compaction alike
+(``_assemble_view``).
 """
 
 from __future__ import annotations
@@ -39,7 +43,7 @@ from dataclasses import dataclass
 from typing import Any, Callable
 
 from pyspark import StorageLevel, inheritable_thread_target
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_spark.errors import (
@@ -85,33 +89,53 @@ log = logging.getLogger("mapreduce_spark.engine")
 _FANOUT_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 1 << 20)
 )
-# Engine writes whose SCANNED input the registry bounds, before they
-# run, by at most their limit's rows run as ONE task writing ONE
-# sorted file (``_one_task``): ``coalesce(1)`` goes below the aggregate
-# or sort, so the plan has no exchange and no range partitioner's
-# bounds-sampling job.  ``_ONE_FILE_MAX_ROWS`` bounds the id-only count writes (base
-# counts, layer lcounts); ``_ONE_TASK_SORT_MAX_ROWS`` the full-row
-# sorted view write at compaction, where one task sorting every column
-# loses to the range path's parallel scan and sort sooner.  Each limit
-# sits near its crossover, measured on a 4-core box at local[4] over
-# sf0.1 lineitem views (median of 3, one task vs range path): sorted
-# write 0.64 vs 0.95 s at 60k rows, 0.83 vs 0.94 s at 100k, 1.01 vs
+# Engine work whose SCANNED input the registry bounds, before it runs,
+# by at most its limit's rows runs as ONE task (``_one_task``):
+# ``coalesce(1)`` goes below the aggregate, sort or window, so the plan
+# has no exchange, no range partitioner's bounds-sampling job and no
+# broadcast.  ``_ONE_FILE_MAX_ROWS`` bounds the id-only count writes
+# (base counts, layer lcounts).  ``_ONE_TASK_VIEW_MAX_ROWS`` bounds the
+# full-row view work: assembling base ⊖ tombstones ⊕ deltas for a read
+# (``_assemble_view``) and for compaction's sorted write, where one task
+# over every column loses to the parallel plan sooner.  Each limit sits
+# near its crossover, measured on a 4-core box at local[4] over sf0.1
+# lineitem views (one task vs the parallel plan).  Sorted write (median
+# of 3): 0.64 vs 0.95 s at 60k rows, 0.83 vs 0.94 s at 100k, 1.01 vs
 # 0.83 s at 150k, 2.6 vs 1.6 s at 600k (the range path then writes 4
-# files); counts write 0.42 vs 0.70 s at 150k rows, 1.16 vs 1.11 s at
-# 600k, 1.77 vs 1.58 s at 1M.
+# files).  Counts write: 0.42 vs 0.70 s at 150k rows, 1.16 vs 1.11 s at
+# 600k, 1.77 vs 1.58 s at 1M.  Read of a one-layer view (median of 5-7;
+# grouped ``_count`` / JS custom reduce at group_level 2 / map range
+# with include_docs): 30k rows 0.17 vs 0.19, 0.67 vs 0.72, 1.18 vs
+# 1.30 s; 60k 0.17 vs 0.17, 0.76 vs 0.78, 1.19 vs 1.02 s; 85k 0.18 vs
+# 0.16, 0.95 vs 0.80, 1.29 vs 1.28 s; 100k 0.23 vs 0.17, 0.97 vs 0.81 s;
+# 150k 0.39 vs 0.35, 2.27 vs 1.57 s; 600k 0.99 vs 0.28, 5.42 vs 2.55 s.
+# A one-task read runs 1 job where the parallel one runs 3 (4 vs 8 with
+# include_docs), so above the ~60k wall crossover it trades up to ~0.15 s
+# of idle-box wall for 2-4 scheduler round-trips; the window's sort by
+# id costs more executor CPU than the broadcast anti-joins from 60k up.
 _ONE_FILE_MAX_ROWS = 1_000_000
-_ONE_TASK_SORT_MAX_ROWS = 100_000
+_ONE_TASK_VIEW_MAX_ROWS = 100_000
 
 
 def _one_task(rows_bound: int | None, max_rows: int) -> bool:
-    """True when a write whose scanned input is bounded by
-    ``rows_bound`` rows (None: unknown) runs as one task."""
+    """True when work whose scanned input is bounded by ``rows_bound``
+    rows (None: unknown) runs as one task."""
     return rows_bound is not None and rows_bound <= max_rows
+
+
+def _one_task_view(entry: dict | None) -> bool:
+    """True when assembling ``entry``'s view (base and every delta,
+    ``_registry_rows``) runs as one task — for a read and for the
+    compaction that folds it alike."""
+    return entry is not None and _one_task(
+        _registry_rows(entry, "rows"), _ONE_TASK_VIEW_MAX_ROWS
+    )
 
 
 def _registry_rows(entry: dict, layer_key: str) -> int | None:
     """A view entry's ``base_rows`` plus every layer's ``layer_key``:
-    ``"rows"`` (delta rows) bounds what a full compaction scans,
+    ``"rows"`` (delta rows) bounds what assembling the view scans, for
+    a read or a full compaction,
     ``"n"`` (changed ids) the count pieces (a base counts file holds
     at most ``base_rows`` rows, a layer's lcounts at most its ``n``).
     None when any is unknown (storage written before they were
@@ -931,6 +955,7 @@ class Engine:
 
         last_seq: int | None = None
         stats: dict | None = None
+        one = False
         if persisted:
             # only the default staleness mode refreshes before the read;
             # stale='ok' and stale='update_after' both serve the current
@@ -938,8 +963,11 @@ class Engine:
             # once, after the response is assembled, see below)
             if any(o.stale is None for o in olist):
                 self.update_view(vdef)
-            view = self._assemble_view(vdef.sig)
             entry = self.registry.get_view(vdef.sig)
+            # one decision per batch, from registry row counts (stats
+            # are None after a crashed compaction)
+            one = _one_task_view(entry)
+            view = self._assemble_view(vdef.sig, one)
             stats = (entry or {}).get("stats")
             last_seq = entry["last_seq"] if entry else 0
         else:
@@ -948,7 +976,7 @@ class Engine:
         results = [
             self._run_query(
                 vdef, view, o, stats,
-                last_seq if o.update_seq else None, doc_tables,
+                last_seq if o.update_seq else None, doc_tables, one,
             )
             for o in olist
         ]
@@ -959,7 +987,12 @@ class Engine:
     def _run_query(self, vdef: ViewDef, view: DataFrame,
                    o: QueryOptions, stats: dict | None,
                    upd_seq: int | None,
-                   doc_tables: list[str] | None) -> QueryResult:
+                   doc_tables: list[str] | None,
+                   one: bool) -> QueryResult:
+        """One sub-query over the assembled ``view``.  ``one``: the view
+        was assembled in one task (``_assemble_view``), so a map
+        query's fused sorts — over the view, and over its doc join —
+        coalesce instead of paying a ``repartition(1)`` exchange."""
         will_reduce = (
             vdef.reduce_def is not None if o.reduce is None else o.reduce
         )
@@ -992,7 +1025,7 @@ class Engine:
             )
         else:
             rows_bound = stats.get("rows") if stats is not None else None
-            rows = query_map(view, o, rows_bound=rows_bound)
+            rows = query_map(view, o, rows_bound=rows_bound, narrow=one)
             keep_ord = "_key_ord" in rows.columns
             if o.include_docs:
                 docs = self._docs_for_join(
@@ -1029,7 +1062,7 @@ class Engine:
                     b = rows_bound
                     if o.limit is not None:
                         b = o.limit if b is None else min(b, o.limit)
-                    rows = fused_sort(rows, order, b)
+                    rows = fused_sort(rows, order, b, narrow=one)
                 cols = MAP_RESULT_COLS + ["doc_json"]
             else:
                 cols = MAP_RESULT_COLS
@@ -1185,8 +1218,6 @@ class Engine:
         deleted-doc tombstone rows — the fused refresh needs their ids
         for tombstoning even though they never reach a map fn)."""
         if t.raw_json:
-            from pyspark.sql import Window
-
             w = Window.partitionBy("_id").orderBy(
                 F.expr(t.seq_expr).cast("long").desc()
             )
@@ -1484,14 +1515,14 @@ class Engine:
                 self._compact(sig, entry)
 
     def _write_sorted(self, view: DataFrame, path: str,
-                      rows_bound: int | None = None) -> dict:
+                      one: bool = False) -> dict:
         """Persist a view sorted+range-partitioned by key_enc so Parquet
         row-group min/max stats give index-like range pruning (X1/X3).
 
-        When ``view`` scans at most ``rows_bound`` rows and that is at
-        most ``_ONE_TASK_SORT_MAX_ROWS`` (``_one_task``), one task
-        writes it as one sorted file instead: no exchange, no bounds
-        sampling, and a single pass over ``view``.
+        ``one`` (a compaction of at most ``_ONE_TASK_VIEW_MAX_ROWS``
+        scanned rows, ``_one_task_view``): one task writes it as one
+        sorted file instead — no exchange, no bounds sampling, and a
+        single pass over ``view``.
 
         Returns view statistics observed on the write pass itself (zero
         extra scans): exact row count and max ``value_num_arr`` width —
@@ -1502,7 +1533,7 @@ class Engine:
         double-counts.
         """
         obs = Observation()
-        if _one_task(rows_bound, _ONE_TASK_SORT_MAX_ROWS):
+        if one:
             view = view.coalesce(1)
         else:
             view = view.repartitionByRange("key_enc", "id")
@@ -1702,14 +1733,15 @@ class Engine:
         """Fold base+layers into a new base version (X7 auto_compaction).
 
         The fold scans the base and every delta: their registry row
-        counts (``_registry_rows``) pick ``_write_sorted``'s path."""
+        counts pick one plan for the assembly and the sorted write
+        (``_one_task_view``), so a small fold is one task."""
         vdir = self.registry.view_dir(sig)
-        assembled = self._assemble_view(sig)
+        one = _one_task_view(entry)
+        assembled = self._assemble_view(sig, one)
         newv = entry["base_version"] + 1
         base_rel = f"base-v{newv}"
         entry["stats"] = self._write_sorted(
-            assembled, os.path.join(vdir, base_rel),
-            rows_bound=_registry_rows(entry, "rows"),
+            assembled, os.path.join(vdir, base_rel), one=one,
         )
         old_counts = [entry["counts"]] if entry.get("counts") else []
         if entry.get("manifest") is not None:
@@ -1822,13 +1854,7 @@ class Engine:
         sidecar = self.spark.read.schema(
             "id string, file string, n long"
         ).parquet(os.path.join(vdir, entry["sidecar"]))
-        tombs = None
-        for l in entry["layers"]:
-            t = self.spark.read.schema("id string").parquet(
-                os.path.join(vdir, l["tomb"])
-            )
-            tombs = t if tombs is None else tombs.unionByName(t)
-        tombs = tombs.distinct()
+        tombs = self._tomb_ids(entry, vdir).select("id").distinct()
         affected_rel = [
             r.file
             for r in sidecar.join(
@@ -1958,12 +1984,7 @@ class Engine:
         _assemble_view, reused by scoped compaction."""
         read_view = self.spark.read.schema(VIEW_SCHEMA).parquet
         layers = entry["layers"]
-        tombs = None
-        for l in layers:
-            t = self.spark.read.schema("id string").parquet(
-                os.path.join(vdir, l["tomb"])
-            ).withColumn("_tb", F.lit(l["batch"]))
-            tombs = t if tombs is None else tombs.unionByName(t)
+        tombs = self._tomb_ids(entry, vdir)
         out = None
         for l in layers:
             later = tombs.filter(F.col("_tb") > l["batch"]).select("id")
@@ -2003,14 +2024,31 @@ class Engine:
             entry["garbage"] = []
             self.registry.set_view(s, entry)
 
-    def _assemble_view(self, sig: str) -> DataFrame:
-        """Effective view = ((base ⊖ t1) ⊕ d1) ⊖ t2 ⊕ d2 … — each layer
-        anti-joined against the union of strictly-later tombstones
-        (broadcast: tombstone sets are per-batch changed-doc ids)."""
+    def _assemble_view(self, sig: str,
+                       one: bool | None = None) -> DataFrame:
+        """Effective view = ((base ⊖ t1) ⊕ d1) ⊖ t2 ⊕ d2 … — a row of
+        the base (batch 0) or of delta ``b`` survives unless a
+        strictly later tombstone (batch > b) holds its id.
+
+        Two plans, picked by ``one`` (None: ``_one_task_view`` of the
+        registry entry):
+
+        - one task: base, deltas and tombstone ids unioned and
+          coalesced to ONE partition; ``max(tombstone batch)`` over a
+          window by id keeps exactly the rows no later tombstone holds.
+          A window's single child satisfies its distribution, so the
+          plan has no exchange and no broadcast.  For views of at most
+          ``_ONE_TASK_VIEW_MAX_ROWS`` scanned rows (``_registry_rows``).
+        - parallel: each piece anti-joined against a broadcast of the
+          strictly-later tombstone ids (per-batch changed-doc ids, so
+          small), one broadcast job per piece.  Larger views, manifest
+          views and storage without registry row counts."""
         entry = self.registry.get_view(sig)
         vdir = self.registry.view_dir(sig)
         if entry is None or (entry["base"] is None and not entry["layers"]):
             return self.spark.createDataFrame([], VIEW_SCHEMA)
+        if one is None:
+            one = _one_task_view(entry)
         # schemas are static (VIEW_SCHEMA / id-only tombstones): passing
         # them explicitly skips parquet footer inference — otherwise
         # every assemble runs a schema-read job before any query work
@@ -2026,31 +2064,43 @@ class Engine:
         else:
             base = self.spark.createDataFrame([], VIEW_SCHEMA)
         layers = entry["layers"]
+        if not one:
+            if not layers:
+                return base
+            # every tombstone is later than the base (batches count
+            # from 1)
+            tombs = self._tomb_ids(entry, vdir).select("id")
+            return base.join(
+                F.broadcast(tombs), "id", "left_anti"
+            ).unionByName(self._assemble_deltas(entry, vdir))
         if not layers:
-            return base
-        tombs = None
+            return base.coalesce(1)
+        out = base.withColumn("_b", F.lit(0))
         for l in layers:
-            tdf = self.spark.read.schema("id string").parquet(
+            out = out.unionByName(
+                read_view(os.path.join(vdir, l["delta"]))
+                .withColumn("_b", F.lit(l["batch"]))
+            )
+        out = out.unionByName(
+            self._tomb_ids(entry, vdir), allowMissingColumns=True
+        ).coalesce(1)
+        out = out.withColumn(
+            "_lt", F.max("_tb").over(Window.partitionBy("id"))
+        )
+        return out.filter(
+            F.col("_b").isNotNull()
+            & (F.coalesce(F.col("_lt"), F.lit(-1)) <= F.col("_b"))
+        ).select(*VIEW_SCHEMA.fieldNames())
+
+    def _tomb_ids(self, entry: dict, vdir: str) -> DataFrame:
+        """Every layer's tombstone ids, ``_tb`` = the layer's batch."""
+        tombs = None
+        for l in entry["layers"]:
+            t = self.spark.read.schema("id string").parquet(
                 os.path.join(vdir, l["tomb"])
             ).withColumn("_tb", F.lit(l["batch"]))
-            tombs = tdf if tombs is None else tombs.unionByName(tdf)
-        pieces = []
-        srcs = [(0, base)] + [
-            (
-                l["batch"],
-                read_view(os.path.join(vdir, l["delta"])),
-            )
-            for l in layers
-        ]
-        for b, df in srcs:
-            later = tombs.filter(F.col("_tb") > b).select("id")
-            pieces.append(
-                df.join(F.broadcast(later), "id", "left_anti")
-            )
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out
+            tombs = t if tombs is None else tombs.unionByName(t)
+        return tombs
 
     # ------------------------------------------------------------------
     # docs join side (J1/J2)

@@ -52,10 +52,12 @@ def fused_sort(rows: DataFrame, order: list[Column],
     """Globally-sorted ``rows`` — fused to one partition when ``bound``
     (a static row-count estimate; see module note) is small enough.
 
-    ``narrow=True`` uses ``coalesce(1)`` — correct ONLY when an
-    exchange sits immediately below (the reduce path's final
-    aggregate), where it merges post-shuffle partitions without
-    collapsing upstream scan parallelism.  The default
+    ``narrow=True`` uses ``coalesce(1)`` — correct ONLY when the child
+    is already one partition (a view the engine assembled in one
+    task), where it is free, or when an exchange sits below the
+    operators it merges (the reduce path's final aggregate, a doc join
+    over a one-task view), where it merges post-shuffle partitions
+    without collapsing upstream scan parallelism.  The default
     ``repartition(1)`` keeps scans/joins parallel at the cost of the
     one exchange the global sort needed anyway."""
     if bound is not None and 0 <= bound <= FUSED_SORT_MAX_ROWS:
@@ -135,22 +137,25 @@ def scan_rows(view: DataFrame, opts: QueryOptions) -> DataFrame:
 
 
 def query_map(view: DataFrame, opts: QueryOptions,
-              rows_bound: int | None = None) -> DataFrame:
+              rows_bound: int | None = None,
+              narrow: bool = False) -> DataFrame:
     """Map-query path: ordered rows with skip/limit applied.
 
     ``rows_bound``: static upper bound on the view's row count
-    (registry stats) — enables small-result sort fusion.  Queries with
-    a ``limit`` keep ``orderBy`` so Catalyst plans
+    (registry stats) — enables small-result sort fusion; ``narrow``:
+    ``view`` is one partition (see ``fused_sort``).  Queries with a
+    ``limit`` keep ``orderBy`` so Catalyst plans
     TakeOrderedAndProject (already a single job)."""
     if opts.keys is not UNSET:
         rows = _keys_lookup(view, opts.keys, opts.descending,
-                            rows_bound if opts.limit is None else None)
+                            rows_bound if opts.limit is None else None,
+                            narrow)
     else:
         rows = scan_rows(view, opts)
         if opts.sorted:
             order = row_order(opts.descending)
             if opts.limit is None:
-                rows = fused_sort(rows, order, rows_bound)
+                rows = fused_sort(rows, order, rows_bound, narrow=narrow)
             else:
                 rows = rows.orderBy(*order)
         # sorted=False: storage order — no global Sort/TakeOrdered in
@@ -160,7 +165,8 @@ def query_map(view: DataFrame, opts: QueryOptions,
 
 
 def _keys_lookup(view: DataFrame, keys: list, descending: bool,
-                 rows_bound: int | None = None) -> DataFrame:
+                 rows_bound: int | None = None,
+                 narrow: bool = False) -> DataFrame:
     """Multi-key fetch preserving request order & duplicates (P5).
 
     Two-step shape so the point lookups stay index-like at scale:
@@ -199,7 +205,7 @@ def _keys_lookup(view: DataFrame, keys: list, descending: bool,
     order = [F.col("_key_ord")] + row_order(descending)
     # _key_ord is kept so callers can re-establish request order after a
     # doc join; the engine's final column selection drops it.
-    return fused_sort(rows, order, rows_bound)
+    return fused_sort(rows, order, rows_bound, narrow=narrow)
 
 
 def _paginate(rows: DataFrame, opts: QueryOptions) -> DataFrame:

@@ -360,8 +360,13 @@ def reduce_custom(
             if pdf.empty:
                 continue
             out = []
-            for (gk, kj), grp in pdf.groupby(["gk_enc", "key_json"],
-                                             sort=False):
+            # group on key_json alone (gk_enc is a function of it):
+            # pandas compares object strings only up to the first NUL,
+            # and an array key's encoding has one after every element,
+            # so grouping on gk_enc gives every key that shares a first
+            # element the same label
+            for kj, grp in pdf.groupby("key_json", sort=False):
+                gk = grp["gk_enc"].iloc[0]
                 keys = [
                     [json.loads(k), i]
                     for k, i in zip(grp["row_key_json"], grp["id"])

@@ -391,13 +391,14 @@ def test_refresh_pre_metadata_layout_falls_back_to_view_scan(
 
 
 def test_deep_layer_stack_reads_and_compaction_restores_scan(
-    spark, sf_dir, tmp_path
+    spark, sf_dir, tmp_path, monkeypatch
 ):
     """M1 at depth: 10 incremental batches → base + 9 (tomb, delta)
     layers.  The layered read must stay correct and stats-exact; the
-    layered plan is bounded (one broadcast anti-join per piece, never
-    a shuffle); compaction folds everything back to a single pristine
-    scan with NO joins."""
+    small view assembles in one task (no exchange, no broadcast), and
+    the parallel plan is bounded (one broadcast anti-join per piece,
+    never a shuffle); compaction folds everything back to a single
+    pristine scan with NO joins."""
     eng = Engine(spark, sf_dir, str(tmp_path), compact_after=99)
     eng.put_design("d", {"v": VIEW})
     for b in _batches(spark, sf_dir, 10):
@@ -413,12 +414,19 @@ def test_deep_layer_stack_reads_and_compaction_restores_scan(
     assert entry["stats"]["rows"] == n
     plan = eng._assemble_view(sig)._jdf.queryExecution() \
         .executedPlan().toString()
-    # one broadcast anti-join per piece EXCEPT the newest layer: its
-    # later-tombstone set constant-folds to empty (literal _tb per
-    # branch) and PropagateEmptyRelation deletes that join outright
+    assert "Exchange" not in plan and "Join" not in plan
+    # the parallel plan (views above the one-task limit): one broadcast
+    # anti-join per piece EXCEPT the newest layer — its later-tombstone
+    # set constant-folds to empty (literal _tb per branch) and
+    # PropagateEmptyRelation deletes that join outright
+    monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
+    plan = eng._assemble_view(sig)._jdf.queryExecution() \
+        .executedPlan().toString()
     assert plan.count("LeftAnti") == 9
     assert "SortMergeJoin" not in plan and "Exchange hashpartitioning" \
         not in plan
+    assert got == _rows(eng.query("d/v", group_level=2, stale="ok"))
+    monkeypatch.undo()
     # compaction: back to one sorted base, zero joins on the read path
     eng._compact(sig, entry)
     entry2 = eng.registry.get_view(sig)
@@ -428,6 +436,93 @@ def test_deep_layer_stack_reads_and_compaction_restores_scan(
         .executedPlan().toString()
     assert "Join" not in plan2
     assert _rows(eng.query("d/v", group_level=2, stale="ok")) == want
+
+
+def test_one_task_assembly_equals_parallel_plan(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A small layered view assembles in one task: base, deltas and
+    tombstone ids in one partition, a window keeps the rows no later
+    tombstone holds.  Over a three-layer stack with key-moving edits,
+    deletes and a delete later undone, every answer equals the
+    parallel (broadcast anti-join) plan's and a single build of the
+    final docs; a read plans no exchange and runs one job; and a
+    compaction writes the same base rows with exact stats both ways."""
+    import shutil
+
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    pk = ["l_orderkey", "l_linenumber"]
+    b1, b2, b3 = _batches(spark, sf_dir, 3)
+    first = b1.orderBy(*pk).limit(60).cache()
+    moved = first.limit(40).withColumn("l_returnflag", F.lit("Z"))
+    gone = first.orderBy(F.col("l_orderkey").desc(), "l_linenumber") \
+        .limit(20)
+    back = gone.orderBy(*pk).limit(1)
+    moved2 = moved.limit(10).withColumn("l_linestatus", F.lit("Q"))
+    eng = Engine(spark, sf_dir, str(tmp_path / "one"), compact_after=99)
+    eng.put_design("d", {"v": VIEW})
+    eng.update_view("d/v", changes=b1)
+    eng.update_view("d/v", changes=b2.unionByName(moved))
+    eng.update_view("d/v", changes=gone.withColumn("_deleted", F.lit(True))
+                    .unionByName(moved2.withColumn("_deleted", F.lit(False))))
+    eng.update_view("d/v", changes=b3.unionByName(back))
+    sig = eng.registry.resolve("d", "v")
+    assert len(eng.registry.get_view(sig)["layers"]) == 3
+
+    final = (
+        raw.join(gone.select(*pk), pk, "left_anti")
+        .join(moved.select(*pk), pk, "left_anti")
+        .unionByName(moved.join(moved2.select(*pk), pk, "left_anti"))
+        .unionByName(moved2).unionByName(back)
+    )
+    ref = Engine(spark, sf_dir, str(tmp_path / "ref"))
+    ref.put_design("d", {"v": VIEW})
+    ref.update_view("d/v", changes=final)
+
+    def answers(e):
+        def q(**kw):
+            return e.query("d/v", stale="ok", **kw)
+
+        docs = q(reduce=False, include_docs=True, key=["Z", "Q"])
+        return (
+            _rows(q(group=True)),
+            _rows(q(group_level=1)),
+            [(r["id"], r["key"], r["value"])
+             for r in q(reduce=False).rows()],
+            [(r["id"], r["doc"]) for r in docs.rows()],
+            q(reduce=False, limit=1).total_rows,
+        )
+
+    want = answers(eng)
+    assert want == answers(ref)
+    assert len(want[3]) == 10 and want[4] == final.count()
+
+    res = eng.query("d/v", stale="ok", group=True)
+    plan = res.df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    with measure(spark, "one-task read") as m:
+        res.rows()
+    assert m["jobs"] == 1
+
+    shutil.copytree(tmp_path / "one", tmp_path / "par")
+    par = Engine(spark, sf_dir, str(tmp_path / "par"), compact_after=99)
+    par.put_design("d", {"v": VIEW})
+
+    def compacted(e):
+        entry = e.registry.get_view(sig)
+        e._compact(sig, entry)
+        base = spark.read.parquet(
+            os.path.join(e.registry.view_dir(sig), entry["base"])
+        )
+        return entry["stats"]["rows"], sorted(map(tuple, base.collect()))
+
+    monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
+    assert answers(par) == want
+    rows_par, base_par = compacted(par)
+    monkeypatch.undo()
+    rows_one, base_one = compacted(eng)
+    assert rows_one == rows_par == len(base_one) == final.count()
+    assert base_one == base_par
 
 
 def test_incremental_refresh_never_scans_view(spark, sf_dir, tmp_path,
@@ -1444,7 +1539,7 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """Refreshes of a small view (registry row counts under
-    ``_ONE_FILE_MAX_ROWS`` and ``_ONE_TASK_SORT_MAX_ROWS``) write their
+    ``_ONE_FILE_MAX_ROWS`` and ``_ONE_TASK_VIEW_MAX_ROWS``) write their
     count files and the compacted base with no exchange; the base is
     one parquet file sorted by (key_enc, id), with exact stats.  With
     both limits at 0 the same sequence takes the range / exchange path
@@ -1483,7 +1578,7 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
     assert keys == sorted(keys)
 
     monkeypatch.setattr(engine_mod, "_ONE_FILE_MAX_ROWS", 0)
-    monkeypatch.setattr(engine_mod, "_ONE_TASK_SORT_MAX_ROWS", 0)
+    monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
     _, rentry, rgrouped, rm = run(str(tmp_path / "range"))
     assert rentry["stats"]["rows"] == entry["stats"]["rows"]
     assert rgrouped == grouped
@@ -1646,9 +1741,13 @@ def test_fused_sort_gate_round11(spark, sf_dir, tmp_path):
     rows_mf, pm = plan(reduce=False, startkey=["A"], endkey=["N", {}])
     assert "rangepartitioning" not in pm.lower(), pm[:800]
 
-    # force the global path by shrinking the gate
+    # force the global path by shrinking the gate; a view assembled in
+    # one task is already one partition, which satisfies orderBy with
+    # no range exchange, so take the parallel assembly too
     orig = Q.FUSED_SORT_MAX_ROWS
     Q.FUSED_SORT_MAX_ROWS = 0
+    orig_one = engine_mod._ONE_TASK_VIEW_MAX_ROWS
+    engine_mod._ONE_TASK_VIEW_MAX_ROWS = 0
     try:
         rows_g, pg = plan(group=True)
         assert "rangepartitioning" in pg.lower(), pg[:800]
@@ -1657,6 +1756,7 @@ def test_fused_sort_gate_round11(spark, sf_dir, tmp_path):
         assert "rangepartitioning" in pmg.lower(), pmg[:800]
     finally:
         Q.FUSED_SORT_MAX_ROWS = orig
+        engine_mod._ONE_TASK_VIEW_MAX_ROWS = orig_one
     as_t = lambda rs: [tuple(r) for r in rs]  # noqa: E731
     assert as_t(rows_f) == as_t(rows_g)
     assert as_t(rows_mf) == as_t(rows_mg)

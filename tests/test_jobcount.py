@@ -37,18 +37,19 @@ from mapreduce_spark.metrics import measure
 # the rows it supersedes inside the lcounts write (one broadcast job)
 # instead of a four-job count afterwards.  q18 14 -> 12: the base-counts
 # and lcounts writes of a small view run as one task with no exchange.
+# Then 93 -> 54 in total: a view of at most _ONE_TASK_VIEW_MAX_ROWS
+# scanned rows is assembled in one task (no tombstone broadcasts, no
+# aggregate or sort exchange), so most reads run one job; q31's three
+# oracle legs (one per storage layout) went 4 -> 1, q18 12 -> 10.
 # test_warm_read_path_job_ceilings prints every query's count (pytest
 # -s or -rA shows it; SPARK_GRAFT_TEST_SF sets the scale).
 JOB_CEILINGS = {
-    "q01": 2, "q02": 3, "q04": 2, "q05": 2, "q06": 2, "q07": 1,
-    "q08": 2, "q09": 3, "q10": 1, "q11": 6, "q12": 4, "q13": 2,
-    "q14": 2, "q15": 2, "q16": 3, "q17": 3, "q18": 12, "q19": 2,
-    "q20": 1, "q21": 3, "q22": 2, "q23": 2, "q24": 1, "q25": 2,
-    # q31: 4 since round 12 — the third ('v', shredded-VARIANT
-    # layout) oracle leg reads one more persisted view (+1 job for
-    # +1 layout under the value-hash gate)
-    "q26": 2, "q28": 2, "q29": 2, "q30": 3, "q31": 4, "q32": 2,
-    "q33": 2, "q34": 7, "q35": 2, "q36": 2,
+    "q01": 1, "q02": 1, "q04": 1, "q05": 1, "q06": 1, "q07": 1,
+    "q08": 1, "q09": 2, "q10": 1, "q11": 3, "q12": 3, "q13": 1,
+    "q14": 1, "q15": 1, "q16": 1, "q17": 3, "q18": 10, "q19": 1,
+    "q20": 1, "q21": 2, "q22": 1, "q23": 1, "q24": 1, "q25": 1,
+    "q26": 1, "q28": 1, "q29": 1, "q30": 1, "q31": 1, "q32": 1,
+    "q33": 1, "q34": 4, "q35": 1, "q36": 1,
 }
 
 
@@ -101,8 +102,9 @@ def test_total_warm_job_budget():
     102 = 101 measured + 1 for q31's round-12 shredded-layout oracle
     leg (a deliberate +1-view coverage buy).  95 = the table's sum
     once q18's refresh accounting dropped 3 jobs (17 -> 14).  93 once
-    its small count writes dropped their exchanges (14 -> 12)."""
-    assert sum(JOB_CEILINGS.values()) <= 93, (
+    its small count writes dropped their exchanges (14 -> 12).  54 once
+    small views were assembled in one task for reads and compaction."""
+    assert sum(JOB_CEILINGS.values()) <= 54, (
         "ceiling table drifted past the round-12 measured state -- "
         "fuse the new job or justify the bump here"
     )
