@@ -138,10 +138,8 @@ def _registry_rows(entry: dict, layer_key: str) -> int | None:
     a read or a full compaction,
     ``"n"`` (changed ids) the count pieces (a base counts file holds
     at most ``base_rows`` rows, a layer's lcounts at most its ``n``).
-    None when any is unknown (storage written before they were
-    recorded) or the base is a manifest (not ``base_rows``)."""
-    if entry.get("manifest") is not None:
-        return None
+    None when any of those fields is missing (storage written before
+    they were recorded)."""
     rows = [entry.get("base_rows")]
     rows += [layer.get(layer_key) for layer in entry["layers"]]
     return None if None in rows else sum(rows)
@@ -1444,8 +1442,10 @@ class Engine:
                       ids: DataFrame, n: int, bounds: tuple, mx: int,
                       delta: dict) -> None:
         """Commit a refresh batch whose ``delta-<batch>`` is written:
-        its lcounts/tombstone file, the layer, ``last_seq`` and stats,
-        then compaction once the stack reaches ``compact_after``.
+        its ``lcounts-<batch>`` file (emit counts and tombstone ids,
+        ``_write_lcounts``), the layer, ``last_seq`` and stats, then a
+        full compaction (``_compact``) once the stack reaches
+        ``compact_after``.
 
         ``ids`` are the batch's changed doc ids (duplicates allowed,
         possibly filtered from a larger file), ``n`` bounds the rows
@@ -1455,39 +1455,23 @@ class Engine:
         ``base_rows`` they bound what later writes scan
         (``_registry_rows``).
 
-        A refresh that is about to fully compact skips the
-        superseded-row count: ``_compact`` re-observes exact stats, so
-        the layer is recorded with ``stats=None`` (unknown; readers
-        fall back to a count) rather than a row total that omits the
-        rows this batch supersedes — a crash before the compaction
-        lands leaves an honest registry."""
+        A refresh that is about to compact skips the superseded-row
+        count: ``_compact`` re-observes exact stats, so the layer is
+        recorded with ``stats=None`` (unknown; readers fall back to a
+        count) rather than a row total that omits the rows this batch
+        supersedes — a crash before the compaction lands leaves an
+        honest registry."""
         vdir = self.registry.view_dir(sig)
         compacts = len(entry["layers"]) + 1 >= self.compact_after
-        scoped = entry.get("manifest") is not None
-        prev = entry.get("stats") if scoped or not compacts else None
-        lcounts_rel = f"lcounts-{batch}"
+        prev = None if compacts else entry.get("stats")
         delta_rows = int(delta["rows"] or 0)
         removed = self._write_lcounts(
             entry, vdir, batch, ids, n, bounds, delta_rows,
             prior=prev is not None,
         )
-        if removed is None:
-            # pre-metadata storage layout: legacy one-shot id-pruned
-            # view scan (tombstone ids = the lcounts id column just
-            # written, like every other reader)
-            tomb_ids = self.spark.read.schema("id string").parquet(
-                os.path.join(vdir, lcounts_rel)
-            )
-            removed = (
-                self._assemble_view(sig)
-                .select("id")
-                .join(F.broadcast(tomb_ids), "id", "left_semi")
-                .count()
-            )
         entry["layers"].append(
             {"batch": batch, "delta": f"delta-{batch}",
-             "tomb": lcounts_rel, "lcounts": lcounts_rel,
-             "rows": delta_rows, "n": n}
+             "lcounts": f"lcounts-{batch}", "rows": delta_rows, "n": n}
         )
         entry["next_batch"] = batch + 1
         entry["last_seq"] = max(entry["last_seq"], mx)
@@ -1509,10 +1493,7 @@ class Engine:
         }
         self.registry.set_view(sig, entry)
         if compacts:
-            if scoped:
-                self._compact_scoped_locked(sig, entry)
-            else:
-                self._compact(sig, entry)
+            self._compact(sig, entry)
 
     def _write_sorted(self, view: DataFrame, path: str,
                       one: bool = False) -> dict:
@@ -1599,11 +1580,7 @@ class Engine:
         Read-only views (the common case) never pay the pass; a view
         entering maintenance pays it once per base version, amortized
         over every subsequent refresh."""
-        if (
-            entry.get("manifest") is None
-            and entry.get("counts") is None
-            and entry.get("base")
-        ):
+        if entry.get("counts") is None and entry.get("base"):
             counts_rel = f"counts-{entry['base']}"
             self._write_counts(
                 os.path.join(vdir, entry["base"]),
@@ -1612,32 +1589,19 @@ class Engine:
             )
             entry["counts"] = counts_rel
 
-    def _count_pieces(self, entry: dict, vdir: str) -> list | None:
+    def _count_pieces(self, entry: dict, vdir: str) -> list:
         """(id, n, _rk) live emit counts per piece, oldest first: the
-        base counts (counts file / manifest sidecar) at rank 0, each
-        layer's lcounts at rank = its batch number.  The newest piece
-        holding a doc has its live emit count.  None when any piece
-        predates count metadata (the caller falls back)."""
-        if entry.get("manifest") is not None:
-            if not entry.get("sidecar_n"):
-                return None
-            base = self.spark.read.schema(
-                "id string, file string, n long"
-            ).parquet(os.path.join(vdir, entry["sidecar"])).groupBy(
-                "id"
-            ).agg(F.sum("n").cast("long").alias("n"))
-        elif entry["base"] is None:
+        base counts file (``_ensure_counts``) at rank 0, each layer's
+        lcounts at rank = its batch number.  The newest piece holding a
+        doc has its live emit count."""
+        if entry["base"] is None:
             base = self.spark.createDataFrame([], "id string, n long")
-        elif entry.get("counts") is None:
-            return None
         else:
             base = self.spark.read.schema("id string, n long").parquet(
                 os.path.join(vdir, entry["counts"])
             )
         pieces = [base.withColumn("_rk", F.lit(0).cast("long"))]
         for l in entry["layers"]:
-            if l.get("lcounts") is None:
-                return None
             pieces.append(
                 self.spark.read.schema("id string, n long")
                 .parquet(os.path.join(vdir, l["lcounts"]))
@@ -1647,7 +1611,7 @@ class Engine:
 
     def _write_lcounts(self, entry: dict, vdir: str, batch: int,
                        ids: DataFrame, n: int, bounds: tuple,
-                       delta_rows: int, prior: bool) -> int | None:
+                       delta_rows: int, prior: bool) -> int:
         """Write ``lcounts-<batch>``, the batch's (id, n) file, and
         return the rows the batch supersedes (0 unless ``prior``).
 
@@ -1675,12 +1639,9 @@ class Engine:
         depth).  The semi-join broadcasts the ids: an ``isin`` of k
         literal ids costs O(k) in plan compile (measured 0.7 s at 1k
         ids, 50 s at 100k, PLANS.md round 7) while the broadcast stays
-        flat; past ``_BROADCAST_MAX_IDS`` it shuffles instead.  Returns
-        None when the storage predates count metadata."""
-        pieces = None
+        flat; past ``_BROADCAST_MAX_IDS`` it shuffles instead."""
         if prior:
             self._ensure_counts(entry, vdir)
-            pieces = self._count_pieces(entry, vdir)
         lo, hi = bounds
         pc = "struct<_rk:long,pn:long>"
         parts = [
@@ -1692,8 +1653,9 @@ class Engine:
                     F.lit(None).cast(pc).alias("_pc")),
         ]
         scanned = [n, delta_rows]
-        if pieces and lo is not None:
+        if prior and lo is not None:
             scanned.append(_registry_rows(entry, "n"))
+            pieces = self._count_pieces(entry, vdir)
             allc = pieces[0]
             for p in pieces[1:]:
                 allc = allc.unionByName(p)
@@ -1725,8 +1687,6 @@ class Engine:
         lc.select("id", "n").write.mode("overwrite").parquet(
             os.path.join(vdir, f"lcounts-{batch}")
         )
-        if prior and pieces is None:
-            return None
         return int((observed(obs) or {}).get("removed") or 0)
 
     def _compact(self, sig: str, entry: dict) -> None:
@@ -1743,28 +1703,11 @@ class Engine:
         entry["stats"] = self._write_sorted(
             assembled, os.path.join(vdir, base_rel), one=one,
         )
-        old_counts = [entry["counts"]] if entry.get("counts") else []
-        if entry.get("manifest") is not None:
-            # manifest mode: referenced files may span several part
-            # generations — GC every distinct top-level dir, plus the
-            # sidecar
-            old = sorted(
-                {r.split("/", 1)[0] for r in entry["manifest"]}
-                | {entry["base"]}
-            )
-            if entry.get("sidecar"):
-                old.append(entry["sidecar"])
-            entry["manifest"] = None
-            entry["sidecar"] = None
-        else:
-            old = [entry["base"]]
-        old += old_counts
-        old += list(dict.fromkeys(
-            p
-            for l in entry["layers"]
-            for p in (l["delta"], l["tomb"], l.get("lcounts"))
-            if p
-        ))
+        old = [entry["base"]]
+        if entry.get("counts"):
+            old.append(entry["counts"])
+        for l in entry["layers"]:
+            old += [l["delta"], l["lcounts"]]
         # old versions become unreferenced; GC is deferred (vacuum) so
         # lazy DataFrames handed out before the compaction stay valid.
         # counts=None: the new base's counts file re-materializes
@@ -1774,17 +1717,11 @@ class Engine:
         entry["garbage"] = entry.get("garbage", []) + old
         self.registry.set_view(sig, entry)
 
-    # ------------------------------------------------------------------
-    # partition-scoped compaction (SURVEY §7.3 — M1 at 100 TB)
-    # ------------------------------------------------------------------
-
     def compact(self, view_name_or_sig: str) -> dict:
         """Full compaction on demand (CouchDB ``POST _compact/<ddoc>``
-        parity): fold base+layers into one fresh sorted base version.
-        On a manifest-mode view this also consolidates the spliced
-        part generations back into a monolithic base (demotion), which
-        is the right move after heavy scoped-compaction churn.
-        Returns {"base_version": new}."""
+        parity): fold base+layers into one fresh sorted base version,
+        the fold a refresh runs once the stack reaches
+        ``compact_after``.  Returns {"base_version": new}."""
         sig = (
             view_name_or_sig
             if view_name_or_sig in (self.registry._read()["views"])
@@ -1798,202 +1735,6 @@ class Engine:
             self._compact(sig, entry)
             return {"base_version": entry["base_version"]}
 
-    def compact_scoped(self, view_name_or_sig: str) -> dict:
-        """Compact by rewriting ONLY the base files that hold emits of
-        changed docs, instead of the whole view.
-
-        The mechanism is a minimal lakehouse shape on plain Parquet:
-
-        - the base becomes a **manifest** — an explicit file list in
-          the registry entry (initially every file of ``base-v<N>``);
-        - an id→file **sidecar** (2-column, id-sorted Parquet) records
-          which base file holds each doc's emits;
-        - compaction semi-joins the accumulated tombstone ids against
-          the sidecar to find the *affected* files, rewrites exactly
-          those (minus tombstoned rows, plus the folded deltas) into a
-          new ``part-<N>`` directory, and splices the manifest:
-          untouched files carry over byte-identical, zero I/O.
-
-        Cost is O(affected + changes) instead of O(view): at 100 TB a
-        refresh touching 0.1% of docs rewrites ~0.1% of files (plus
-        the sidecar maintenance scan, a 2-column pass over affected
-        parts only).  Range pruning survives: every file remains
-        internally sorted by ``key_enc`` with row-group min/max stats;
-        the manifest is simply allowed to contain overlapping key
-        ranges (like any LSM level), which pruning handles per file.
-
-        Returns {"affected": n_rewritten, "kept": n_untouched}.
-        """
-        sig = (
-            view_name_or_sig
-            if view_name_or_sig in (self.registry._read()["views"])
-            else self._resolve(view_name_or_sig)[0].sig
-        )
-        with self.registry.view_lock(sig):
-            entry = self.registry.get_view(sig)
-            if entry is None or entry["base"] is None:
-                raise NotFoundError("no_base_to_compact", reason=sig)
-            vdir = self.registry.view_dir(sig)
-            if entry.get("manifest") is None:
-                self._init_manifest(sig, entry, vdir)
-            if not entry["layers"]:
-                return {"affected": 0, "kept": len(entry["manifest"])}
-            return self._compact_scoped_locked(sig, entry)
-
-    def _compact_scoped_locked(self, sig: str, entry: dict) -> dict:
-        """Scoped-compaction body; caller holds the view lock, the
-        entry is in manifest mode with at least one layer.  Also the
-        auto-compaction target when a manifest-mode view crosses
-        ``compact_after`` during ``update_view`` — once a view opts
-        into scoped compaction, maintenance keeps it scoped instead of
-        silently reverting to the O(view) full rewrite."""
-        vdir = self.registry.view_dir(sig)
-        files = {
-            rel: os.path.join(vdir, rel) for rel in entry["manifest"]
-        }
-        sidecar = self.spark.read.schema(
-            "id string, file string, n long"
-        ).parquet(os.path.join(vdir, entry["sidecar"]))
-        tombs = self._tomb_ids(entry, vdir).select("id").distinct()
-        affected_rel = [
-            r.file
-            for r in sidecar.join(
-                F.broadcast(tombs), "id", "left_semi"
-            ).select("file").distinct().collect()
-        ]
-        affected = [files[rel] for rel in affected_rel if rel in files]
-        kept = [rel for rel in entry["manifest"]
-                if rel not in set(affected_rel)]
-
-        # fold: (affected-file rows ⊖ all tombs) ⊕ assembled deltas
-        read_view = self.spark.read.schema(VIEW_SCHEMA).parquet
-        pieces = []
-        if affected:
-            pieces.append(
-                read_view(*affected).join(
-                    F.broadcast(tombs), "id", "left_anti"
-                )
-            )
-        pieces.append(self._assemble_deltas(entry, vdir))
-        folded = pieces[0]
-        for p in pieces[1:]:
-            folded = folded.unionByName(p)
-
-        newv = entry["base_version"] + 1
-        part_rel = f"part-{newv}"
-        part_dir = os.path.join(vdir, part_rel)
-        self._write_sorted(folded, part_dir)
-        part_files = [
-            f"{part_rel}/{f}" for f in sorted(os.listdir(part_dir))
-            if f.endswith(".parquet")
-        ]
-        side_rel = f"sidecar-{newv}"
-        self._write_sidecar(
-            sig, vdir, part_files, side_rel,
-            carry_from=(entry["sidecar"], affected_rel),
-        )
-
-        garbage = affected_rel + list(dict.fromkeys(
-            p
-            for l in entry["layers"]
-            for p in (l["delta"], l["tomb"], l.get("lcounts"))
-            if p
-        )) + [entry["sidecar"]]
-        entry.update(
-            manifest=kept + part_files,
-            sidecar=side_rel,
-            base_version=newv,
-            layers=[],
-        )
-        entry["garbage"] = entry.get("garbage", []) + garbage
-        self.registry.set_view(sig, entry)
-        return {"affected": len(affected_rel), "kept": len(kept)}
-
-    def _init_manifest(self, sig: str, entry: dict, vdir: str) -> None:
-        """Promote a monolithic base to manifest form: list its files
-        and build the first id→file sidecar (one 2-column pass)."""
-        base_dir = os.path.join(vdir, entry["base"])
-        rels = [
-            f"{entry['base']}/{f}" for f in sorted(os.listdir(base_dir))
-            if f.endswith(".parquet")
-        ]
-        side_rel = f"sidecar-{entry['base_version']}"
-        self._write_sidecar(sig, vdir, rels, side_rel)
-        entry["manifest"] = rels
-        entry["sidecar"] = side_rel
-        entry["sidecar_n"] = True
-        if entry.get("counts"):
-            # manifest mode: live counts now come from the sidecar
-            entry["garbage"] = entry.get("garbage", []) + [entry["counts"]]
-            entry["counts"] = None
-        self.registry.set_view(sig, entry)
-
-    def _write_sidecar(self, sig: str, vdir: str, new_rels: list[str],
-                       side_rel: str,
-                       carry_from: tuple | None = None) -> None:
-        """Sidecar = (id, file-relpath, n emits of id in that file) over
-        the given files; with ``carry_from`` = (old sidecar rel,
-        replaced rels), rows of untouched files copy over without
-        touching their data files.  The ``n`` column doubles as the
-        per-doc emit-count metadata in manifest mode (live count of a
-        doc = Σn over its sidecar rows) — the O(changes) refresh
-        accounting reads it instead of scanning the view."""
-        new_paths = [os.path.join(vdir, r) for r in new_rels]
-        rel_map = {os.path.join(vdir, r): r for r in new_rels}
-        df = (
-            self.spark.read.schema(VIEW_SCHEMA).parquet(*new_paths)
-            .select("id", F.input_file_name().alias("file"))
-            .groupBy("id", "file")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        )
-        # input_file_name → file:// URI of the absolute path; map back
-        # to manifest-relative names driver-side via a literal map
-        mapping = F.create_map(
-            *[
-                x
-                for abs_p, rel in rel_map.items()
-                for x in (F.lit(f"file://{abs_p}"), F.lit(rel))
-            ]
-        )
-        df = df.select(
-            "id",
-            F.coalesce(
-                mapping[F.col("file")],
-                F.element_at(
-                    F.split(F.col("file"), f"/{os.path.basename(vdir)}/"),
-                    -1,
-                ),
-            ).alias("file"),
-            "n",
-        )
-        if carry_from is not None:
-            old_rel, replaced = carry_from
-            old = self.spark.read.schema(
-                "id string, file string, n long"
-            ).parquet(os.path.join(vdir, old_rel))
-            if replaced:
-                old = old.filter(~F.col("file").isin(replaced))
-            df = old.unionByName(df)
-        df.repartition(F.col("id")).write.mode("overwrite").parquet(
-            os.path.join(vdir, side_rel)
-        )
-
-    def _assemble_deltas(self, entry: dict, vdir: str) -> DataFrame:
-        """The layers folded among themselves (each delta anti-joined
-        against strictly-later tombstones) — the delta half of
-        _assemble_view, reused by scoped compaction."""
-        read_view = self.spark.read.schema(VIEW_SCHEMA).parquet
-        layers = entry["layers"]
-        tombs = self._tomb_ids(entry, vdir)
-        out = None
-        for l in layers:
-            later = tombs.filter(F.col("_tb") > l["batch"]).select("id")
-            d = read_view(os.path.join(vdir, l["delta"])).join(
-                F.broadcast(later), "id", "left_anti"
-            )
-            out = d if out is None else out.unionByName(d)
-        return out
-
     def vacuum(self, sig: str | None = None) -> None:
         """Delete storage versions orphaned by compaction."""
         state = self.registry._read()
@@ -2003,24 +1744,8 @@ class Engine:
             if not entry:
                 continue
             vdir = self.registry.view_dir(s)
-            emptied = set()
             for rel in entry.get("garbage", []):
-                p = os.path.join(vdir, rel)
-                if os.path.isfile(p):  # scoped compaction: single files
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-                    emptied.add(os.path.dirname(p))
-                else:
-                    shutil.rmtree(p, ignore_errors=True)
-            # a part dir whose data files were all GC'd individually
-            # holds only write markers (_SUCCESS) — drop it too
-            for d in emptied:
-                if os.path.isdir(d) and not any(
-                    f.endswith(".parquet") for f in os.listdir(d)
-                ):
-                    shutil.rmtree(d, ignore_errors=True)
+                shutil.rmtree(os.path.join(vdir, rel), ignore_errors=True)
             entry["garbage"] = []
             self.registry.set_view(s, entry)
 
@@ -2041,8 +1766,8 @@ class Engine:
           ``_ONE_TASK_VIEW_MAX_ROWS`` scanned rows (``_registry_rows``).
         - parallel: each piece anti-joined against a broadcast of the
           strictly-later tombstone ids (per-batch changed-doc ids, so
-          small), one broadcast job per piece.  Larger views, manifest
-          views and storage without registry row counts."""
+          small), one broadcast job per piece.  Larger views and
+          storage without registry row counts."""
         entry = self.registry.get_view(sig)
         vdir = self.registry.view_dir(sig)
         if entry is None or (entry["base"] is None and not entry["layers"]):
@@ -2053,13 +1778,7 @@ class Engine:
         # them explicitly skips parquet footer inference — otherwise
         # every assemble runs a schema-read job before any query work
         read_view = self.spark.read.schema(VIEW_SCHEMA).parquet
-        if entry.get("manifest") is not None:
-            # manifest-based base (scoped compaction): explicit file
-            # list, possibly spliced across part generations
-            base = read_view(
-                *[os.path.join(vdir, r) for r in entry["manifest"]]
-            )
-        elif entry["base"]:
+        if entry["base"]:
             base = read_view(os.path.join(vdir, entry["base"]))
         else:
             base = self.spark.createDataFrame([], VIEW_SCHEMA)
@@ -2068,11 +1787,19 @@ class Engine:
             if not layers:
                 return base
             # every tombstone is later than the base (batches count
-            # from 1)
-            tombs = self._tomb_ids(entry, vdir).select("id")
-            return base.join(
-                F.broadcast(tombs), "id", "left_anti"
-            ).unionByName(self._assemble_deltas(entry, vdir))
+            # from 1); a delta only loses ids to strictly later ones
+            tombs = self._tomb_ids(entry, vdir)
+            out = base.join(
+                F.broadcast(tombs.select("id")), "id", "left_anti"
+            )
+            for l in layers:
+                later = tombs.filter(F.col("_tb") > l["batch"])
+                out = out.unionByName(
+                    read_view(os.path.join(vdir, l["delta"])).join(
+                        F.broadcast(later.select("id")), "id", "left_anti"
+                    )
+                )
+            return out
         if not layers:
             return base.coalesce(1)
         out = base.withColumn("_b", F.lit(0))
@@ -2097,7 +1824,7 @@ class Engine:
         tombs = None
         for l in entry["layers"]:
             t = self.spark.read.schema("id string").parquet(
-                os.path.join(vdir, l["tomb"])
+                os.path.join(vdir, l["lcounts"])
             ).withColumn("_tb", F.lit(l["batch"]))
             tombs = t if tombs is None else tombs.unionByName(t)
         return tombs

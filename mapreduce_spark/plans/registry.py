@@ -23,9 +23,7 @@ open, so lazy DataFrames stay valid across refreshes):
     <storage>/views/<sig>/lcounts-<B>/      (id, n) per changed doc,
                                             batch B — doubles as the
                                             tombstone id set (readers
-                                            project id only); legacy
-                                            stores may still hold
-                                            separate tomb-<B>/ dirs
+                                            project id only)
 
 The effective view is the LSM-style fold
 ``((base ⊖ t1) ⊕ d1) ⊖ t2 ⊕ d2 …`` — see engine._assemble_view.

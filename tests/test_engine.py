@@ -347,49 +347,6 @@ def test_deleted_docs_removed_incrementally(spark, sf_dir, tmp_path):
     assert got != {tuple(k): v for k, v in before}
 
 
-def test_refresh_pre_metadata_layout_falls_back_to_view_scan(
-    spark, sf_dir, tmp_path
-):
-    """A manifest-mode view whose storage predates the per-doc
-    emit-count sidecar (no ``sidecar_n``) must still refresh: the
-    O(changes) accounting returns None and update_view falls back to
-    the legacy one-shot id-pruned view scan (regression: the round-14
-    lcounts rewrite dropped the fallback's tombstone frame, so this
-    path raised UnboundLocalError instead)."""
-    eng = Engine(spark, sf_dir, str(tmp_path), compact_after=99)
-    spec = {"map": MapSpec("orders", ("num", "o_orderkey"),
-                           ("num", "o_totalprice")),
-            "reduce": "_sum"}
-    eng.put_design("d", {"v": spec})
-    raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    hi = raw.agg(F.max("o_orderkey")).collect()[0][0]
-    b1 = raw.filter(F.col("o_orderkey") <= hi // 2)
-    b2 = raw.filter(F.col("o_orderkey") > hi // 2)
-    eng.update_view("d/v", changes=b1)
-    eng.compact_scoped("d/v")  # manifest mode
-    sig = eng.registry.resolve("d", "v")
-    entry = eng.registry.get_view(sig)
-    assert entry["manifest"] is not None and entry["sidecar_n"]
-    # simulate storage written before sidecar emit counts existed
-    entry["sidecar_n"] = False
-    eng.registry.set_view(sig, entry)
-
-    eng.update_view("d/v", changes=b2)
-    ref = Engine(spark, sf_dir, str(tmp_path / "ref"))
-    ref.put_design("d", {"v": spec})
-    ref.update_view("d/v", changes=b1.unionByName(b2))
-
-    def rows(res):
-        return sorted(
-            (r["key"], round(r["value"], 6)) for r in res.rows()
-        )
-
-    got = rows(eng.query("d/v", group=True, stale="ok"))
-    assert got == rows(ref.query("d/v", group=True, stale="ok"))
-    # the fallback's removed-count kept the zero-job stats exact
-    assert eng.registry.get_view(sig)["stats"]["rows"] == raw.count()
-
-
 def test_deep_layer_stack_reads_and_compaction_restores_scan(
     spark, sf_dir, tmp_path, monkeypatch
 ):
@@ -601,81 +558,6 @@ def test_update_after_refreshes_post_query(spark, sf_dir, tmp_path):
     assert _rows(res) == before
     after = _rows(eng.query("d/v", group_level=2, stale="ok"))
     assert after != before
-
-
-def test_scoped_compaction_rewrites_only_affected_files(
-    spark, sf_dir, tmp_path
-):
-    """Partition-scoped compaction (SURVEY §7.3): only base files
-    holding emits of CHANGED docs are rewritten; untouched files
-    splice into the new manifest byte-identical with zero I/O."""
-    eng = Engine(spark, sf_dir, str(tmp_path), compact_after=99)
-    spec = {"map": MapSpec("orders", ("num", "o_orderkey"),
-                           ("num", "o_totalprice")),
-            "reduce": "_sum"}
-    eng.put_design("d", {"v": spec})
-    raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    hi = raw.agg(F.max("o_orderkey")).collect()[0][0]
-    b1 = raw.filter(F.col("o_orderkey") <= hi // 2)
-    b2 = raw.filter(F.col("o_orderkey") > hi // 2)
-    eng.update_view("d/v", changes=b1)
-    eng.update_view("d/v", changes=b2)
-    # append-only fold: the new docs' tombstones hit no base file
-    r1 = eng.compact_scoped("d/v")
-    assert r1["affected"] == 0 and r1["kept"] > 0
-    sig = eng.registry.resolve("d", "v")
-    entry = eng.registry.get_view(sig)
-    base_rels = [r for r in entry["manifest"]
-                 if r.startswith("base-v1/")]
-    part_rels = [r for r in entry["manifest"] if not
-                 r.startswith("base-v1/")]
-    assert base_rels and part_rels and not entry["layers"]
-
-    # update the b2 docs → only the part files should be rewritten
-    b2mod = b2.withColumn("o_totalprice",
-                          F.col("o_totalprice") * 2)
-    eng.update_view("d/v", changes=b2mod)
-    r2 = eng.compact_scoped("d/v")
-    entry2 = eng.registry.get_view(sig)
-    assert set(base_rels) <= set(entry2["manifest"])  # untouched
-    assert not set(part_rels) & set(entry2["manifest"])  # replaced
-    assert r2["kept"] >= len(base_rels)
-
-    # correctness: equals a from-scratch build over b1 ∪ b2mod
-    def rows(res):
-        return sorted(
-            (r["key"], round(r["value"], 6)) for r in res.rows()
-        )
-
-    ref = Engine(spark, sf_dir, str(tmp_path / "ref"))
-    ref.put_design("d", {"v": spec})
-    ref.update_view("d/v", changes=b1.unionByName(b2mod))
-    want = rows(ref.query("d/v", group=True, stale="ok"))
-    got = rows(eng.query("d/v", group=True, stale="ok"))
-    assert got == want and want
-    # stats stayed exact through both scoped compactions
-    assert entry2["stats"]["rows"] == raw.count()
-    # vacuum removes only replaced files; queries stay green
-    eng.vacuum(sig)
-    import os as _os
-
-    vdir = eng.registry.view_dir(sig)
-    assert all(
-        _os.path.exists(_os.path.join(vdir, r)) for r in base_rels
-    )
-    assert not any(
-        _os.path.exists(_os.path.join(vdir, r)) for r in part_rels
-    )
-    assert rows(eng.query("d/v", group=True, stale="ok")) == want
-    # a later FULL compaction demotes manifest mode cleanly: all part
-    # generations + sidecar become garbage, results unchanged
-    eng._compact(sig, eng.registry.get_view(sig))
-    entry3 = eng.registry.get_view(sig)
-    assert entry3["manifest"] is None and entry3["layers"] == []
-    eng.vacuum(sig)
-    assert rows(eng.query("d/v", group=True, stale="ok")) == want
-    left = set(_os.listdir(vdir))
-    assert left == {entry3["base"]}, left  # counts re-materialize lazily
 
 
 def test_keyed_include_docs_prunes_doc_join(spark, sf_dir, tmp_path):
@@ -937,64 +819,6 @@ def test_query_batch_validates_all_first(engine, monkeypatch):
         engine.query_batch("d/seg", [{"limit": 3}, {"skip": "bogus"}])
 
 
-def test_auto_compaction_stays_scoped_in_manifest_mode(
-    spark, sf_dir, tmp_path
-):
-    """Once a view opts into scoped compaction, crossing compact_after
-    during update_view triggers the SCOPED fold (manifest spliced,
-    layers cleared) — not a silent revert to the O(view) full
-    rewrite."""
-    eng = Engine(spark, sf_dir, str(tmp_path), compact_after=2)
-    spec = {"map": MapSpec("orders", ("num", "o_orderkey"),
-                           ("num", "o_totalprice")),
-            "reduce": "_sum"}
-    eng.put_design("d", {"v": spec})
-    raw = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    hi = raw.agg(F.max("o_orderkey")).collect()[0][0]
-    q = hi // 4 + 1
-    parts = [raw.filter((F.col("o_orderkey") >= i * q)
-                        & (F.col("o_orderkey") < (i + 1) * q))
-             for i in range(4)]
-    eng.update_view("d/v", changes=parts[0])
-    eng.compact_scoped("d/v")  # opt in (manifest mode, 0 layers)
-    sig = eng.registry.resolve("d", "v")
-    v0 = eng.registry.get_view(sig)["base_version"]
-    base_files = [r for r in eng.registry.get_view(sig)["manifest"]]
-
-    # two more refreshes cross compact_after=2 → auto fold, scoped
-    eng.update_view("d/v", changes=parts[1])
-    eng.update_view("d/v", changes=parts[2])
-    entry = eng.registry.get_view(sig)
-    assert entry["manifest"] is not None  # still manifest mode
-    assert not entry["layers"]  # folded
-    assert entry["base_version"] > v0
-    # append-only folds: every original base file carried over
-    assert set(base_files) <= set(entry["manifest"])
-
-    # a further refresh in manifest mode must account superseded rows
-    # from the SIDEcar's emit counts — never by assembling the view
-    real_assemble = eng._assemble_view
-    eng._assemble_view = lambda sig: (_ for _ in ()).throw(
-        AssertionError("manifest-mode refresh assembled the view")
-    )
-    try:
-        eng.update_view("d/v", changes=parts[3])
-    finally:
-        eng._assemble_view = real_assemble
-    entry = eng.registry.get_view(sig)
-    assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
-    got = sorted(
-        (r["key"], round(r["value"], 6))
-        for r in eng.query("d/v", group=True, stale="ok").rows()
-    )
-    ref = Engine(spark, sf_dir, str(tmp_path / "ref"))
-    want = sorted(
-        (r["key"], round(r["value"], 6))
-        for r in ref.query(spec, group=True).rows()
-    )
-    assert got == want
-
-
 def test_incremental_source_scan_pushes_coarse_seq_bound(
     spark, sf_dir, tmp_path
 ):
@@ -1138,28 +962,32 @@ def test_view_lock_is_cross_process(tmp_path):
             p.terminate()
 
 
-def test_public_compact_demotes_manifest(spark, sf_dir, tmp_path):
-    """compact() (CouchDB _compact parity) folds everything into one
-    fresh monolithic base, demoting a manifest-mode view; results
-    unchanged, vacuum leaves only the new base on disk."""
+def test_public_compact_folds_layers(spark, sf_dir, tmp_path):
+    """compact() (CouchDB _compact parity) folds base and every layer
+    into one fresh base version with exact stats; answers are
+    unchanged and vacuum leaves only the new base on disk."""
     eng = Engine(spark, sf_dir, str(tmp_path), compact_after=99)
-    eng.put_design("d", {"seg": SEG_VIEW})
-    eng.update_view("d/seg")
-    eng.compact_scoped("d/seg")  # manifest mode
-    sig = eng.registry.resolve("d", "seg")
-    assert eng.registry.get_view(sig)["manifest"] is not None
-    before = _seg_ids(eng.query("d/seg", update=False))
+    eng.put_design("d", {"v": VIEW})
+    for b in _batches(spark, sf_dir, 3):  # a base and two layers
+        eng.update_view("d/v", changes=b)
+    sig = eng.registry.resolve("d", "v")
+    built = eng.registry.get_view(sig)
+    assert len(built["layers"]) == 2
+    before = _rows(eng.query("d/v", group_level=2, stale="ok"))
 
-    out = eng.compact("d/seg")
+    out = eng.compact("d/v")
     entry = eng.registry.get_view(sig)
-    assert entry["manifest"] is None and not entry["layers"]
-    assert entry["base_version"] == out["base_version"] > 1
+    assert not entry["layers"]
+    assert entry["base_version"] == out["base_version"]
+    assert out["base_version"] > built["base_version"]
+    assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
+    assert _rows(eng.query("d/v", group_level=2, stale="ok")) == before
     eng.vacuum(sig)
     vdir = eng.registry.view_dir(sig)
     dirs = [d for d in os.listdir(vdir) if os.path.isdir(
         os.path.join(vdir, d))]
     assert dirs == [entry["base"]]  # counts re-materialize lazily
-    assert _seg_ids(eng.query("d/seg", update=False)) == before
+    assert _rows(eng.query("d/v", group_level=2, stale="ok")) == before
 
 
 def test_include_docs_never_fans_out_on_duplicate_source_rows(engine):
@@ -1658,6 +1486,88 @@ def test_count_writes_crash_before_layer_commit_recovers(
                 == eng._assemble_view(nsig).count()), n
     assert no_dup_ids(counts) and no_dup_ids(lcounts)
     ref.update_view("dd/by_flag", None, cuts[1])
+    assert grouped(eng) == grouped(ref)
+
+
+@pytest.mark.parametrize(
+    "fused", [False, True], ids=["update_view", "refresh_ddoc"]
+)
+def test_compaction_crash_at_base_swap_recovers(
+    spark, sf_dir, tmp_path, monkeypatch, fused
+):
+    """A compaction that crashes after ``base-v<N+1>`` is on disk but
+    before the registry swaps to it leaves that base an orphan: a fresh
+    Engine on the same storage keeps the committed ``last_seq`` and
+    layer stack and answers like a from-scratch build; the next refresh
+    compacts again, overwriting the orphan, with exact ``stats.rows``;
+    vacuum then leaves only the directories the registry references."""
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    seq = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
+    top = raw.agg(F.max(seq)).collect()[0][0]
+    cuts = [top // 3, top // 2, 2 * top // 3]
+    names = ["dd/by_flag", "dd/big_qty"] if fused else ["dd/by_flag"]
+    store = str(tmp_path / "views")
+
+    def open_engine(path=store):
+        eng = Engine(spark, sf_dir, path, compact_after=2)
+        eng.put_design("dd", REFRESH_VIEWS)
+        return eng
+
+    def refresh(eng, to_seq):
+        if fused:
+            eng.refresh_ddoc("dd", to_seq=to_seq)
+        else:
+            eng.update_view(names[0], None, to_seq)
+
+    def grouped(eng):
+        return _rows(eng.query("dd/by_flag", group_level=2, stale="ok"))
+
+    def entries(eng):
+        return {n: eng.registry.get_view(eng.registry.resolve(
+            *n.split("/"))) for n in names}
+
+    eng = open_engine()
+    for n in names:
+        eng.update_view(n, None, cuts[0])
+    refresh(eng, cuts[1])  # first layer
+    real_compact = eng._compact
+    committed = {}
+
+    def crash(*_):
+        raise RuntimeError("crash at the base swap")
+
+    def compact_then_crash(sig, entry):
+        committed.update(entries(eng))
+        monkeypatch.setattr(eng.registry, "set_view", crash)
+        real_compact(sig, entry)
+
+    monkeypatch.setattr(eng, "_compact", compact_then_crash)
+    with pytest.raises(RuntimeError, match="crash at the base swap"):
+        refresh(eng, cuts[2])  # second layer: the compaction crashes
+    monkeypatch.undo()
+    crashed = [n for n, e in committed.items() if len(e["layers"]) == 2]
+    assert crashed
+    for n in crashed:
+        vdir = eng.registry.view_dir(eng.registry.resolve(*n.split("/")))
+        assert os.path.isdir(os.path.join(vdir, "base-v2")), n
+
+    eng = open_engine()
+    assert entries(eng) == committed  # last_seq and layers unchanged
+    last_seq = committed["dd/by_flag"]["last_seq"]
+    ref = open_engine(str(tmp_path / "ref"))
+    ref.update_view("dd/by_flag", None, last_seq)
+    assert grouped(eng) == grouped(ref)
+
+    refresh(eng, None)  # finds the stack at compact_after: compacts
+    for n, entry in entries(eng).items():
+        sig = eng.registry.resolve(*n.split("/"))
+        assert not entry["layers"] and entry["base"] == "base-v2", n
+        assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
+        eng.vacuum(sig)
+        vdir = eng.registry.view_dir(sig)
+        referenced = {entry["base"], entry.get("counts")} - {None}
+        assert set(os.listdir(vdir)) == referenced, n
+    ref.update_view("dd/by_flag")
     assert grouped(eng) == grouped(ref)
 
 

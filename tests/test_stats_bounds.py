@@ -86,14 +86,13 @@ def _step_batch(spark, schema, docs, deleted_ids):
     return df
 
 
-@pytest.mark.parametrize("seed,compact_after,scoped", [
-    (1201, 2, False),   # compact eagerly: stats re-observed most
-    (1202, 3, False),   # the bench default
-    (1203, 99, False),  # never compact: deepest stack, additive keys
-    (1204, 3, True),    # partition-SCOPED compaction (manifest mode)
+@pytest.mark.parametrize("seed,compact_after", [
+    (1201, 2),   # compact eagerly: stats re-observed most
+    (1202, 3),   # the bench default
+    (1203, 99),  # never compact: deepest stack, additive keys
 ])
 def test_stats_soundness_under_interleaving(
-    spark, sf_dir, tmp_path, universe, seed, compact_after, scoped
+    spark, sf_dir, tmp_path, universe, seed, compact_after
 ):
     schema, pool = universe
     rng = random.Random(seed)
@@ -136,11 +135,6 @@ def test_stats_soundness_under_interleaving(
 
         batch = _step_batch(spark, schema, inserts + updates, deletes)
         eng.update_view("d/v", changes=batch)
-        if scoped and step in (2, 5):
-            # flip the view into manifest mode / splice it again —
-            # the scoped-compaction layer's stats accounting is under
-            # the same soundness contract as the full rewrite
-            eng.compact_scoped("d/v")
 
         for d in inserts + updates:
             model[(d["l_orderkey"], d["l_linenumber"])] = d
