@@ -56,6 +56,7 @@ from mapreduce_spark.operators.mapphase import (
     MapSpec,
     build_view_python_on,
     build_view_structured_on,
+    python_fanout,
 )
 from mapreduce_spark.operators.query import (
     attach_docs,
@@ -77,15 +78,31 @@ from mapreduce_spark.sources.docs import (
 
 log = logging.getLogger("mapreduce_spark.engine")
 
-# Minimum total input bytes before a structured build's scan is fanned
-# out across the cores (see ``extensions.util.fanout_width``).  Below
-# this the serial encode is cheaper than the round-robin exchange plus
-# the extra AQE shuffle-stage job it adds (~0.1-0.3 s of scheduler
-# round-trip under co-tenant contention — the drift mode
-# tests/test_jobcount.py pins against).  1 MiB of parquet is several
-# MB decoded ≈ >0.5 s of serial encode, which dominates that overhead.
-# Env-tunable for clusters whose scheduling or scan economics differ;
-# at real scale the splits>=cores check makes the whole probe a no-op.
+# The map phase's size rule (``_one_task_scan``), on the total bytes of
+# the files a build or refresh scans:
+# - at most this: the scan is coalesced to one partition below the
+#   latest-per-_id collapse, so the collapse, the map (every tier) and
+#   a refresh's delta write above it run in one task: no collapse
+#   shuffle, no ``right_size`` or ``python_fanout`` exchange, and no
+#   partition-count probe (a first build still range-sorts its base);
+# - above it, or of unknown size (remote files, frames with no input
+#   files): the map spreads across the cores — ``right_size`` for
+#   structured specs when the scan has fewer splits than cores,
+#   ``python_fanout`` for the Python tier.
+# 1 MiB of parquet is several MB decoded, ≈ 0.5 s of serial encode, so
+# above it the fan-out repays its exchange and its extra AQE jobs
+# (~0.1-0.3 s of scheduler round-trip each under co-tenant contention —
+# the drift mode tests/test_jobcount.py pins against).  At the limit one
+# task is no slower on any tier and runs fewer jobs.  Measured on a
+# 4-core box at local[4], an 8,000-doc raw changes log of 946 KB, one
+# view per tier (MapSpec / Variant JS / interpreted JS), median of 6,
+# parallel → one task: first build 0.58 → 0.47, 0.59 → 0.52,
+# 0.69 → 0.56 s at 4/4/7 → 3/3/4 jobs; first-layer refresh of a
+# 200-change batch 0.75 → 0.70, 0.65 → 0.62, 0.83 → 0.59 s at
+# 6/5/7 → 4/4/4 jobs and 9/8/14 → 4/4/4 tasks (the parallel MapSpec
+# refresh, the first after the append, also paid the footer-schema job
+# ``load_table`` no longer runs).  Env-tunable for clusters whose
+# scheduling or scan economics differ.
 _FANOUT_MIN_BYTES = int(
     os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 1 << 20)
 )
@@ -121,6 +138,26 @@ def _one_task(rows_bound: int | None, max_rows: int) -> bool:
     """True when work whose scanned input is bounded by ``rows_bound``
     rows (None: unknown) runs as one task."""
     return rows_bound is not None and rows_bound <= max_rows
+
+
+def _one_task_scan(df: DataFrame) -> tuple[DataFrame, bool]:
+    """The map phase's one-task rule: ``(df.coalesce(1), True)`` when
+    the files ``df`` scans total at most ``_FANOUT_MIN_BYTES``, so the
+    latest-per-``_id`` collapse, the map and the write above it run in
+    one task with no exchange.  Otherwise, and for an unknown size
+    (remote files, or a frame with no input files such as
+    ``createDataFrame``), ``(df, False)``: the caller keeps its
+    fan-out."""
+    from mapreduce_spark.extensions.util import input_bytes
+
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return df, False
+    total = input_bytes(files, _FANOUT_MIN_BYTES) if files else None
+    if total is None or total > _FANOUT_MIN_BYTES:
+        return df, False
+    return df.coalesce(1), True
 
 
 def _one_task_view(entry: dict | None) -> bool:
@@ -547,7 +584,7 @@ class Engine:
             self.build_views(fallback, max_parallel)
 
     def _fused_frame(self, vdefs: list[ViewDef],
-                     src: DataFrame, *,
+                     src: DataFrame, *, fan_out: bool = True,
                      view_guards: list | None = None,
                      extra_entries: list | None = None) -> DataFrame:
         """One-scan frame of every view's emits, tagged ``_vw`` (the
@@ -561,7 +598,8 @@ class Engine:
         ``seq > last_seq_i`` bound and the not-deleted filter.
         ``extra_entries`` appends pre-built (possibly guarded) struct
         Columns to the emit array — the refresh's ``_vw = -1``
-        changed-doc sentinel rides the same scan this way."""
+        changed-doc sentinel rides the same scan this way.
+        ``fan_out`` is False on ``_one_task_scan``'s one-task path."""
         from mapreduce_spark.extensions.util import right_size
         from mapreduce_spark.operators.mapphase import (
             spec_needs_vdoc,
@@ -574,14 +612,13 @@ class Engine:
         # on more than one task no matter how Spark splits the file —
         # spread the encode across the cores with one small round-robin
         # exchange of the raw rows.  At scale the input has more splits
-        # than cores and right_size is a no-op; below _FANOUT_MIN_BYTES
-        # the serial encode is cheaper than the exchange + extra AQE
-        # job.  Measured (r15, quiet window, lineitem group alone):
-        # wall 17.7→4.3 s at +10 CPU-s (shuffle-row decode replacing
-        # the vectorized scan under the encode); the persist below
-        # keeps the range-partitioner's sampling pass from re-running
-        # the widened encode.
-        src = right_size(src, min_bytes=_FANOUT_MIN_BYTES)
+        # than cores and right_size is a no-op.  Measured (r15, quiet
+        # window, lineitem group alone): wall 17.7→4.3 s at +10 CPU-s
+        # (shuffle-row decode replacing the vectorized scan under the
+        # encode); _build_fused's persist keeps the range-partitioner's
+        # sampling pass from re-running the widened encode.
+        if fan_out:
+            src = right_size(src, min_bytes=_FANOUT_MIN_BYTES)
         if any(
             spec_needs_vdoc(s) for v in vdefs for s in v._spec_list
         ):
@@ -630,7 +667,10 @@ class Engine:
             seq_col = F.expr(t.seq_expr).cast("long")
             obs = Observation()
             src = src.observe(obs, F.max(seq_col).alias("mx"))
-            fused = self._fused_frame(vdefs, self._pre_map(t, src))
+            src, one = _one_task_scan(src)
+            fused = self._fused_frame(
+                vdefs, self._pre_map(t, src), fan_out=not one
+            )
             # the range partitioner SAMPLES its child — a second full
             # execution of the fused encode work; cache the (small,
             # ≈ Σ view sizes) emit rows across the sample+write passes
@@ -780,6 +820,7 @@ class Engine:
             src = self._source_df(
                 vdefs[0], since=min(last_seqs), to_seq=to_seq
             )
+        src, one = _one_task_scan(src)
         src = src.withColumn(
             "_fseq", F.expr(t.seq_expr).cast("long")
         )
@@ -812,7 +853,7 @@ class Engine:
             ],
         )
         frame = self._fused_frame(
-            vdefs, collapsed, view_guards=guards,
+            vdefs, collapsed, fan_out=not one, view_guards=guards,
             extra_entries=[sentinel],
         )
         is_sent = F.col("_vw") == -1
@@ -1229,25 +1270,29 @@ class Engine:
     def _build(self, vdef: ViewDef, raw_df: DataFrame) -> DataFrame:
         """Run the map phase over raw-schema rows (non-deleted only).
 
-        Structured (JVM-codegen) specs repartition the input to core
-        count first: the fixture files are single-row-group parquet, so
-        the encode otherwise serializes onto one task — and the range
-        partitioner's sampling pass re-runs it serially a second time
-        (r15 measurement: q18's build chain was wall-bound on exactly
-        this).  The round-robin exchange's map side is the serial scan
-        either way, so it adds little; at scale (splits ≥ cores) and
-        below _FANOUT_MIN_BYTES (dimension tables, where the extra AQE
-        job costs more than the fan-out buys) ``right_size`` is a
-        no-op.  The Python/interpreted path stays on the scan splits:
-        fanning it out multiplies Python-worker init across tasks,
-        measured as a clear CPU loss (r15)."""
+        A scan of at most ``_FANOUT_MIN_BYTES`` runs as one task
+        (``_one_task_scan``): the collapse, the map and the write above
+        it share one partition, with no exchange on any tier.
+
+        Larger scans spread the map across the cores.  Structured
+        (JVM-codegen) specs go through ``right_size``: the fixture files
+        are single-row-group parquet, so the encode otherwise
+        serializes onto one task — and the range partitioner's sampling
+        pass re-runs it serially a second time (r15 measurement: q18's
+        build chain was wall-bound on exactly this).  The round-robin
+        exchange's map side is the serial scan either way, so it adds
+        little; at scale (splits ≥ cores) ``right_size`` is a no-op.
+        The Python/interpreted path goes through ``python_fanout``,
+        which repartitions to the shuffle parallelism when the input
+        arrives with fewer partitions."""
         from mapreduce_spark.extensions.util import right_size
 
+        raw_df, one = _one_task_scan(raw_df)
         raw_df = self._pre_map(TABLES[vdef.table], raw_df)
         m = vdef.map_def
         if hasattr(m, "specs"):  # VariantJSView: compiled raw JS
             m = m.specs
-        if isinstance(m, (MapSpec, list)):
+        if isinstance(m, (MapSpec, list)) and not one:
             raw_df = right_size(raw_df, min_bytes=_FANOUT_MIN_BYTES)
         if isinstance(m, MapSpec):
             return build_view_structured_on(raw_df, m)
@@ -1260,6 +1305,8 @@ class Engine:
                 out = d if out is None else out.unionByName(d)
             return out
         table, fn = m
+        if not one:
+            raw_df = python_fanout(raw_df)
         return build_view_python_on(raw_df, table, fn)
 
     def update_view(self, vdef_or_name: Any,
@@ -1400,13 +1447,17 @@ class Engine:
                 F.max(F.size("value_num_arr")).alias("w"),
                 F.approx_count_distinct("key_enc").alias("keys"),
             ).withColumn("_vw", F.lit(0))
+            frame = emits.unionByName(ids, allowMissingColumns=True)
+            if _one_task_scan(src)[1]:
+                # _build coalesced the emit branch below its collapse;
+                # this folds the id branch's scan splits into that task
+                frame = frame.coalesce(1)
             batch = entry["next_batch"]
             tmp = tempfile.mkdtemp(prefix="refresh-",
                                    dir=self.registry.storage_dir)
             try:
                 (
-                    emits.unionByName(ids, allowMissingColumns=True)
-                    .write.partitionBy("_vw").mode("overwrite")
+                    frame.write.partitionBy("_vw").mode("overwrite")
                     .parquet(tmp)
                 )
                 probe = observed(obs)

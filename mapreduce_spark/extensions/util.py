@@ -95,6 +95,26 @@ def normalized_vectors(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
+def input_bytes(files: list[str], limit: int) -> int | None:
+    """Total size of the local ``files`` (``DataFrame.inputFiles()``
+    URIs), summed only until it passes ``limit``; None when a file is
+    remote or cannot be stat-ed (size unknown)."""
+    from urllib.parse import unquote, urlparse
+
+    total = 0
+    for uri in files:
+        parts = urlparse(uri)
+        if parts.scheme not in ("", "file"):
+            return None
+        try:
+            total += os.path.getsize(unquote(parts.path))
+        except OSError:
+            return None
+        if total > limit:
+            break
+    return total
+
+
 def fanout_width(df: DataFrame, min_factor: int = 1,
                  min_bytes: int = 0) -> int:
     """Partition count ``right_size`` would fan ``df`` out to, or 0.
@@ -104,13 +124,12 @@ def fanout_width(df: DataFrame, min_factor: int = 1,
     persist-across-sampling-passes choice) can ask without building
     a throwaway repartitioned frame.
 
-    ``min_bytes`` gates the fan-out on total input size: below it the
-    serial compute is cheaper than the exchange plus the extra AQE
-    shuffle-stage job the repartition costs (a 4 KB dimension table
-    gains nothing from 32 tasks).  Sizes are read from the local
-    filesystem; non-local or unstat-able inputs are assumed big
-    (fan out) — at real scale the file-count check already made this
-    a no-op."""
+    ``min_bytes`` gates the fan-out on total input size
+    (``input_bytes``): below it the serial compute is cheaper than the
+    exchange plus the extra AQE shuffle-stage job the repartition
+    costs (a 4 KB dimension table gains nothing from 32 tasks).
+    Inputs of unknown size are assumed big (fan out) — at real scale
+    the file-count check already made this a no-op."""
     target = df.sparkSession.sparkContext.defaultParallelism * min_factor
     try:
         files = df.inputFiles()
@@ -119,22 +138,8 @@ def fanout_width(df: DataFrame, min_factor: int = 1,
     if not (0 < len(files) < target):
         return 0
     if min_bytes:
-        from urllib.parse import unquote, urlparse
-
-        total = 0
-        for uri in files:
-            parts = urlparse(uri)
-            if parts.scheme not in ("", "file"):
-                total = min_bytes  # remote store: size unknown
-                break
-            try:
-                total += os.path.getsize(unquote(parts.path))
-            except OSError:
-                total = min_bytes
-                break
-            if total >= min_bytes:
-                break
-        if total < min_bytes:
+        total = input_bytes(files, min_bytes)
+        if total is not None and total < min_bytes:
             return 0
     return target
 

@@ -500,14 +500,13 @@ def build_view_python(
 ) -> DataFrame:
     """Arbitrary Python map fn → view DataFrame via mapInPandas."""
     return build_view_python_on(
-        load_table(spark, sf_dir, table), table, map_fn
+        python_fanout(load_table(spark, sf_dir, table)), table, map_fn
     )
 
 
-def build_view_python_on(
-    df: DataFrame, table: str, map_fn: Callable[[dict, Callable], None]
-) -> DataFrame:
-    """Python map path over an arbitrary raw-schema DataFrame.
+def python_fanout(df: DataFrame) -> DataFrame:
+    """Spread the Python map path's input over the session's shuffle
+    parallelism.
 
     The interpreted map fn is the per-row cost center, so its
     parallelism must NOT be whatever the parquet file count happens
@@ -516,7 +515,9 @@ def build_view_python_on(
     session's shuffle parallelism when the source arrives with fewer
     partitions; the round-robin exchange costs far less than the
     serial Python it prevents, and at cluster scale real tables
-    already exceed the target so this is a no-op."""
+    already exceed the target so this is a no-op.  The partition-count
+    probe plans (and under AQE runs) the input's own shuffle stages,
+    so the engine skips this on scans too small to be worth it."""
     raw = df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions", "200"
     )
@@ -526,6 +527,14 @@ def build_view_python_on(
         target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target)
+    return df
+
+
+def build_view_python_on(
+    df: DataFrame, table: str, map_fn: Callable[[dict, Callable], None]
+) -> DataFrame:
+    """Python map path over an arbitrary raw-schema DataFrame, on
+    ``df``'s own partitions (``python_fanout`` spreads them first)."""
     docs = as_docs(df, table)
     col_order = [f.name for f in VIEW_SCHEMA.fields]
     # resolve the DocTable driver-side: user-registered tables are not

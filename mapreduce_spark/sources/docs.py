@@ -265,32 +265,38 @@ TABLES: dict[str, DocTable] = {
 }
 
 
-# (path → (dir fingerprint, parquet footer schema)) — schema
+# path → (leaf files, Spark schema, reference footer).  Schema
 # inference is a whole Spark job per spark.read.parquet call; one
 # inference per table path per CONTENT VERSION is enough.  Only the
 # SCHEMA is cached, never the file list: raw sources are append-only
 # changes feeds (tests and real CouchDB exports append new part
 # files), so every read re-lists the directory (driver-side, no job)
-# and new batches stay visible.  The fingerprint keys the entry so an
-# append that INTRODUCES a column (e.g. the first batch carrying the
-# optional ``_deleted``) re-infers instead of silently null-filling
-# the new column through a stale explicit schema.  The fingerprint is
-# (dir mtime, file count, total bytes, max file mtime): dir mtime
-# alone misses an IN-PLACE rewrite of an existing part file (same
-# name, new content/schema) — size + per-file mtime catch it without
-# hashing (ADVICE r11).
-_SCHEMA_CACHE: dict[str, tuple[tuple, object]] = {}
+# and new batches stay visible.  The entry is keyed on every leaf
+# file's (name, size, mtime): dir mtime alone misses an IN-PLACE
+# rewrite of an existing part file (same name, new content/schema) —
+# size + per-file mtime catch it without hashing (ADVICE r11).
+#
+# An append keeps the entry: when every leaf seen before is unchanged
+# and each new file sits in a directory that already held one and
+# carries a footer schema equal to the reference footer (one leaf's,
+# read with pyarrow at inference; metadata compared too), the cached
+# schema still holds — read on the driver, no Spark job.  Anything
+# else re-infers: a changed or removed file, a new partition
+# directory (its value could change a partition column's type), or a
+# new footer — e.g. the first batch carrying the optional
+# ``_deleted``, which a stale explicit schema would null-fill.
+_SCHEMA_CACHE: dict[str, tuple[dict, object, object]] = {}
 
 
-def _dir_fingerprint(path: str):
-    """Cheap content-version fingerprint of a parquet table directory
-    (driver-side listing only — no Spark job, no file reads).
+def _leaf_files(path: str) -> dict[str, tuple[int, int]] | None:
+    """(relative name → (size, mtime_ns)) of every file under a parquet
+    table path (driver-side listing only — no Spark job, no file
+    reads); None when the path cannot be listed.
 
     Recurses into subdirectories so hive-partitioned layouts
-    (``key=…/part-*.parquet``) are fingerprinted by their leaf files
-    too — a top-level-only scan would miss an in-place rewrite of a
-    nested part (the exact staleness mode this cache key exists to
-    close).
+    (``key=…/part-*.parquet``) are keyed by their leaf files too — a
+    top-level-only scan would miss an in-place rewrite of a nested
+    part (the exact staleness mode this cache key exists to close).
 
     Cost contract (ADVICE r12): O(files) driver-side stats per
     load_table call — microseconds on a local FS at the file counts a
@@ -305,37 +311,79 @@ def _dir_fingerprint(path: str):
     except OSError:
         return None
     if not os.path.isdir(path):
-        return (st.st_mtime_ns, 1, st.st_size, st.st_mtime_ns)
-    n = total = newest = 0
+        return {"": (st.st_size, st.st_mtime_ns)}
+    out = {}
     try:
         for root, _dirs, files in os.walk(path):
             for fn in files:
+                full = os.path.join(root, fn)
                 try:
-                    s = os.stat(os.path.join(root, fn))
+                    s = os.stat(full)
                 except OSError:
                     continue
-                n += 1
-                total += s.st_size
-                if s.st_mtime_ns > newest:
-                    newest = s.st_mtime_ns
+                out[os.path.relpath(full, path)] = (
+                    s.st_size, s.st_mtime_ns
+                )
     except OSError:
         return None
-    return (st.st_mtime_ns, n, total, newest)
+    return out
+
+
+def _footer(path: str, rel: str):
+    """pyarrow footer schema of one leaf file, or None if unreadable."""
+    import pyarrow.parquet as pq
+
+    try:
+        return pq.read_schema(os.path.join(path, rel) if rel else path)
+    except Exception:
+        return None
+
+
+def _same_schema_append(path: str, seen: dict, leaves: dict,
+                        ref) -> bool:
+    """True when ``leaves`` only adds files to ``seen`` (every seen file
+    unchanged) and each added file has footer ``ref``, in a directory
+    that already held a seen file."""
+    if ref is None or any(leaves.get(k) != v for k, v in seen.items()):
+        return False
+    dirs = {os.path.dirname(k) for k in seen}
+    for rel in leaves.keys() - seen.keys():
+        if os.path.dirname(rel) not in dirs:
+            return False
+        new = _footer(path, rel)
+        if new is None or not new.equals(ref, check_metadata=True):
+            return False
+    return True
 
 
 def _cached_schema(path: str):
-    fp = _dir_fingerprint(path)
-    if fp is None:
+    """(current leaf files, cached schema or None) for ``path``."""
+    leaves = _leaf_files(path)
+    if leaves is None:
         return None, None
     hit = _SCHEMA_CACHE.get(path)
-    if hit is not None and hit[0] == fp:
-        return fp, hit[1]
-    return fp, None
+    if hit is None:
+        return leaves, None
+    seen, schema, ref = hit
+    if leaves == seen:
+        return leaves, schema
+    if _same_schema_append(path, seen, leaves, ref):
+        _SCHEMA_CACHE[path] = (leaves, schema, ref)
+        return leaves, schema
+    return leaves, None
 
 
-def _remember_schema(path: str, mt, schema) -> None:
-    if mt is not None:
-        _SCHEMA_CACHE[path] = (mt, schema)
+def _remember_schema(path: str, leaves, schema) -> None:
+    if leaves is None:
+        return
+    # the reference footer: the first data file's (Spark's hidden-file
+    # rule: names starting with "_" or "." are not data)
+    data = sorted(
+        r for r in leaves
+        if not os.path.basename(r).startswith(("_", "."))
+    )
+    ref = _footer(path, data[0]) if data else None
+    _SCHEMA_CACHE[path] = (leaves, schema, ref)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -359,12 +407,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         found = table_path(sf_dir, name)
         if found is not None:
             return load_formatted(spark, found[0], found[1], name)
-    mt, cached = _cached_schema(path)
+    leaves, cached = _cached_schema(path)
     if t and t.raw_json:
         df = (spark.read.schema(cached).parquet(path)
               if cached is not None else spark.read.parquet(path))
         if cached is None:
-            _remember_schema(path, mt, df.schema)
+            _remember_schema(path, leaves, df.schema)
         if "doc_var" in df.columns and "doc_json" not in df.columns:
             # VARIANT-stored body (see shred_raw_table): derive the
             # doc_json view lazily — Catalyst prunes the to_json when
@@ -386,12 +434,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 df = spark.read.schema(cached).parquet(path)
             else:
                 df = spark.read.parquet(path)
-                _remember_schema(path, mt, df.schema)
+                _remember_schema(path, leaves, df.schema)
         return ts_to_micros(df, name)
     if cached is not None:
         return spark.read.schema(cached).parquet(path)
     df = spark.read.parquet(path)
-    _remember_schema(path, mt, df.schema)
+    _remember_schema(path, leaves, df.schema)
     return df
 
 

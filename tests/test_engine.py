@@ -1574,6 +1574,86 @@ def test_compaction_crash_at_base_swap_recovers(
 @pytest.mark.parametrize(
     "fused", [False, True], ids=["update_view", "refresh_ddoc"]
 )
+def test_delta_rename_crash_before_layer_commit_recovers(
+    spark, sf_dir, tmp_path, monkeypatch, fused
+):
+    """A refresh that crashes after ``_take_delta`` renamed
+    ``delta-<batch>`` into place but before ``_append_layer`` leaves
+    that delta an orphan: a fresh Engine on the same storage keeps the
+    committed ``last_seq`` and layer stack and answers like a
+    from-scratch build at that ``last_seq``; the retry (over a larger
+    batch) overwrites the orphan, with exact ``stats.rows``; vacuum
+    then leaves only the directories the registry references."""
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    seq = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
+    top = raw.agg(F.max(seq)).collect()[0][0]
+    cuts = [top // 3, top // 2, 2 * top // 3]
+    names = ["dd/by_flag", "dd/big_qty"] if fused else ["dd/by_flag"]
+    store = str(tmp_path / "views")
+
+    def open_engine(path=store):
+        eng = Engine(spark, sf_dir, path, compact_after=2)
+        eng.put_design("dd", REFRESH_VIEWS)
+        return eng
+
+    def refresh(eng, to_seq):
+        if fused:
+            eng.refresh_ddoc("dd", to_seq=to_seq)
+        else:
+            eng.update_view(names[0], None, to_seq)
+
+    def grouped(eng):
+        return _rows(eng.query("dd/by_flag", group_level=2, stale="ok"))
+
+    def entries(eng):
+        return {n: eng.registry.get_view(eng.registry.resolve(
+            *n.split("/"))) for n in names}
+
+    eng = open_engine()
+    for n in names:
+        eng.update_view(n, None, cuts[0])
+    committed = entries(eng)
+    orphans = []
+
+    def crash(sig, entry, batch, *_):
+        orphans.append(os.path.join(eng.registry.view_dir(sig),
+                                    f"delta-{batch}"))
+        raise RuntimeError("crash after the delta rename")
+
+    monkeypatch.setattr(eng, "_append_layer", crash)
+    with pytest.raises(RuntimeError, match="crash after the delta rename"):
+        refresh(eng, cuts[1])
+    monkeypatch.undo()
+    assert orphans and all(os.path.isdir(p) for p in orphans)
+
+    eng = open_engine()
+    assert entries(eng) == committed  # last_seq and layers unchanged
+    last_seq = committed["dd/by_flag"]["last_seq"]
+    ref = open_engine(str(tmp_path / "ref"))
+    ref.update_view("dd/by_flag", None, last_seq)
+    assert grouped(eng) == grouped(ref)
+
+    refresh(eng, cuts[2])  # retried over a larger batch
+    for n, entry in entries(eng).items():
+        sig = eng.registry.resolve(*n.split("/"))
+        vdir = eng.registry.view_dir(sig)
+        (layer,) = entry["layers"]
+        assert layer["delta"] == f"delta-{committed[n]['next_batch']}", n
+        assert entry["last_seq"] > last_seq, n
+        delta = spark.read.parquet(os.path.join(vdir, layer["delta"]))
+        assert delta.count() == layer["rows"], n  # the orphan is gone
+        assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
+        eng.vacuum(sig)
+        referenced = {entry["base"], entry["counts"], layer["delta"],
+                      layer["lcounts"]}
+        assert set(os.listdir(vdir)) == referenced, n
+    ref.update_view("dd/by_flag", None, cuts[2])
+    assert grouped(eng) == grouped(ref)
+
+
+@pytest.mark.parametrize(
+    "fused", [False, True], ids=["update_view", "refresh_ddoc"]
+)
 def test_registry_rows_bound_the_scanned_files(
     spark, sf_dir, tmp_path, fused
 ):

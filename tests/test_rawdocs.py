@@ -422,3 +422,215 @@ def test_schema_cache_sees_nested_in_place_rewrite(spark, tmp_path):
         )
     finally:
         TABLES.pop("userdocs", None)
+
+
+_LOG_ARROW_SCHEMA = (
+    ("_id", "string"), ("_rev", "string"), ("_deleted", "bool_"),
+    ("seq", "int64"), ("doc_json", "string"),
+)
+
+
+def _write_log_part(path, rows, extra=None) -> None:
+    """One pyarrow-written part file of raw changes-log rows (the
+    shape a CouchDB export appends); ``extra`` adds a string column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    fields = [pa.field(n, getattr(pa, t)()) for n, t in _LOG_ARROW_SCHEMA]
+    cols = {f.name: [r[f.name] for r in rows] for f in fields}
+    if extra:
+        fields.append(pa.field(extra, pa.string()))
+        cols[extra] = ["x"] * len(rows)
+    pq.write_table(pa.table(cols, schema=pa.schema(fields)), path)
+
+
+def test_schema_cache_survives_same_schema_append(spark, tmp_path):
+    """An appended part file whose footer equals the cached reference
+    footer keeps the cached schema: ``load_table`` runs no Spark job
+    and sees the new rows.  An appended file whose footer differs (an
+    extra column) re-infers."""
+    from mapreduce_spark.metrics import measure
+    from mapreduce_spark.sources import docs as D
+
+    d = tmp_path / "sf"
+    tdir = d / "userdocs.parquet"
+    tdir.mkdir(parents=True)
+    _write_log_part(tdir / "part-0.parquet", [_doc(i) for i in range(1, 11)])
+    register_table(raw_doc_table("userdocs"))
+    try:
+        assert D.load_table(spark, str(d), "userdocs").count() == 10
+        _write_log_part(tdir / "part-1.parquet",
+                        [_doc(i) for i in range(11, 16)])
+        with measure(spark, "same-footer-append") as m:
+            df = D.load_table(spark, str(d), "userdocs")
+        assert m["jobs"] == 0
+        assert df.count() == 15
+
+        _write_log_part(tdir / "part-2.parquet",
+                        [_doc(i) for i in range(16, 18)], extra="extra")
+        with measure(spark, "new-footer-append") as m:
+            df = D.load_table(spark, str(d), "userdocs")
+        assert m["jobs"] >= 1  # the footer-inference job
+        assert df.count() == 17
+        with measure(spark, "reload") as m:
+            D.load_table(spark, str(d), "userdocs")
+        assert m["jobs"] == 0  # the re-inferred schema is cached
+    finally:
+        TABLES.pop("userdocs", None)
+
+
+_VAR = "variant_get(parse_json(doc_json), '$.{}', '{}')"
+# one view per map tier over the same raw changes log
+_TIER_VIEWS = {
+    "mapspec": {
+        "map": MapSpec(
+            "tierlog",
+            [("str", _VAR.format("status", "string")),
+             ("str", _VAR.format("priority", "string"))],
+            ("num", _VAR.format("price", "double")),
+        ),
+        "reduce": "_sum",
+    },
+    "variant": {
+        "map": ("tierlog", "function(doc){ if (doc.status !== 'P') "
+                           "{ emit(doc.priority, doc.price); } }"),
+        "reduce": "_count",
+    },
+    # the alias mutation keeps this source on the statement interpreter
+    "interp": {
+        "map": ("tierlog", "function(doc){ var s = doc.status; "
+                           "if (doc.status === null) { s = 'none'; } "
+                           "emit(s, doc.price); }"),
+        "reduce": "_sum",
+    },
+}
+# Spark jobs per first-layer refresh of a small log, measured: the delta
+# write is one job of one task (scan, collapse, map and write) and
+# _append_layer runs three (the base counts write, the changed ids'
+# broadcast and the lcounts write).  With _FANOUT_MIN_BYTES at 0 the
+# delta write runs 3 jobs (4 interpreted).
+TIER_REFRESH_JOB_CEILINGS = {"mapspec": 4, "variant": 4, "interp": 4}
+
+
+def _tier_log_row(i: int, seq: int, *, deleted: bool = False) -> dict:
+    body = {
+        "_id": f"o-{i:05d}", "_rev": f"{seq}-{i:032x}",
+        "status": "FOP"[(i + seq) % 3], "priority": f"{(i * 7) % 5}-PRIO",
+        "price": float((i * 31 + seq) % 997),
+        "note": "x" * 300,
+    }
+    return {"_id": body["_id"], "_rev": body["_rev"], "_deleted": deleted,
+            "seq": seq, "doc_json": json.dumps(body)}
+
+
+def _tier_expected(rows: list[dict]) -> dict:
+    """Grouped answers of the three views over the latest live docs."""
+    latest = {}
+    for r in sorted(rows, key=lambda r: r["seq"]):
+        latest[r["_id"]] = r
+    out = {v: {} for v in _TIER_VIEWS}
+    for r in latest.values():
+        if r["_deleted"]:
+            continue
+        b = json.loads(r["doc_json"])
+        for view, key, val in (
+            ("mapspec", (b["status"], b["priority"]), b["price"]),
+            ("interp", b["status"], b["price"]),
+        ) + ((("variant", b["priority"], 1),) if b["status"] != "P"
+             else ()):
+            out[view][key] = out[view].get(key, 0) + val
+    return out
+
+
+def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
+    """A refresh whose log scan is below ``_FANOUT_MIN_BYTES`` writes its
+    delta in ONE Spark job of one task on every map tier (the collapse
+    window, the map and the write share it: no exchange), pays no footer-
+    schema job after a same-schema append, and stays under per-tier job
+    ceilings.  With the limit at 0 the parallel plan (exchanges) runs
+    and gives the same answers and the same layer row counts."""
+    import mapreduce_spark.engine as E
+    from mapreduce_spark.functions.jsvariant import VariantJSView
+    from mapreduce_spark.metrics import measure
+
+    register_table(raw_doc_table("tierlog"))
+    sf = tmp_path / "sf"
+    log = sf / "tierlog.parquet"
+    log.mkdir(parents=True)
+    rows = [_tier_log_row(i, i) for i in range(1, 201)]
+    _write_log_part(log / "part-00000.parquet", rows)
+    batch = (
+        [_tier_log_row(i, 200 + i) for i in range(1, 41)]  # edits
+        + [_tier_log_row(i, 300 + i, deleted=True)
+           for i in range(41, 61)]  # deletes
+        + [_tier_log_row(i, 300 + i) for i in range(201, 231)]  # inserts
+    )
+    want = {"mapspec": MapSpec, "variant": VariantJSView, "interp": tuple}
+
+    def grouped(eng, view):
+        res = eng.query(f"log/{view}", group=True, stale="ok")
+        return {tuple(r["key"]) if isinstance(r["key"], list) else r["key"]:
+                r["value"] for r in res.rows()}
+
+    def layer(eng, view):
+        entry = eng.registry.get_view(eng.registry.resolve("log", view))
+        return {k: entry["layers"][-1][k] for k in ("rows", "n")}
+
+    engines = {}
+    try:
+        for limit in (None, 0):
+            with monkeypatch.context() as mp:
+                if limit is not None:
+                    mp.setattr(E, "_FANOUT_MIN_BYTES", limit)
+                eng = Engine(spark, str(sf), str(tmp_path / f"v-{limit}"),
+                             compact_after=99)
+                eng.put_design("log", _TIER_VIEWS)
+                for view, tier in want.items():
+                    m = eng._defs[eng.registry.resolve("log", view)].map_def
+                    assert isinstance(m, tier), (view, type(m))
+                    eng.update_view(f"log/{view}")
+                engines[limit] = eng
+        _write_log_part(log / "part-00001.parquet", batch)
+        with measure(spark, "inference-probe") as probe:
+            spark.read.parquet(str(log))
+        # the detector below sees a footer-inference job by this name
+        assert any(r["name"].startswith("parquet at")
+                   for r in probe["stages_detail"])
+
+        exp = _tier_expected(rows + batch)
+        for limit, eng in engines.items():
+            real_append = eng._append_layer
+            appended = {}
+
+            def append(*a, _real=real_append, _out=appended):
+                with measure(spark, "append-layer") as m:
+                    _real(*a)
+                _out["jobs"] = m["jobs"]
+
+            with monkeypatch.context() as mp:
+                if limit is not None:
+                    mp.setattr(E, "_FANOUT_MIN_BYTES", limit)
+                mp.setattr(eng, "_append_layer", append)
+                for view in want:
+                    with measure(spark, f"refresh-{view}") as m:
+                        eng.update_view(f"log/{view}")
+                    delta_jobs = m["jobs"]
+                    total = delta_jobs + appended["jobs"]
+                    print(f"limit={limit} {view}: delta write "
+                          f"{delta_jobs} jobs, refresh {total}")
+                    if limit is None:
+                        assert delta_jobs == 1 and m["tasks"] == 1, view
+                        assert not any(
+                            r["name"].startswith("parquet at")
+                            for r in m["stages_detail"]
+                        ), view
+                        assert total <= TIER_REFRESH_JOB_CEILINGS[view]
+                    else:  # the parallel plan: exchanges are back
+                        assert delta_jobs > 1, view
+                    assert grouped(eng, view) == pytest.approx(
+                        exp[view]), (limit, view)
+        for view in want:
+            assert layer(engines[None], view) == layer(engines[0], view)
+            assert grouped(engines[None], view) == grouped(engines[0], view)
+    finally:
+        TABLES.pop("tierlog", None)
