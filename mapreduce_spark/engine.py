@@ -101,11 +101,8 @@ log = logging.getLogger("mapreduce_spark.engine")
 # 200-change batch 0.75 → 0.70, 0.65 → 0.62, 0.83 → 0.59 s at
 # 6/5/7 → 4/4/4 jobs and 9/8/14 → 4/4/4 tasks (the parallel MapSpec
 # refresh, the first after the append, also paid the footer-schema job
-# ``load_table`` no longer runs).  Env-tunable for clusters whose
-# scheduling or scan economics differ.
-_FANOUT_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MIN_BYTES", 1 << 20)
-)
+# ``load_table`` no longer runs).
+_FANOUT_MIN_BYTES = 1 << 20
 # Engine work whose SCANNED input the registry bounds, before it runs,
 # by at most its limit's rows runs as ONE task (``_one_task``):
 # ``coalesce(1)`` goes below the aggregate, sort or window, so the plan
@@ -1157,12 +1154,16 @@ class Engine:
         stats = (entry or {}).get("stats") or {}
         return {
             "signature": vdef.sig,
-            # ddoc language: interpreted-JS views report javascript;
-            # structured MapSpec views report "query" (the Mango-style
-            # declarative class; compiled-from-JS ones land here too);
-            # Python callables report python
+            # ddoc language: javascript when the map runs on the
+            # statement interpreter, whose repr is
+            # ``JSMapFunctionFull(<source>)`` — a Variant view's repr
+            # copies it (VariantJSView.fallback_repr); MapSpec views,
+            # compiled-from-JS ones too, report "query" (the
+            # Mango-style declarative class); Python callables report
+            # python
             "language": (
-                "javascript" if "JSMapFunction" in repr(vdef.map_def)
+                "javascript"
+                if "JSMapFunctionFull(" in repr(vdef.map_def)
                 else "query" if isinstance(
                     vdef.map_def, (MapSpec, list)
                 )

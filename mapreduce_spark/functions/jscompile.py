@@ -484,12 +484,7 @@ class _Parser:
                 self._aliases[entry_alias] = ("elem", field)
             try:
                 self._stmts(
-                    emits,
-                    # 'throw' tag: Object.keys/entries(null) THROWS
-                    # (tryMap doc skip) where bare for-in iterates
-                    # zero times — same compiled rows, but the Python
-                    # mark executor honors the distinction
-                    guards + [("forin", field, serial, "throw")],
+                    emits, guards + [("forin", field, serial)],
                     end="}",
                 )
             finally:
@@ -2256,7 +2251,7 @@ def looks_like_js(obj: Any) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# AST → Python map function (raw doc sources)
+# JS value helpers shared with the interpreters (jsreduce, jsmap)
 # ---------------------------------------------------------------------------
 
 class _Undefined:
@@ -2283,12 +2278,6 @@ class _Undefined:
 _UNDEF = _Undefined()  # JS `undefined` (absent doc field)
 
 
-class _MapThrow(Exception):
-    """The interpreted map fn hit a JS runtime throw (e.g. a method
-    call on null/undefined) — upstream tryMap catches it and skips the
-    doc, keeping whatever was emitted before the throw."""
-
-
 def _js_substring(s: str, i: float, j: float | None) -> str:
     # JS String.prototype.substring: NaN/negative → 0, clamp to
     # length, swapped args swap back
@@ -2313,14 +2302,6 @@ def _js_slice(s: str, i: float, j: float | None) -> str:
     return s[a:b] if a < b else ""
 
 
-_CSM = None  # cached jsreduce._call_str_method (circular import)
-
-
-_ELEM_KEY = "\x00elem"  # forEach element binding inside the doc dict
-_EPOS_KEY = "\x00epos"  # for-loop index binding inside the doc dict
-_EKEY_KEY = "\x00ekey"  # for-in key binding inside the doc dict
-
-
 def es_own_keys(obj: dict) -> list:
     """Own enumerable keys in ES OrdinaryOwnPropertyKeys order --
     the order JS for-in / Object.keys observe: canonical array-index
@@ -2338,122 +2319,6 @@ def es_own_keys(obj: dict) -> list:
     idx = sorted((k for k in obj if _index_key(k)), key=int)
     taken = set(idx)
     return idx + [k for k in obj if k not in taken]
-
-
-def _ev(ast: Any, doc: dict) -> Any:
-    tag = ast[0]
-    if tag == "lit":
-        return ast[1]
-    if tag == "doc":
-        return doc.get(ast[1], _UNDEF) if isinstance(doc, dict) else _UNDEF
-    if tag == "elem":
-        return doc.get(_ELEM_KEY, _UNDEF) if isinstance(doc, dict) \
-            else _UNDEF
-    if tag == "epos":
-        return doc.get(_EPOS_KEY, _UNDEF) if isinstance(doc, dict) \
-            else _UNDEF
-    if tag == "ekey":
-        return doc.get(_EKEY_KEY, _UNDEF) if isinstance(doc, dict) \
-            else _UNDEF
-    if tag == "arr":
-        return [_ev(a, doc) for a in ast[1]]
-    if tag == "obj":
-        return {k: _ev(a, doc) for k, a in ast[1].items()}
-    if tag == "ternary":
-        return _ev(
-            ast[2] if _cond_eval(ast[1], doc) else ast[3], doc
-        )
-    if tag == "strlen":
-        v = doc.get(ast[1], _UNDEF) if isinstance(doc, dict) else _UNDEF
-        if v is None or v is _UNDEF:
-            raise _MapThrow("cannot read .length of null/undefined")
-        if isinstance(v, str):
-            return float(len(v))
-        if isinstance(v, list):
-            return float(len(v))
-        return math.nan  # JS: (5).length is undefined → NaN in math
-    if tag == "math":
-        name, args = ast[1], [_js_num(_ev(a, doc)) for a in ast[2]]
-        if name == "floor" and len(args) == 1:
-            x = args[0]
-            return x if math.isnan(x) or math.isinf(x) \
-                else float(math.floor(x))
-        if name == "ceil" and len(args) == 1:
-            x = args[0]
-            return x if math.isnan(x) or math.isinf(x) \
-                else float(math.ceil(x))
-        if name == "abs" and len(args) == 1:
-            return abs(args[0])
-        if name == "sqrt" and len(args) == 1:
-            x = args[0]
-            return math.sqrt(x) if x >= 0 else math.nan
-        if name == "round" and len(args) == 1:
-            # JS: half-up toward +Infinity
-            x = args[0]
-            return x if math.isnan(x) or math.isinf(x) \
-                else float(math.floor(x + 0.5))
-        if name == "pow" and len(args) == 2:
-            try:
-                return float(pow(args[0], args[1]))
-            except (OverflowError, ValueError, ZeroDivisionError):
-                # JS Math.pow never throws: 0^neg → Infinity,
-                # overflow → ±Infinity (sign: neg base ^ odd int),
-                # neg^fraction → NaN
-                if args[0] == 0.0 and args[1] < 0:
-                    return math.inf
-                if args[0] < 0 and args[1] != int(args[1]):
-                    return math.nan
-                neg = args[0] < 0 and int(args[1]) % 2 == 1
-                return -math.inf if neg else math.inf
-        raise JSCompileError(f"Math.{name}() is outside the subset")
-    if tag == "bin":
-        op = ast[1]
-        a, b = _ev(ast[2], doc), _ev(ast[3], doc)
-        if op == "+":
-            return _js_add(a, b)
-        if op == "-":
-            return _js_num(a) - _js_num(b)
-        if op == "*":
-            return _js_num(a) * _js_num(b)
-        if op == "/":
-            # JS x/0 → ±Infinity, 0/0 → NaN; non-finite values
-            # serialize to JSON null downstream (JSON.stringify)
-            na, nb = _js_num(a), _js_num(b)
-            if nb == 0.0:
-                return (
-                    math.nan if na == 0.0 or math.isnan(na)
-                    else math.copysign(math.inf, na) *
-                    math.copysign(1.0, nb)
-                )
-            return na / nb
-        if op == "%":
-            # JS remainder: sign of the dividend; x % 0 → NaN
-            na, nb = _js_num(a), _js_num(b)
-            if nb == 0.0 or math.isnan(na) or math.isnan(nb) \
-                    or math.isinf(na):
-                return math.nan
-            return math.fmod(na, nb)
-        raise JSCompileError(f"unsupported operator {op!r}")
-    if tag == "method":
-        recv = _ev(ast[1], doc)
-        name, args = ast[2], [_ev(a, doc) for a in ast[3]]
-        if recv is None or recv is _UNDEF:
-            raise _MapThrow(f"cannot call .{name}() on null/undefined")
-        if not isinstance(recv, str):
-            raise _MapThrow(f".{name}() on a non-string value")
-        # ONE string-method implementation across both interpreter
-        # tiers (jsreduce._call_str_method — resolved lazily because
-        # jsreduce imports this module at load time, then cached:
-        # this runs once per method call per doc)
-        global _CSM
-        if _CSM is None:
-            from mapreduce_spark.functions.jsreduce import (
-                _call_str_method,
-            )
-
-            _CSM = _call_str_method
-        return _CSM(recv, name, args)
-    raise JSCompileError(f"unsupported expression {tag!r}")
 
 
 def _js_num(v: Any) -> float:
@@ -2566,27 +2431,6 @@ def _js_rel(op: str, a: Any, b: Any) -> bool:
     return x >= y
 
 
-def _cond_eval(ast: Any, doc: dict) -> bool:
-    tag = ast[0]
-    if tag == "and":
-        return _cond_eval(ast[1], doc) and _cond_eval(ast[2], doc)
-    if tag == "or":
-        return _cond_eval(ast[1], doc) or _cond_eval(ast[2], doc)
-    if tag == "not":
-        return not _cond_eval(ast[1], doc)
-    if tag == "truthy":
-        return _truthy(_ev(ast[1], doc))
-    if tag == "cmp":
-        op, l, r = ast[1], ast[2], ast[3]
-        a, b = _ev(l, doc), _ev(r, doc)
-        if op in ("===", "=="):
-            return _js_eq(a, b)
-        if op in ("!==", "!="):
-            return not _js_eq(a, b)
-        return _js_rel(op, a, b)
-    raise JSCompileError(f"unsupported condition {tag!r}")
-
-
 def _de_undef(v: Any) -> Any:
     """Emit boundary: undefined → null as a scalar and inside arrays;
     object members holding undefined are DROPPED (JSON.stringify
@@ -2620,129 +2464,15 @@ def _de_undef(v: Any) -> Any:
     return v
 
 
-class JSMapFunction:
-    """A compiled JS map fn as a picklable Python callable.
-
-    The compile target for RAW doc sources (``DocTable.raw_json``):
-    field types there are dynamic per document, so instead of a typed
-    MapSpec the parsed AST is interpreted over each doc dict with JS
-    subset semantics — strict equality, JS truthiness, undefined for
-    absent fields, the JSON.stringify undefined boundary.  Runs on the
-    Arrow-batched Python map path.
-
-    ``__repr__`` is the source itself so the registry signature
-    (plans/registry.definition_repr) stays stable across processes —
-    a closure's repr would embed a memory address and re-registering
-    the same ddoc would spuriously rebuild the view.
-    """
-
-    def __init__(self, source: str) -> None:
-        self.source = source
-        self._emits = _Parser(source).parse()
-        if not self._emits:
-            raise JSCompileError(
-                "map function contains no emit() call — a view with "
-                "no emits indexes nothing"
-            )
-
-    def __call__(self, doc: dict, emit) -> None:
-        try:
-            for guards, key_ast, value_ast in self._emits:
-                mark = next(
-                    (g for g in guards
-                     if isinstance(g, tuple)
-                     and g[0] in ("foreach", "forloop", "forin")),
-                    None,
-                )
-                if mark is None:
-                    if all(_cond_eval(g, doc) for g in guards):
-                        emit(
-                            _de_undef(_ev(key_ast, doc)),
-                            _de_undef(_ev(value_ast, doc)),
-                        )
-                    continue
-                # forEach emit: pre-marker guards gate the loop, the
-                # rest evaluate per element under the binding
-                pre: list = []
-                post: list = []
-                past = False
-                for g in guards:
-                    if isinstance(g, tuple) \
-                            and g[0] in ("foreach", "forloop",
-                                         "forin"):
-                        past = True
-                        continue
-                    (post if past else pre).append(g)
-                if not all(_cond_eval(g, doc) for g in pre):
-                    continue
-                arr = (
-                    doc.get(mark[1], _UNDEF)
-                    if isinstance(doc, dict) else _UNDEF
-                )
-                keys: list | None = None
-                if mark[0] == "forin":
-                    # for (k in doc.f): objects enumerate own keys in
-                    # ES order, arrays/strings their index strings;
-                    # null/undefined/primitives iterate zero times
-                    # (for-in never throws — but the Object.keys
-                    # spelling, marked 'throw', does on null)
-                    if (arr is None or arr is _UNDEF) \
-                            and len(mark) > 3:
-                        raise _MapThrow(
-                            f"Object.keys(doc.{mark[1]}) on "
-                            "null/undefined"
-                        )
-                    if isinstance(arr, dict):
-                        keys = es_own_keys(arr)
-                        arr = [arr[k] for k in keys]
-                    elif isinstance(arr, (list, str)):
-                        keys = [str(i) for i in range(len(arr))]
-                        arr = list(arr)
-                    else:
-                        keys, arr = [], []
-                elif mark[0] == "foreach":
-                    if not isinstance(arr, list):
-                        # null/undefined/scalar .forEach throws in JS
-                        raise _MapThrow(
-                            f"doc.{mark[1]}.forEach is not a function"
-                        )
-                elif not isinstance(arr, list):
-                    # C-style loop: `i < doc.f.length` only THROWS
-                    # when doc.f is null/undefined; a string bound
-                    # indexes characters; any other scalar has
-                    # length === undefined → zero iterations
-                    if arr is None or arr is _UNDEF:
-                        raise _MapThrow(
-                            f"cannot read .length of doc.{mark[1]}"
-                        )
-                    arr = list(arr) if isinstance(arr, str) else []
-                for pos, el in enumerate(arr):
-                    docv = dict(doc)
-                    docv[_ELEM_KEY] = el
-                    docv[_EPOS_KEY] = float(pos)
-                    if keys is not None:
-                        docv[_EKEY_KEY] = keys[pos]
-                    if all(_cond_eval(g, docv) for g in post):
-                        emit(
-                            _de_undef(_ev(key_ast, docv)),
-                            _de_undef(_ev(value_ast, docv)),
-                        )
-        except _MapThrow:
-            # upstream tryMap: a throwing map fn skips the doc's
-            # remaining emits (earlier emits stand), not the build
-            return
-
-    def __repr__(self) -> str:
-        return f"JSMapFunction({self.source!r})"
-
-
 def compile_js_map_fn(source: str):
-    """JS map source → interpreted Python map fn.
+    """JS map source → the statement-level interpreted map fn
+    (functions/jsmap.py — var/for/closures, split/parseInt/JSON/…).
 
-    Prefers the statement-level interpreter (functions/jsmap.py —
-    var/for/closures, split/parseInt/JSON/…); sources it
-    cannot parse fall back to this module's narrow expression
-    interpreter so its error message (naming the construct) surfaces.
+    A source the statement parser rejects is a user error at
+    ``put_design``: its :class:`JSReduceError` re-raises as
+    :class:`JSCompileError` (a ``QueryParseError``) with the parser's
+    message, which names the offending token.  A
+    :class:`JSRuntimeThrow` propagates unchanged.
     """
     from mapreduce_spark.functions.jsmap import JSMapFunctionFull
     from mapreduce_spark.functions.jsreduce import (
@@ -2754,5 +2484,5 @@ def compile_js_map_fn(source: str):
         return JSMapFunctionFull(source)
     except JSRuntimeThrow:
         raise
-    except JSReduceError:
-        return JSMapFunction(source)
+    except JSReduceError as e:
+        raise JSCompileError(str(e)) from e

@@ -2,14 +2,14 @@
 
 Upstream evaluates a design doc's map source as arbitrary JavaScript
 (``[U pouchdb-abstract-mapreduce#evalFunc]``, SURVEY.md §2 F1).  This
-engine runs three tiers, fastest first:
+engine runs two tiers, fastest first:
 
 1. ``jscompile.compile_js_map`` — the structural compiler: common map
    shapes become typed MapSpecs executed entirely JVM-side (guards
-   pushed into the parquet scan).
-2. ``jscompile.JSMapFunction`` — the narrow expression interpreter
-   for RAW doc sources (dynamic per-doc field types).
-3. **This module** — the statement-level interpreter shared with
+   pushed into the parquet scan); on raw doc sources the same subset
+   compiles to drift-guarded Variant expressions
+   (``jsvariant.compile_js_map_variant``).
+2. **This module** — the statement-level interpreter shared with
    ``jsreduce`` (var/let, if/else, C-style for, assignments, function
    literals with closure capture, arithmetic incl. ``/`` and ``%``,
    string/array/Math/JSON/parseInt builtins, and a deterministic JS
@@ -17,7 +17,8 @@ engine runs three tiers, fastest first:
    ``Date.parse``/``Date.UTC``; see functions/jsdate.py).  Anything
    the compiler rejects — ``.split()``, loops, accumulator objects,
    date bucketing — runs here over Arrow-batched doc dicts, on ANY
-   table (typed or raw).  Out-of-subset constructs still raise loud
+   table (typed or raw); ``jscompile.compile_js_map_fn`` builds it.
+   Out-of-subset constructs still raise loud
    :class:`~mapreduce_spark.functions.jsreduce.JSReduceError` rather
    than silently mis-indexing.
 

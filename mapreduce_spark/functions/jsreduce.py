@@ -211,7 +211,7 @@ class _Parser:
 
     def _peek(self) -> tuple[str, str, int]:
         if self.i >= len(self.toks):
-            raise JSReduceError("unexpected end of reduce function source")
+            raise JSReduceError("unexpected end of function source")
         return self.toks[self.i]
 
     def _next(self) -> tuple[str, str, int]:
@@ -698,8 +698,8 @@ class _Parser:
             return ("obj", obj)
         raise JSReduceError(
             f"unsupported expression {tok!r} at offset {off} — see the "
-            "jsreduce subset; use a Python reduce callable for anything "
-            "outside it"
+            "interpreted JS subset; use a Python map or reduce callable "
+            "for anything outside it"
         )
 
 

@@ -1,7 +1,3 @@
-from mapreduce_spark.operators.mapphase import (
-    VIEW_SCHEMA,
-    MapSpec,
-    build_view,
-)
+from mapreduce_spark.operators.mapphase import VIEW_SCHEMA, MapSpec
 
-__all__ = ["VIEW_SCHEMA", "MapSpec", "build_view"]
+__all__ = ["VIEW_SCHEMA", "MapSpec"]

@@ -8,15 +8,16 @@ doc (logged, not fatal).
 
 Two execution paths, Spark-first:
 
-1. **Structured fast path** (``MapSpec``): when the map function is
-   expressible as column expressions — which covers every declared
-   fixture view — the whole build is JVM-side except the collation
-   encoding (vectorized Arrow/pandas UDFs over one column each).
+1. **Structured fast path** (``MapSpec``, ``build_view_structured_on``):
+   when the map function is expressible as column expressions — which
+   covers every declared fixture view — the whole build is JVM-side
+   except the collation encoding (vectorized Arrow/pandas UDFs over
+   one column each).
    Filters in ``MapSpec.where`` reference *raw* parquet columns, so
    Catalyst pushes them into the scan; unused columns are pruned.
    This is the 100 TB path: no Python row loop anywhere.
 
-2. **Generic Python path** (``build_view_python``): arbitrary Python
+2. **Generic Python path** (``build_view_python_on``): arbitrary Python
    ``f(doc, emit)`` over ``mapInPandas`` — one Arrow batch of docs in,
    0..N view rows out.  The per-doc ``try`` mirrors the reference's
    ``tryMap`` (a throwing map fn skips the doc, logged).
@@ -44,11 +45,11 @@ from __future__ import annotations
 import json
 import logging
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,7 +67,6 @@ from mapreduce_spark.sources.docs import (
     as_docs,
     doc_id_col,
     doc_records,
-    load_table,
 )
 
 log = logging.getLogger("mapreduce_spark.map")
@@ -168,15 +168,6 @@ def _comp_cols(comp: Component) -> tuple[Column, Column]:
     if kind == "num":
         expr = fold_nonfinite(expr.cast("double"))
     return enc_component_col(expr, kind), json_scalar_col(expr, kind)
-
-
-def build_view_structured(
-    spark: SparkSession, sf_dir: str, spec: MapSpec
-) -> DataFrame:
-    """MapSpec → view DataFrame, raw-parquet-scan based (max pushdown)."""
-    return build_view_structured_on(
-        load_table(spark, sf_dir, spec.table), spec
-    )
 
 
 def _spec_sql_texts(spec: MapSpec) -> list[str]:
@@ -492,18 +483,6 @@ def map_docs_to_rows(
     return out
 
 
-def build_view_python(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    map_fn: Callable[[dict, Callable], None],
-) -> DataFrame:
-    """Arbitrary Python map fn → view DataFrame via mapInPandas."""
-    return build_view_python_on(
-        python_fanout(load_table(spark, sf_dir, table)), table, map_fn
-    )
-
-
 def python_fanout(df: DataFrame) -> DataFrame:
     """Spread the Python map path's input over the session's shuffle
     parallelism.
@@ -550,24 +529,3 @@ def build_view_python_on(
                 yield pd.DataFrame(rows, columns=col_order)
 
     return docs.mapInPandas(run, VIEW_SCHEMA)
-
-
-def build_view(spark: SparkSession, sf_dir: str, view_def) -> DataFrame:
-    """Dispatch: MapSpec (or list of MapSpecs → union) or Python callable
-    tagged with its source table (``(table, fn)``)."""
-    if isinstance(view_def, MapSpec):
-        return build_view_structured(spark, sf_dir, view_def)
-    if isinstance(view_def, list):  # multi-emit as unioned MapSpecs
-        dfs = [build_view_structured(spark, sf_dir, s) for s in view_def]
-        out = dfs[0]
-        for i, (s, d) in enumerate(
-            zip(view_def[1:], dfs[1:]), start=1
-        ):
-            # exploded specs computed their own per-element ordinal
-            if s.explode is None:
-                d = d.withColumn("emit_ord", F.lit(i))
-            out = out.unionAll(d)
-        return out
-    if isinstance(view_def, tuple) and callable(view_def[1]):
-        return build_view_python(spark, sf_dir, view_def[0], view_def[1])
-    raise TypeError(f"unsupported view definition: {view_def!r}")

@@ -911,6 +911,41 @@ def test_info_metadata_zero_jobs(spark, sf_dir, tmp_path):
     ).count()
     assert info["layer_count"] == 0 and not info["updater_running"]
 
+    # JS views report javascript on the interpreted tier and on the
+    # Variant tier, whose repr is its interpreter fallback's
+    from mapreduce_spark.functions.jsmap import JSMapFunctionFull
+    from mapreduce_spark.functions.jsvariant import VariantJSView
+    from mapreduce_spark.sources.docs import (
+        TABLES,
+        raw_doc_table,
+        register_table,
+    )
+
+    eng.put_design("js", {"interp": {"map": (
+        "customer",
+        "function(doc) { emit(doc.c_mktsegment.split('U')[0], 1); }",
+    )}})
+    assert isinstance(eng._resolve("js/interp")[0].map_def[1],
+                      JSMapFunctionFull)
+    assert eng.info("js/interp")["language"] == "javascript"
+    register_table(raw_doc_table("infodocs"))
+    try:
+        sf2 = str(tmp_path / "raw")
+        spark.createDataFrame(
+            [(f"d{i}", i, f'{{"_id":"d{i}","type":"t{i % 2}"}}')
+             for i in range(8)],
+            "_id string, seq long, doc_json string",
+        ).write.parquet(f"{sf2}/infodocs.parquet")
+        eng2 = Engine(spark, sf2, str(tmp_path / "views2"))
+        eng2.put_design("js", {"var": {"map": (
+            "infodocs", "function(doc) { emit(doc.type, 1); }",
+        )}})
+        assert isinstance(eng2._resolve("js/var")[0].map_def,
+                          VariantJSView)
+        assert eng2.info("js/var")["language"] == "javascript"
+    finally:
+        TABLES.pop("infodocs", None)
+
 
 def test_limit_zero_and_negative_pagination(engine):
     """limit=0 returns no rows but a full envelope (CouchDB allows

@@ -162,6 +162,46 @@ def test_typed_table_fallback_end_to_end(spark, sf_dir, tmp_path):
     assert isinstance(fast, MapSpec)
 
 
+@pytest.mark.parametrize("raw", [False, True], ids=["orders", "raw"])
+@pytest.mark.parametrize(
+    "src, token",
+    [
+        ("function(doc) { emit(`t${doc.a}`, 1); }", "`"),
+        ("function(doc) { emit(doc.a, 1) @ }", "@"),
+    ],
+    ids=["template_literal", "stray_char"],
+)
+def test_unparsable_map_source_fails_put_design(spark, sf_dir, tmp_path,
+                                                raw, src, token):
+    """A map source no JS parser accepts is a user error at
+    put_design on a typed and on a raw-doc table: JSCompileError (a
+    QueryParseError) naming the offending token."""
+    from mapreduce_spark.errors import QueryParseError
+    from mapreduce_spark.functions.jscompile import JSCompileError
+    from mapreduce_spark.sources.docs import (
+        TABLES,
+        raw_doc_table,
+        register_table,
+    )
+
+    table, sf = "orders", sf_dir
+    if raw:
+        table, sf = "badsrc", str(tmp_path / "sf")
+        register_table(raw_doc_table(table))
+        spark.createDataFrame(
+            [("d1", 1, '{"_id":"d1","a":1}')],
+            "_id string, seq long, doc_json string",
+        ).write.parquet(f"{sf}/{table}.parquet")
+    try:
+        eng = Engine(spark, sf, str(tmp_path / "views"))
+        with pytest.raises(JSCompileError, match=f"'{token}'") as ei:
+            eng.put_design("d", {"v": {"map": (table, src)}})
+        assert isinstance(ei.value, QueryParseError)
+    finally:
+        if raw:
+            TABLES.pop(table, None)
+
+
 def test_fallback_is_picklable_and_signature_stable():
     import pickle
 
@@ -562,30 +602,49 @@ def test_object_keys_values_es_order():
     ]
 
 
-def test_forin_expression_interpreter_matches_statement_tier():
-    """The narrow expression interpreter (JSMapFunction — the tier
-    between compile and full statements) executes for-in marks with
-    the same ES order, array index-strings, string char-indices and
-    zero-iteration scalars."""
-    from mapreduce_spark.functions.jscompile import JSMapFunction
+# one source per compile-subset shape: jscompile's parser must accept
+# each, or the inclusion test below checks nothing for that shape
+_COMPILE_SUBSET_SHAPES = [
+    "function(doc) { doc.tags.forEach(function(t) { emit(t, 1); }); }",
+    "function(doc) { for (var k in doc.f) { emit(k, doc.f[k]); } }",
+    "function(doc) { Object.keys(doc.f).forEach(function(k) "
+    "{ emit([k, doc.f[k]], null); }); }",
+    "function(doc) { for (var i = 0; i < doc.arr.length; i++) "
+    "{ emit(doc.arr[i], i); } }",
+    "function(doc) { if (/^user:/.test(doc._id)) { emit(doc._id, 1); } }",
+    "function(doc) { emit(doc.n > 2 ? 'big' : 'small', doc.n); }",
+    "function(doc) { log(doc._id); emit(doc.type, null); }",
+]
 
-    src = ("function(doc) { for (var k in doc.f) "
-           "{ emit(k, doc.f[k]); } }")
 
-    def run_expr(doc):
-        out = []
-        JSMapFunction(src)(doc, lambda k, v: out.append((k, v)))
-        return out
+def test_statement_parser_accepts_every_compile_subset_source():
+    """Every map source jscompile's parser accepts, the statement
+    parser accepts too, so ``compile_js_map_fn`` never needs a second
+    interpreter: over the compile-subset shapes and the Variant-tier
+    fuzz grammar (2 seeds × 250 sources)."""
+    import random
 
-    for doc in [
-        {"f": {"b": 1.0, "10": 2.0, "a": 3.0, "2": 4.0}},
-        {"f": [5.0, 6.0]},
-        {"f": "xy"},
-        {"f": None},
-        {"f": 3.0},
-        {},
-    ]:
-        assert run_expr(doc) == run_map(src, doc), doc
+    from mapreduce_spark.functions import jscompile, jsreduce
+    from tests.test_variant_fuzz import _gen_source
+
+    for src in _COMPILE_SUBSET_SHAPES:
+        assert jscompile._Parser(src).parse(), src
+    fuzz = []
+    for seed in (0, 1):
+        rng = random.Random(seed)
+        fuzz += [_gen_source(rng) for _ in range(250)]
+    accepted = 0
+    for src in _COMPILE_SUBSET_SHAPES + fuzz:
+        try:
+            jscompile._Parser(src).parse()
+        except jscompile.JSCompileError:
+            continue
+        accepted += 1
+        try:
+            jsreduce._Parser(src).parse()
+        except jsreduce.JSReduceError as e:
+            pytest.fail(f"statement parser rejects {src!r}: {e}")
+    assert accepted >= len(_COMPILE_SUBSET_SHAPES) + 400
 
 
 def test_object_keys_es_coercion():
