@@ -291,11 +291,6 @@ def encode_string_body(s: str) -> str:
     return _esc(_u16ord(s))
 
 
-def encode_number(d: float) -> str:
-    """Full encoding of a (finite, normalized) number: '3' + 16 hex."""
-    return "3" + _num_to_hex(d)
-
-
 def _encode_norm(key: Any, out: list[str]) -> None:
     if key is None:
         out.append("1")

@@ -17,7 +17,8 @@ DataFrame pipeline: pushdown range filter on key_enc → optional
 group/reduce → order → offset/limit → optional doc join → envelope.
 
 Incremental maintenance (M1/M2/X2): the materialized view is a base
-(sorted, range-partitioned Parquet) plus an ordered stack of
+(key-sorted Parquet, written with its per-doc emit counts) plus an
+ordered stack of
 (tombstone, delta) layers; each refresh maps only changed docs,
 tombstones their previous emits by doc id, and appends a layer;
 compaction folds layers into a new base version.  ``last_seq`` in the
@@ -84,7 +85,8 @@ log = logging.getLogger("mapreduce_spark.engine")
 #   latest-per-_id collapse, so the collapse, the map (every tier) and
 #   a refresh's delta write above it run in one task: no collapse
 #   shuffle, no ``right_size`` or ``python_fanout`` exchange, and no
-#   partition-count probe (a first build still range-sorts its base);
+#   partition-count probe; a first build writes its base and counts in
+#   that same task (``_write_bases``);
 # - above it, or of unknown size (remote files, frames with no input
 #   files): the map spreads across the cores — ``right_size`` for
 #   structured specs when the scan has fewer splits than cores,
@@ -107,16 +109,17 @@ _FANOUT_MIN_BYTES = 1 << 20
 # by at most its limit's rows runs as ONE task (``_one_task``):
 # ``coalesce(1)`` goes below the aggregate, sort or window, so the plan
 # has no exchange, no range partitioner's bounds-sampling job and no
-# broadcast.  ``_ONE_FILE_MAX_ROWS`` bounds the id-only count writes
-# (base counts, layer lcounts).  ``_ONE_TASK_VIEW_MAX_ROWS`` bounds the
-# full-row view work: assembling base ⊖ tombstones ⊕ deltas for a read
-# (``_assemble_view``) and for compaction's sorted write, where one task
-# over every column loses to the parallel plan sooner.  Each limit sits
+# broadcast.  ``_ONE_FILE_MAX_ROWS`` bounds the id-only lcounts write.
+# ``_ONE_TASK_VIEW_MAX_ROWS`` bounds the full-row view work: assembling
+# base ⊖ tombstones ⊕ deltas for a read (``_assemble_view``) and for
+# compaction's base write with its counts (``_write_bases``), where one
+# task over every column loses to the parallel plan sooner.  Each limit sits
 # near its crossover, measured on a 4-core box at local[4] over sf0.1
 # lineitem views (one task vs the parallel plan).  Sorted write (median
 # of 3): 0.64 vs 0.95 s at 60k rows, 0.83 vs 0.94 s at 100k, 1.01 vs
 # 0.83 s at 150k, 2.6 vs 1.6 s at 600k (the range path then writes 4
-# files).  Counts write: 0.42 vs 0.70 s at 150k rows, 1.16 vs 1.11 s at
+# files).  Id-only counts write (the lcounts write's shape): 0.42 vs
+# 0.70 s at 150k rows, 1.16 vs 1.11 s at
 # 600k, 1.77 vs 1.58 s at 1M.  Read of a one-layer view (median of 5-7;
 # grouped ``_count`` / JS custom reduce at group_level 2 / map range
 # with include_docs): 30k rows 0.17 vs 0.19, 0.67 vs 0.72, 1.18 vs
@@ -649,8 +652,6 @@ class Engine:
         )
 
     def _build_fused(self, vdefs: list[ViewDef]) -> None:
-        import tempfile as _tf
-
         t = TABLES[vdefs[0].table]
         sigs = [v.sig for v in vdefs]
         # sorted + deduped: the per-sig lock is non-reentrant, and a
@@ -668,74 +669,17 @@ class Engine:
             fused = self._fused_frame(
                 vdefs, self._pre_map(t, src), fan_out=not one
             )
-            # the range partitioner SAMPLES its child — a second full
-            # execution of the fused encode work; cache the (small,
-            # ≈ Σ view sizes) emit rows across the sample+write passes
-            fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-            # one range exchange on (view, key) keeps each view's rows
-            # contiguous AND key-ordered; the CollectMetrics with the
-            # per-view counts sits ABOVE it so the range partitioner's
-            # sampling pass cannot double-count
-            vobs = Observation()
-            metrics = []
-            for i in range(len(vdefs)):
-                vw = F.col("_vw") == i
-                metrics.append(
-                    F.count(F.when(vw, 1)).alias(f"rows{i}")
-                )
-                metrics.append(
-                    F.max(F.when(vw, F.size("value_num_arr")))
-                    .alias(f"w{i}")
-                )
-                metrics.append(
-                    F.approx_count_distinct(
-                        F.when(vw, F.col("key_enc"))
-                    ).alias(f"keys{i}")
-                )
-            tmp = _tf.mkdtemp(prefix="fused-",
-                              dir=self.registry.storage_dir)
-            (
-                fused.repartitionByRange("_vw", "key_enc", "id")
-                .observe(vobs, *metrics)
-                .sortWithinPartitions("_vw", "key_enc", "id",
-                                      "emit_ord")
-                .write.partitionBy("_vw")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
-            m = vobs.get
-            mx = int(obs.get["mx"] or 0)
-            for i, vdef in enumerate(vdefs):
-                sig = vdef.sig
-                entry = self.registry.ensure_view(sig)
-                vdir = self.registry.view_dir(sig)
-                base_rel = "base-v1"
-                dest = os.path.join(vdir, base_rel)
-                os.makedirs(vdir, exist_ok=True)
-                shutil.rmtree(dest, ignore_errors=True)
-                part = os.path.join(tmp, f"_vw={i}")
-                if os.path.isdir(part):
-                    os.rename(part, dest)
-                else:  # a view whose guards matched nothing
-                    self.spark.createDataFrame(
-                        [], VIEW_SCHEMA
-                    ).write.mode("overwrite").parquet(dest)
-                rows = int(m[f"rows{i}"] or 0)
-                entry.update(
-                    base=base_rel, base_version=1, last_seq=mx,
-                    base_rows=rows,
-                    stats={
-                        "rows": rows,
-                        "sum_w": (
-                            int(m[f"w{i}"])
-                            if m[f"w{i}"] is not None else -1
-                        ),
-                        "keys": int(m[f"keys{i}"] or 0),
-                    },
-                    counts=None,
-                )
+            if not one:
+                # the range path's counts aggregation and sampling pass
+                # each re-run their child — cache the (small, ≈ Σ view
+                # sizes) emit rows instead of re-running the encode
+                fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
+            entries = [(s, self.registry.ensure_view(s)) for s in sigs]
+            self._write_bases(fused, entries, one)
+            mx = int((observed(obs) or {}).get("mx") or 0)
+            for sig, entry in entries:
+                entry["last_seq"] = mx
                 self.registry.set_view(sig, entry)
-            shutil.rmtree(tmp, ignore_errors=True)
         finally:
             if fused is not None:
                 fused.unpersist()
@@ -930,8 +874,8 @@ class Engine:
                 sig = vdef.sig
                 vdir = self.registry.view_dir(sig)
                 batch = entry["next_batch"]
-                self._take_delta(os.path.join(tmp, f"_vw={i}"),
-                                 os.path.join(vdir, f"delta-{batch}"))
+                self._take_part(os.path.join(tmp, f"_vw={i}"),
+                                os.path.join(vdir, f"delta-{batch}"))
                 ids = self.spark.read.schema(
                     "id string, value_num double"
                 ).parquet(ids_part)
@@ -1007,7 +951,7 @@ class Engine:
             stats = (entry or {}).get("stats")
             last_seq = entry["last_seq"] if entry else 0
         else:
-            view = self._build(vdef, self._source_df(vdef))
+            view = self._build(vdef, self._source_df(vdef))[0]
 
         results = [
             self._run_query(
@@ -1268,8 +1212,10 @@ class Engine:
             )
         return raw_df
 
-    def _build(self, vdef: ViewDef, raw_df: DataFrame) -> DataFrame:
-        """Run the map phase over raw-schema rows (non-deleted only).
+    def _build(self, vdef: ViewDef,
+               raw_df: DataFrame) -> tuple[DataFrame, bool]:
+        """Run the map phase over raw-schema rows (non-deleted only);
+        returns the emit rows and whether they are one task's.
 
         A scan of at most ``_FANOUT_MIN_BYTES`` runs as one task
         (``_one_task_scan``): the collapse, the map and the write above
@@ -1296,7 +1242,7 @@ class Engine:
         if isinstance(m, (MapSpec, list)) and not one:
             raw_df = right_size(raw_df, min_bytes=_FANOUT_MIN_BYTES)
         if isinstance(m, MapSpec):
-            return build_view_structured_on(raw_df, m)
+            return build_view_structured_on(raw_df, m), one
         if isinstance(m, list):
             out = None
             for i, spec in enumerate(m):
@@ -1304,11 +1250,11 @@ class Engine:
                 if spec.explode is None:
                     d = d.withColumn("emit_ord", F.lit(i))
                 out = d if out is None else out.unionByName(d)
-            return out
+            return out, one
         table, fn = m
         if not one:
             raw_df = python_fanout(raw_df)
-        return build_view_python_on(raw_df, table, fn)
+        return build_view_python_on(raw_df, table, fn), one
 
     def update_view(self, vdef_or_name: Any,
                     changes: DataFrame | None = None,
@@ -1368,24 +1314,22 @@ class Engine:
                 )
                 # seq checkpoint piggybacks on the build scan (observe =
                 # zero extra pass over the batch; `max` is idempotent
-                # under the range partitioner's extra sampling pass, so
-                # the CollectMetrics accumulator stays correct)
+                # under the range path's re-runs of the scan, so the
+                # CollectMetrics accumulator stays correct)
                 obs = Observation()
                 src = src.observe(obs, F.max(seq_col).alias("mx"))
-                base_rel = "base-v1"
-                built = self._build(vdef, src)
-                # the range partitioner SAMPLES its child to pick
-                # bounds — a second full execution of the build plan.
-                # Cache the built rows across the sample+write passes
-                # when that second execution is expensive: the Python
-                # interpreter path (it doubles the dominant cost;
-                # measured 10.2 s → ~6 s for the sf0.1 interpreted
-                # fixture view) and a structured encode that ``_build``
-                # fanned out (the sampling pass would re-run the
-                # widened encode — the fused path persists for the
-                # same reason).  A structured encode running on its
-                # scan splits re-samples a cheap columnar scan; the
-                # persist would only spend memory on it.
+                built, one = self._build(vdef, src)
+                # above the one-task limit the range path's counts
+                # aggregation and sampling pass each re-run the build
+                # plan.  Cache the built rows across those passes when
+                # re-running is expensive: the Python interpreter path
+                # (it multiplies the dominant cost; measured 10.2 s →
+                # ~6 s for the sf0.1 interpreted fixture view) and a
+                # structured encode that ``_build`` fanned out (the
+                # fused path persists for the same reason).  A
+                # structured encode running on its scan splits re-runs
+                # a cheap columnar scan; the persist would only spend
+                # memory on it.
                 from mapreduce_spark.extensions.util import (
                     fanout_width,
                 )
@@ -1396,27 +1340,22 @@ class Engine:
                 heavy = isinstance(vdef.map_def, tuple) and callable(
                     vdef.map_def[1]
                 )
-                cache = heavy or (
+                cache = not one and (heavy or (
                     isinstance(m, (MapSpec, list))
                     and fanout_width(src, min_bytes=_FANOUT_MIN_BYTES)
-                )
+                ))
                 if cache:
                     built = built.persist(StorageLevel.MEMORY_AND_DISK)
                 try:
-                    stats = self._write_sorted(
-                        built, os.path.join(vdir, base_rel)
+                    self._write_bases(
+                        built.withColumn("_vw", F.lit(0)),
+                        [(sig, entry)], one,
                     )
                 finally:
                     if cache:
                         built.unpersist()
-                # per-doc emit counts are written LAZILY at the first
-                # refresh (_ensure_counts) — read-only views never pay
-                # the extra id-column pass
-                m0 = observed(obs)
-                entry.update(
-                    base=base_rel, base_version=1,
-                    last_seq=int((m0 or {}).get("mx") or 0),
-                    stats=stats, counts=None, base_rows=stats["rows"],
+                entry["last_seq"] = int(
+                    (observed(obs) or {}).get("mx") or 0
                 )
                 self.registry.set_view(sig, entry)
                 return
@@ -1442,14 +1381,15 @@ class Engine:
                 F.max(doc_id).alias("hi"),
             ).select(doc_id.alias("id"), F.lit(-1).alias("_vw"))
             dobs = Observation()
-            emits = self._build(vdef, src).observe(
+            emits, one = self._build(vdef, src)
+            emits = emits.observe(
                 dobs,
                 F.count(F.lit(1)).alias("rows"),
                 F.max(F.size("value_num_arr")).alias("w"),
                 F.approx_count_distinct("key_enc").alias("keys"),
             ).withColumn("_vw", F.lit(0))
             frame = emits.unionByName(ids, allowMissingColumns=True)
-            if _one_task_scan(src)[1]:
+            if one:
                 # _build coalesced the emit branch below its collapse;
                 # this folds the id branch's scan splits into that task
                 frame = frame.coalesce(1)
@@ -1464,8 +1404,8 @@ class Engine:
                 probe = observed(obs)
                 if probe is None or not probe["n"]:
                     return
-                self._take_delta(os.path.join(tmp, "_vw=0"),
-                                 os.path.join(vdir, f"delta-{batch}"))
+                self._take_part(os.path.join(tmp, "_vw=0"),
+                                os.path.join(vdir, f"delta-{batch}"))
                 self._append_layer(
                     sig, entry, batch,
                     self.spark.read.schema("id string").parquet(
@@ -1479,16 +1419,19 @@ class Engine:
             finally:
                 shutil.rmtree(tmp, ignore_errors=True)
 
-    def _take_delta(self, part: str, delta_path: str) -> None:
-        """Move a refresh write's emit partition ``part`` to
-        ``delta_path``; an empty delta when no changed doc emitted."""
-        shutil.rmtree(delta_path, ignore_errors=True)
+    def _take_part(self, part: str, dest: str,
+                   schema: Any = VIEW_SCHEMA) -> None:
+        """Move a partitioned write's partition ``part`` to ``dest``,
+        replacing whatever a crashed attempt left there; an empty
+        ``schema`` file when the write produced no such partition (no
+        changed doc emitted, or a view whose guards matched nothing)."""
+        shutil.rmtree(dest, ignore_errors=True)
         if os.path.isdir(part):
-            os.rename(part, delta_path)
+            os.rename(part, dest)
         else:
             self.spark.createDataFrame(
-                [], VIEW_SCHEMA
-            ).write.mode("overwrite").parquet(delta_path)
+                [], schema
+            ).write.mode("overwrite").parquet(dest)
 
     def _append_layer(self, sig: str, entry: dict, batch: int,
                       ids: DataFrame, n: int, bounds: tuple, mx: int,
@@ -1512,10 +1455,13 @@ class Engine:
         recorded with ``stats=None`` (unknown; readers fall back to a
         count) rather than a row total that omits the rows this batch
         supersedes — a crash before the compaction lands leaves an
-        honest registry."""
+        honest registry.  So does a refresh of a base with no counts
+        file (storage written before bases carried one): the next
+        compaction writes both, and exact stats."""
         vdir = self.registry.view_dir(sig)
         compacts = len(entry["layers"]) + 1 >= self.compact_after
-        prev = None if compacts else entry.get("stats")
+        counted = entry["base"] is None or entry.get("counts")
+        prev = None if compacts or not counted else entry.get("stats")
         delta_rows = int(delta["rows"] or 0)
         removed = self._write_lcounts(
             entry, vdir, batch, ids, n, bounds, delta_rows,
@@ -1547,103 +1493,182 @@ class Engine:
         if compacts:
             self._compact(sig, entry)
 
-    def _write_sorted(self, view: DataFrame, path: str,
-                      one: bool = False) -> dict:
-        """Persist a view sorted+range-partitioned by key_enc so Parquet
-        row-group min/max stats give index-like range pruning (X1/X3).
+    # ------------------------------------------------------------------
+    # base writes: every base version lands with its per-doc counts
+    # ------------------------------------------------------------------
 
-        ``one`` (a compaction of at most ``_ONE_TASK_VIEW_MAX_ROWS``
-        scanned rows, ``_one_task_view``): one task writes it as one
-        sorted file instead — no exchange, no bounds sampling, and a
-        single pass over ``view``.
+    def _write_bases(self, frame: DataFrame,
+                     views: list[tuple[str, dict]], one: bool) -> None:
+        """Write the next base version of every view in ``views``
+        (``(sig, entry)``; view ``i``'s rows are ``frame``'s with
+        ``_vw`` = i) and point each entry at it, in memory: the caller
+        sets ``last_seq`` if it moves and commits with ``set_view``.
 
-        Returns view statistics observed on the write pass itself (zero
-        extra scans): exact row count and max ``value_num_arr`` width —
-        the registry metadata that lets ``total_rows`` and dynamic-view
-        ``_sum`` answer without a probe job later.  On the range path
-        the CollectMetrics node sits ABOVE the range exchange, so the
-        partitioner's extra sampling pass over the child never
-        double-counts.
-        """
-        obs = Observation()
-        if one:
-            view = view.coalesce(1)
-        else:
-            view = view.repartitionByRange("key_enc", "id")
-        (
-            view.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.max(F.size("value_num_arr")).alias("w"),
-                F.approx_count_distinct("key_enc").alias("keys"),
-            )
-            .sortWithinPartitions("key_enc", "id", "emit_ord")
-            .write.mode("overwrite")
-            .parquet(path)
+        It lays out, per view, ``base-v<N+1>`` sorted by (key_enc, id)
+        so Parquet row-group min/max stats give index-like range pruning
+        (X1/X3), and ``counts-base-v<N+1>``, the per-doc emit counts
+        (id, n) sorted by id so a refresh's superseded-row lookup prunes
+        by id (``_count_pieces``; the reference keeps the same per-doc
+        emit bookkeeping in its index metadata).  A base carries an
+        all-null ``n`` column, and a counts file may carry all-null view
+        columns; every reader projects its own schema.
+
+        ``one`` (the caller's map or fold already runs in one task,
+        ``_one_task_scan`` / ``_one_task_view``): ONE write of one task
+        lays out both — a ``count(*)`` window by (``_vw``, id) and one
+        explode of [view row, counts row on each id's first row] feed
+        one sort, so the plan has no exchange and runs ``frame`` once.
+        Otherwise the bases are range-partitioned by key (the
+        partitioner's sampling pass re-runs ``frame``, so a caller whose
+        frame is costly to recompute persists it first), then an
+        id-only pass per view over the files just written aggregates
+        its counts (``_write_base_counts``).  Folding that aggregation into the range write (a union
+        under the one exchange) cost more executor CPU (sf0.1 lineitem,
+        local[4], median of 3): first build 16.8 vs 11.5 s, compaction
+        12.3 vs 5.8 s.
+
+        The entry's stats are observed on the write itself: exact row
+        count, max ``value_num_arr`` width, and an HLL distinct-key
+        ESTIMATE (default rsd ≈5%, not a bound in either direction)
+        that feeds only the small-result sort-fusion gate
+        (operators/query.fused_sort), which picks between two CORRECT
+        plans.  On the range path the observation sits above the
+        exchange, so the sampling pass never double-counts.  The
+        superseded base, counts and layers become garbage: GC is
+        deferred (``vacuum``) so lazy DataFrames handed out before the
+        write stay valid."""
+        cols = VIEW_SCHEMA.fieldNames()
+        rows = frame.select(
+            "_vw", *cols, F.lit(0).alias("_c"),
+            F.lit(None).cast("long").alias("n"),
         )
-        m = obs.get
-        return {
-            "rows": int(m["rows"] or 0),
-            "sum_w": int(m["w"]) if m["w"] is not None else -1,
-            # HLL distinct-key ESTIMATE (default rsd ≈5%, and not a
-            # true bound in either direction): feeds only the
-            # small-result sort-fusion gate (operators/query.
-            # fused_sort), which picks between two CORRECT plans —
-            # never treat it as a correctness-bearing bound
-            "keys": int(m["keys"] or 0),
-        }
+        if one:
+            by_id = Window.partitionBy("_vw", "id").orderBy("emit_ord")
+            rows = rows.coalesce(1).select(
+                "*",
+                F.count(F.lit(1)).over(by_id.rowsBetween(
+                    Window.unboundedPreceding, Window.unboundedFollowing
+                )).alias("_n"),
+                F.row_number().over(by_id).alias("_rn"),
+            )
+            count_row = {"_vw": F.col("_vw"), "id": F.col("id"),
+                         "_c": F.lit(1), "n": F.col("_n")}
+            counts = F.when(F.col("_rn") == 1, F.struct(*[
+                count_row.get(f.name, F.lit(None)).cast(f.dataType)
+                .alias(f.name)
+                for f in rows.schema.fields if f.name not in ("_n", "_rn")
+            ]))
+            view = F.struct(*[
+                F.col(c) for c in rows.columns if c not in ("_n", "_rn")
+            ])
+            out = (
+                rows.select(F.explode(F.array(view, counts)).alias("r"))
+                .filter(F.col("r").isNotNull())
+                .select("r.*")
+            )
+        else:
+            out = rows.repartitionByRange("_vw", "key_enc", "id")
+        obs = Observation()
+        metrics = []
+        for i in range(len(views)):
+            vw = (F.col("_vw") == i) & (F.col("_c") == 0)
+            metrics += [
+                F.count(F.when(vw, 1)).alias(f"rows{i}"),
+                F.max(F.when(vw, F.size("value_num_arr"))).alias(f"w{i}"),
+                F.approx_count_distinct(F.when(vw, F.col("key_enc")))
+                .alias(f"keys{i}"),
+            ]
+        tmp = tempfile.mkdtemp(prefix="bases-",
+                               dir=self.registry.storage_dir)
+        try:
+            out = out.observe(obs, *metrics)
+            if one or len(views) > 1:
+                (
+                    out.sortWithinPartitions("_vw", "_c", "key_enc", "id",
+                                             "emit_ord")
+                    .write.partitionBy("_vw", "_c").mode("overwrite")
+                    .parquet(tmp)
+                )
+            else:
+                # one view's range write needs no partition columns: its
+                # sort then leads with key_enc, whose prefix decides most
+                # comparisons (a constant _vw first forces a full row
+                # comparison on each)
+                (
+                    out.drop("_vw", "_c")
+                    .sortWithinPartitions("key_enc", "id", "emit_ord")
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(tmp, "_vw=0", "_c=0"))
+                )
+            # None: an empty frame folded away (see observed())
+            m = observed(obs) or {}
+            if not one:
+                self._write_base_counts(tmp, [
+                    (i, int(m.get(f"rows{i}") or 0))
+                    for i in range(len(views))
+                ])
+            for i, (sig, entry) in enumerate(views):
+                vdir = self.registry.view_dir(sig)
+                os.makedirs(vdir, exist_ok=True)
+                version = entry["base_version"] + 1
+                base_rel = f"base-v{version}"
+                part = os.path.join(tmp, f"_vw={i}")
+                self._take_part(os.path.join(part, "_c=0"),
+                                os.path.join(vdir, base_rel), VIEW_SCHEMA)
+                self._take_part(os.path.join(part, "_c=1"),
+                                os.path.join(vdir, f"counts-{base_rel}"),
+                                "id string, n long")
+                old = [entry["base"], entry.get("counts")]
+                for l in entry["layers"]:
+                    old += [l["delta"], l["lcounts"]]
+                rows_i = int(m.get(f"rows{i}") or 0)
+                w = m.get(f"w{i}")
+                entry.update(
+                    base=base_rel, base_version=version,
+                    counts=f"counts-{base_rel}", layers=[],
+                    base_rows=rows_i,
+                    stats={"rows": rows_i,
+                           "sum_w": int(w) if w is not None else -1,
+                           "keys": int(m.get(f"keys{i}") or 0)},
+                    garbage=entry.get("garbage", [])
+                    + [rel for rel in old if rel],
+                )
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _write_base_counts(self, tmp: str,
+                           rows: list[tuple[int, int]]) -> None:
+        """The range path's counts pass (``_write_bases``): for each
+        view (``(_vw, rows)`` pairs) read the id column of the base just
+        written under ``tmp`` and write its (id, n) counts beside it,
+        id-sorted.  A base of at most ``_ONE_FILE_MAX_ROWS`` rows is
+        counted by one task with no exchange (``_one_task``), a larger
+        one range-partitioned by id."""
+        for i, n in rows:
+            if not n:
+                continue
+            ids = self.spark.read.schema("id string").parquet(
+                os.path.join(tmp, f"_vw={i}", "_c=0")
+            )
+            one = _one_task(n, _ONE_FILE_MAX_ROWS)
+            if one:
+                ids = ids.coalesce(1)
+            counts = ids.groupBy("id").agg(
+                F.count(F.lit(1)).cast("long").alias("n")
+            )
+            if not one:
+                counts = counts.repartitionByRange("id")
+            counts.sortWithinPartitions("id").write.mode(
+                "overwrite"
+            ).parquet(os.path.join(tmp, f"_vw={i}", "_c=1"))
 
     # ------------------------------------------------------------------
     # per-doc emit-count metadata (O(changes) refresh accounting)
     # ------------------------------------------------------------------
 
-    def _write_counts(self, data_path: str, out_path: str,
-                      rows_bound: int | None = None) -> None:
-        """Persist per-doc emit counts (id, n) for a base version.
-
-        One column-pruned (id-only) pass over the just-written files —
-        build/compaction-time cost, never per-refresh.  Written id-
-        sorted and range-partitioned so the per-refresh lookup's
-        ``isin`` predicate prunes to the matching row groups via
-        parquet min/max stats (the reference keeps the same per-doc
-        emit bookkeeping in its index metadata).
-
-        A base of at most ``rows_bound`` rows (``_one_task``,
-        ``_ONE_FILE_MAX_ROWS``) is counted and written by ONE task as
-        one sorted file instead: the id scan is coalesced below the
-        aggregation, so the plan has no exchange at all."""
-        ids = self.spark.read.schema(VIEW_SCHEMA).parquet(data_path)
-        one = _one_task(rows_bound, _ONE_FILE_MAX_ROWS)
-        if one:
-            ids = ids.coalesce(1)
-        counts = ids.groupBy("id").agg(
-            F.count(F.lit(1)).cast("long").alias("n")
-        )
-        if not one:
-            counts = counts.repartitionByRange("id")
-        (
-            counts.sortWithinPartitions("id")
-            .write.mode("overwrite").parquet(out_path)
-        )
-
-    def _ensure_counts(self, entry: dict, vdir: str) -> None:
-        """Lazily materialize the base counts file on first refresh.
-
-        Read-only views (the common case) never pay the pass; a view
-        entering maintenance pays it once per base version, amortized
-        over every subsequent refresh."""
-        if entry.get("counts") is None and entry.get("base"):
-            counts_rel = f"counts-{entry['base']}"
-            self._write_counts(
-                os.path.join(vdir, entry["base"]),
-                os.path.join(vdir, counts_rel),
-                rows_bound=entry.get("base_rows"),
-            )
-            entry["counts"] = counts_rel
-
     def _count_pieces(self, entry: dict, vdir: str) -> list:
         """(id, n, _rk) live emit counts per piece, oldest first: the
-        base counts file (``_ensure_counts``) at rank 0, each layer's
+        base counts file (``_write_bases``) at rank 0, each layer's
         lcounts at rank = its batch number.  The newest piece holding a
         doc has its live emit count."""
         if entry["base"] is None:
@@ -1692,8 +1717,6 @@ class Engine:
         literal ids costs O(k) in plan compile (measured 0.7 s at 1k
         ids, 50 s at 100k, PLANS.md round 7) while the broadcast stays
         flat; past ``_BROADCAST_MAX_IDS`` it shuffles instead."""
-        if prior:
-            self._ensure_counts(entry, vdir)
         lo, hi = bounds
         pc = "struct<_rk:long,pn:long>"
         parts = [
@@ -1742,31 +1765,17 @@ class Engine:
         return int((observed(obs) or {}).get("removed") or 0)
 
     def _compact(self, sig: str, entry: dict) -> None:
-        """Fold base+layers into a new base version (X7 auto_compaction).
+        """Fold base+layers into a new base version and its counts
+        (X7 auto_compaction, ``_write_bases``).
 
         The fold scans the base and every delta: their registry row
-        counts pick one plan for the assembly and the sorted write
+        counts pick one plan for the assembly and the write
         (``_one_task_view``), so a small fold is one task."""
-        vdir = self.registry.view_dir(sig)
         one = _one_task_view(entry)
-        assembled = self._assemble_view(sig, one)
-        newv = entry["base_version"] + 1
-        base_rel = f"base-v{newv}"
-        entry["stats"] = self._write_sorted(
-            assembled, os.path.join(vdir, base_rel), one=one,
+        self._write_bases(
+            self._assemble_view(sig, one).withColumn("_vw", F.lit(0)),
+            [(sig, entry)], one,
         )
-        old = [entry["base"]]
-        if entry.get("counts"):
-            old.append(entry["counts"])
-        for l in entry["layers"]:
-            old += [l["delta"], l["lcounts"]]
-        # old versions become unreferenced; GC is deferred (vacuum) so
-        # lazy DataFrames handed out before the compaction stay valid.
-        # counts=None: the new base's counts file re-materializes
-        # lazily on the next refresh (_ensure_counts)
-        entry.update(base=base_rel, base_version=newv, layers=[],
-                     counts=None, base_rows=entry["stats"]["rows"])
-        entry["garbage"] = entry.get("garbage", []) + old
         self.registry.set_view(sig, entry)
 
     def compact(self, view_name_or_sig: str) -> dict:

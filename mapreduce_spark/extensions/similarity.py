@@ -34,7 +34,7 @@ from typing import NamedTuple
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,7 +42,6 @@ from mapreduce_spark.extensions.util import (
     dot_col as _dot,
     normalized_vectors,
     release_local_checkpoint,
-    right_size,
 )
 
 # 8 bands × 4 bits: band-match prob for cosine s is (1-acos(s)/π)^4,
@@ -97,23 +96,6 @@ def _hyperplanes(dim: int, n_planes: int = N_PLANES) -> list[list[float]]:
             row.append(int(h, 16) / 2**32 - 0.5)
         planes.append(row)
     return planes
-
-
-def rp_signature(nv: Column, planes: list[list[float]]) -> Column:
-    """Signature int: bit i = sign(v · plane_i) ≥ 0."""
-    sig = F.lit(0)
-    for i, p in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                nv,
-                F.array(*[F.lit(float(x)) for x in p]),
-                lambda a, b: a * b,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        sig = sig + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return sig
 
 
 def rp_lsh_candidates(emb: DataFrame, query_ids: list[int],

@@ -27,7 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from mapreduce_spark.collate import encode_string_body
 
@@ -78,16 +77,6 @@ def enc_str_series(s: pd.Series) -> pd.Series:
     out = ("4" + esc).str.cat([_TERM] * len(esc))
     out[mask] = "1"
     return out
-
-
-@F.pandas_udf(T.StringType())
-def _enc_num_udf(s: pd.Series) -> pd.Series:
-    return enc_num_series(s)
-
-
-@F.pandas_udf(T.StringType())
-def _enc_str_udf(s: pd.Series) -> pd.Series:
-    return enc_str_series(s)
 
 
 _ESC_HI = "퟿"

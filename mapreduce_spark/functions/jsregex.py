@@ -198,11 +198,6 @@ _DWS_RANGES = {
 }
 
 
-def _prop_class(name: str) -> str:
-    """``\\p{name}`` → the inside of a Python character class."""
-    return _ranges_body(_prop_ranges(name))
-
-
 @lru_cache(maxsize=128)
 def _prop_ranges(name: str) -> tuple:
     """``\\p{name}`` → sorted inclusive code-point ranges.

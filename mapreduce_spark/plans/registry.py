@@ -18,7 +18,10 @@ versioned directories; a writer never mutates files a reader may hold
 open, so lazy DataFrames stay valid across refreshes):
 
     <storage>/registry.json
-    <storage>/views/<sig>/base-v<N>/        sorted, range-partitioned
+    <storage>/views/<sig>/base-v<N>/        sorted by (key_enc, id)
+    <storage>/views/<sig>/counts-base-v<N>/ (id, n) per doc of base-v<N>,
+                                            id-sorted, written by the
+                                            same job as the base
     <storage>/views/<sig>/delta-<B>/        incremental emits, batch B
     <storage>/views/<sig>/lcounts-<B>/      (id, n) per changed doc,
                                             batch B — doubles as the
@@ -27,8 +30,9 @@ open, so lazy DataFrames stay valid across refreshes):
 
 The effective view is the LSM-style fold
 ``((base ⊖ t1) ⊕ d1) ⊖ t2 ⊕ d2 …`` — see engine._assemble_view.
-Compaction folds layers back into a new base-v<N+1>; old versions are
-garbage-collected on cleanup, never in-place.
+Compaction folds layers back into a new base-v<N+1> (with its
+counts-base-v<N+1>); old versions are garbage-collected on cleanup,
+never in-place.
 """
 
 from __future__ import annotations

@@ -2,6 +2,7 @@
 envelope options — the parts the DuckDB oracle can't see."""
 
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
@@ -405,8 +406,6 @@ def test_one_task_assembly_equals_parallel_plan(
     parallel (broadcast anti-join) plan's and a single build of the
     final docs; a read plans no exchange and runs one job; and a
     compaction writes the same base rows with exact stats both ways."""
-    import shutil
-
     raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     pk = ["l_orderkey", "l_linenumber"]
     b1, b2, b3 = _batches(spark, sf_dir, 3)
@@ -1021,7 +1020,8 @@ def test_public_compact_folds_layers(spark, sf_dir, tmp_path):
     vdir = eng.registry.view_dir(sig)
     dirs = [d for d in os.listdir(vdir) if os.path.isdir(
         os.path.join(vdir, d))]
-    assert dirs == [entry["base"]]  # counts re-materialize lazily
+    # the compaction wrote the new base's counts beside it
+    assert sorted(dirs) == sorted([entry["base"], entry["counts"]])
     assert _rows(eng.query("d/v", group_level=2, stale="ok")) == before
 
 
@@ -1398,15 +1398,26 @@ def test_compacting_refresh_stats_exact_and_crash_recovers(
             == _rows(ref.query("dd/by_flag", group_level=2, stale="ok")))
 
 
+def _counts_and_base_ids(spark, vdir, base_rel):
+    """A base's ``counts-<base>`` file as sorted (id, n) rows, and the
+    same rows computed as ``groupBy(id).count()`` over the base."""
+    counts = spark.read.parquet(os.path.join(vdir, f"counts-{base_rel}"))
+    base = spark.read.parquet(os.path.join(vdir, base_rel))
+    return (sorted(map(tuple, counts.select("id", "n").collect())),
+            sorted(map(tuple, base.groupBy("id").count().collect())))
+
+
 def test_small_compaction_is_one_task_and_range_path_agrees(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """Refreshes of a small view (registry row counts under
     ``_ONE_FILE_MAX_ROWS`` and ``_ONE_TASK_VIEW_MAX_ROWS``) write their
     count files and the compacted base with no exchange; the base is
-    one parquet file sorted by (key_enc, id), with exact stats.  With
-    both limits at 0 the same sequence takes the range / exchange path
-    (shuffles, more jobs) and gives the same answer and stats."""
+    one parquet file sorted by (key_enc, id), with exact stats, and its
+    counts file one file sorted by id.  With both limits at 0 the same
+    sequence takes the range / exchange path (shuffles, more jobs) and
+    gives the same answer and stats.  On both paths every base's counts
+    file holds ``groupBy(id).count()`` of that base."""
     raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     part = F.col("l_orderkey") % 3
 
@@ -1427,8 +1438,16 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
         return eng.registry.view_dir(sig), entry, grouped, m
 
     vdir, entry, grouped, m = run(str(tmp_path / "one"))
-    # base counts, both lcounts and the compaction: no exchange at all
+    # both lcounts and the compaction: no exchange at all
     assert m["shuffle_write"] == 0
+    for base_rel in ("base-v1", entry["base"]):
+        got, want = _counts_and_base_ids(spark, vdir, base_rel)
+        assert got == want, base_rel
+    counts = os.path.join(vdir, entry["counts"])
+    (cfile,) = [f for f in os.listdir(counts) if f.endswith(".parquet")]
+    ids = pq.read_table(os.path.join(counts, cfile),
+                        columns=["id"]).column("id").to_pylist()
+    assert ids == sorted(ids) and len(ids) == len(set(ids))
     assert entry["stats"]["rows"] == raw.count()
     base = os.path.join(vdir, entry["base"])
     files = [f for f in os.listdir(base) if f.endswith(".parquet")]
@@ -1442,8 +1461,11 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
 
     monkeypatch.setattr(engine_mod, "_ONE_FILE_MAX_ROWS", 0)
     monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
-    _, rentry, rgrouped, rm = run(str(tmp_path / "range"))
+    rvdir, rentry, rgrouped, rm = run(str(tmp_path / "range"))
     assert rentry["stats"]["rows"] == entry["stats"]["rows"]
+    for base_rel in ("base-v1", rentry["base"]):
+        got, want = _counts_and_base_ids(spark, rvdir, base_rel)
+        assert got == want, base_rel
     assert rgrouped == grouped
     assert rm["shuffle_write"] > 0 and rm["jobs"] > m["jobs"]
 
@@ -1454,12 +1476,12 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
 def test_count_writes_crash_before_layer_commit_recovers(
     spark, sf_dir, tmp_path, monkeypatch, fused
 ):
-    """A refresh that crashes after its count files are on disk (the
-    base's ``counts-*`` and the batch's ``lcounts-<batch>``) but before
-    its layer commits leaves only orphan files: a fresh Engine on the
-    same storage keeps the old ``last_seq`` and answers like a
-    from-scratch build, and the retried refresh overwrites the orphans
-    and keeps ``stats.rows`` exact."""
+    """A refresh that crashes after its count file is on disk (the
+    batch's ``lcounts-<batch>``) but before its layer commits leaves
+    only an orphan file: a fresh Engine on the same storage keeps the
+    old ``last_seq`` and the base counts the build committed, and
+    answers like a from-scratch build; the retried refresh overwrites
+    the orphan and keeps ``stats.rows`` exact."""
     raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     seq = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
     top = raw.agg(F.max(seq)).collect()[0][0]
@@ -1506,7 +1528,7 @@ def test_count_writes_crash_before_layer_commit_recovers(
     eng = open_engine()
     entry = eng.registry.get_view(sig)
     assert entry["last_seq"] == built["last_seq"]
-    assert not entry["layers"] and entry.get("counts") is None
+    assert not entry["layers"] and entry["counts"] == built["counts"]
     ref = open_engine(str(tmp_path / "ref"))
     ref.update_view("dd/by_flag", None, built["last_seq"])
     assert grouped(eng) == grouped(ref)
@@ -1522,6 +1544,120 @@ def test_count_writes_crash_before_layer_commit_recovers(
     assert no_dup_ids(counts) and no_dup_ids(lcounts)
     ref.update_view("dd/by_flag", None, cuts[1])
     assert grouped(eng) == grouped(ref)
+
+
+@pytest.mark.parametrize(
+    "fused", [False, True], ids=["update_view", "build_ddoc"]
+)
+def test_first_build_crash_at_commit_recovers(
+    spark, sf_dir, tmp_path, monkeypatch, fused
+):
+    """A first build that crashes after ``_write_bases`` renamed each
+    view's ``base-v1`` and ``counts-base-v1`` into place but before the
+    registry commit leaves them orphans and no temporary directory: a
+    fresh Engine on the same storage sees no index, its retried build
+    overwrites the orphans and answers like a from-scratch build, and
+    vacuum then leaves only the directories the registry references."""
+    names = ["dd/by_flag", "dd/big_qty"] if fused else ["dd/by_flag"]
+    store = str(tmp_path / "views")
+
+    def open_engine(path=store):
+        eng = Engine(spark, sf_dir, path)
+        eng.put_design("dd", REFRESH_VIEWS)
+        return eng
+
+    def build(eng):
+        if fused:
+            eng.build_ddoc("dd")
+        else:
+            eng.update_view(names[0])
+
+    def files(vdir):
+        return {os.path.join(d, f) for d in ("base-v1", "counts-base-v1")
+                for f in os.listdir(os.path.join(vdir, d))}
+
+    def crash(sig, entry):
+        raise RuntimeError("crash at the build commit")
+
+    eng = open_engine()
+    monkeypatch.setattr(eng.registry, "set_view", crash)
+    with pytest.raises(RuntimeError, match="crash at the build commit"):
+        build(eng)
+    monkeypatch.undo()
+    vdirs = {n: eng.registry.view_dir(eng.registry.resolve(*n.split("/")))
+             for n in names}
+    orphans = {n: files(vdir) for n, vdir in vdirs.items()}
+    assert not [d for d in os.listdir(store) if d.startswith("bases-")]
+
+    eng = open_engine()
+    for n in names:
+        entry = eng.registry.get_view(eng.registry.resolve(*n.split("/")))
+        assert entry is None or entry["base"] is None, n
+    build(eng)
+    ref = open_engine(str(tmp_path / "ref"))
+    build(ref)
+    for n, vdir in vdirs.items():
+        sig = eng.registry.resolve(*n.split("/"))
+        entry = eng.registry.get_view(sig)
+        assert entry["base"] == "base-v1", n
+        assert entry["counts"] == "counts-base-v1", n
+        assert not files(vdir) & orphans[n], n  # overwritten, not merged
+        assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
+        got, want = _counts_and_base_ids(spark, vdir, entry["base"])
+        assert got == want, n
+        eng.vacuum(sig)
+        assert set(os.listdir(vdir)) == {entry["base"], entry["counts"]}
+    for n, opts in (("dd/by_flag", {"group_level": 2}),
+                    ("dd/big_qty", {"reduce": False, "limit": 50})):
+        if n in names:
+            assert (eng.query(n, stale="ok", **opts).rows()
+                    == ref.query(n, stale="ok", **opts).rows()), n
+
+
+def test_base_without_counts_refreshes_then_compaction_writes_them(
+    spark, sf_dir, tmp_path
+):
+    """Storage written before bases carried their counts file holds
+    ``counts: None``.  A first-layer refresh of such a base writes its
+    lcounts without the superseded-row lookup and records
+    ``stats=None`` (``total_rows`` then counts), answering like a
+    from-scratch build; the next compaction writes the counts file and
+    exact stats."""
+    b0, b1, b2 = _batches(spark, sf_dir, 3)
+    eng = Engine(spark, sf_dir, str(tmp_path / "views"), compact_after=99)
+    eng.put_design("d", {"v": VIEW})
+    eng.update_view("d/v", changes=b0)
+    sig = eng.registry.resolve("d", "v")
+    vdir = eng.registry.view_dir(sig)
+    shutil.rmtree(os.path.join(vdir, "counts-base-v1"))
+
+    def drop_counts(state):
+        state["views"][sig]["counts"] = None
+
+    eng.registry.update(drop_counts)
+    # re-sends the built batch, so the refresh supersedes rows
+    eng.update_view("d/v", changes=b0.unionByName(b1))
+    eng.update_view("d/v", changes=b2)
+    entry = eng.registry.get_view(sig)
+    assert len(entry["layers"]) == 2 and entry["counts"] is None
+    assert entry["stats"] is None
+    ref = Engine(spark, sf_dir, str(tmp_path / "ref"))
+    ref.put_design("d", {"v": VIEW})
+    ref.update_view("d/v", changes=b0.unionByName(b1).unionByName(b2))
+    want = _rows(ref.query("d/v", group_level=2, stale="ok"))
+    total = ref.registry.get_view(ref.registry.resolve("d", "v"))
+    assert _rows(eng.query("d/v", group_level=2, stale="ok")) == want
+    res = eng.query("d/v", reduce=False, stale="ok", limit=1)
+    assert res.total_rows == total["stats"]["rows"]
+
+    eng.compact("d/v")
+    entry = eng.registry.get_view(sig)
+    assert entry["counts"] == f"counts-{entry['base']}"
+    assert entry["stats"]["rows"] == total["stats"]["rows"]
+    assert entry["stats"]["rows"] == eng._assemble_view(sig).count()
+    got, counted = _counts_and_base_ids(spark, vdir, entry["base"])
+    assert got == counted
+    assert _rows(eng.query("d/v", group_level=2, stale="ok")) == want
 
 
 @pytest.mark.parametrize(
@@ -1612,7 +1748,7 @@ def test_compaction_crash_at_base_swap_recovers(
 def test_delta_rename_crash_before_layer_commit_recovers(
     spark, sf_dir, tmp_path, monkeypatch, fused
 ):
-    """A refresh that crashes after ``_take_delta`` renamed
+    """A refresh that crashes after ``_take_part`` renamed
     ``delta-<batch>`` into place but before ``_append_layer`` leaves
     that delta an orphan: a fresh Engine on the same storage keeps the
     committed ``last_seq`` and layer stack and answers like a

@@ -6,6 +6,7 @@ the structured Variant path, include_docs verbatim bodies, and
 incremental maintenance including deletion tombstones."""
 
 import json
+import os
 
 import pytest
 
@@ -506,10 +507,10 @@ _TIER_VIEWS = {
 }
 # Spark jobs per first-layer refresh of a small log, measured: the delta
 # write is one job of one task (scan, collapse, map and write) and
-# _append_layer runs three (the base counts write, the changed ids'
-# broadcast and the lcounts write).  With _FANOUT_MIN_BYTES at 0 the
-# delta write runs 3 jobs (4 interpreted).
-TIER_REFRESH_JOB_CEILINGS = {"mapspec": 4, "variant": 4, "interp": 4}
+# _append_layer runs two (the changed ids' broadcast and the lcounts
+# write; the base counts file was written by the first build).  With
+# _FANOUT_MIN_BYTES at 0 the delta write runs 3 jobs (4 interpreted).
+TIER_REFRESH_JOB_CEILINGS = {"mapspec": 3, "variant": 3, "interp": 3}
 
 
 def _tier_log_row(i: int, seq: int, *, deleted: bool = False) -> dict:
@@ -543,12 +544,14 @@ def _tier_expected(rows: list[dict]) -> dict:
 
 
 def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
-    """A refresh whose log scan is below ``_FANOUT_MIN_BYTES`` writes its
-    delta in ONE Spark job of one task on every map tier (the collapse
-    window, the map and the write share it: no exchange), pays no footer-
-    schema job after a same-schema append, and stays under per-tier job
+    """A first build whose log scan is below ``_FANOUT_MIN_BYTES`` writes
+    its base and counts in ONE Spark job of one task on every map tier,
+    and a refresh writes its delta the same way (the collapse window,
+    the map and the write share it: no exchange), pays no footer-schema
+    job after a same-schema append, and stays under per-tier job
     ceilings.  With the limit at 0 the parallel plan (exchanges) runs
-    and gives the same answers and the same layer row counts."""
+    and gives the same answers, the same base and layer row counts and
+    the same base counts."""
     import mapreduce_spark.engine as E
     from mapreduce_spark.functions.jsvariant import VariantJSView
     from mapreduce_spark.metrics import measure
@@ -576,6 +579,15 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
         entry = eng.registry.get_view(eng.registry.resolve("log", view))
         return {k: entry["layers"][-1][k] for k in ("rows", "n")}
 
+    def base(eng, view):
+        sig = eng.registry.resolve("log", view)
+        entry = eng.registry.get_view(sig)
+        counts = spark.read.parquet(os.path.join(
+            eng.registry.view_dir(sig), entry["counts"]
+        )).select("id", "n")
+        return entry["base_rows"], entry["stats"]["rows"], sorted(
+            map(tuple, counts.collect()))
+
     engines = {}
     try:
         for limit in (None, 0):
@@ -588,8 +600,15 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
                 for view, tier in want.items():
                     m = eng._defs[eng.registry.resolve("log", view)].map_def
                     assert isinstance(m, tier), (view, type(m))
-                    eng.update_view(f"log/{view}")
+                    with measure(spark, f"build-{view}") as b:
+                        eng.update_view(f"log/{view}")
+                    print(f"limit={limit} {view}: first build "
+                          f"{b['jobs']} jobs, {b['tasks']} tasks")
+                    if limit is None:
+                        assert b["jobs"] == 1 and b["tasks"] == 1, view
                 engines[limit] = eng
+        for view in want:
+            assert base(engines[None], view) == base(engines[0], view)
         _write_log_part(log / "part-00001.parquet", batch)
         with measure(spark, "inference-probe") as probe:
             spark.read.parquet(str(log))
