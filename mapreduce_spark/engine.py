@@ -26,8 +26,8 @@ registry is the exactly-once checkpoint (atomic JSON rename).  At 100 TB
 this mirrors an LSM / lakehouse MERGE: refresh cost is O(changes), the
 read path adds only broadcast anti-joins against small tombstone sets,
 and compaction restores pristine range-pruned scans.  A view whose
-registry row counts stay under ``_ONE_TASK_VIEW_MAX_ROWS`` is instead
-assembled in one task with a window over tombstone batches — no
+registry row counts stay under ``sizing.ONE_TASK_VIEW_MAX_ROWS`` is
+instead assembled in one task with a window over tombstone batches — no
 exchange, no broadcast — for reads and compaction alike
 (``_assemble_view``).
 """
@@ -57,7 +57,6 @@ from mapreduce_spark.operators.mapphase import (
     MapSpec,
     build_view_python_on,
     build_view_structured_on,
-    python_fanout,
 )
 from mapreduce_spark.operators.query import (
     attach_docs,
@@ -67,6 +66,7 @@ from mapreduce_spark.operators.query import (
     row_order,
 )
 from mapreduce_spark.operators.reduce import check_reduce
+from mapreduce_spark.plans import sizing
 from mapreduce_spark.plans.registry import Registry, signature
 from mapreduce_spark.plans.spec import UNSET, QueryOptions, options_from
 from mapreduce_spark.sources.docs import (
@@ -78,109 +78,6 @@ from mapreduce_spark.sources.docs import (
 )
 
 log = logging.getLogger("mapreduce_spark.engine")
-
-# The map phase's size rule (``_one_task_scan``), on the total bytes of
-# the files a build or refresh scans:
-# - at most this: the scan is coalesced to one partition below the
-#   latest-per-_id collapse, so the collapse, the map (every tier) and
-#   a refresh's delta write above it run in one task: no collapse
-#   shuffle, no ``right_size`` or ``python_fanout`` exchange, and no
-#   partition-count probe; a first build writes its base and counts in
-#   that same task (``_write_bases``);
-# - above it, or of unknown size (remote files, frames with no input
-#   files): the map spreads across the cores — ``right_size`` for
-#   structured specs when the scan has fewer splits than cores,
-#   ``python_fanout`` for the Python tier.
-# 1 MiB of parquet is several MB decoded, ≈ 0.5 s of serial encode, so
-# above it the fan-out repays its exchange and its extra AQE jobs
-# (~0.1-0.3 s of scheduler round-trip each under co-tenant contention —
-# the drift mode tests/test_jobcount.py pins against).  At the limit one
-# task is no slower on any tier and runs fewer jobs.  Measured on a
-# 4-core box at local[4], an 8,000-doc raw changes log of 946 KB, one
-# view per tier (MapSpec / Variant JS / interpreted JS), median of 6,
-# parallel → one task: first build 0.58 → 0.47, 0.59 → 0.52,
-# 0.69 → 0.56 s at 4/4/7 → 3/3/4 jobs; first-layer refresh of a
-# 200-change batch 0.75 → 0.70, 0.65 → 0.62, 0.83 → 0.59 s at
-# 6/5/7 → 4/4/4 jobs and 9/8/14 → 4/4/4 tasks (the parallel MapSpec
-# refresh, the first after the append, also paid the footer-schema job
-# ``load_table`` no longer runs).
-_FANOUT_MIN_BYTES = 1 << 20
-# Engine work whose SCANNED input the registry bounds, before it runs,
-# by at most its limit's rows runs as ONE task (``_one_task``):
-# ``coalesce(1)`` goes below the aggregate, sort or window, so the plan
-# has no exchange, no range partitioner's bounds-sampling job and no
-# broadcast.  ``_ONE_FILE_MAX_ROWS`` bounds the id-only lcounts write.
-# ``_ONE_TASK_VIEW_MAX_ROWS`` bounds the full-row view work: assembling
-# base ⊖ tombstones ⊕ deltas for a read (``_assemble_view``) and for
-# compaction's base write with its counts (``_write_bases``), where one
-# task over every column loses to the parallel plan sooner.  Each limit sits
-# near its crossover, measured on a 4-core box at local[4] over sf0.1
-# lineitem views (one task vs the parallel plan).  Sorted write (median
-# of 3): 0.64 vs 0.95 s at 60k rows, 0.83 vs 0.94 s at 100k, 1.01 vs
-# 0.83 s at 150k, 2.6 vs 1.6 s at 600k (the range path then writes 4
-# files).  Id-only counts write (the lcounts write's shape): 0.42 vs
-# 0.70 s at 150k rows, 1.16 vs 1.11 s at
-# 600k, 1.77 vs 1.58 s at 1M.  Read of a one-layer view (median of 5-7;
-# grouped ``_count`` / JS custom reduce at group_level 2 / map range
-# with include_docs): 30k rows 0.17 vs 0.19, 0.67 vs 0.72, 1.18 vs
-# 1.30 s; 60k 0.17 vs 0.17, 0.76 vs 0.78, 1.19 vs 1.02 s; 85k 0.18 vs
-# 0.16, 0.95 vs 0.80, 1.29 vs 1.28 s; 100k 0.23 vs 0.17, 0.97 vs 0.81 s;
-# 150k 0.39 vs 0.35, 2.27 vs 1.57 s; 600k 0.99 vs 0.28, 5.42 vs 2.55 s.
-# A one-task read runs 1 job where the parallel one runs 3 (4 vs 8 with
-# include_docs), so above the ~60k wall crossover it trades up to ~0.15 s
-# of idle-box wall for 2-4 scheduler round-trips; the window's sort by
-# id costs more executor CPU than the broadcast anti-joins from 60k up.
-_ONE_FILE_MAX_ROWS = 1_000_000
-_ONE_TASK_VIEW_MAX_ROWS = 100_000
-
-
-def _one_task(rows_bound: int | None, max_rows: int) -> bool:
-    """True when work whose scanned input is bounded by ``rows_bound``
-    rows (None: unknown) runs as one task."""
-    return rows_bound is not None and rows_bound <= max_rows
-
-
-def _one_task_scan(df: DataFrame) -> tuple[DataFrame, bool]:
-    """The map phase's one-task rule: ``(df.coalesce(1), True)`` when
-    the files ``df`` scans total at most ``_FANOUT_MIN_BYTES``, so the
-    latest-per-``_id`` collapse, the map and the write above it run in
-    one task with no exchange.  Otherwise, and for an unknown size
-    (remote files, or a frame with no input files such as
-    ``createDataFrame``), ``(df, False)``: the caller keeps its
-    fan-out."""
-    from mapreduce_spark.extensions.util import input_bytes
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df, False
-    total = input_bytes(files, _FANOUT_MIN_BYTES) if files else None
-    if total is None or total > _FANOUT_MIN_BYTES:
-        return df, False
-    return df.coalesce(1), True
-
-
-def _one_task_view(entry: dict | None) -> bool:
-    """True when assembling ``entry``'s view (base and every delta,
-    ``_registry_rows``) runs as one task — for a read and for the
-    compaction that folds it alike."""
-    return entry is not None and _one_task(
-        _registry_rows(entry, "rows"), _ONE_TASK_VIEW_MAX_ROWS
-    )
-
-
-def _registry_rows(entry: dict, layer_key: str) -> int | None:
-    """A view entry's ``base_rows`` plus every layer's ``layer_key``:
-    ``"rows"`` (delta rows) bounds what assembling the view scans, for
-    a read or a full compaction,
-    ``"n"`` (changed ids) the count pieces (a base counts file holds
-    at most ``base_rows`` rows, a layer's lcounts at most its ``n``).
-    None when any of those fields is missing (storage written before
-    they were recorded)."""
-    rows = [entry.get("base_rows")]
-    rows += [layer.get(layer_key) for layer in entry["layers"]]
-    return None if None in rows else sum(rows)
-
 
 # Change batches of at most this many docs semi-join the count metadata
 # against a broadcast of their ids; larger ones shuffle instead (the
@@ -584,7 +481,7 @@ class Engine:
             self.build_views(fallback, max_parallel)
 
     def _fused_frame(self, vdefs: list[ViewDef],
-                     src: DataFrame, *, fan_out: bool = True,
+                     src: DataFrame, *,
                      view_guards: list | None = None,
                      extra_entries: list | None = None) -> DataFrame:
         """One-scan frame of every view's emits, tagged ``_vw`` (the
@@ -598,27 +495,14 @@ class Engine:
         ``seq > last_seq_i`` bound and the not-deleted filter.
         ``extra_entries`` appends pre-built (possibly guarded) struct
         Columns to the emit array — the refresh's ``_vw = -1``
-        changed-doc sentinel rides the same scan this way.
-        ``fan_out`` is False on ``_one_task_scan``'s one-task path."""
-        from mapreduce_spark.extensions.util import right_size
+        changed-doc sentinel rides the same scan this way.  ``src``
+        arrives sized (``_map_input``)."""
         from mapreduce_spark.operators.mapphase import (
             spec_needs_vdoc,
             spec_output_columns,
             with_vdoc,
         )
 
-        # the fixture tables are single-row-group parquet files, so the
-        # scan feeding the (JVM, codegen'd) fused encode can never run
-        # on more than one task no matter how Spark splits the file —
-        # spread the encode across the cores with one small round-robin
-        # exchange of the raw rows.  At scale the input has more splits
-        # than cores and right_size is a no-op.  Measured (r15, quiet
-        # window, lineitem group alone): wall 17.7→4.3 s at +10 CPU-s
-        # (shuffle-row decode replacing the vectorized scan under the
-        # encode); _build_fused's persist keeps the range-partitioner's
-        # sampling pass from re-running the widened encode.
-        if fan_out:
-            src = right_size(src, min_bytes=_FANOUT_MIN_BYTES)
         if any(
             spec_needs_vdoc(s) for v in vdefs for s in v._spec_list
         ):
@@ -665,17 +549,17 @@ class Engine:
             seq_col = F.expr(t.seq_expr).cast("long")
             obs = Observation()
             src = src.observe(obs, F.max(seq_col).alias("mx"))
-            src, one = _one_task_scan(src)
-            fused = self._fused_frame(
-                vdefs, self._pre_map(t, src), fan_out=not one
+            src, width = self._map_input(
+                src, lambda df: self._pre_map(t, df)
             )
-            if not one:
+            fused = self._fused_frame(vdefs, src)
+            if width != 1:
                 # the range path's counts aggregation and sampling pass
                 # each re-run their child — cache the (small, ≈ Σ view
                 # sizes) emit rows instead of re-running the encode
                 fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
             entries = [(s, self.registry.ensure_view(s)) for s in sigs]
-            self._write_bases(fused, entries, one)
+            self._write_bases(fused, entries, width == 1)
             mx = int((observed(obs) or {}).get("mx") or 0)
             for sig, entry in entries:
                 entry["last_seq"] = mx
@@ -761,11 +645,11 @@ class Engine:
             src = self._source_df(
                 vdefs[0], since=min(last_seqs), to_seq=to_seq
             )
-        src, one = _one_task_scan(src)
-        src = src.withColumn(
-            "_fseq", F.expr(t.seq_expr).cast("long")
+        fseq = F.expr(t.seq_expr).cast("long")
+        collapsed, _ = self._map_input(
+            src,
+            lambda df: self._collapse_latest(t, df.withColumn("_fseq", fseq)),
         )
-        collapsed = self._collapse_latest(t, src)
         live = F.lit(True)
         if "_deleted" in collapsed.columns:
             live = ~F.coalesce(F.col("_deleted"), F.lit(False))
@@ -794,8 +678,7 @@ class Engine:
             ],
         )
         frame = self._fused_frame(
-            vdefs, collapsed, fan_out=not one, view_guards=guards,
-            extra_entries=[sentinel],
+            vdefs, collapsed, view_guards=guards, extra_entries=[sentinel],
         )
         is_sent = F.col("_vw") == -1
         metrics = [
@@ -946,7 +829,7 @@ class Engine:
             entry = self.registry.get_view(vdef.sig)
             # one decision per batch, from registry row counts (stats
             # are None after a crashed compaction)
-            one = _one_task_view(entry)
+            one = sizing.one_task_view(entry)
             view = self._assemble_view(vdef.sig, one)
             stats = (entry or {}).get("stats")
             last_seq = entry["last_seq"] if entry else 0
@@ -1212,37 +1095,34 @@ class Engine:
             )
         return raw_df
 
+    def _map_input(self, src: DataFrame,
+                   prep: Callable[[DataFrame], DataFrame]
+                   ) -> tuple[DataFrame, int]:
+        """A map phase's input: ``prep`` (the latest-per-``_id``
+        collapse) over ``src``, sized by ``sizing.scan_width``; returns
+        the rows and that width.  One task (width 1): the scan is
+        coalesced below ``prep``, so the collapse, the map and the write
+        above share one partition with no exchange on any tier.  A
+        spread (width > 1) repartitions above ``prep``; width 0 keeps
+        the scan's partitions."""
+        width = sizing.scan_width(src)
+        src = prep(src.coalesce(1) if width == 1 else src)
+        return (src.repartition(width) if width > 1 else src), width
+
     def _build(self, vdef: ViewDef,
-               raw_df: DataFrame) -> tuple[DataFrame, bool]:
+               raw_df: DataFrame) -> tuple[DataFrame, int]:
         """Run the map phase over raw-schema rows (non-deleted only);
-        returns the emit rows and whether they are one task's.
-
-        A scan of at most ``_FANOUT_MIN_BYTES`` runs as one task
-        (``_one_task_scan``): the collapse, the map and the write above
-        it share one partition, with no exchange on any tier.
-
-        Larger scans spread the map across the cores.  Structured
-        (JVM-codegen) specs go through ``right_size``: the fixture files
-        are single-row-group parquet, so the encode otherwise
-        serializes onto one task — and the range partitioner's sampling
-        pass re-runs it serially a second time (r15 measurement: q18's
-        build chain was wall-bound on exactly this).  The round-robin
-        exchange's map side is the serial scan either way, so it adds
-        little; at scale (splits ≥ cores) ``right_size`` is a no-op.
-        The Python/interpreted path goes through ``python_fanout``,
-        which repartitions to the shuffle parallelism when the input
-        arrives with fewer partitions."""
-        from mapreduce_spark.extensions.util import right_size
-
-        raw_df, one = _one_task_scan(raw_df)
-        raw_df = self._pre_map(TABLES[vdef.table], raw_df)
+        returns the emit rows and their ``sizing.scan_width`` (1: one
+        task's).  Every tier takes the same sizing (``_map_input``)."""
+        t = TABLES[vdef.table]
+        raw_df, width = self._map_input(
+            raw_df, lambda df: self._pre_map(t, df)
+        )
         m = vdef.map_def
         if hasattr(m, "specs"):  # VariantJSView: compiled raw JS
             m = m.specs
-        if isinstance(m, (MapSpec, list)) and not one:
-            raw_df = right_size(raw_df, min_bytes=_FANOUT_MIN_BYTES)
         if isinstance(m, MapSpec):
-            return build_view_structured_on(raw_df, m), one
+            return build_view_structured_on(raw_df, m), width
         if isinstance(m, list):
             out = None
             for i, spec in enumerate(m):
@@ -1250,11 +1130,9 @@ class Engine:
                 if spec.explode is None:
                     d = d.withColumn("emit_ord", F.lit(i))
                 out = d if out is None else out.unionByName(d)
-            return out, one
+            return out, width
         table, fn = m
-        if not one:
-            raw_df = python_fanout(raw_df)
-        return build_view_python_on(raw_df, table, fn), one
+        return build_view_python_on(raw_df, table, fn), width
 
     def update_view(self, vdef_or_name: Any,
                     changes: DataFrame | None = None,
@@ -1318,32 +1196,22 @@ class Engine:
                 # CollectMetrics accumulator stays correct)
                 obs = Observation()
                 src = src.observe(obs, F.max(seq_col).alias("mx"))
-                built, one = self._build(vdef, src)
+                built, width = self._build(vdef, src)
                 # above the one-task limit the range path's counts
                 # aggregation and sampling pass each re-run the build
                 # plan.  Cache the built rows across those passes when
                 # re-running is expensive: the Python interpreter path
                 # (it multiplies the dominant cost; measured 10.2 s →
                 # ~6 s for the sf0.1 interpreted fixture view) and a
-                # structured encode that ``_build`` fanned out (the
-                # fused path persists for the same reason).  A
-                # structured encode running on its scan splits re-runs
-                # a cheap columnar scan; the persist would only spend
-                # memory on it.
-                from mapreduce_spark.extensions.util import (
-                    fanout_width,
-                )
-
-                m = vdef.map_def
-                if hasattr(m, "specs"):
-                    m = m.specs
+                # map that ``_build`` spread (the fused path persists
+                # for the same reason).  A structured encode running on
+                # its scan splits re-runs a cheap columnar scan; the
+                # persist would only spend memory on it.
                 heavy = isinstance(vdef.map_def, tuple) and callable(
                     vdef.map_def[1]
                 )
-                cache = not one and (heavy or (
-                    isinstance(m, (MapSpec, list))
-                    and fanout_width(src, min_bytes=_FANOUT_MIN_BYTES)
-                ))
+                one = width == 1
+                cache = width > 1 or (heavy and not one)
                 if cache:
                     built = built.persist(StorageLevel.MEMORY_AND_DISK)
                 try:
@@ -1381,7 +1249,7 @@ class Engine:
                 F.max(doc_id).alias("hi"),
             ).select(doc_id.alias("id"), F.lit(-1).alias("_vw"))
             dobs = Observation()
-            emits, one = self._build(vdef, src)
+            emits, width = self._build(vdef, src)
             emits = emits.observe(
                 dobs,
                 F.count(F.lit(1)).alias("rows"),
@@ -1389,7 +1257,7 @@ class Engine:
                 F.approx_count_distinct("key_enc").alias("keys"),
             ).withColumn("_vw", F.lit(0))
             frame = emits.unionByName(ids, allowMissingColumns=True)
-            if one:
+            if width == 1:
                 # _build coalesced the emit branch below its collapse;
                 # this folds the id branch's scan splits into that task
                 frame = frame.coalesce(1)
@@ -1448,7 +1316,7 @@ class Engine:
         the delta write's observed (rows, w, keys).  The layer records
         ``rows`` (delta rows) and ``n`` (bounds its lcounts rows): with
         ``base_rows`` they bound what later writes scan
-        (``_registry_rows``).
+        (``sizing.registry_rows``).
 
         A refresh that is about to compact skips the superseded-row
         count: ``_compact`` re-observes exact stats, so the layer is
@@ -1514,10 +1382,10 @@ class Engine:
         columns; every reader projects its own schema.
 
         ``one`` (the caller's map or fold already runs in one task,
-        ``_one_task_scan`` / ``_one_task_view``): ONE write of one task
-        lays out both — a ``count(*)`` window by (``_vw``, id) and one
-        explode of [view row, counts row on each id's first row] feed
-        one sort, so the plan has no exchange and runs ``frame`` once.
+        ``sizing.scan_width`` / ``sizing.one_task_view``): ONE write of
+        one task lays out both — a ``count(*)`` window by (``_vw``, id)
+        and one explode of [view row, counts row on each id's first row]
+        feed one sort, so the plan has no exchange and runs ``frame`` once.
         Otherwise the bases are range-partitioned by key (the
         partitioner's sampling pass re-runs ``frame``, so a caller whose
         frame is costly to recompute persists it first), then an
@@ -1641,16 +1509,16 @@ class Engine:
         """The range path's counts pass (``_write_bases``): for each
         view (``(_vw, rows)`` pairs) read the id column of the base just
         written under ``tmp`` and write its (id, n) counts beside it,
-        id-sorted.  A base of at most ``_ONE_FILE_MAX_ROWS`` rows is
-        counted by one task with no exchange (``_one_task``), a larger
-        one range-partitioned by id."""
+        id-sorted.  A base of at most ``sizing.ONE_FILE_MAX_ROWS`` rows
+        is counted by one task with no exchange (``sizing.one_task``), a
+        larger one range-partitioned by id."""
         for i, n in rows:
             if not n:
                 continue
             ids = self.spark.read.schema("id string").parquet(
                 os.path.join(tmp, f"_vw={i}", "_c=0")
             )
-            one = _one_task(n, _ONE_FILE_MAX_ROWS)
+            one = sizing.one_task(n, sizing.ONE_FILE_MAX_ROWS)
             if one:
                 ids = ids.coalesce(1)
             counts = ids.groupBy("id").agg(
@@ -1705,10 +1573,11 @@ class Engine:
         new count ``sum(n)`` and the live pre-batch count ``prev`` =
         the newest piece's n; ``Σ prev`` rides the write as an
         Observation.  Duplicate ids only add zeros.  When the rows it
-        scans (``n`` ids, ``delta_rows``, the pieces' ``_registry_rows``)
-        add up to at most ``_ONE_FILE_MAX_ROWS``, it aggregates in one
-        task with no exchange (``_one_task``); otherwise the scans run
-        in parallel, and a batch of at most that many ids still writes
+        scans (``n`` ids, ``delta_rows``, the pieces'
+        ``sizing.registry_rows``) add up to at most
+        ``sizing.ONE_FILE_MAX_ROWS``, it aggregates in one task with no
+        exchange (``sizing.one_task``); otherwise the scans run in
+        parallel, and a batch of at most that many ids still writes
         one file.  With ``prior`` the pieces are first
         cut to the batch's [lo, hi] (parquet row-group pruning on the
         id-sorted counts files) and semi-joined to the changed ids
@@ -1729,7 +1598,7 @@ class Engine:
         ]
         scanned = [n, delta_rows]
         if prior and lo is not None:
-            scanned.append(_registry_rows(entry, "n"))
+            scanned.append(sizing.registry_rows(entry, "n"))
             pieces = self._count_pieces(entry, vdir)
             allc = pieces[0]
             for p in pieces[1:]:
@@ -1745,8 +1614,9 @@ class Engine:
         lc = parts[0]
         for p in parts[1:]:
             lc = lc.unionByName(p)
-        one = _one_task(
-            None if None in scanned else sum(scanned), _ONE_FILE_MAX_ROWS
+        one = sizing.one_task(
+            None if None in scanned else sum(scanned),
+            sizing.ONE_FILE_MAX_ROWS,
         )
         if one:
             # typical refresh: one task, no exchange, one small file
@@ -1757,7 +1627,7 @@ class Engine:
         )
         obs = Observation()
         lc = lc.observe(obs, F.sum("prev").alias("removed"))
-        if not one and n <= _ONE_FILE_MAX_ROWS:
+        if not one and n <= sizing.ONE_FILE_MAX_ROWS:
             lc = lc.coalesce(1)
         lc.select("id", "n").write.mode("overwrite").parquet(
             os.path.join(vdir, f"lcounts-{batch}")
@@ -1770,8 +1640,8 @@ class Engine:
 
         The fold scans the base and every delta: their registry row
         counts pick one plan for the assembly and the write
-        (``_one_task_view``), so a small fold is one task."""
-        one = _one_task_view(entry)
+        (``sizing.one_task_view``), so a small fold is one task."""
+        one = sizing.one_task_view(entry)
         self._write_bases(
             self._assemble_view(sig, one).withColumn("_vw", F.lit(0)),
             [(sig, entry)], one,
@@ -1816,15 +1686,16 @@ class Engine:
         the base (batch 0) or of delta ``b`` survives unless a
         strictly later tombstone (batch > b) holds its id.
 
-        Two plans, picked by ``one`` (None: ``_one_task_view`` of the
-        registry entry):
+        Two plans, picked by ``one`` (None: ``sizing.one_task_view`` of
+        the registry entry):
 
         - one task: base, deltas and tombstone ids unioned and
           coalesced to ONE partition; ``max(tombstone batch)`` over a
           window by id keeps exactly the rows no later tombstone holds.
           A window's single child satisfies its distribution, so the
           plan has no exchange and no broadcast.  For views of at most
-          ``_ONE_TASK_VIEW_MAX_ROWS`` scanned rows (``_registry_rows``).
+          ``sizing.ONE_TASK_VIEW_MAX_ROWS`` scanned rows
+          (``sizing.registry_rows``).
         - parallel: each piece anti-joined against a broadcast of the
           strictly-later tombstone ids (per-batch changed-doc ids, so
           small), one broadcast job per piece.  Larger views and
@@ -1834,7 +1705,7 @@ class Engine:
         if entry is None or (entry["base"] is None and not entry["layers"]):
             return self.spark.createDataFrame([], VIEW_SCHEMA)
         if one is None:
-            one = _one_task_view(entry)
+            one = sizing.one_task_view(entry)
         # schemas are static (VIEW_SCHEMA / id-only tombstones): passing
         # them explicitly skips parquet footer inference — otherwise
         # every assemble runs a schema-read job before any query work

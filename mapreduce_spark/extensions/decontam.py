@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_spark.extensions.text import shingles
-from mapreduce_spark.extensions.util import right_size
+from mapreduce_spark.plans.sizing import spread
 
 
 def _postings(docs: DataFrame, n: int, text: str,
@@ -50,7 +50,7 @@ def _postings(docs: DataFrame, n: int, text: str,
     """(doc_id, g) — one row per DISTINCT n-gram per document, plus a
     null-gram row for too-short documents so they survive the
     re-group with zero counts."""
-    return right_size(docs).select(
+    return spread(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode_outer(shingles(n, text)).alias("g"),
     )

@@ -44,10 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_spark.extensions.text import shingles, tokens
-from mapreduce_spark.extensions.util import (
-    release_local_checkpoint,
-    right_size,
-)
+from mapreduce_spark.extensions.util import release_local_checkpoint
+from mapreduce_spark.plans.sizing import spread
 
 log = logging.getLogger("mapreduce_spark.dedup")
 
@@ -92,7 +90,7 @@ def exact_dedup(df: DataFrame, text: str = "text",
 
 def shingle_sets(df: DataFrame, n: int = 3, text: str = "text",
                  id_col: str = "doc_id") -> DataFrame:
-    return right_size(df).select(
+    return spread(df).select(
         F.col(id_col).alias("doc_id"), shingles(n, text).alias("sh")
     )
 
@@ -572,10 +570,8 @@ def simhash(df: DataFrame, text: str = "text",
     64-sum row before the only exchange, so the shuffle carries
     docs × 64 longs ≈ the signature frame itself (measured at sf0.1:
     2.60 MB → 0.96 MB shuffle, wall −19%, identical output).  No
-    right_size: the one-task fixture scan measured CHEAPER than the
-    repartition that parallelized it (0.5 vs 3.6 CPU-s — the exchange
-    shuffled the full text for sub-second work), and a real corpus
-    arrives with many splits anyway.
+    ``spread``: the one-task fixture scan measured cheaper
+    (plans/sizing.py).
     """
     ex = df.select(
         F.col(id_col).alias("doc_id"),

@@ -28,6 +28,7 @@ from mapreduce_spark.extensions import (
     text,
 )
 from mapreduce_spark.extensions.util import normalized_vectors
+from mapreduce_spark.plans.sizing import spread
 
 JACCARD_T = 0.5
 # deterministic pseudo-benchmark for the decontamination check: every
@@ -54,12 +55,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def x_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # right_size at the call site: quality_features itself is a
+    # spread at the call site: quality_features itself is a
     # plan-pinned pure map (no exchange), but the one-file fixture
     # scan serializes its string work onto a single task
-    from mapreduce_spark.extensions.util import right_size
-
-    return text.quality_features(right_size(_docs(spark, sf_dir)))
+    return text.quality_features(spread(_docs(spark, sf_dir)))
 
 
 def x_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,9 +128,7 @@ def _pii_augmented(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" cc admin"), s(i), F.lit("@example.net"),
         )).otherwise(F.lit("")),
     )
-    from mapreduce_spark.extensions.util import right_size
-
-    return right_size(_docs(spark, sf_dir)).select(
+    return spread(_docs(spark, sf_dir)).select(
         "doc_id", aug.alias("text")
     )
 

@@ -62,10 +62,8 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     in for real image/audio bytes so the binary plumbing is testable
     with the shipped fixtures.
 
-    No right_size on the one-file fixture scan: the A/B (r15) measured
-    the repartition LOSING both wall and CPU here — the demo decode is
-    too cheap to amortize shuffling the media payload, and a real
-    media table arrives with many splits."""
+    No ``spread`` of the one-file fixture scan: it measured a loss
+    here (plans/sizing.py)."""
     return docs.select(
         F.col("doc_id").alias("media_id"),
         F.lit("text").alias("modality"),

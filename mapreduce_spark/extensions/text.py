@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_spark.extensions.util import right_size
+from mapreduce_spark.plans.sizing import spread
 
 # Whitespace tokens — the fixture corpus is space-separated ASCII.
 def tokens(text: Column | str = "text") -> Column:
@@ -240,7 +240,7 @@ def add_lang_id(df: DataFrame, text: str = "text",
     scores are computed exactly once per row."""
     scores = lang_scores(text)
     c = F.coalesce(F.col(text), F.lit(""))
-    staged = right_size(df).withColumns({
+    staged = spread(df).withColumns({
         "_lang_sarr": F.array(*scores.values()),
         "_lang_cjk": _class_ratio(c, CJK_RANGE),
         "_lang_kana": _class_ratio(c, KANA_RANGE),
@@ -329,7 +329,7 @@ def fingerprints(df: DataFrame, text: str = "text",
     rolling = F.array_min(
         F.transform(sh, lambda s: F.substring(F.md5(s), 1, 16))
     )
-    return right_size(df).select(
+    return spread(df).select(
         "doc_id",
         F.md5(F.col(text)).alias("text_md5"),
         F.coalesce(rolling, F.lit("")).alias("rolling_fp"),
@@ -463,7 +463,8 @@ def redact_pii(text: Column | str = "text") -> Column:
 def pii_features(df: DataFrame, text: str = "text") -> DataFrame:
     """Per-doc PII scrub frame: category counts + the redacted text.
     Kept a pure exchange-free map (plan-pinned): callers that need
-    small-input parallelism right_size the input themselves."""
+    small-input parallelism ``spread`` the input themselves
+    (plans/sizing.py)."""
     return df.select(
         "doc_id",
         *pii_counts(text).values(),
@@ -510,7 +511,7 @@ def repetition_features(df: DataFrame, text: str = "text") -> DataFrame:
             F.round(top_token, 4).alias("t"),
         )
 
-    return right_size(df).select(
+    return spread(df).select(
         "doc_id", _with_tokens(text, feats).alias("_rf")
     ).select(
         "doc_id",

@@ -2,11 +2,12 @@
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from mapreduce_spark.plans.sizing import spread
 
 _release_warned = False
 
@@ -86,77 +87,10 @@ def normalized_vectors(emb: DataFrame, id_col: str = "vec_id",
     re-evaluate it once per element (O(d²) interpreted work per row).
     """
     v = F.col(vec_col).cast("array<double>")
-    staged = right_size(emb).select(
+    staged = spread(emb).select(
         F.col(id_col).alias("vid"), v.alias("_v")
     ).withColumn("_n", F.greatest(norm_col(F.col("_v")), F.lit(1e-12)))
     return staged.select(
         "vid",
         F.transform("_v", lambda x: x / F.col("_n")).alias("nv"),
     )
-
-
-def input_bytes(files: list[str], limit: int) -> int | None:
-    """Total size of the local ``files`` (``DataFrame.inputFiles()``
-    URIs), summed only until it passes ``limit``; None when a file is
-    remote or cannot be stat-ed (size unknown)."""
-    from urllib.parse import unquote, urlparse
-
-    total = 0
-    for uri in files:
-        parts = urlparse(uri)
-        if parts.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(unquote(parts.path))
-        except OSError:
-            return None
-        if total > limit:
-            break
-    return total
-
-
-def fanout_width(df: DataFrame, min_factor: int = 1,
-                 min_bytes: int = 0) -> int:
-    """Partition count ``right_size`` would fan ``df`` out to, or 0.
-
-    Exposed separately so a caller that must decide something ELSE
-    based on whether the fan-out will happen (e.g. the engine's
-    persist-across-sampling-passes choice) can ask without building
-    a throwaway repartitioned frame.
-
-    ``min_bytes`` gates the fan-out on total input size
-    (``input_bytes``): below it the serial compute is cheaper than the
-    exchange plus the extra AQE shuffle-stage job the repartition
-    costs (a 4 KB dimension table gains nothing from 32 tasks).
-    Inputs of unknown size are assumed big (fan out) — at real scale
-    the file-count check already made this a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism * min_factor
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return 0
-    if not (0 < len(files) < target):
-        return 0
-    if min_bytes:
-        total = input_bytes(files, min_bytes)
-        if total is not None and total < min_bytes:
-            return 0
-    return target
-
-
-def right_size(df: DataFrame, min_factor: int = 1,
-               min_bytes: int = 0) -> DataFrame:
-    """Ensure a CPU-bound stage has at least one partition per core.
-
-    Small inputs (one parquet file) arrive as a single split, which
-    serializes md5/shingle/dot-product work onto one task; a 100 TB
-    input already has thousands of splits and this is a no-op.
-
-    The probe uses ``inputFiles()`` (driver-side leaf-file listing —
-    split count ≥ file count) instead of ``df.rdd.getNumPartitions()``,
-    which would force the whole lineage through RDD conversion planning
-    on every call.  Non-file-backed frames (inputFiles empty) pass
-    through untouched.  See ``fanout_width`` for the ``min_bytes``
-    size gate."""
-    n = fanout_width(df, min_factor=min_factor, min_bytes=min_bytes)
-    return df.repartition(n) if n else df

@@ -22,8 +22,10 @@ Two execution paths, Spark-first:
    0..N view rows out.  The per-doc ``try`` mirrors the reference's
    ``tryMap`` (a throwing map fn skips the doc, logged).
 
-Both produce the same VIEW_SCHEMA, the engine's materialized-view
-layout (SURVEY.md §1.1 "materialized view index"):
+Both run on the partitions of the frame they are given: the engine
+sizes it the same way for every tier (plans/sizing.py).  Both produce
+the same VIEW_SCHEMA, the engine's materialized-view layout (SURVEY.md
+§1.1 "materialized view index"):
 
     id             doc id of the emitting document
     emit_ord       ordinal of the emit within its doc (dup-key emits)
@@ -483,37 +485,11 @@ def map_docs_to_rows(
     return out
 
 
-def python_fanout(df: DataFrame) -> DataFrame:
-    """Spread the Python map path's input over the session's shuffle
-    parallelism.
-
-    The interpreted map fn is the per-row cost center, so its
-    parallelism must NOT be whatever the parquet file count happens
-    to be (one small fixture file → one Python worker while 31 cores
-    idle — measured 22 s → 3 s at sf0.1).  Repartition up to the
-    session's shuffle parallelism when the source arrives with fewer
-    partitions; the round-robin exchange costs far less than the
-    serial Python it prevents, and at cluster scale real tables
-    already exceed the target so this is a no-op.  The partition-count
-    probe plans (and under AQE runs) the input's own shuffle stages,
-    so the engine skips this on scans too small to be worth it."""
-    raw = df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "200"
-    )
-    try:
-        target = int(raw)
-    except (TypeError, ValueError):  # e.g. "auto" under managed AQE
-        target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
-    return df
-
-
 def build_view_python_on(
     df: DataFrame, table: str, map_fn: Callable[[dict, Callable], None]
 ) -> DataFrame:
     """Python map path over an arbitrary raw-schema DataFrame, on
-    ``df``'s own partitions (``python_fanout`` spreads them first)."""
+    ``df``'s own partitions (the engine sizes them, plans/sizing.py)."""
     docs = as_docs(df, table)
     col_order = [f.name for f in VIEW_SCHEMA.fields]
     # resolve the DocTable driver-side: user-registered tables are not

@@ -8,11 +8,11 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-import mapreduce_spark.engine as engine_mod
 from mapreduce_spark.engine import Engine
 from mapreduce_spark.functions import sandbox
 from mapreduce_spark.metrics import measure
 from mapreduce_spark.operators.mapphase import MapSpec
+from mapreduce_spark.plans import sizing
 
 VIEW = {
     "map": MapSpec(
@@ -377,7 +377,7 @@ def test_deep_layer_stack_reads_and_compaction_restores_scan(
     # anti-join per piece EXCEPT the newest layer — its later-tombstone
     # set constant-folds to empty (literal _tb per branch) and
     # PropagateEmptyRelation deletes that join outright
-    monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
+    monkeypatch.setattr(sizing, "ONE_TASK_VIEW_MAX_ROWS", 0)
     plan = eng._assemble_view(sig)._jdf.queryExecution() \
         .executedPlan().toString()
     assert plan.count("LeftAnti") == 9
@@ -472,7 +472,7 @@ def test_one_task_assembly_equals_parallel_plan(
         )
         return entry["stats"]["rows"], sorted(map(tuple, base.collect()))
 
-    monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
+    monkeypatch.setattr(sizing, "ONE_TASK_VIEW_MAX_ROWS", 0)
     assert answers(par) == want
     rows_par, base_par = compacted(par)
     monkeypatch.undo()
@@ -1411,8 +1411,8 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """Refreshes of a small view (registry row counts under
-    ``_ONE_FILE_MAX_ROWS`` and ``_ONE_TASK_VIEW_MAX_ROWS``) write their
-    count files and the compacted base with no exchange; the base is
+    ``sizing.ONE_FILE_MAX_ROWS`` and ``ONE_TASK_VIEW_MAX_ROWS``) write
+    their count files and the compacted base with no exchange; the base is
     one parquet file sorted by (key_enc, id), with exact stats, and its
     counts file one file sorted by id.  With both limits at 0 the same
     sequence takes the range / exchange path (shuffles, more jobs) and
@@ -1459,8 +1459,8 @@ def test_small_compaction_is_one_task_and_range_path_agrees(
     assert len(keys) == entry["stats"]["rows"]
     assert keys == sorted(keys)
 
-    monkeypatch.setattr(engine_mod, "_ONE_FILE_MAX_ROWS", 0)
-    monkeypatch.setattr(engine_mod, "_ONE_TASK_VIEW_MAX_ROWS", 0)
+    monkeypatch.setattr(sizing, "ONE_FILE_MAX_ROWS", 0)
+    monkeypatch.setattr(sizing, "ONE_TASK_VIEW_MAX_ROWS", 0)
     rvdir, rentry, rgrouped, rm = run(str(tmp_path / "range"))
     assert rentry["stats"]["rows"] == entry["stats"]["rows"]
     for base_rel in ("base-v1", rentry["base"]):
@@ -1859,7 +1859,7 @@ def test_registry_rows_bound_the_scanned_files(
         for layer in entry["layers"]:
             assert layer["rows"] == rows(layer["delta"]), n
             assert layer["n"] >= rows(layer["lcounts"]), n
-        assert engine_mod._registry_rows(entry, "rows") == (
+        assert sizing.registry_rows(entry, "rows") == (
             rows(entry["base"])
             + sum(rows(layer["delta"]) for layer in entry["layers"])
         ), n
@@ -1907,8 +1907,8 @@ def test_fused_sort_gate_round11(spark, sf_dir, tmp_path):
     # no range exchange, so take the parallel assembly too
     orig = Q.FUSED_SORT_MAX_ROWS
     Q.FUSED_SORT_MAX_ROWS = 0
-    orig_one = engine_mod._ONE_TASK_VIEW_MAX_ROWS
-    engine_mod._ONE_TASK_VIEW_MAX_ROWS = 0
+    orig_one = sizing.ONE_TASK_VIEW_MAX_ROWS
+    sizing.ONE_TASK_VIEW_MAX_ROWS = 0
     try:
         rows_g, pg = plan(group=True)
         assert "rangepartitioning" in pg.lower(), pg[:800]
@@ -1917,7 +1917,7 @@ def test_fused_sort_gate_round11(spark, sf_dir, tmp_path):
         assert "rangepartitioning" in pmg.lower(), pmg[:800]
     finally:
         Q.FUSED_SORT_MAX_ROWS = orig
-        engine_mod._ONE_TASK_VIEW_MAX_ROWS = orig_one
+        sizing.ONE_TASK_VIEW_MAX_ROWS = orig_one
     as_t = lambda rs: [tuple(r) for r in rs]  # noqa: E731
     assert as_t(rows_f) == as_t(rows_g)
     assert as_t(rows_mf) == as_t(rows_mg)

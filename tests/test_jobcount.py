@@ -37,13 +37,13 @@ from mapreduce_spark.metrics import measure
 # the rows it supersedes inside the lcounts write (one broadcast job)
 # instead of a four-job count afterwards.  q18 14 -> 12: the base-counts
 # and lcounts writes of a small view run as one task with no exchange.
-# Then 93 -> 54 in total: a view of at most _ONE_TASK_VIEW_MAX_ROWS
+# Then 93 -> 54 in total: a view of at most sizing.ONE_TASK_VIEW_MAX_ROWS
 # scanned rows is assembled in one task (no tombstone broadcasts, no
 # aggregate or sort exchange), so most reads run one job; q31's three
 # oracle legs (one per storage layout) went 4 -> 1, q18 12 -> 10.
 # Then 54 -> 52: a temporary view whose source files total at most
-# _FANOUT_MIN_BYTES is mapped in one task, so q17's map query over the
-# nation table has no exchange (3 -> 1).
+# sizing.FANOUT_MIN_BYTES is mapped in one task, so q17's map query over
+# the nation table has no exchange (3 -> 1).
 # test_warm_read_path_job_ceilings prints every query's count (pytest
 # -s or -rA shows it; SPARK_GRAFT_TEST_SF sets the scale).
 JOB_CEILINGS = {

@@ -509,7 +509,7 @@ _TIER_VIEWS = {
 # write is one job of one task (scan, collapse, map and write) and
 # _append_layer runs two (the changed ids' broadcast and the lcounts
 # write; the base counts file was written by the first build).  With
-# _FANOUT_MIN_BYTES at 0 the delta write runs 3 jobs (4 interpreted).
+# sizing.FANOUT_MIN_BYTES at 0 the delta write runs 3 jobs on every tier.
 TIER_REFRESH_JOB_CEILINGS = {"mapspec": 3, "variant": 3, "interp": 3}
 
 
@@ -544,17 +544,18 @@ def _tier_expected(rows: list[dict]) -> dict:
 
 
 def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
-    """A first build whose log scan is below ``_FANOUT_MIN_BYTES`` writes
+    """A first build whose log scan is below ``FANOUT_MIN_BYTES`` writes
     its base and counts in ONE Spark job of one task on every map tier,
     and a refresh writes its delta the same way (the collapse window,
     the map and the write share it: no exchange), pays no footer-schema
     job after a same-schema append, and stays under per-tier job
     ceilings.  With the limit at 0 the parallel plan (exchanges) runs
     and gives the same answers, the same base and layer row counts and
-    the same base counts."""
-    import mapreduce_spark.engine as E
+    the same base counts, and the interpreted tier runs no more jobs
+    than the MapSpec tier (one sizing rule for every tier)."""
     from mapreduce_spark.functions.jsvariant import VariantJSView
     from mapreduce_spark.metrics import measure
+    from mapreduce_spark.plans import sizing
 
     register_table(raw_doc_table("tierlog"))
     sf = tmp_path / "sf"
@@ -589,11 +590,13 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
             map(tuple, counts.collect()))
 
     engines = {}
+    # limit -> view -> (first-build jobs, delta-write jobs)
+    jobs = {None: {}, 0: {}}
     try:
         for limit in (None, 0):
             with monkeypatch.context() as mp:
                 if limit is not None:
-                    mp.setattr(E, "_FANOUT_MIN_BYTES", limit)
+                    mp.setattr(sizing, "FANOUT_MIN_BYTES", limit)
                 eng = Engine(spark, str(sf), str(tmp_path / f"v-{limit}"),
                              compact_after=99)
                 eng.put_design("log", _TIER_VIEWS)
@@ -604,6 +607,7 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
                         eng.update_view(f"log/{view}")
                     print(f"limit={limit} {view}: first build "
                           f"{b['jobs']} jobs, {b['tasks']} tasks")
+                    jobs[limit][view] = (b["jobs"],)
                     if limit is None:
                         assert b["jobs"] == 1 and b["tasks"] == 1, view
                 engines[limit] = eng
@@ -628,7 +632,7 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
 
             with monkeypatch.context() as mp:
                 if limit is not None:
-                    mp.setattr(E, "_FANOUT_MIN_BYTES", limit)
+                    mp.setattr(sizing, "FANOUT_MIN_BYTES", limit)
                 mp.setattr(eng, "_append_layer", append)
                 for view in want:
                     with measure(spark, f"refresh-{view}") as m:
@@ -637,6 +641,7 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
                     total = delta_jobs + appended["jobs"]
                     print(f"limit={limit} {view}: delta write "
                           f"{delta_jobs} jobs, refresh {total}")
+                    jobs[limit][view] += (delta_jobs,)
                     if limit is None:
                         assert delta_jobs == 1 and m["tasks"] == 1, view
                         assert not any(
@@ -651,5 +656,9 @@ def test_raw_log_refresh_is_one_task_per_tier(spark, tmp_path, monkeypatch):
         for view in want:
             assert layer(engines[None], view) == layer(engines[0], view)
             assert grouped(engines[None], view) == grouped(engines[0], view)
+        # the parallel plan costs the interpreted tier no extra job
+        build, delta = jobs[0]["interp"]
+        assert build <= jobs[0]["mapspec"][0], jobs[0]
+        assert delta <= jobs[0]["mapspec"][1], jobs[0]
     finally:
         TABLES.pop("tierlog", None)
