@@ -40,6 +40,7 @@ import os
 import shutil
 import tempfile
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import ExitStack
 from dataclasses import dataclass
 from typing import Any, Callable
 
@@ -395,12 +396,11 @@ class Engine:
             return [f.result() for f in futs]
 
     def _ddoc_groups(
-        self, ddoc: str, built: bool
+        self, ddoc: str
     ) -> tuple[list[list[tuple[str, ViewDef]]], list[str]]:
-        """Split a design doc's views for a fused build (``built``
-        False) or refresh (True): ``groups`` of two or more fusable
-        ``(name, ViewDef)`` pairs over one table whose index is built
-        iff ``built``, and the names of every other view in ``rest``.
+        """Split a design doc's views for ``refresh_ddoc``: ``groups``
+        of two or more fusable ``(name, ViewDef)`` pairs over one table,
+        built or not, and the names of every other view in ``rest``.
         Identical definitions share one index (registry contract), so
         each is listed once."""
         by_table: dict[str, list[tuple[str, ViewDef]]] = {}
@@ -411,15 +411,7 @@ class Engine:
                 continue
             seen_sigs.add(sig)
             vdef = self._defs.get(sig)
-            entry = self.registry.get_view(sig)
-            has_index = entry is not None and bool(
-                entry.get("base") is not None or entry.get("layers")
-            )
-            if (
-                vdef is not None
-                and has_index == built
-                and vdef._fusable_specs is not None
-            ):
+            if vdef is not None and vdef._fusable_specs is not None:
                 by_table.setdefault(vdef.table, []).append(
                     (f"{ddoc}/{name}", vdef)
                 )
@@ -430,30 +422,35 @@ class Engine:
         return groups, rest
 
     def build_ddoc(self, ddoc: str, max_parallel: int = 4) -> None:
-        """Materialize ALL views of a design doc — from ONE source
-        scan where possible (SURVEY §2 M1; CouchDB builds a ddoc's
-        views together, [U couchdb couch_mrview], and at 100 TB the
-        scan dominates the build, so N separate per-view scans are
-        N−1 wasted passes).
+        """Materialize ALL views of a design doc: ``refresh_ddoc``."""
+        self.refresh_ddoc(ddoc, max_parallel)
+
+    def refresh_ddoc(self, ddoc: str, max_parallel: int = 4,
+                     to_seq: int | None = None) -> None:
+        """Build or refresh ALL views of a design doc from ONE source
+        scan per table where possible (SURVEY §2 M1; upstream updates a
+        ddoc's views as one group, [U pouchdb-abstract-mapreduce#
+        updateView], CouchDB couch_mrview).  At 100 TB the scan
+        dominates, so K per-view scans are K−1 wasted passes, on the
+        first build and on every changes batch alike.
 
         Structured views (MapSpec / compiled-JS, incl. the variant
-        tier) over the SAME table that are on their FIRST build fuse
-        into a single job: every view's emits are computed per source
-        row (per-emit CASE guards replace the pushed-down WHERE — the
-        scan must read rows other views keep anyway), written with one
-        range exchange on (view, key_enc) and one partitioned-by-view
-        sink whose subdirectories become the per-view base layers.
-        Everything else — interpreted views, other tables, incremental
-        refreshes — falls back to the per-view path, as does the whole
-        group on a raw-doc contract drift.
-        """
-        groups, rest = self._ddoc_groups(ddoc, built=False)
+        tier) over the SAME table fuse into one ``_update`` whatever
+        their built state: the unbuilt ones first-build from one scan,
+        the built ones refresh from one changes scan, and views with
+        unequal ``last_seq`` still share it.  Everything else —
+        interpreted or exploded views, a table's only view — takes the
+        per-view ``update_view`` path, as does the whole group on a
+        raw-doc contract drift.  Table groups and per-view updates are
+        independent jobs, overlapped on the scheduler like
+        ``build_views``."""
+        groups, rest = self._ddoc_groups(ddoc)
 
         def run_group(group: list[tuple[str, ViewDef]]) -> list[str]:
-            """Fuse one table's views; returns the names needing the
+            """Update one table's views; returns the names needing the
             per-view fallback (raw-doc contract drift)."""
             try:
-                self._build_fused([v for _, v in group])
+                self._update([v for _, v in group], to_seq=to_seq)
                 return []
             except Exception as e:
                 from mapreduce_spark.functions.jsvariant import (
@@ -463,22 +460,23 @@ class Engine:
                 if not is_drift_error(e):
                     raise
                 log.warning(
-                    "fused ddoc build hit a raw-doc contract drift; "
-                    "falling back to per-view builds: %s",
+                    "fused ddoc update hit a raw-doc contract drift; "
+                    "falling back to per-view updates: %s",
                     str(e)[:200],
                 )
                 return [n for n, _ in group]
 
-        # table groups and per-view builds are independent jobs —
-        # overlap them on the scheduler like build_views does
         done = self._run_pooled(
             max_parallel,
             [(run_group, g) for g in groups]
-            + [(self.update_view, n) for n in rest],
+            + [(self.update_view, n, None, to_seq) for n in rest],
         )
         fallback = [n for names in done[:len(groups)] for n in names]
         if fallback:
-            self.build_views(fallback, max_parallel)
+            self._run_pooled(
+                max_parallel,
+                [(self.update_view, n, None, to_seq) for n in fallback],
+            )
 
     def _fused_frame(self, vdefs: list[ViewDef],
                      src: DataFrame, *,
@@ -491,7 +489,7 @@ class Engine:
         scan per branch: Spark does not CSE across union children).
 
         ``view_guards[i]`` (optional) ANDs an extra Column into every
-        emit of view i — the fused REFRESH uses it for the per-view
+        emit of view i — ``_refresh_frame`` uses it for the per-view
         ``seq > last_seq_i`` bound and the not-deleted filter.
         ``extra_entries`` appends pre-built (possibly guarded) struct
         Columns to the emit array — the refresh's ``_vw = -1``
@@ -534,250 +532,6 @@ class Engine:
             .filter(F.col("r").isNotNull())
             .select("r.*")
         )
-
-    def _build_fused(self, vdefs: list[ViewDef]) -> None:
-        t = TABLES[vdefs[0].table]
-        sigs = [v.sig for v in vdefs]
-        # sorted + deduped: the per-sig lock is non-reentrant, and a
-        # ddoc may name the same definition twice (shared index)
-        locks = [self.registry.view_lock(s) for s in sorted(set(sigs))]
-        for lk in locks:
-            lk.__enter__()
-        fused = None
-        try:
-            src = self._source_df(vdefs[0])
-            seq_col = F.expr(t.seq_expr).cast("long")
-            obs = Observation()
-            src = src.observe(obs, F.max(seq_col).alias("mx"))
-            src, width = self._map_input(
-                src, lambda df: self._pre_map(t, df)
-            )
-            fused = self._fused_frame(vdefs, src)
-            if width != 1:
-                # the range path's counts aggregation and sampling pass
-                # each re-run their child — cache the (small, ≈ Σ view
-                # sizes) emit rows instead of re-running the encode
-                fused = fused.persist(StorageLevel.MEMORY_AND_DISK)
-            entries = [(s, self.registry.ensure_view(s)) for s in sigs]
-            self._write_bases(fused, entries, width == 1)
-            mx = int((observed(obs) or {}).get("mx") or 0)
-            for sig, entry in entries:
-                entry["last_seq"] = mx
-                self.registry.set_view(sig, entry)
-        finally:
-            if fused is not None:
-                fused.unpersist()
-            for lk in reversed(locks):
-                lk.__exit__(None, None, None)
-
-    # ------------------------------------------------------------------
-    # fused incremental refresh (M1 at 100 TB: one changes scan per
-    # ddoc, not per view)
-    # ------------------------------------------------------------------
-
-    def refresh_ddoc(self, ddoc: str, max_parallel: int = 4,
-                     to_seq: int | None = None) -> None:
-        """Refresh ALL views of a design doc from ONE changes scan
-        (SURVEY §2 M1; upstream updates a ddoc's views as one group,
-        [U pouchdb-abstract-mapreduce#updateView] batching, CouchDB
-        couch_mrview updater).  ``build_ddoc`` fuses the FIRST build;
-        without this, a K-view ddoc pays K scans of every changes
-        batch — at 100 TB the scan dominates, so that is K−1 wasted
-        passes per refresh.
-
-        Built structured views over the same table fuse: one scan from
-        ``min(last_seq)`` feeds per-view CASE-guarded emits (guard =
-        spec WHERE ∧ ``seq > last_seq_i``), plus a ``_vw = -1``
-        sentinel row per changed doc carrying (id, seq) — so the
-        tombstone sets, per-view probes and checkpoint bumps all come
-        from the same pass, zero source re-scans.  Views with unequal
-        ``last_seq`` still share the scan (the per-view seq guard
-        re-aligns them).  Everything else — unbuilt views, interpreted
-        views, other tables — takes the per-view ``update_view`` path,
-        as does the whole group on a raw-doc contract drift."""
-        groups, rest = self._ddoc_groups(ddoc, built=True)
-
-        def run_group(group: list[tuple[str, ViewDef]]) -> list[str]:
-            try:
-                self._refresh_fused([v for _, v in group], to_seq=to_seq)
-                return []
-            except Exception as e:
-                from mapreduce_spark.functions.jsvariant import (
-                    is_drift_error,
-                )
-
-                if not (
-                    is_drift_error(e)
-                    or "requires built views" in str(e)
-                ):
-                    raise
-                log.warning(
-                    "fused ddoc refresh fell back to per-view "
-                    "refreshes: %s", str(e)[:200],
-                )
-                return [n for n, _ in group]
-
-        done = self._run_pooled(
-            max_parallel,
-            [(run_group, g) for g in groups]
-            + [(self.update_view, n, None, to_seq) for n in rest],
-        )
-        fallback = [n for names in done[:len(groups)] for n in names]
-        for n in fallback:
-            self.update_view(n, None, to_seq)
-
-    def _fused_refresh_frame(
-        self, vdefs: list[ViewDef], last_seqs: list[int],
-        to_seq: int | None = None, changes: DataFrame | None = None,
-    ) -> tuple[DataFrame, list]:
-        """The one-scan refresh frame + its observation metrics.
-
-        Emit rows are tagged ``_vw`` ∈ [0, K); every changed doc also
-        yields exactly one ``_vw = -1`` sentinel whose ``value_num``
-        holds its seq (deleted docs included — they tombstone without
-        emitting).  Metrics (rows_i, w_i, keys_i, n_i, lo_i, hi_i, mx)
-        ride the same pass so no piece of the refresh re-reads the
-        source."""
-        t = TABLES[vdefs[0].table]
-        if changes is not None:
-            src = changes
-        else:
-            src = self._source_df(
-                vdefs[0], since=min(last_seqs), to_seq=to_seq
-            )
-        fseq = F.expr(t.seq_expr).cast("long")
-        collapsed, _ = self._map_input(
-            src,
-            lambda df: self._collapse_latest(t, df.withColumn("_fseq", fseq)),
-        )
-        live = F.lit(True)
-        if "_deleted" in collapsed.columns:
-            live = ~F.coalesce(F.col("_deleted"), F.lit(False))
-        guards = []
-        for ls in last_seqs:
-            g = live
-            if changes is None:
-                # explicit changes frames are the caller's batch as-is
-                # (update_view parity: tombstone regardless of seq);
-                # the changes-feed path re-aligns unequal checkpoints
-                g = g & (F.col("_fseq") > int(ls))
-            guards.append(g)
-        sent_cols = {
-            "id": doc_id_col(t.name),
-            "emit_ord": F.lit(0),
-            "key_enc": F.lit(""),
-            "key_json": F.lit("null"),
-            "value_num": F.col("_fseq").cast("double"),
-        }
-        sentinel = F.struct(
-            F.lit(-1).alias("_vw"),
-            *[
-                sent_cols.get(f.name, F.lit(None))
-                .cast(f.dataType).alias(f.name)
-                for f in VIEW_SCHEMA.fields
-            ],
-        )
-        frame = self._fused_frame(
-            vdefs, collapsed, view_guards=guards, extra_entries=[sentinel],
-        )
-        is_sent = F.col("_vw") == -1
-        metrics = [
-            F.max(F.when(is_sent, F.col("value_num"))).alias("mx")
-        ]
-        for i, ls in enumerate(last_seqs):
-            vw = F.col("_vw") == i
-            metrics.append(F.count(F.when(vw, 1)).alias(f"rows{i}"))
-            metrics.append(
-                F.max(F.when(vw, F.size("value_num_arr")))
-                .alias(f"w{i}")
-            )
-            metrics.append(
-                F.approx_count_distinct(F.when(vw, F.col("key_enc")))
-                .alias(f"keys{i}")
-            )
-            n_pred = is_sent if changes is not None else (
-                is_sent & (F.col("value_num") > int(ls))
-            )
-            metrics.append(F.count(F.when(n_pred, 1)).alias(f"n{i}"))
-            # the changed ids' [lo, hi]: _write_lcounts' pruning bounds
-            changed = F.when(n_pred, F.col("id"))
-            metrics.append(F.min(changed).alias(f"lo{i}"))
-            metrics.append(F.max(changed).alias(f"hi{i}"))
-        return frame, metrics
-
-    def _refresh_fused(self, vdefs: list[ViewDef],
-                       to_seq: int | None = None,
-                       changes: DataFrame | None = None) -> None:
-        """Fused-refresh body: one delta scan → per-view layer appends.
-
-        Per view the outcome is identical to ``_update_view_impl``'s
-        incremental branch: the delta layer, then ``_append_layer``
-        (lcounts/tombstone file carrying the superseded-row count,
-        stats and ``last_seq`` bump, compaction trigger) — the
-        metamorphic test pins fused ≡ per-view ≡ rebuild."""
-        import tempfile as _tf
-
-        sigs = [v.sig for v in vdefs]
-        locks = [self.registry.view_lock(s) for s in sorted(set(sigs))]
-        for lk in locks:
-            lk.__enter__()
-        tmp = None
-        try:
-            entries = [self.registry.ensure_view(v.sig) for v in vdefs]
-            if any(
-                e["base"] is None and not e["layers"] for e in entries
-            ):
-                # raced an un-built view past the pre-lock check: the
-                # fused shape assumes existing checkpoints — build the
-                # stragglers per-view, then re-enter
-                raise RuntimeError(
-                    "_refresh_fused requires built views"
-                )
-            last_seqs = [int(e["last_seq"]) for e in entries]
-            frame, metrics = self._fused_refresh_frame(
-                vdefs, last_seqs, to_seq, changes
-            )
-            vobs = Observation()
-            tmp = _tf.mkdtemp(prefix="fusedref-",
-                              dir=self.registry.storage_dir)
-            (
-                frame.observe(vobs, *metrics)
-                .write.partitionBy("_vw")
-                .mode("overwrite").parquet(tmp)
-            )
-            m = observed(vobs)
-            if m is None:  # empty batch folded away (see observed())
-                return
-            mx = int(m["mx"] or 0)
-            ids_part = os.path.join(tmp, "_vw=-1")
-            ns = [int(m[f"n{i}"] or 0) for i in range(len(vdefs))]
-            for i, (vdef, entry) in enumerate(zip(vdefs, entries)):
-                if ns[i] == 0:
-                    continue
-                sig = vdef.sig
-                vdir = self.registry.view_dir(sig)
-                batch = entry["next_batch"]
-                self._take_part(os.path.join(tmp, f"_vw={i}"),
-                                os.path.join(vdir, f"delta-{batch}"))
-                ids = self.spark.read.schema(
-                    "id string, value_num double"
-                ).parquet(ids_part)
-                if changes is None:
-                    ids = ids.filter(
-                        F.col("value_num") > int(last_seqs[i])
-                    )
-                # the view with the oldest checkpoint counts every
-                # sentinel: max(ns) bounds the rows of the ids file
-                self._append_layer(
-                    sig, entry, batch, ids.select("id"), max(ns),
-                    (m[f"lo{i}"], m[f"hi{i}"]), mx,
-                    {k: m[f"{k}{i}"] for k in ("rows", "w", "keys")},
-                )
-        finally:
-            if tmp is not None:
-                shutil.rmtree(tmp, ignore_errors=True)
-            for lk in reversed(locks):
-                lk.__exit__(None, None, None)
 
     def view_cleanup(self) -> dict:
         res = self.registry.view_cleanup()
@@ -1082,7 +836,7 @@ class Engine:
 
     def _collapse_latest(self, t: Any, raw_df: DataFrame) -> DataFrame:
         """Latest row per ``_id`` for changes-log tables (KEEPING
-        deleted-doc tombstone rows — the fused refresh needs their ids
+        deleted-doc tombstone rows — ``_refresh_frame`` needs their ids
         for tombstoning even though they never reach a map fn)."""
         if t.raw_json:
             w = Window.partitionBy("_id").orderBy(
@@ -1139,7 +893,8 @@ class Engine:
                     to_seq: int | None = None) -> None:
         """Incremental view refresh (M1): map changed docs, tombstone
         their previous emits, append a (tomb, delta) layer; full build
-        on first touch; compact when the layer stack grows.
+        on first touch; compact when the layer stack grows.  The
+        ``_update`` of one view.
 
         Variant-compiled raw-JS views (functions/jsvariant.py) are
         drift-guarded: a doc violating the sampled field contract
@@ -1154,7 +909,7 @@ class Engine:
             else self._resolve(vdef_or_name)[0]
         )
         try:
-            return self._update_view_impl(vdef, changes, to_seq)
+            return self._update([vdef], changes, to_seq)
         except Exception as e:
             from mapreduce_spark.functions.jsvariant import (
                 VariantJSView,
@@ -1174,118 +929,215 @@ class Engine:
             )
 
             vdef.map_def = (m.table, compile_js_map_fn(m.source))
-            return self._update_view_impl(vdef, changes, to_seq)
+            return self._update([vdef], changes, to_seq)
 
-    def _update_view_impl(self, vdef: ViewDef,
-                          changes: DataFrame | None = None,
-                          to_seq: int | None = None) -> None:
-        sig = vdef.sig
-        t = TABLES[vdef.table]
-        with self.registry.view_lock(sig):
-            entry = self.registry.ensure_view(sig)
-            vdir = self.registry.view_dir(sig)
+    def _update(self, vdefs: list[ViewDef],
+                changes: DataFrame | None = None,
+                to_seq: int | None = None) -> None:
+        """Build or refresh K ≥ 1 views over one table as one group
+        (``update_view``: one view; ``refresh_ddoc``: a table's fusable
+        views).  Under the views' locks it splits them by built state:
+        the unbuilt ones take ``_first_build``, the built ones
+        ``_refresh``, so a view another caller built since the group
+        was formed simply refreshes.  ``changes`` (``update_view``'s,
+        so K = 1) replaces the source scan with the caller's batch."""
+        sigs = [v.sig for v in vdefs]
+        with ExitStack() as held:
+            # sorted + deduped: the per-sig lock is non-reentrant, and
+            # one order keeps overlapping groups from deadlocking
+            for sig in sorted(set(sigs)):
+                held.enter_context(self.registry.view_lock(sig))
+            entries = [self.registry.ensure_view(s) for s in sigs]
+            built = [e["base"] is not None or bool(e["layers"])
+                     for e in entries]
+            for state, step in ((False, self._first_build),
+                                (True, self._refresh)):
+                sub = [i for i, b in enumerate(built) if b == state]
+                if sub:
+                    step([vdefs[i] for i in sub], [entries[i] for i in sub],
+                         changes, to_seq)
 
-            seq_col = F.expr(t.seq_expr).cast("long")
-            if entry["base"] is None and not entry["layers"]:
-                src = changes if changes is not None else self._source_df(
-                    vdef, to_seq=to_seq
-                )
-                # seq checkpoint piggybacks on the build scan (observe =
-                # zero extra pass over the batch; `max` is idempotent
-                # under the range path's re-runs of the scan, so the
-                # CollectMetrics accumulator stays correct)
-                obs = Observation()
-                src = src.observe(obs, F.max(seq_col).alias("mx"))
-                built, width = self._build(vdef, src)
-                # above the one-task limit the range path's counts
-                # aggregation and sampling pass each re-run the build
-                # plan.  Cache the built rows across those passes when
-                # re-running is expensive: the Python interpreter path
-                # (it multiplies the dominant cost; measured 10.2 s →
-                # ~6 s for the sf0.1 interpreted fixture view) and a
-                # map that ``_build`` spread (the fused path persists
-                # for the same reason).  A structured encode running on
-                # its scan splits re-runs a cheap columnar scan; the
-                # persist would only spend memory on it.
-                heavy = isinstance(vdef.map_def, tuple) and callable(
-                    vdef.map_def[1]
-                )
-                one = width == 1
-                cache = width > 1 or (heavy and not one)
-                if cache:
-                    built = built.persist(StorageLevel.MEMORY_AND_DISK)
-                try:
-                    self._write_bases(
-                        built.withColumn("_vw", F.lit(0)),
-                        [(sig, entry)], one,
-                    )
-                finally:
-                    if cache:
-                        built.unpersist()
-                entry["last_seq"] = int(
-                    (observed(obs) or {}).get("mx") or 0
-                )
-                self.registry.set_view(sig, entry)
-                return
+    def _first_build(self, vdefs: list[ViewDef], entries: list[dict],
+                     changes: DataFrame | None,
+                     to_seq: int | None) -> None:
+        """Write every view's first base from ONE scan of ``changes``,
+        or of the source up to ``to_seq``, and commit its ``last_seq``.
 
-            src = changes if changes is not None else self._source_df(
-                vdef, since=entry["last_seq"], to_seq=to_seq
+        The map frame is the one step that depends on K: one view takes
+        ``_build`` (every tier, WHERE pushed into the scan), more take
+        ``_fused_frame`` (per-emit CASE guards replace the pushed-down
+        WHERE: the scan must read rows other views keep anyway).  The
+        seq checkpoint piggybacks on the scan (observe = zero extra
+        pass; ``max`` is idempotent under the range path's re-runs of
+        the scan, so the CollectMetrics accumulator stays correct)."""
+        t = TABLES[vdefs[0].table]
+        src = changes if changes is not None else self._source_df(
+            vdefs[0], to_seq=to_seq
+        )
+        obs = Observation()
+        src = src.observe(
+            obs, F.max(F.expr(t.seq_expr).cast("long")).alias("mx")
+        )
+        if len(vdefs) == 1:
+            frame, width = self._build(vdefs[0], src)
+            frame = frame.withColumn("_vw", F.lit(0))
+        else:
+            src, width = self._map_input(
+                src, lambda df: self._pre_map(t, df)
             )
-            # ONE write pass lays out the delta (_vw=0) and the changed
-            # ids (_vw=-1, one row per source row), like the fused
-            # refresh's sentinels: _append_layer reads the ids from that
-            # small file, never the source again.  The probe (did
-            # anything change? new checkpoint seq, the ids' [lo, hi]
-            # for _write_lcounts' pruning) rides the id branch and the
-            # delta stats the emit branch; both are single-pass, so
-            # count is safe without an exchange barrier
-            doc_id = doc_id_col(vdef.table)
-            obs = Observation()
-            ids = src.observe(
-                obs,
-                F.max(seq_col).alias("mx"),
-                F.count(F.lit(1)).alias("n"),
-                F.min(doc_id).alias("lo"),
-                F.max(doc_id).alias("hi"),
-            ).select(doc_id.alias("id"), F.lit(-1).alias("_vw"))
-            dobs = Observation()
-            emits, width = self._build(vdef, src)
-            emits = emits.observe(
-                dobs,
-                F.count(F.lit(1)).alias("rows"),
-                F.max(F.size("value_num_arr")).alias("w"),
-                F.approx_count_distinct("key_enc").alias("keys"),
-            ).withColumn("_vw", F.lit(0))
-            frame = emits.unionByName(ids, allowMissingColumns=True)
-            if width == 1:
-                # _build coalesced the emit branch below its collapse;
-                # this folds the id branch's scan splits into that task
-                frame = frame.coalesce(1)
-            batch = entry["next_batch"]
-            tmp = tempfile.mkdtemp(prefix="refresh-",
-                                   dir=self.registry.storage_dir)
-            try:
-                (
-                    frame.write.partitionBy("_vw").mode("overwrite")
-                    .parquet(tmp)
+            frame = self._fused_frame(vdefs, src)
+        # above the one-task limit the range path's counts aggregation
+        # and sampling pass each re-run the frame.  Cache its rows when
+        # re-running is expensive: a map that ``_map_input`` spread, and
+        # on the scan's own partitions the Python interpreter path (it
+        # multiplies the dominant cost; measured 10.2 s → ~6 s for the
+        # sf0.1 interpreted fixture view) or the fused frame (≈ Σ view
+        # sizes of emit rows).  A single structured encode on its scan
+        # splits re-runs a cheap columnar scan; the persist would only
+        # spend memory on it.
+        m = vdefs[0].map_def
+        heavy = len(vdefs) > 1 or (isinstance(m, tuple) and callable(m[1]))
+        cache = width > 1 or (width == 0 and heavy)
+        if cache:
+            frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            self._write_bases(
+                frame, [(v.sig, e) for v, e in zip(vdefs, entries)],
+                width == 1,
+            )
+        finally:
+            if cache:
+                frame.unpersist()
+        mx = int((observed(obs) or {}).get("mx") or 0)
+        for vdef, entry in zip(vdefs, entries):
+            entry["last_seq"] = mx
+            self.registry.set_view(vdef.sig, entry)
+
+    def _refresh(self, vdefs: list[ViewDef], entries: list[dict],
+                 changes: DataFrame | None, to_seq: int | None) -> None:
+        """Append a (delta, lcounts) layer to every view the batch
+        changed, from ONE write of ``_refresh_frame`` over ``changes``
+        or the changes since the oldest ``last_seq``: the write lays out
+        each view's delta (``_vw`` = i) beside the changed ids
+        (``_vw`` = -1), and the probe (did anything change? the new
+        checkpoint seq, each view's changed-id count and their [lo, hi]
+        for ``_write_lcounts``' pruning, the delta stats) rides it as
+        one Observation, so no piece of the refresh re-reads the source.
+        ``_append_layer`` then reads each view's ids from that small
+        file and commits its layer."""
+        last_seqs = [int(e["last_seq"]) for e in entries]
+        since = None if changes is not None else min(last_seqs)
+        src = changes if changes is not None else self._source_df(
+            vdefs[0], since=since, to_seq=to_seq
+        )
+        frame = self._refresh_frame(vdefs, src, last_seqs)
+        is_id = F.col("_vw") == -1
+        metrics = [F.max(F.when(is_id, F.col("value_num"))).alias("mx")]
+        for i, ls in enumerate(last_seqs):
+            vw = F.col("_vw") == i
+            # explicit changes frames are the caller's batch as-is
+            # (tombstone regardless of seq)
+            changed = is_id if since is None else (
+                is_id & (F.col("value_num") > ls)
+            )
+            metrics += [
+                F.count(F.when(vw, 1)).alias(f"rows{i}"),
+                F.max(F.when(vw, F.size("value_num_arr"))).alias(f"w{i}"),
+                F.approx_count_distinct(F.when(vw, F.col("key_enc")))
+                .alias(f"keys{i}"),
+                F.count(F.when(changed, 1)).alias(f"n{i}"),
+                F.min(F.when(changed, F.col("id"))).alias(f"lo{i}"),
+                F.max(F.when(changed, F.col("id"))).alias(f"hi{i}"),
+            ]
+        obs = Observation()
+        tmp = tempfile.mkdtemp(prefix="refresh-",
+                               dir=self.registry.storage_dir)
+        try:
+            (
+                frame.observe(obs, *metrics)
+                .write.partitionBy("_vw").mode("overwrite").parquet(tmp)
+            )
+            m = observed(obs)
+            if m is None:  # empty batch folded away (see observed())
+                return
+            ns = [int(m[f"n{i}"] or 0) for i in range(len(vdefs))]
+            for i, (vdef, entry) in enumerate(zip(vdefs, entries)):
+                if not ns[i]:
+                    continue
+                batch = entry["next_batch"]
+                self._take_part(
+                    os.path.join(tmp, f"_vw={i}"),
+                    os.path.join(self.registry.view_dir(vdef.sig),
+                                 f"delta-{batch}"),
                 )
-                probe = observed(obs)
-                if probe is None or not probe["n"]:
-                    return
-                self._take_part(os.path.join(tmp, "_vw=0"),
-                                os.path.join(vdir, f"delta-{batch}"))
+                ids = self.spark.read.schema(
+                    "id string, value_num double"
+                ).parquet(os.path.join(tmp, "_vw=-1"))
+                if since is not None and last_seqs[i] > since:
+                    # a later checkpoint than the scan's start
+                    ids = ids.filter(F.col("value_num") > last_seqs[i])
+                # the view with the oldest checkpoint counts every id
+                # row: max(ns) bounds the rows of the ids file
                 self._append_layer(
-                    sig, entry, batch,
-                    self.spark.read.schema("id string").parquet(
-                        os.path.join(tmp, "_vw=-1")
-                    ),
-                    int(probe["n"]), (probe["lo"], probe["hi"]),
-                    int(probe["mx"]),
-                    # None: the emit branch saw no rows (see observed())
-                    observed(dobs) or {"rows": 0, "w": None, "keys": 0},
+                    vdef.sig, entry, batch, ids.select("id"), max(ns),
+                    (m[f"lo{i}"], m[f"hi{i}"]), int(m["mx"] or 0),
+                    {k: m[f"{k}{i}"] for k in ("rows", "w", "keys")},
                 )
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+
+    def _refresh_frame(self, vdefs: list[ViewDef], src: DataFrame,
+                       last_seqs: list[int]) -> DataFrame:
+        """A refresh's write frame over ``src``: view i's emits tagged
+        ``_vw`` = i, and ``_vw`` = -1 rows holding each changed doc's id
+        and its seq in ``value_num`` (deleted docs included: they
+        tombstone without emitting).
+
+        One view: ``_build``'s emits (every tier, WHERE pushed into the
+        scan) beside one id row per source row.  More: ``_fused_frame``
+        over the latest-per-``_id`` collapse of the one scan, each
+        view's emits guarded by not-deleted ∧ ``seq > last_seq_i`` (so
+        views at unequal checkpoints share the scan), with one id
+        sentinel per doc in the same emit array."""
+        t = TABLES[vdefs[0].table]
+        seq = F.expr(t.seq_expr).cast("long")
+        if len(vdefs) == 1:
+            emits, width = self._build(vdefs[0], src)
+            ids = src.select(doc_id_col(t.name).alias("id"),
+                             seq.cast("double").alias("value_num"),
+                             F.lit(-1).alias("_vw"))
+            frame = emits.withColumn("_vw", F.lit(0)).unionByName(
+                ids, allowMissingColumns=True
+            )
+            # _build coalesced the emit branch below its collapse; this
+            # folds the id branch's scan splits into that task
+            return frame.coalesce(1) if width == 1 else frame
+        collapsed, _ = self._map_input(
+            src,
+            lambda df: self._collapse_latest(t, df.withColumn("_fseq", seq)),
+        )
+        live = F.lit(True)
+        if "_deleted" in collapsed.columns:
+            live = ~F.coalesce(F.col("_deleted"), F.lit(False))
+        guards = [live & (F.col("_fseq") > ls) for ls in last_seqs]
+        id_cols = {
+            "id": doc_id_col(t.name),
+            "emit_ord": F.lit(0),
+            "key_enc": F.lit(""),
+            "key_json": F.lit("null"),
+            "value_num": F.col("_fseq").cast("double"),
+        }
+        sentinel = F.struct(
+            F.lit(-1).alias("_vw"),
+            *[
+                id_cols.get(f.name, F.lit(None))
+                .cast(f.dataType).alias(f.name)
+                for f in VIEW_SCHEMA.fields
+            ],
+        )
+        return self._fused_frame(
+            vdefs, collapsed, view_guards=guards, extra_entries=[sentinel],
+        )
 
     def _take_part(self, part: str, dest: str,
                    schema: Any = VIEW_SCHEMA) -> None:

@@ -283,9 +283,10 @@ def build_view_structured_on(df: DataFrame, spec: MapSpec) -> DataFrame:
 
 def spec_output_columns(spec: MapSpec) -> dict[str, Column]:
     """VIEW_SCHEMA output columns of one MapSpec as expressions over
-    the RAW table — shared by the single-view build (filter + select,
-    WHERE pushed into the scan) and the fused multi-view ddoc build
-    (engine._fused_frame: per-view CASE guards over ONE scan)."""
+    the RAW table — shared by the single-view map (filter + select,
+    WHERE pushed into the scan) and the multi-view ddoc frame of a
+    first build or a refresh (engine._fused_frame: per-view CASE guards
+    over ONE scan)."""
     comps, is_array = spec.key_components()
     encs, jsons = zip(*[_comp_cols(c) for c in comps])
     key_enc = enc_key_cols(list(encs), as_array=is_array)

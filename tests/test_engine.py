@@ -1223,7 +1223,9 @@ def test_refresh_ddoc_fused_metamorphic(spark, sf_dir, tmp_path):
     eng = engines["fused"]
     vdefs = [eng._defs[eng.registry.resolve("dd", n)]
              for n in ("by_flag", "big_qty")]
-    frame, _ = eng._fused_refresh_frame(vdefs, [mid, mid])
+    frame = eng._refresh_frame(
+        vdefs, eng._source_df(vdefs[0], since=mid), [mid, mid]
+    )
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
 
@@ -1257,16 +1259,25 @@ def test_refresh_ddoc_fused_metamorphic(spark, sf_dir, tmp_path):
     assert fe["layers"], "fused refresh must append a delta layer"
 
 
-def test_refresh_ddoc_unequal_checkpoints(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("big_qty", ["built", "unbuilt"])
+def test_refresh_ddoc_unequal_checkpoints(spark, sf_dir, tmp_path, big_qty):
     """Views of one ddoc at different last_seq still share the scan:
     the per-view seq guard re-aligns them, and both converge to the
-    same state as a fresh rebuild."""
+    same state as a fresh rebuild.  A group mixing a built view with an
+    unbuilt one converges the same way in one refresh_ddoc: the built
+    view appends a layer, the unbuilt one gets its first base."""
     mid = _mid_seq(spark, sf_dir)
     eng = Engine(spark, sf_dir, str(tmp_path / "uneq"))
     eng.put_design("dd", REFRESH_VIEWS)
     eng.update_view("dd/by_flag", None, mid)
-    eng.update_view("dd/big_qty", None, mid + mid // 2)
+    if big_qty == "built":
+        eng.update_view("dd/big_qty", None, mid + mid // 2)
     eng.refresh_ddoc("dd")
+    entry = eng.registry.get_view(eng.registry.resolve("dd", "by_flag"))
+    assert len(entry["layers"]) == 1
+    if big_qty == "unbuilt":
+        entry = eng.registry.get_view(eng.registry.resolve("dd", "big_qty"))
+        assert entry["base"] == "base-v1" and not entry["layers"]
 
     ref = Engine(spark, sf_dir, str(tmp_path / "uneq-ref"))
     ref.put_design("dd", REFRESH_VIEWS)

@@ -85,6 +85,56 @@ def test_refresh_job_ceilings(spark, sf_dir, tmp_path):
     assert not over, f"refresh job count above ceiling: {over}"
 
 
+# Spark jobs per ddoc update of two lineitem views at sf0.001 (the
+# shape of test_engine.REFRESH_VIEWS), compact_after large enough that
+# no compaction runs.  Both entry points fuse the views whatever their
+# built state: a first build is one job (both bases and counts in one
+# one-task write) and a first-layer refresh five (the delta write, then
+# each view's broadcast and lcounts write).  When each entry point ran
+# the other's job per view these read 2 (a first build by refresh_ddoc)
+# and 6 (a refresh by build_ddoc).
+DDOC_JOB_CEILINGS = {"refresh_ddoc build": 1, "build_ddoc layer": 5,
+                     "refresh_ddoc layer": 5}
+DDOC_VIEWS = {
+    "by_flag": {"map": MapSpec(
+        "lineitem", [("str", "l_returnflag"), ("str", "l_linestatus")],
+        ("num", "l_quantity"),
+    ), "reduce": "_sum"},
+    "big_qty": {"map": MapSpec(
+        "lineitem", ("num", "l_quantity"), ("num", "l_extendedprice"),
+        where="l_quantity > 45",
+    )},
+}
+
+
+def test_ddoc_job_ceilings(spark, sf_dir, tmp_path):
+    raw = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    seq = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("long")
+    mid = raw.agg(F.max(seq)).collect()[0][0] // 2
+    jobs = {}
+    for entry_point in ("build_ddoc", "refresh_ddoc"):
+        eng = Engine(spark, sf_dir, str(tmp_path / entry_point),
+                     compact_after=99)
+        # a first read of the table fills the footer-schema cache with
+        # a job of its own: a one-time cost, not the ddoc plan's
+        eng._load_table("lineitem")
+        eng.put_design("dd", DDOC_VIEWS)
+        with measure(spark, "ddoc-build") as m:
+            eng.refresh_ddoc("dd", to_seq=mid)
+        jobs["refresh_ddoc build"] = max(m["jobs"],
+                                         jobs.get("refresh_ddoc build", 0))
+        with measure(spark, "ddoc-layer") as m:
+            getattr(eng, entry_point)("dd")
+        jobs[f"{entry_point} layer"] = m["jobs"]
+        for name in DDOC_VIEWS:
+            entry = eng.registry.get_view(eng.registry.resolve("dd", name))
+            assert entry["base"] == "base-v1", name
+            assert len(entry["layers"]) == 1, name
+    print(f"ddoc jobs: {jobs}")
+    over = {k: n for k, n in jobs.items() if n > DDOC_JOB_CEILINGS[k]}
+    assert not over, f"ddoc job count above ceiling: {over}"
+
+
 def test_fused_ddoc_build_jobs_keep_the_callers_group(
         spark, sf_dir, tmp_path):
     """build_ddoc runs the fused table group on a pool thread; its jobs
