@@ -54,17 +54,26 @@ Supported subset (each maps 1:1 onto a MapSpec capability):
 - ``log(...)`` calls (upstream sandbox global) parsed and discarded;
 - multiple emits (one MapSpec per emit, unioned with emit ordinals).
 
-Anything outside the subset raises :class:`JSCompileError` naming the
-construct and its position — the deliberate fallback contract: express
-that view as a Python map fn (the generic path) instead of silently
-mis-compiling.  Loops, variable bindings, general function calls, and
-nested doc paths are out of the subset.
+On raw doc sources (functions/jsvariant.py) the same subset also
+compiles ``forEach`` / C-style ``for`` / ``for…in`` /
+``Object.keys|entries(…).forEach`` loops (one per source) to explode
+specs, and nested doc paths to ``'$.a.b'`` extractions; on either
+kind of source, single-assignment ``var``/``let``/``const`` locals
+substitute their expression.
+
+There is one JS front end: the statement parser the interpreter tier
+runs (``jsreduce._Parser``).  :func:`lower_js_map` lowers its AST to
+this module's emit IR, and the compiler reads only that IR.  Anything
+outside the subset raises :class:`JSCompileError` naming the construct
+— the deliberate fallback contract: the engine then runs the view on
+the statement interpreter (functions/jsmap.py) instead of silently
+mis-compiling.  Assignments, ``return``, nested loops and general
+function calls are out of the subset.
 """
 
 from __future__ import annotations
 
 import math
-import re
 from typing import Any
 
 from mapreduce_spark.errors import QueryParseError
@@ -74,854 +83,392 @@ class JSCompileError(QueryParseError):
     """JS source uses a construct outside the compilable subset."""
 
 
-_TOKEN_RE = re.compile(
-    r"""
-    (?P<ws>\s+|//[^\n]*|/\*.*?\*/)
-  | (?P<num>\d+(?:\.\d+)?(?:[eE][+-]?\d+)?)
-  | (?P<str>'(?:[^'\\]|\\.)*'|"(?:[^"\\]|\\.)*")
-  | (?P<ident>[A-Za-z_$][A-Za-z0-9_$]*)
-  | (?P<punct>===|!==|==|!=|<=|>=|&&|\|\||[-+*/%(){}\[\],;.:<>!=?])
-    """,
-    re.VERBOSE | re.DOTALL,
-)
+# ---------------------------------------------------------------------------
+# Statement AST → emit IR
+# ---------------------------------------------------------------------------
+
+_CMP_OPS = ("===", "==", "!==", "!=", "<", "<=", ">", ">=")
 
 
-def _tokenize(src: str) -> list[tuple[str, str, int]]:
-    out, pos = [], 0
-    while pos < len(src):
-        if src[pos] == "/" and src[pos + 1:pos + 2] not in ("/", "*"):
-            # regex literal vs division: same lexer heuristic as the
-            # statement interpreter (jsreduce), shared helpers
-            from mapreduce_spark.functions.jsreduce import (
-                JSReduceError,
-                _lex_regex,
-                _regex_allowed,
-            )
+def parse_js_map(source: str) -> list[tuple[list, Any, Any]]:
+    """JS map source → emit IR: the statement parser shared with the
+    interpreter tier (``jsreduce._Parser``), then :func:`lower_js_map`.
+    A source the parser rejects raises :class:`JSCompileError` with
+    the parser's message."""
+    from mapreduce_spark.functions.jsreduce import JSReduceError, _Parser
 
-            if _regex_allowed(out[-1] if out else None):
-                try:
-                    tok, end = _lex_regex(src, pos)
-                except JSReduceError as ex:
-                    raise JSCompileError(str(ex)) from None
-                out.append(("regex", tok, pos))
-                pos = end
-                continue
-        m = _TOKEN_RE.match(src, pos)
-        if m is None:
-            raise JSCompileError(
-                f"unrecognized character {src[pos]!r} at offset {pos}"
-            )
-        pos = m.end()
-        if m.lastgroup != "ws":
-            out.append((m.lastgroup, m.group(), m.start()))
-    return out
-
-
-_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "f": "\f",
-            "v": "\v", "0": "\0"}
-
-
-def _unquote(tok: str) -> str:
-    """Decode a JS string literal: standard escapes (\\n, \\t, \\r,
-    \\b, \\f, \\v, \\0, \\uXXXX, \\xNN) decode to their characters;
-    any other escaped character (\\\\, \\', \\", \\/ …) is itself."""
-    body = tok[1:-1]
-    out: list[str] = []
-    i = 0
     try:
-        while i < len(body):
-            c = body[i]
-            if c != "\\":
-                out.append(c)
-                i += 1
-                continue
-            e = body[i + 1]  # tokenizer guarantees a char after '\'
-            if e == "u":
-                out.append(chr(int(body[i + 2:i + 6], 16)))
-                i += 6
-            elif e == "x":
-                out.append(chr(int(body[i + 2:i + 4], 16)))
-                i += 4
-            else:
-                out.append(_ESCAPES.get(e, e))
-                i += 2
-    except (ValueError, IndexError):
-        raise JSCompileError(
-            f"malformed escape sequence in string literal {tok}"
-        ) from None
-    return "".join(out)
+        params, body = _Parser(source).parse()
+    except JSReduceError as e:
+        raise JSCompileError(str(e)) from e
+    return lower_js_map(params, body)
 
 
-class _Parser:
-    """Recursive-descent parser for the map-fn subset → emit list.
+def lower_js_map(params: list, body: list) -> list[tuple[list, Any, Any]]:
+    """Lower a parsed map function (``jsreduce._Parser``'s
+    ``(params, body)``) to the emit IR ``[(guards, key_ast,
+    value_ast), …]`` the compiler consumes.
 
-    Produces ``[(guards, key_ast, value_ast), …]`` where guards is the
-    conjunction (list) of enclosing if-conditions and ASTs are tuples:
-    ``('lit', v) | ('doc', field) | ('arr', [ast]) | ('obj', {k: ast})``
-    and conditions ``('cmp', op, l, r) | ('and'|'or', l, r) |
-    ('not', c) | ('truthy', ast)``.
-    """
+    ``guards`` is the conjunction (list) of enclosing if-conditions,
+    with a ``(mark, field, serial)`` loop marker at the position the
+    loop opened (mark: ``foreach`` / ``forloop`` / ``forin``).  IR
+    expressions are tuples ``('lit', v) | ('doc', field) |
+    ('strlen', field) | ('arr', [ast]) | ('obj', {k: ast}) |
+    ('bin', op, l, r) | ('method', recv, name, args) |
+    ('math', name, args) | ('newdate', field) |
+    ('regexlit', body, flags) | ('ternary', cond, t, f)`` plus the
+    loop bindings ``('elem', field) | ('epos',) | ('ekey',)``;
+    conditions are ``('cmp', op, l, r) | ('and'|'or', l, r) |
+    ('not', c) | ('truthy', ast)``.  Any other shape raises
+    :class:`JSCompileError` and the view runs on the interpreter."""
+    low = _Lowering(params)
+    low.stmts(body, [])
+    return low.emits
 
-    def __init__(self, src: str) -> None:
-        self.toks = _tokenize(src)
-        self.i = 0
-        # inside a forEach callback: (param_name, array_field, serial)
-        self._elem: tuple[str, str, int] | None = None
-        # inside a compiled C-style for body: (index_var, field, serial)
-        self._idx: tuple[str, str, int] | None = None
-        # inside a compiled for-in body: (key_var, field, serial)
-        self._inkey: tuple[str, str, int] | None = None
-        # inside Object.entries(doc.f).forEach(function (e) {…}):
-        # (pair_var, field, serial) — e[0] is the key, e[1] the value
-        self._entry: tuple[str, str, int] | None = None
-        # single-assignment local aliases (round 11): `var v = expr;`
-        # binds v to the parsed expression node; later uses substitute
-        # it (sound: subset expressions are pure).  Block-scoped
-        # conservatively — a var bound inside an if-arm or loop body
+
+class _Lowering:
+    def __init__(self, params: list) -> None:
+        # the doc binds to the first parameter, as jsmap's
+        # JSMapFunctionFull binds it
+        self.doc = (params or ["doc"])[0]
+        self.emits: list[tuple[list, Any, Any]] = []
+        # name → IR node: single-assignment aliases (`var v = expr;`
+        # substitutes the lowered expression — sound because subset
+        # expressions are pure) and loop bindings.  Block-scoped
+        # conservatively: a name bound inside an if-arm or loop body
         # is forgotten at the block's end, so the conditionally-
         # assigned / out-of-explode-scope cases fall to the
-        # interpreter instead of compiling wrong.
-        self._aliases: dict[str, Any] = {}
-        self._foreach_serial = 0
+        # interpreter instead of compiling wrong.  ('pair', field) is
+        # an Object.entries callback parameter, usable only as
+        # pair[0] / pair[1].
+        self.scope: dict[str, Any] = {}
+        self.loop: tuple[str, str, int] | None = None
+        self.serial = 0
 
-    def _in_loop(self) -> bool:
-        return (self._elem is not None or self._idx is not None
-                or self._inkey is not None or self._entry is not None)
-
-    def _bound_names(self) -> set[str]:
-        out = set(self._aliases)
-        for b in (self._elem, self._idx, self._inkey, self._entry):
-            if b is not None:
-                out.add(b[0])
-        return out
-
-    # -- token helpers --------------------------------------------------
-    def _peek(self) -> tuple[str, str, int]:
-        if self.i >= len(self.toks):
-            raise JSCompileError("unexpected end of map function source")
-        return self.toks[self.i]
-
-    def _next(self) -> tuple[str, str, int]:
-        t = self._peek()
-        self.i += 1
-        return t
-
-    def _expect(self, text: str) -> None:
-        kind, tok, off = self._next()
-        if tok != text:
-            raise JSCompileError(
-                f"expected {text!r} but found {tok!r} at offset {off}"
-            )
-
-    def _at(self, text: str) -> bool:
-        return self.i < len(self.toks) and self.toks[self.i][1] == text
-
-    def _eat(self, text: str) -> bool:
-        if self._at(text):
-            self.i += 1
-            return True
-        return False
-
-    # -- grammar --------------------------------------------------------
-    def parse(self) -> list[tuple[list, Any, Any]]:
-        self._expect("function")
-        if self._peek()[0] == "ident" and not self._at("("):
-            self._next()  # optional function name
-        self._expect("(")
-        while not self._eat(")"):
-            self._next()  # parameter names (doc[, meta])
-        self._expect("{")
-        emits: list[tuple[list, Any, Any]] = []
-        self._stmts(emits, guards=[], end="}")
-        return emits
-
-    def _stmts(self, emits: list, guards: list, end: str) -> None:
-        while not self._eat(end):
-            self._stmt(emits, guards)
-
-    def _scoped_stmts(self, emits: list, guards: list,
-                      end: str) -> None:
-        """Block body: aliases declared inside are forgotten at the
-        end (see ``_aliases``)."""
-        saved = dict(self._aliases)
+    # -- statements -----------------------------------------------------
+    def stmts(self, body: list, guards: list) -> None:
+        saved = dict(self.scope)
         try:
-            self._stmts(emits, guards, end)
+            for s in body:
+                self.stmt(s, guards)
         finally:
-            self._aliases = saved
+            self.scope = saved
 
-    def _scoped_stmt(self, emits: list, guards: list) -> None:
-        saved = dict(self._aliases)
-        try:
-            self._stmt(emits, guards)
-        finally:
-            self._aliases = saved
-
-    def _stmt(self, emits: list, guards: list) -> None:
-        if self._eat(";"):
-            return
-        kind, tok, off = self._peek()
-        if tok in ("var", "let", "const"):
-            # single-assignment local alias(es): `var v = expr, w = …;`
-            # — substitution is sound because subset expressions are
-            # pure; anything mutated later fails compile (a bare
-            # `v = …` statement is outside the grammar) and runs on
-            # the interpreter
-            self._next()
-            while True:
-                k2, name, o2 = self._next()
-                if k2 != "ident" or name in ("doc", "emit", "log"):
+    def stmt(self, s: Any, guards: list) -> None:
+        tag = s[0]
+        if tag == "var":
+            for name, init in s[1]:
+                self.bindable(name)
+                if name in self.scope:
                     raise JSCompileError(
-                        f"unsupported declaration target at offset "
-                        f"{o2}"
+                        f"redeclaration of {name!r} is outside the "
+                        "compiled subset; the interpreter tier runs it"
                     )
-                if name in self._bound_names():
-                    raise JSCompileError(
-                        f"redeclaration of {name!r} at offset {o2} is "
-                        "outside the compiled subset; the interpreter "
-                        "tier runs it"
-                    )
-                if not self._eat("="):
+                if init is None:
                     raise JSCompileError(
                         f"uninitialized declaration of {name!r} is "
                         "outside the compiled subset (undefined-until-"
                         "assigned); the interpreter tier runs it"
                     )
-                self._aliases[name] = self._expr()
-                if not self._eat(","):
-                    break
-            self._eat(";")
+                self.scope[name] = self.expr(init)
             return
-        if tok == "emit":
-            self._next()
-            self._expect("(")
-            key = self._expr()
-            value = self._expr() if self._eat(",") else ("lit", None)
-            self._expect(")")
-            self._eat(";")
-            emits.append((list(guards), key, value))
+        if tag == "if":
+            # else ≡ the negated guard; an `else if` chain is an if
+            # statement inside the else arm
+            c = self.cond(s[1])
+            self.stmts(s[2], guards + [c])
+            if s[3]:
+                self.stmts(s[3], guards + [("not", c)])
             return
-        if tok == "if":
-            self._next()
-            self._expect("(")
-            cond = self._cond()
-            self._expect(")")
-            inner = guards + [cond]
-            if self._eat("{"):
-                self._scoped_stmts(emits, inner, end="}")
-            else:
-                self._scoped_stmt(emits, inner)
-            if self._eat("else"):
-                # else ≡ the negated guard; an `else if` chain recurses
-                # through this same statement handler naturally
-                neg = guards + [("not", cond)]
-                if self._eat("{"):
-                    self._scoped_stmts(emits, neg, end="}")
-                else:
-                    self._scoped_stmt(emits, neg)
+        if tag == "for":
+            self.c_for(s, guards)
             return
-        if tok == "log":
-            # upstream sandbox global (F1): debugging output, no
-            # effect on the view — parse and discard the balanced call
-            self._next()
-            self._expect("(")
-            depth = 1
-            while depth:
-                _k, t, _o = self._next()
-                if t == "(":
-                    depth += 1
-                elif t == ")":
-                    depth -= 1
-            self._eat(";")
+        if tag == "forin":
+            # for (var k in doc.f) { … } — object-key enumeration,
+            # compiled to an object-entry explode (jsvariant
+            # forin_object_sql).  The emit-order soundness condition
+            # (bare `k` must be a key component) is enforced by the
+            # compiler, where the emitted keys are visible.
+            self.no_nesting()
+            field = self.doc_field(s[2], "for-in target")
+            self.loop_body("forin", field, {s[1]: ("ekey",)}, s[3],
+                           guards)
             return
-        if tok == "for":
-            self._next()
-            self._parse_for(emits, guards)
-            return
-        if tok == "doc":
-            # doc.f.forEach(function (x) { … }) — the canonical
-            # array-emit ddoc (tag index).  Emits parsed inside the
-            # callback carry a ('foreach', field, serial) marker in
-            # their guard list at the position the loop opened;
-            # element references parse as ('elem', field) nodes.
-            self._next()
-            parts = self._field_path(off)
-            field = ".".join(parts)
-            self._expect(".")
-            _k2, m, moff = self._next()
-            if m != "forEach":
-                raise JSCompileError(
-                    f"statement-level doc.{field}.{m} at offset "
-                    f"{moff} is outside the compiled subset (only "
-                    ".forEach(function (x) {…}) compiles)"
-                )
-            if self._in_loop():
-                raise JSCompileError(
-                    "nested loops are outside the compiled subset"
-                )
-            self._expect("(")
-            self._expect("function")
-            if self._peek()[0] == "ident" and not self._at("("):
-                self._next()  # optional callback name
-            self._expect("(")
-            params = []
-            while not self._eat(")"):
-                k3, p, _o3 = self._next()
-                if k3 == "ident":
-                    params.append(p)
-                self._eat(",")
-            if len(params) != 1:
-                raise JSCompileError(
-                    "forEach callbacks with index/array parameters "
-                    "are outside the compiled subset"
-                )
-            self._expect("{")
-            serial = self._foreach_serial
-            self._foreach_serial += 1
-            self._elem = (params[0], field, serial)
-            try:
-                self._scoped_stmts(
-                    emits,
-                    guards + [("foreach", field, serial)],
-                    end="}",
-                )
-            finally:
-                self._elem = None
-            self._expect(")")
-            self._eat(";")
-            return
-        if tok == "Object":
-            # Object.keys(doc.f).forEach(function (k) { … }) — the
-            # modern spelling of the for-in idiom: same key space,
-            # same ES enumeration order, so it compiles to the SAME
-            # ('forin', field, serial) object-entry explode.  The one
-            # semantic difference — Object.keys(null) THROWS where
-            # for-in iterates zero times — is unobservable in the
-            # compiled output: every emit site lives inside the loop,
-            # so the doc contributes zero rows either way.
-            self._next()
-            self._expect(".")
-            _k2, m, moff = self._next()
-            if m not in ("keys", "entries") or not self._eat("("):
-                raise JSCompileError(
-                    f"statement-level Object.{m} at offset {moff} is "
-                    "outside the compiled subset (only Object.keys/"
-                    "Object.entries(doc.<f>).forEach(function (…) "
-                    "{…}) compile)"
-                )
-            _k3, d, o3 = self._next()
-            if d != "doc":
-                raise JSCompileError(
-                    f"Object.keys target at offset {o3} is not a doc "
-                    "field; the interpreter tier runs it"
-                )
-            parts = self._field_path(o3)
-            if not parts:
-                raise JSCompileError(
-                    "Object.keys over the whole doc is outside the "
-                    "compiled subset; the interpreter tier runs it"
-                )
-            field = ".".join(parts)
-            self._expect(")")
-            self._expect(".")
-            _k4, m2, m2off = self._next()
-            if m2 != "forEach":
-                raise JSCompileError(
-                    f"Object.keys(doc.{field}).{m2} at offset "
-                    f"{m2off} is outside the compiled subset as a "
-                    "statement (only .forEach(function (k) {…}) "
-                    "compiles)"
-                )
-            if self._in_loop():
-                raise JSCompileError(
-                    "nested loops are outside the compiled subset"
-                )
-            self._expect("(")
-            self._expect("function")
-            if self._peek()[0] == "ident" and not self._at("("):
-                self._next()  # optional callback name
-            self._expect("(")
-            serial = self._foreach_serial
-            self._foreach_serial += 1
-            entry_alias = None
-            if m == "entries" and self._at("["):
-                # destructured pair: function ([k, v]) {…} — k is the
-                # object-entry key, v the value (an alias on the
-                # existing elem node; same lowering as doc.f[k])
-                self.i += 1
-                k5, kn, o5 = self._next()
-                self._expect(",")
-                k6, vn, o6 = self._next()
-                self._expect("]")
-                self._expect(")")
-                if (k5 != "ident" or k6 != "ident" or kn == vn
-                        or {kn, vn} & {"doc", "emit", "log"}):
-                    raise JSCompileError(
-                        f"unsupported entries destructuring at offset "
-                        f"{o5}"
-                    )
-                self._inkey = (kn, field, serial)
-                entry_alias = vn
-            else:
-                params = []
-                while not self._eat(")"):
-                    k5, p, _o5 = self._next()
-                    if k5 == "ident":
-                        params.append(p)
-                    self._eat(",")
-                if len(params) != 1:
-                    raise JSCompileError(
-                        f"Object.{m}().forEach callbacks with index/"
-                        "array parameters are outside the compiled "
-                        "subset"
-                    )
-                if m == "entries":
-                    self._entry = (params[0], field, serial)
-                else:
-                    self._inkey = (params[0], field, serial)
-            self._expect("{")
-            saved_alias = dict(self._aliases)
-            if entry_alias is not None:
-                self._aliases[entry_alias] = ("elem", field)
-            try:
-                self._stmts(
-                    emits, guards + [("forin", field, serial)],
-                    end="}",
-                )
-            finally:
-                self._inkey = None
-                self._entry = None
-                self._aliases = saved_alias
-            self._expect(")")
-            self._eat(";")
-            return
+        if tag == "expr" and s[1] == ("lit", None):
+            return  # empty statement
+        if tag == "expr" and s[1][0] == "call":
+            fn, args = s[1][1], s[1][2]
+            if fn == ("name", "emit") and 1 <= len(args) <= 2:
+                key = self.expr(args[0])
+                value = (self.expr(args[1]) if len(args) == 2
+                         else ("lit", None))
+                self.emits.append((list(guards), key, value))
+                return
+            if fn == ("name", "log"):
+                # upstream sandbox global (F1): debugging output, no
+                # effect on the view
+                return
+            if fn[0] == "member" and fn[2] == "forEach":
+                self.foreach(fn[1], args, guards)
+                return
         raise JSCompileError(
-            f"unsupported construct {tok!r} at offset {off} — the "
-            "compilable subset is emit(...), if/else guards and log(); "
-            "use a Python map function for anything else"
+            f"unsupported {tag!r} statement — the compilable subset is "
+            "emit(...), if/else guards, single-assignment declarations, "
+            "log() and one forEach / for / for-in loop; the "
+            "interpreter tier runs the rest"
         )
 
-    def _parse_for(self, emits: list, guards: list) -> None:
+    def foreach(self, recv: Any, args: list, guards: list) -> None:
+        """``doc.f.forEach(function (x) {…})`` — the canonical
+        array-emit ddoc (tag index) — and ``Object.keys`` /
+        ``Object.entries(doc.f).forEach(…)``, the modern spelling of
+        the for-in idiom: same key space, same ES enumeration order,
+        so it compiles to the SAME ('forin', field, serial) explode.
+        The one semantic difference — Object.keys(null) THROWS where
+        for-in iterates zero times — is unobservable in the compiled
+        output: every emit site lives inside the loop, so the doc
+        contributes zero rows either way."""
+        self.no_nesting()
+        if len(args) != 1 or args[0][0] != "func":
+            raise JSCompileError(
+                ".forEach() compiles only with one function literal "
+                "argument; the interpreter tier runs it"
+            )
+        params, body = args[0][1], args[0][2]
+        if (recv[0] == "call" and recv[1][0] == "member"
+                and recv[1][1] == ("name", "Object")
+                and recv[1][2] in ("keys", "entries")
+                and len(recv[2]) == 1):
+            m = recv[1][2]
+            field = self.doc_field(recv[2][0], f"Object.{m} target")
+            if m == "entries" and len(params) == 1 \
+                    and isinstance(params[0], tuple):
+                # destructured pair: function ([k, v]) {…} — k is the
+                # object-entry key, v the value
+                names = params[0][1]
+                if len(names) != 2 or None in names \
+                        or names[0] == names[1]:
+                    raise JSCompileError(
+                        "unsupported entries destructuring"
+                    )
+                binds = {names[0]: ("ekey",),
+                         names[1]: ("elem", field)}
+            else:
+                p = self.one_param(params)
+                binds = {p: ("pair", field) if m == "entries"
+                         else ("ekey",)}
+            self.loop_body("forin", field, binds, body, guards)
+            return
+        field = self.doc_field(recv, "forEach receiver")
+        p = self.one_param(params)
+        self.loop_body("foreach", field, {p: ("elem", field)}, body,
+                       guards)
+
+    def c_for(self, s: Any, guards: list) -> None:
         """``for (var i = 0; i < doc.f.length; i++) { … }`` — the
         pre-ES5 array-emit idiom, compiled to the same posexplode
         shape as ``.forEach()``.  The compiled pattern is strict
         (init 0; bound ``i < doc.f.length`` or ``doc.f.length > i``;
-        step ``i++``/``++i``/``i += 1``/``i = i + 1``; braced body;
-        no index mutation inside) — anything looser raises and runs
-        on the statement interpreter (functions/jsmap.py), which
-        executes arbitrary C-style loops.  Inside the body, bare
-        ``i`` parses as ('epos',) (the posexplode position) and
-        ``doc.f[i]`` as ('elem', f); indexing any OTHER array with
-        ``i`` rejects the compile."""
-        if self._in_loop():
+        step ``i++``/``++i``/``i += 1``/``i = i + 1``; no index
+        mutation inside) — anything looser runs on the statement
+        interpreter, which executes arbitrary C-style loops.  Inside
+        the body, bare ``i`` is ('epos',) (the posexplode position)
+        and ``doc.f[i]`` is ('elem', f); indexing any OTHER array
+        with ``i`` rejects the compile."""
+        self.no_nesting()
+        _tag, init, test, step, body = s
+        if init is not None and init[0] == "var" and len(init[1]) == 1:
+            ivar, start = init[1][0]
+        elif init is not None and init[0] == "assign" \
+                and init[1] == "=" and init[2][0] == "name":
+            ivar, start = init[2][1], init[3]
+        else:
             raise JSCompileError(
-                "nested loops are outside the compiled subset"
+                "for-loops compile only with one index variable; the "
+                "interpreter tier runs other initializers"
             )
-        self._expect("(")
-        if self._peek()[1] in ("var", "let"):
-            self._next()
-        k, ivar, o = self._next()
-        if k != "ident" or ivar in ("doc", "emit", "log"):
-            raise JSCompileError(
-                f"unsupported for-loop index variable at offset {o}"
-            )
-        if self._peek()[1] == "in":
-            # for (var k in doc.f) { … } — object-key enumeration,
-            # compiled to an object-entry explode (jsvariant
-            # forin_object_sql); `k` parses as ('ekey',), `doc.f[k]`
-            # as ('elem', f).  The emit-order soundness condition
-            # (bare `k` must be a key component) is enforced at
-            # lowering, where the emitted keys are visible.
-            self._next()
-            _k2, d, o2 = self._next()
-            if d != "doc":
-                raise JSCompileError(
-                    f"for-in target at offset {o2} is not a doc "
-                    "field; the interpreter tier runs it"
-                )
-            parts = self._field_path(o2)
-            if not parts:
-                raise JSCompileError(
-                    "for-in over the whole doc is outside the "
-                    "compiled subset; the interpreter tier runs it"
-                )
-            field = ".".join(parts)
-            self._expect(")")
-            self._expect("{")
-            serial = self._foreach_serial
-            self._foreach_serial += 1
-            self._inkey = (ivar, field, serial)
-            try:
-                self._scoped_stmts(
-                    emits, guards + [("forin", field, serial)],
-                    end="}",
-                )
-            finally:
-                self._inkey = None
-            self._eat(";")
-            return
-        self._expect("=")
-        k, z, o = self._next()
-        if k != "num" or float(z) != 0:
+        if start is None or start[0] != "lit" \
+                or type(start[1]) is not float or start[1] != 0:
             raise JSCompileError(
                 "for-loops must start at index 0 to compile; the "
                 "interpreter tier runs other bounds"
             )
-        self._expect(";")
-        k, t, o = self._peek()
-        if t == ivar:  # i < doc.f.length
-            self._next()
-            self._expect("<")
-            k2, d, o2 = self._next()
-            if d != "doc":
-                raise JSCompileError(
-                    f"for-loop bound at offset {o2} is not a doc "
-                    "array length; the interpreter tier runs it"
-                )
-            parts = self._field_path(o2)
-        elif t == "doc":  # doc.f.length > i
-            self._next()
-            parts = self._field_path(o)
-            self._expect(">")
-            k2, v2, o2 = self._next()
-            if v2 != ivar:
-                raise JSCompileError(
-                    f"for-loop bound at offset {o2} does not test "
-                    "the loop index; the interpreter tier runs it"
-                )
-        else:
+        i = ("name", ivar)
+        bound = None
+        if test is not None and test[0] == "bin":
+            if test[1] == "<" and test[2] == i:
+                bound = test[3]
+            elif test[1] == ">" and test[3] == i:
+                bound = test[2]
+        parts = self.doc_path(bound) if bound is not None else None
+        if not parts or len(parts) < 2 or parts[-1] != "length":
             raise JSCompileError(
-                f"for-loop bound at offset {o} is outside the "
-                "compiled subset (i < doc.f.length only)"
-            )
-        if len(parts) < 2 or parts[-1] != "length":
-            raise JSCompileError(
-                "for-loop bounds must be doc.<field>.length to "
+                "for-loop bounds must be i < doc.<field>.length to "
                 "compile; the interpreter tier runs other bounds"
             )
-        field = ".".join(parts[:-1])
-        self._expect(";")
-        nxt = [self.toks[self.i + j][1]
-               if self.i + j < len(self.toks) else None
-               for j in range(5)]
-        if nxt[:3] == [ivar, "+", "+"] or nxt[:3] == ["+", "+", ivar]:
-            self.i += 3
-        elif nxt[:4] == [ivar, "+", "=", "1"]:
-            self.i += 4
-        elif nxt[:5] == [ivar, "=", ivar, "+", "1"]:
-            self.i += 5
-        else:
+        if step not in (("assign", "+=", i, ("lit", 1.0)),
+                        ("assign", "=", i, ("bin", "+", i, ("lit", 1.0)))):
             raise JSCompileError(
                 "only i++ / ++i / i += 1 / i = i + 1 for-loop steps "
                 "compile; the interpreter tier runs other steps"
             )
-        self._expect(")")
-        self._expect("{")
-        serial = self._foreach_serial
-        self._foreach_serial += 1
-        self._idx = (ivar, field, serial)
-        try:
-            self._scoped_stmts(
-                emits, guards + [("forloop", field, serial)], end="}"
-            )
-        finally:
-            self._idx = None
-        self._eat(";")
+        self.loop_body("forloop", ".".join(parts[:-1]),
+                       {ivar: ("epos",)}, body, guards)
 
-    def _cond(self) -> Any:
-        left = self._and()
-        while self._eat("||"):
-            left = ("or", left, self._and())
-        return left
-
-    def _and(self) -> Any:
-        left = self._cmp()
-        while self._eat("&&"):
-            left = ("and", left, self._cmp())
-        return left
-
-    def _cmp(self) -> Any:
-        if self._eat("!"):
-            return ("not", self._cmp())
-        if self._eat("("):
-            c = self._cond()
-            self._expect(")")
-            return c
-        left = self._add_expr()
-        if self._peek()[1] in ("===", "==", "!==", "!=", "<=", ">=",
-                               "<", ">"):
-            op = self._next()[1]
-            return ("cmp", op, left, self._add_expr())
-        return ("truthy", left)
-
-    def _expr(self) -> Any:
-        """Value expression, with the JS conditional operator: first
-        tries ``<condition> ? <expr> : <expr>`` (backtracking when no
-        ``?`` follows — conditions and value expressions share their
-        additive prefix).  Comparison OPERANDS parse via ``_add_expr``
-        to keep the grammar finite; nested/chained ternaries associate
-        right like JS."""
-        save = self.i
-        try:
-            cond = self._cond()
-            if self._at("?"):
-                self._next()
-                t = self._expr()
-                self._expect(":")
-                f = self._expr()
-                return ("ternary", cond, t, f)
-        except JSCompileError:
-            pass
-        self.i = save
-        return self._add_expr()
-
-    def _add_expr(self) -> Any:
-        """Additive expression: primary/method chains joined by
-        ``+``/``-`` over multiplicative ``*``/``/``/``%`` chains."""
-        left = self._mul()
-        while self.i < len(self.toks) and self.toks[self.i][1] in (
-            "+", "-",
-        ):
-            op = self._next()[1]
-            left = ("bin", op, left, self._mul())
-        return left
-
-    def _mul(self) -> Any:
-        left = self._postfix()
-        while self.i < len(self.toks) and self.toks[self.i][1] in (
-            "*", "/", "%",
-        ):
-            op = self._next()[1]
-            left = ("bin", op, left, self._postfix())
-        return left
-
-    def _postfix(self) -> Any:
-        e = self._primary()
-        # method calls on doc fields / computed strings:
-        # .substring/.slice/.toLowerCase/.toUpperCase
-        while (
-            self._at(".")
-            and self.i + 1 < len(self.toks)
-            and self.toks[self.i + 1][0] == "ident"
-            and self.i + 2 < len(self.toks)
-            and self.toks[self.i + 2][1] == "("
-        ):
-            self._next()  # .
-            _k, name, off = self._next()
-            self._next()  # (
-            args = []
-            while not self._eat(")"):
-                args.append(self._expr())
-                self._eat(",")
-            e = ("method", e, name, args)
-        return e
-
-    def _primary(self) -> Any:
-        kind, tok, off = self._next()
-        if kind == "num":
-            return ("lit", float(tok) if "." in tok or "e" in tok.lower()
-                    else int(tok))
-        if tok == "-" and self.i < len(self.toks) \
-                and self.toks[self.i][0] == "num":
-            _k, n, _o = self._next()
-            return ("lit", -(float(n) if "." in n or "e" in n.lower()
-                             else int(n)))
-        if kind == "str":
-            return ("lit", _unquote(tok))
-        if kind == "regex":
-            body, _, flags = tok[1:].rpartition("/")
-            return ("regexlit", body, flags)
-        if kind == "ident":
-            if tok == "null":
-                return ("lit", None)
-            if tok == "true":
-                return ("lit", True)
-            if tok == "false":
-                return ("lit", False)
-            if self._elem is not None and tok == self._elem[0]:
-                # forEach callback parameter: the current array element
-                return ("elem", self._elem[1])
-            if self._idx is not None and tok == self._idx[0]:
-                # for-loop index variable: the posexplode position
-                return ("epos",)
-            if self._inkey is not None and tok == self._inkey[0]:
-                # for-in loop variable: the object-entry key string
-                return ("ekey",)
-            if self._entry is not None and tok == self._entry[0]:
-                # Object.entries pair param: only e[0] (key) and e[1]
-                # (value) are in the subset — the bare pair (an array
-                # value) would need a compiled 2-element array of
-                # mixed provenance, which no ddoc in the corpus uses
-                if not self._at("["):
-                    raise JSCompileError(
-                        f"bare use of the entries pair "
-                        f"{self._entry[0]!r} is outside the compiled "
-                        "subset (only [0]/[1] indexing); the "
-                        "interpreter tier runs it"
-                    )
-                self.i += 1
-                k2, idx, o2 = self._next()
-                if k2 != "num" or float(idx) not in (0.0, 1.0):
-                    raise JSCompileError(
-                        f"entries pair index at offset {o2} must be "
-                        "the literal 0 or 1; the interpreter tier "
-                        "runs it"
-                    )
-                self._expect("]")
-                return (("ekey",) if float(idx) == 0.0
-                        else ("elem", self._entry[1]))
-            if tok in self._aliases:
-                # single-assignment local: substitute the bound node
-                return self._aliases[tok]
-            if tok == "doc":
-                parts = self._field_path(off)
-                if (
-                    self._inkey is not None
-                    and self._at("[")
-                    and self.i + 1 < len(self.toks)
-                    and self.toks[self.i + 1][1] == self._inkey[0]
-                    and self.i + 2 < len(self.toks)
-                    and self.toks[self.i + 2][1] == "]"
-                ):
-                    # doc.f[k] under the compiled for-in: the current
-                    # entry value — only of the object the loop
-                    # enumerates
-                    if ".".join(parts) != self._inkey[1]:
-                        raise JSCompileError(
-                            f"doc.{'.'.join(parts)}"
-                            f"[{self._inkey[0]}] indexes a different "
-                            "object than the for-in target "
-                            f"doc.{self._inkey[1]} — outside the "
-                            "compiled subset; the interpreter tier "
-                            "runs it"
-                        )
-                    self.i += 3
-                    return ("elem", self._inkey[1])
-                if (
-                    self._idx is not None
-                    and self._at("[")
-                    and self.i + 1 < len(self.toks)
-                    and self.toks[self.i + 1][1] == self._idx[0]
-                    and self.i + 2 < len(self.toks)
-                    and self.toks[self.i + 2][1] == "]"
-                ):
-                    # doc.f[i] under the compiled for-loop: the
-                    # current element — only of the array the loop
-                    # is bounded by
-                    if ".".join(parts) != self._idx[1]:
-                        raise JSCompileError(
-                            f"doc.{'.'.join(parts)}[{self._idx[0]}] "
-                            "indexes a different array than the "
-                            f"loop bound doc.{self._idx[1]} — "
-                            "outside the compiled subset; the "
-                            "interpreter tier runs it"
-                        )
-                    self.i += 3
-                    return ("elem", self._idx[1])
-                if len(parts) >= 2 and parts[-1] == "length":
-                    # string length property (JS .length)
-                    return ("strlen", ".".join(parts[:-1]))
-                # nested paths carry as a dotted name: the typed
-                # compiler rejects them (flat parquet columns), the
-                # variant compiler (raw JSON docs) maps them to a
-                # '$.a.b' extraction path
-                return ("doc", ".".join(parts))
-            if tok == "new":
-                # compiled subset: new Date(doc.<tsfield>) followed by
-                # a getter call (handled in computed()).  Any other
-                # constructor/argument shape interprets.
-                _k2, ctor, coff = self._next()
-                if ctor != "Date" or not self._eat("("):
-                    raise JSCompileError(
-                        f"only new Date(doc.<field>) is compilable "
-                        f"(at offset {coff}); the interpreter tier "
-                        "runs other constructors"
-                    )
-                arg = self._expr()
-                self._expect(")")
-                if arg[0] != "doc":
-                    raise JSCompileError(
-                        "new Date() over a computed argument is "
-                        "outside the compiled subset; the "
-                        "interpreter tier runs it"
-                    )
-                return ("newdate", arg[1])
-            if tok == "Math" and self._at("."):
-                self._next()
-                _k, name, noff = self._next()
-                if _k != "ident" or not self._eat("("):
-                    raise JSCompileError(
-                        f"expected Math.<fn>(…) at offset {noff}"
-                    )
-                args = []
-                while not self._eat(")"):
-                    args.append(self._expr())
-                    self._eat(",")
-                return ("math", name, args)
+    def no_nesting(self) -> None:
+        if self.loop is not None:
             raise JSCompileError(
-                f"unsupported identifier {tok!r} at offset {off} (only "
-                "'doc' field references, Math.<fn>() calls and literals "
-                "are compilable)"
+                "nested loops are outside the compiled subset"
             )
-        if tok == "(":
-            e = self._expr()
-            self._expect(")")
-            return e
-        if tok == "[":
-            items = []
-            while not self._eat("]"):
-                items.append(self._expr())
-                self._eat(",")
-            return ("arr", items)
-        if tok == "{":
-            obj = {}
-            while not self._eat("}"):
-                kkind, ktok, koff = self._next()
-                if kkind == "str":
-                    ktok = _unquote(ktok)
-                elif kkind != "ident":
-                    raise JSCompileError(
-                        f"unsupported object key {ktok!r} at {koff}"
-                    )
-                self._expect(":")
-                obj[ktok] = self._expr()
-                self._eat(",")
-            return ("obj", obj)
-        raise JSCompileError(
-            f"unsupported expression {tok!r} at offset {off}"
-        )
 
-    def _field_path(self, off: int) -> str:
-        parts = []
-        while True:
-            if self._at(".") and not (
-                self.i + 1 < len(self.toks)
-                and self.toks[self.i + 1][0] == "ident"
-                and self.i + 2 < len(self.toks)
-                and self.toks[self.i + 2][1] == "("
-            ):
-                self._next()
-                kind, tok, _ = self._next()
-                if kind != "ident":
-                    raise JSCompileError(
-                        f"expected field name after 'doc.' at {off}"
-                    )
-                parts.append(tok)
-            elif self._at("["):
-                save = self.i
-                self._next()
-                kind, tok, _ = self._next()
-                if kind == "str" and self._eat("]"):
-                    parts.append(_unquote(tok))
-                else:  # doc[expr] — not a static field ref; rewind
-                    self.i = save
-                    break
+    def loop_body(self, mark: str, field: str, binds: dict, body: list,
+                  guards: list) -> None:
+        for name in binds:
+            self.bindable(name)
+        self.loop = (mark, field, self.serial)
+        self.serial += 1
+        saved = self.scope
+        self.scope = {**saved, **binds}
+        try:
+            self.stmts(body, guards + [self.loop])
+        finally:
+            self.loop = None
+            self.scope = saved
+
+    def bindable(self, name: Any) -> None:
+        if not isinstance(name, str) \
+                or name in (self.doc, "emit", "log"):
+            raise JSCompileError(
+                f"binding {name!r} is outside the compiled subset; the "
+                "interpreter tier runs it"
+            )
+
+    @staticmethod
+    def one_param(params: list) -> str:
+        if len(params) != 1 or not isinstance(params[0], str):
+            raise JSCompileError(
+                "forEach callbacks with index/array parameters are "
+                "outside the compiled subset"
+            )
+        return params[0]
+
+    # -- expressions ----------------------------------------------------
+    def doc_path(self, e: Any) -> list[str] | None:
+        """``doc.a["b"].c`` → ['a', 'b', 'c'] (``[]`` for bare doc);
+        None when ``e`` is not a static doc path."""
+        parts: list[str] = []
+        while e[0] in ("member", "index"):
+            if e[0] == "member":
+                parts.append(e[2])
+            elif e[2][0] == "lit" and isinstance(e[2][1], str):
+                parts.append(e[2][1])
             else:
-                break
+                return None
+            e = e[1]
+        return parts[::-1] if e == ("name", self.doc) else None
+
+    def doc_field(self, e: Any, what: str) -> str:
+        parts = self.doc_path(e)
         if not parts:
             raise JSCompileError(
-                f"bare 'doc' reference at offset {off} is not compilable"
+                f"{what} is not a doc field; the interpreter tier "
+                "runs it"
             )
-        return parts
+        return ".".join(parts)
+
+    def cond(self, e: Any) -> Any:
+        if e[0] == "bin" and e[1] in ("&&", "||"):
+            return ("and" if e[1] == "&&" else "or",
+                    self.cond(e[2]), self.cond(e[3]))
+        if e[0] == "un" and e[1] == "!":
+            return ("not", self.cond(e[2]))
+        if e[0] == "bin" and e[1] in _CMP_OPS:
+            return ("cmp", e[1], self.expr(e[2]), self.expr(e[3]))
+        return ("truthy", self.expr(e))
+
+    def expr(self, e: Any) -> Any:
+        tag = e[0]
+        if (tag == "lit" and e[1] is not _UNDEF) or tag == "regexlit":
+            return e
+        if tag == "un" and e[1] == "-" and e[2][0] == "lit" \
+                and type(e[2][1]) is float:
+            return ("lit", -e[2][1])
+        if tag == "name":
+            node = self.scope.get(e[1])
+            if node is None or node[0] == "pair":
+                raise JSCompileError(
+                    f"identifier {e[1]!r} is outside the compiled "
+                    "subset (doc field references, loop variables, "
+                    "single-assignment locals, Math.<fn>() calls and "
+                    "literals compile)"
+                )
+            return node
+        if tag in ("member", "index"):
+            return self.access(e)
+        if tag == "call" and e[1][0] == "member":
+            recv, name = e[1][1], e[1][2]
+            args = [self.expr(a) for a in e[2]]
+            if recv == ("name", "Math") and "Math" not in self.scope:
+                return ("math", name, args)
+            return ("method", self.expr(recv), name, args)
+        if tag == "new" and e[1] == "Date" and len(e[2]) == 1:
+            # new Date(doc.<tsfield>) followed by a getter call
+            # (compiled by _Compiler._date_getter)
+            arg = self.expr(e[2][0])
+            if arg[0] == "doc":
+                return ("newdate", arg[1])
+        if tag == "arr":
+            return ("arr", [self.expr(a) for a in e[1]])
+        if tag == "obj":
+            return ("obj", {k: self.expr(v) for k, v in e[1].items()})
+        if tag == "ternary":
+            return ("ternary", self.cond(e[1]), self.expr(e[2]),
+                    self.expr(e[3]))
+        if tag == "bin" and e[1] in ("+", "-", "*", "/", "%"):
+            return ("bin", e[1], self.expr(e[2]), self.expr(e[3]))
+        raise JSCompileError(
+            f"unsupported {tag!r} expression — outside the compiled "
+            "subset; the interpreter tier runs it"
+        )
+
+    def access(self, e: Any) -> Any:
+        """Member/index access: a static doc path (``.length`` on it
+        is the string length), ``doc.f[i]`` / ``doc.f[k]`` (the
+        current element of the loop's own array/object) or an
+        Object.entries pair's ``e[0]`` / ``e[1]``."""
+        parts = self.doc_path(e)
+        if parts:
+            if len(parts) >= 2 and parts[-1] == "length":
+                return ("strlen", ".".join(parts[:-1]))
+            # nested paths carry as a dotted name: the typed compiler
+            # rejects them (flat parquet columns), the variant
+            # compiler (raw JSON docs) maps them to a '$.a.b' path
+            return ("doc", ".".join(parts))
+        if e[0] == "index":
+            base, idx = e[1], e[2]
+            bound = self.scope.get(idx[1]) if idx[0] == "name" else None
+            base_path = self.doc_path(base)
+            if bound in (("epos",), ("ekey",)) and base_path:
+                field = ".".join(base_path)
+                if field != self.loop[1]:
+                    raise JSCompileError(
+                        f"doc.{field}[{idx[1]}] indexes a different "
+                        f"array/object than the loop's doc.{self.loop[1]}"
+                        " — outside the compiled subset; the "
+                        "interpreter tier runs it"
+                    )
+                return ("elem", field)
+            pair = (self.scope.get(base[1]) if base[0] == "name"
+                    else None)
+            if pair is not None and pair[0] == "pair" \
+                    and idx[0] == "lit" and type(idx[1]) is float \
+                    and idx[1] in (0.0, 1.0):
+                return ("ekey",) if idx[1] == 0 else ("elem", pair[1])
+        raise JSCompileError(
+            "member access outside a static doc path (or the loop's "
+            "own element) is outside the compiled subset; the "
+            "interpreter tier runs it"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -2003,10 +1550,16 @@ class _Compiler:
         )
 
 
-def compile_js_map(source: str, table: str, schema,
+def compile_js_map(source: str, table: str, schema) -> Any:
+    """JS map-function source → MapSpec (or list of MapSpecs) over a
+    typed table: :func:`parse_js_map`, then :func:`compile_map_ir`."""
+    return compile_map_ir(parse_js_map(source), table, schema)
+
+
+def compile_map_ir(emits: list, table: str, schema,
                    variant_types: dict[str, str] | None = None,
                    variant_iso: set[str] | None = None) -> Any:
-    """JS map-function source → MapSpec (or list of MapSpecs).
+    """Emit IR (:func:`lower_js_map`) → MapSpec (or list of MapSpecs).
 
     ``schema``: the RAW table schema (``load_table(...).schema``) —
     field kinds (str/num/iso/bool) are inferred from it, mirroring the
@@ -2020,7 +1573,6 @@ def compile_js_map(source: str, table: str, schema,
     """
     from mapreduce_spark.operators.mapphase import MapSpec
 
-    emits = _Parser(source).parse()
     if not emits:
         raise JSCompileError(
             "map function contains no emit() call — a view with no "
@@ -2406,6 +1958,33 @@ def _js_eq(a: Any, b: Any) -> bool:
     if isinstance(a, str) and isinstance(b, str):
         return a == b
     return a is b  # non-primitives: JS reference equality
+
+
+def _js_loose_eq(a: Any, b: Any) -> bool:
+    """Abstract equality (==) over the subset's value space: null and
+    undefined equal each other and nothing else; booleans, and
+    strings compared with numbers, go through ToNumber; an object
+    compared with a primitive goes through ToPrimitive (its string
+    form); two objects compare by reference."""
+    a_nullish = a is None or a is _UNDEF
+    b_nullish = b is None or b is _UNDEF
+    if a_nullish or b_nullish:
+        return a_nullish and b_nullish
+    if isinstance(a, bool):
+        a = 1.0 if a else 0.0
+    if isinstance(b, bool):
+        b = 1.0 if b else 0.0
+    a_obj = not isinstance(a, (int, float, str))
+    b_obj = not isinstance(b, (int, float, str))
+    if a_obj and b_obj:
+        return a is b
+    if a_obj:
+        a = _js_str(a)
+    if b_obj:
+        b = _js_str(b)
+    if isinstance(a, str) and isinstance(b, str):
+        return a == b
+    return _js_num(a) == _js_num(b)
 
 
 def _js_rel(op: str, a: Any, b: Any) -> bool:

@@ -2,22 +2,26 @@
 
 Upstream evaluates a design doc's map source as arbitrary JavaScript
 (``[U pouchdb-abstract-mapreduce#evalFunc]``, SURVEY.md §2 F1).  This
-engine runs two tiers, fastest first:
+engine parses every map source with one front end, the statement
+parser ``jsreduce._Parser``, and runs it on one of two tiers, fastest
+first:
 
-1. ``jscompile.compile_js_map`` — the structural compiler: common map
-   shapes become typed MapSpecs executed entirely JVM-side (guards
-   pushed into the parquet scan); on raw doc sources the same subset
-   compiles to drift-guarded Variant expressions
+1. ``jscompile.compile_js_map`` — the structural compiler: it lowers
+   the parsed AST to an emit IR (``jscompile.lower_js_map``) and
+   compiles common map shapes to typed MapSpecs executed entirely
+   JVM-side (guards pushed into the parquet scan); on raw doc sources
+   the same IR compiles to drift-guarded Variant expressions
    (``jsvariant.compile_js_map_variant``).
 2. **This module** — the statement-level interpreter shared with
-   ``jsreduce`` (var/let, if/else, C-style for, assignments, function
-   literals with closure capture, arithmetic incl. ``/`` and ``%``,
-   string/array/Math/JSON/parseInt builtins, and a deterministic JS
-   ``Date`` — ``new Date(value)``, UTC-pinned getters,
-   ``Date.parse``/``Date.UTC``; see functions/jsdate.py).  Anything
-   the compiler rejects — ``.split()``, loops, accumulator objects,
-   date bucketing — runs here over Arrow-batched doc dicts, on ANY
-   table (typed or raw); ``jscompile.compile_js_map_fn`` builds it.
+   ``jsreduce`` (var/let/const, if/else, C-style for, assignments,
+   function literals with closure capture, arithmetic incl. ``/`` and
+   ``%``, string/array/Math/JSON/parseInt builtins, and a
+   deterministic JS ``Date`` — ``new Date(value)``, UTC-pinned
+   getters, ``Date.parse``/``Date.UTC``; see functions/jsdate.py).
+   Anything the lowering or the compiler rejects — ``.split()``,
+   reassigned variables, nested loops, accumulator objects, date
+   bucketing — runs here over Arrow-batched doc dicts, on ANY table
+   (typed or raw); ``jscompile.compile_js_map_fn`` builds it.
    Out-of-subset constructs still raise loud
    :class:`~mapreduce_spark.functions.jsreduce.JSReduceError` rather
    than silently mis-indexing.

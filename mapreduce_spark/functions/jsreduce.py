@@ -29,7 +29,8 @@ This module closes that parity gap Spark-first, in two tiers:
    through ``reduce_custom``'s true partial/final (rereduce) phases,
    Arrow-batched, one call per group per phase.
 
-Interpreted subset (statements): ``var``/``let`` declarations,
+Interpreted subset (statements): ``var``/``let``/``const``
+declarations,
 assignment (``= += -= *= /=`` and ``++``/``--`` on variables, object
 members and array elements), ``if``/``else``, C-style ``for`` loops,
 ``return``, expression statements.  Expressions: literals, array and
@@ -40,7 +41,8 @@ builtin helper ``sum()`` and to
 ``Math.min/max/abs/floor/ceil/round/sqrt/pow`` (including the
 ``Math.max.apply(null, values)`` variadic-over-array idiom),
 arithmetic (JS-coercing ``+`` with string concat), comparisons
-(strict and loose), ``&&``/``||``/``!``, ternary ``?:``.  Anything
+(strict, and loose with ES abstract equality), ``&&``/``||``/``!``,
+ternary ``?:``.  Anything
 outside raises
 :class:`JSReduceError` naming the construct — express that reduce as a
 Python callable instead (the documented fallback, same contract as the
@@ -59,11 +61,11 @@ from mapreduce_spark.functions.jscompile import (
     _de_undef,
     _js_add,
     _js_eq,
+    _js_loose_eq,
     _js_num,
     _js_rel,
     _js_str,
     _truthy,
-    _unquote,
 )
 from mapreduce_spark.functions.jsdate import (
     JSDate,
@@ -165,6 +167,41 @@ def _lex_regex(src: str, pos: int) -> tuple[str, int]:
     )
 
 
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "f": "\f",
+            "v": "\v", "0": "\0"}
+
+
+def _unquote(tok: str) -> str:
+    """Decode a JS string literal: standard escapes (\\n, \\t, \\r,
+    \\b, \\f, \\v, \\0, \\uXXXX, \\xNN) decode to their characters;
+    any other escaped character (\\\\, \\', \\", \\/ …) is itself."""
+    body = tok[1:-1]
+    out: list[str] = []
+    i = 0
+    try:
+        while i < len(body):
+            c = body[i]
+            if c != "\\":
+                out.append(c)
+                i += 1
+                continue
+            e = body[i + 1]  # tokenizer guarantees a char after '\'
+            if e == "u":
+                out.append(chr(int(body[i + 2:i + 6], 16)))
+                i += 6
+            elif e == "x":
+                out.append(chr(int(body[i + 2:i + 4], 16)))
+                i += 4
+            else:
+                out.append(_ESCAPES.get(e, e))
+                i += 2
+    except (ValueError, IndexError):
+        raise JSReduceError(
+            f"malformed escape sequence in string literal {tok}"
+        ) from None
+    return "".join(out)
+
+
 def _tokenize(src: str) -> list[tuple[str, str, int]]:
     out, pos = [], 0
     while pos < len(src):
@@ -189,7 +226,10 @@ def _tokenize(src: str) -> list[tuple[str, str, int]]:
 
 
 # ---------------------------------------------------------------------------
-# Parser: reduce-fn source → statement AST
+# Parser: map- and reduce-fn source → statement AST — the one JS front
+# end: the interpreter runs this AST for reduces and interpreted maps,
+# lower_js_reduce lowers it to builtin reduces and jscompile.lower_js_map
+# to the compiled map tiers' emit IR
 #
 # AST nodes (plain tuples, picklable):
 #   stmts:  ('var', [(name, expr|None)…]) | ('return', expr|None)
@@ -309,7 +349,7 @@ class _Parser:
     # -- statements -----------------------------------------------------
     def _stmt(self) -> Any:
         kind, tok, off = self._peek()
-        if tok in ("var", "let"):
+        if tok in ("var", "let", "const"):
             self._next()
             s = ("var", self._var_decls())
             self._eat(";")
@@ -430,7 +470,7 @@ class _Parser:
             # keys in insertion order / array index strings (JS `in`
             # is a reserved word, so the lookahead is unambiguous)
             save = self.i
-            if self._at("var") or self._at("let"):
+            if self._peek()[1] in ("var", "let", "const"):
                 self._next()
             if (
                 self.i + 1 < len(self.toks)
@@ -1435,10 +1475,14 @@ def _eval(e: Any, env: dict) -> Any:
             return _js_div(a, b)
         if op == "%":
             return _js_mod(a, b)
-        if op in ("===", "=="):
+        if op == "===":
             return _js_eq(a, b)
-        if op in ("!==", "!="):
+        if op == "!==":
             return not _js_eq(a, b)
+        if op == "==":
+            return _js_loose_eq(a, b)
+        if op == "!=":
+            return not _js_loose_eq(a, b)
         return _js_rel(op, a, b)
     if tag == "un":
         op, v = e[1], _eval(e[2], env)

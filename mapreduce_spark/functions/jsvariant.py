@@ -50,10 +50,7 @@ import re
 from dataclasses import dataclass
 from typing import Any
 
-from mapreduce_spark.functions.jscompile import (
-    JSCompileError,
-    _Parser,
-)
+from mapreduce_spark.functions.jscompile import JSCompileError
 
 SAMPLE_DOCS = 10_000
 
@@ -359,38 +356,34 @@ ISO_RE = ("^[0-9]{4}-[0-9]{2}-[0-9]{2}"
           "(T[0-9]{2}:[0-9]{2}:[0-9]{2}([.][0-9]{1,6})?Z?)?$")
 
 
-def date_consumed_fields(source: str) -> list[str]:
-    """Doc fields consumed by ``new Date(doc.f)`` in a subset-parsable
-    source (empty when none / unparsable)."""
-    try:
-        emits = _Parser(source).parse()
-    except JSCompileError:
-        return []
-    out: list[str] = []
-
-    def walk(ast: Any) -> None:
-        if not isinstance(ast, tuple):
-            return
-        if ast[0] == "newdate" and isinstance(ast[1], str):
-            if ast[1] not in out:
-                out.append(ast[1])
-            return
-        for a in ast[1:]:
-            if isinstance(a, tuple):
-                walk(a)
-            elif isinstance(a, list):
-                for x in a:
-                    walk(x)
-            elif isinstance(a, dict):
-                for x in a.values():
-                    walk(x)
+def _ir_nodes(emits: list):
+    """Every node of an emit IR (jscompile.lower_js_map) — guards and
+    loop markers, keys, values — depth first, in source order."""
+    def walk(a: Any):
+        if isinstance(a, tuple):
+            yield a
+            for x in a[1:]:
+                yield from walk(x)
+        elif isinstance(a, list):
+            for x in a:
+                yield from walk(x)
+        elif isinstance(a, dict):
+            for x in a.values():
+                yield from walk(x)
 
     for guards, key_ast, value_ast in emits:
-        for g in guards:
-            walk(g)
-        walk(key_ast)
-        walk(value_ast)
-    return out
+        yield from walk([*guards, key_ast, value_ast])
+
+
+def _fields_tagged(emits: list, tags: tuple[str, ...]) -> list[str]:
+    return list(dict.fromkeys(
+        n[1] for n in _ir_nodes(emits) if n[0] in tags
+    ))
+
+
+def date_consumed_fields(emits: list) -> list[str]:
+    """Doc fields consumed by ``new Date(doc.f)`` in an emit IR."""
+    return _fields_tagged(emits, ("newdate",))
 
 
 def iso_string_fields(df, fields: list[str]) -> set[str]:
@@ -438,102 +431,29 @@ def _body_notnull(df):
     return df.filter(F.col(col).isNotNull())
 
 
-def referenced_doc_fields(source: str) -> list[str] | None:
-    """Top-level doc fields a subset-parsable JS map source references,
-    or None when the source is outside the subset grammar."""
-    try:
-        emits = _Parser(source).parse()
-    except JSCompileError:
-        return None
-    fields: list[str] = []
-
-    def walk(ast: Any) -> None:
-        if not isinstance(ast, tuple):
-            return
-        tag = ast[0]
-        if tag in ("doc", "strlen", "newdate"):
-            if isinstance(ast[1], str) and ast[1] not in fields:
-                fields.append(ast[1])
-            return
-        for a in ast[1:]:
-            if isinstance(a, tuple):
-                walk(a)
-            elif isinstance(a, list):
-                for x in a:
-                    walk(x)
-            elif isinstance(a, dict):
-                for x in a.values():
-                    walk(x)
-
-    for guards, key_ast, value_ast in emits:
-        for g in guards:
-            walk(g)
-        walk(key_ast)
-        walk(value_ast)
+def referenced_doc_fields(emits: list) -> list[str] | None:
+    """Doc fields an emit IR references outside loop receivers, or
+    None when it has no emits."""
     if not emits:
         return None
-    return fields
+    return _fields_tagged(emits, ("doc", "strlen", "newdate"))
 
 
-def foreach_fields(source: str) -> list[str]:
-    """Doc fields consumed as forEach receivers (array-emit views) in
-    a subset-parsable source — marked ('foreach', field, serial) in
-    the emit guard lists.  Empty when none / unparsable."""
-    try:
-        emits = _Parser(source).parse()
-    except JSCompileError:
-        return []
-    out: list[str] = []
-    for guards, _k, _v in emits:
-        for g in guards:
-            if isinstance(g, tuple) \
-                    and g[0] in ("foreach", "forloop") \
-                    and g[1] not in out:
-                out.append(g[1])
-    return out
+def foreach_fields(emits: list) -> list[str]:
+    """Doc fields consumed as forEach / C-style for receivers
+    (array-emit views) — marked ('foreach'|'forloop', field, serial)
+    in the emit guard lists."""
+    return _fields_tagged(emits, ("foreach", "forloop"))
 
 
-def forin_fields(source: str) -> tuple[list[str], set[str]]:
+def forin_fields(emits: list) -> tuple[list[str], set[str]]:
     """Doc fields consumed as for-in receivers — marked
     ('forin', field, serial) in the emit guard lists — plus the
     subset whose entry VALUES the source reads (``doc.f[k]``,
-    parsed as ('elem', field) nodes).  ``([], set())`` when none or
-    unparsable."""
-    try:
-        emits = _Parser(source).parse()
-    except JSCompileError:
-        return [], set()
-    fields: list[str] = []
-    for guards, _k, _v in emits:
-        for g in guards:
-            if isinstance(g, tuple) and g[0] == "forin" \
-                    and g[1] not in fields:
-                fields.append(g[1])
-    want = set(fields)
-    read: set[str] = set()
-
-    def walk(ast: Any) -> None:
-        if not isinstance(ast, tuple):
-            return
-        if ast[0] == "elem" and isinstance(ast[1], str) \
-                and ast[1] in want:
-            read.add(ast[1])
-            return
-        for a in ast[1:]:
-            if isinstance(a, tuple):
-                walk(a)
-            elif isinstance(a, list):
-                for x in a:
-                    walk(x)
-            elif isinstance(a, dict):
-                for x in a.values():
-                    walk(x)
-
-    for guards, key_ast, value_ast in emits:
-        for g in guards:
-            walk(g)
-        walk(key_ast)
-        walk(value_ast)
+    lowered to ('elem', field) nodes)."""
+    fields = _fields_tagged(emits, ("forin",))
+    read = {n[1] for n in _ir_nodes(emits)
+            if n[0] == "elem" and n[1] in fields}
     return fields, read
 
 
@@ -630,21 +550,28 @@ def compile_js_map_variant(spark, sf_dir: str, table: str,
                            source: str) -> VariantJSView:
     """JS raw-source map fn → VariantJSView (or JSCompileError).
 
-    Orchestrates: parse → sampled inference → compile (jscompile
-    subset with variant field extraction) → sample validation build.
-    Any miss raises JSCompileError so the caller falls back to the
-    interpreter tier."""
-    from mapreduce_spark.functions.jscompile import compile_js_map
+    Orchestrates: one parse (shared with the interpreter tier this
+    view falls back to) → lowering → sampled inference → compile
+    (jscompile subset with variant field extraction) → sample
+    validation build.  Any miss raises JSCompileError so the caller
+    falls back to the interpreter tier."""
+    from mapreduce_spark.functions.jscompile import (
+        compile_js_map_fn,
+        compile_map_ir,
+        lower_js_map,
+    )
     from mapreduce_spark.operators.mapphase import (
         build_view_structured_on,
     )
     from mapreduce_spark.sources.docs import load_table
 
-    fields = referenced_doc_fields(source)
+    interp = compile_js_map_fn(source)
+    emits = lower_js_map(interp.params, interp.body)
+    fields = referenced_doc_fields(emits)
     if fields is None:
-        raise JSCompileError("source is outside the subset grammar")
-    arr_fields = foreach_fields(source)
-    obj_fields, obj_value_read = forin_fields(source)
+        raise JSCompileError("map function contains no emit() call")
+    arr_fields = foreach_fields(emits)
+    obj_fields, obj_value_read = forin_fields(emits)
     df = load_table(spark, sf_dir, table)
     if "doc_json" not in df.columns and "doc_var" not in df.columns:
         raise JSCompileError(
@@ -659,11 +586,11 @@ def compile_js_map_variant(spark, sf_dir: str, table: str,
             "structured / absent)"
         )
     date_fields = [
-        f for f in date_consumed_fields(source)
+        f for f in date_consumed_fields(emits)
         if kinds.get(f) == "str"
     ]
     iso_ok = iso_string_fields(df, date_fields)
-    specs = compile_js_map(source, table, None, variant_types=kinds,
+    specs = compile_map_ir(emits, table, None, variant_types=kinds,
                            variant_iso=iso_ok)
     # validation build over the same bounded sample: evaluates every
     # compiled expression (noop sink reads all columns), so a sparse
@@ -687,12 +614,8 @@ def compile_js_map_variant(spark, sf_dir: str, table: str,
                 "this source"
             )
         raise
-    from mapreduce_spark.functions.jscompile import compile_js_map_fn
-
-    return VariantJSView(
-        table, source, specs,
-        fallback_repr=repr((table, compile_js_map_fn(source))),
-    )
+    return VariantJSView(table, source, specs,
+                         fallback_repr=repr((table, interp)))
 
 
 def is_drift_error(exc: BaseException) -> bool:

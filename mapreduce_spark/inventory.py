@@ -374,8 +374,8 @@ def _raw_source_env(spark: SparkSession, sf_dir: str) -> "Engine":
     register_table(raw_doc_table("rawdocs_v"))
     eng = Engine(spark, sf2, tempfile.mkdtemp(prefix="rawv-"))
     # two tiers of the SAME semantics, both value-checked by q31:
-    # by_lang pins the INTERPRETER (the `var` statement is outside the
-    # subset grammar — the arbitrary-JS witness), by_lang_c the
+    # by_lang pins the INTERPRETER (an assignment is outside the
+    # compiled subset — the arbitrary-JS witness), by_lang_c the
     # VARIANT-COMPILED tier (functions/jsvariant.py: pure-JVM build,
     # the 100 TB raw-source path)
     # the alias MUTATION keeps this source on the statement
@@ -916,9 +916,9 @@ class Inventory:
         export, registered via register_table(raw_doc_table(…)),
         queried through BOTH raw-JS tiers as PERSISTED ddoc views —
         the full PouchDB-switchover path under the driver's value-hash
-        check.  Row tag 'i' is the INTERPRETED tier (a `var`-bearing
-        source, outside the subset grammar — the arbitrary-JS
-        witness); tag 'c' is the VARIANT-COMPILED tier
+        check.  Row tag 'i' is the INTERPRETED tier (a source that
+        reassigns a variable, outside the compiled subset — the
+        arbitrary-JS witness); tag 'c' is the VARIANT-COMPILED tier
         (functions/jsvariant.py: drift-guarded parse_json/variant_get
         expressions, zero Python in the build plan — the 100 TB
         path); tag 'v' (round 12) is the same compiled source over a

@@ -1248,3 +1248,44 @@ def test_nan_guard_semantics_match_interpreter(spark, tmp_path):
         assert r == 1e30
     finally:
         TABLES.pop("nantab", None)
+
+
+# (source, lands on the MapSpec tier, DuckDB predicate selecting the
+# docs JS emits for): `!` binds tighter than `<`/`==`, the doc is the
+# first parameter whatever its name, and `doc` unbound throws per doc
+_TIERS_AGREE = [
+    ("function(doc) { if (!doc.l_discount < 1) "
+     "emit(doc.l_returnflag, 1); }", False, "l_discount <> 0"),
+    ("function(doc) { if (!doc.l_discount == 1) "
+     "emit(doc.l_returnflag, 1); }", False, "l_discount = 0"),
+    ("function (x) { emit(doc.l_returnflag, 1); }", False, "false"),
+    ("function (d) { emit(d.l_returnflag, 1); }", True, "true"),
+    ("function(doc) { if ((doc.l_discount + 1) > 1.05) "
+     "emit(doc.l_returnflag, 1); }", True, "l_discount + 1 > 1.05"),
+]
+
+
+@pytest.mark.parametrize(
+    "src, compiled, where", _TIERS_AGREE,
+    ids=["not_lt", "not_eq", "unbound_doc", "param_d", "paren_arith"],
+)
+def test_routed_tier_answers_like_interpreter(spark, sf_dir, tmp_path,
+                                              duck, src, compiled,
+                                              where):
+    """The tier a JS view is routed to emits the same rows as the
+    statement interpreter, and as many as JS would."""
+    from mapreduce_spark.functions.jscompile import compile_js_map_fn
+
+    eng = Engine(spark, sf_dir, str(tmp_path))
+    assert isinstance(eng._normalize_map(("lineitem", src)),
+                      MapSpec) == compiled
+
+    def rows(fun):
+        return sorted((r["key"], r["id"], r["value"])
+                      for r in eng.query(fun, reduce=False).rows())
+
+    got = rows(("lineitem", src))
+    assert got == rows(("lineitem", compile_js_map_fn(src)))
+    assert len(got) == duck.execute(
+        f"SELECT count(*) FROM lineitem WHERE {where}"
+    ).fetchone()[0]

@@ -54,6 +54,12 @@ def test_interpreter_loop_accumulator():
         ("t", 7.0)
     ]
     assert run_map(src, {"tag": "t", "vals": [1.0]}) == []
+    # const declares like var (it parsed as a bare `const` name that
+    # threw, skipping every doc)
+    src = src.replace("var total = 0", "const zero = 0; var total = zero")
+    assert run_map(src, {"tag": "t", "vals": [4.0, 2.0]}) == [
+        ("t", 6.0)
+    ]
 
 
 def test_interpreter_string_methods():
@@ -200,6 +206,66 @@ def test_unparsable_map_source_fails_put_design(spark, sf_dir, tmp_path,
     finally:
         if raw:
             TABLES.pop(table, None)
+
+
+def test_loose_equality_is_abstract_equality():
+    """``==``/``!=`` follow ES abstract equality: null == undefined,
+    numbers, strings and booleans compare through ToNumber, objects by
+    reference (against a primitive, through their string form)."""
+    from mapreduce_spark.functions.jscompile import _UNDEF, _js_loose_eq
+
+    arr = [1.0]
+    for a, b, want in [
+        (None, _UNDEF, True), (None, 0.0, False), (_UNDEF, "", False),
+        ("1", 1.0, True), ("1.0", 1.0, True), ("", 0.0, True),
+        ("x", float("nan"), False), (True, 1.0, True), (True, "1", True),
+        (False, "", True), (arr, arr, True), ([1.0], [1.0], False),
+        ([1.0], "1", True), ({}, "[object Object]", True),
+        (float("nan"), float("nan"), False),
+    ]:
+        assert _js_loose_eq(a, b) is want, (a, b)
+        assert _js_loose_eq(b, a) is want, (b, a)
+    src = ("function(doc) { emit([doc.s == 1, doc.s != 1, "
+           "doc.s === '1', doc.m == null], 1); }")
+    assert run_map(src, {"s": "1"}) == [([True, False, True, True], 1.0)]
+
+
+def test_null_guard_on_raw_docs_matches_js(spark, tmp_path):
+    """The canonical ``doc.z != null`` guard over raw docs where z is a
+    number, JSON null or missing: missing (undefined) == null in JS."""
+    from mapreduce_spark.sources.docs import (
+        TABLES,
+        raw_doc_table,
+        register_table,
+    )
+
+    zs = {"d0": "missing", "d1": 5.0, "d2": None, "d3": 0.0,
+          "d4": "missing", "d5": "missing"}
+    docs = []
+    for i, (did, z) in enumerate(zs.items()):
+        d = {"_id": did, "n": float(i)}
+        if z != "missing":
+            d["z"] = z
+        docs.append((did, i, json.dumps(d)))
+    sf = str(tmp_path / "sf")
+    register_table(raw_doc_table("zdocs"))
+    spark.createDataFrame(
+        docs, "_id string, seq long, doc_json string"
+    ).write.parquet(f"{sf}/zdocs.parquet")
+    try:
+        eng = Engine(spark, sf, str(tmp_path / "views"))
+        eng.put_design("dd", {
+            "ne": {"map": ("zdocs", "function(doc) { if (doc.z != null) "
+                                    "emit(doc._id, 1); }")},
+            "eq": {"map": ("zdocs", "function(doc) { if (doc.z == null) "
+                                    "emit(doc._id, 1); }")},
+        })
+        got = {v: sorted(r["id"] for r in eng.query(f"dd/{v}").rows())
+               for v in ("ne", "eq")}
+        assert got == {"ne": ["d1", "d3"],
+                       "eq": ["d0", "d2", "d4", "d5"]}
+    finally:
+        TABLES.pop("zdocs", None)
 
 
 def test_fallback_is_picklable_and_signature_stable():
@@ -602,8 +668,7 @@ def test_object_keys_values_es_order():
     ]
 
 
-# one source per compile-subset shape: jscompile's parser must accept
-# each, or the inclusion test below checks nothing for that shape
+# one source per compile-subset shape; each lowers to a non-empty emit IR
 _COMPILE_SUBSET_SHAPES = [
     "function(doc) { doc.tags.forEach(function(t) { emit(t, 1); }); }",
     "function(doc) { for (var k in doc.f) { emit(k, doc.f[k]); } }",
@@ -614,37 +679,80 @@ _COMPILE_SUBSET_SHAPES = [
     "function(doc) { if (/^user:/.test(doc._id)) { emit(doc._id, 1); } }",
     "function(doc) { emit(doc.n > 2 ? 'big' : 'small', doc.n); }",
     "function(doc) { log(doc._id); emit(doc.type, null); }",
+    "function(doc) { if (doc.a > 1) { emit('a', 1); } else if "
+    "(!(doc.b === 'x')) emit('b', -1); else { emit('c', -2.5); } }",
+    "function(doc) { for (var i = 0; doc.arr.length > i; i = i + 1) "
+    "{ if (i > 0) emit([doc.arr[i], i], null); } }",
+    "function(doc) { for (let i = 0; i < doc.arr.length; ++i) "
+    "{ emit(i, 1); } }",
+    "function(doc) { for (i = 0; i < doc.arr.length; i += 1) "
+    "{ emit(doc.arr[i]); } }",
+    "function(doc) { Object.entries(doc.f).forEach(function ([k, v]) "
+    "{ emit(k, v); }); }",
+    "function(doc) { Object.entries(doc.f).forEach(function (e) "
+    "{ emit([e[0], e[1]], 1); }); }",
+    "function(doc) { var a = doc.x, b = a + 1; const c = "
+    "doc.s.toLowerCase(); if (b > 2) { let d = c; emit(d, b); } }",
+    "function(doc) { emit(new Date(doc.ts).getUTCFullYear(), "
+    "{_id: doc.ref}); emit(Math.round(doc.n * -2), "
+    "{total: doc.n, count: 1}); }",
+    "function(doc) { if (doc._id.indexOf('user:') === 0 && "
+    "doc.meta.name.length > 3) "
+    "emit(doc['meta']['name'].substring(0, 3), null); }",
+    "function(doc) { if (doc.s.match(/abc/i) !== null || doc.n) "
+    "emit(doc.n ? doc.s : 'none', 1); }",
 ]
 
 
-def test_statement_parser_accepts_every_compile_subset_source():
-    """Every map source jscompile's parser accepts, the statement
-    parser accepts too, so ``compile_js_map_fn`` never needs a second
-    interpreter: over the compile-subset shapes and the Variant-tier
-    fuzz grammar (2 seeds × 250 sources)."""
+def _sha(text: str) -> str:
+    import hashlib
+
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+def _ir_hash(ir) -> str:
+    """Hash of an emit IR's repr, int literals read as floats (the
+    compiler treats them alike)."""
+    def norm(a):
+        if isinstance(a, bool) or not isinstance(
+            a, (int, tuple, list, dict)
+        ):
+            return a
+        if isinstance(a, int):
+            return float(a)
+        if isinstance(a, dict):
+            return {k: norm(v) for k, v in a.items()}
+        return type(a)(norm(v) for v in a)
+
+    return _sha(repr(norm(ir)))
+
+
+def test_map_lowering_matches_ir_golden():
+    """``jscompile.parse_js_map`` (the statement parser plus
+    ``lower_js_map``) yields the same emit IR as the map compiler's
+    former dedicated parser, over the compile-subset shapes and the
+    Variant-tier fuzz grammar (2 seeds × 250 sources).
+    ``tests/jsmap_ir_golden.json`` maps the sha256 prefix of each
+    source to that of the former parser's IR."""
+    import json
+    import os
     import random
 
-    from mapreduce_spark.functions import jscompile, jsreduce
+    from mapreduce_spark.functions.jscompile import parse_js_map
     from tests.test_variant_fuzz import _gen_source
 
-    for src in _COMPILE_SUBSET_SHAPES:
-        assert jscompile._Parser(src).parse(), src
-    fuzz = []
+    with open(os.path.join(os.path.dirname(__file__),
+                           "jsmap_ir_golden.json")) as f:
+        golden = json.load(f)
+    srcs = list(_COMPILE_SUBSET_SHAPES)
     for seed in (0, 1):
         rng = random.Random(seed)
-        fuzz += [_gen_source(rng) for _ in range(250)]
-    accepted = 0
-    for src in _COMPILE_SUBSET_SHAPES + fuzz:
-        try:
-            jscompile._Parser(src).parse()
-        except jscompile.JSCompileError:
-            continue
-        accepted += 1
-        try:
-            jsreduce._Parser(src).parse()
-        except jsreduce.JSReduceError as e:
-            pytest.fail(f"statement parser rejects {src!r}: {e}")
-    assert accepted >= len(_COMPILE_SUBSET_SHAPES) + 400
+        srcs += [_gen_source(rng) for _ in range(250)]
+    for src in _COMPILE_SUBSET_SHAPES:
+        assert parse_js_map(src), src
+    assert {_sha(src) for src in srcs} == set(golden)
+    for src in srcs:
+        assert _ir_hash(parse_js_map(src)) == golden[_sha(src)], src
 
 
 def test_object_keys_es_coercion():

@@ -16,6 +16,7 @@ from mapreduce_spark.engine import Engine
 from mapreduce_spark.functions.jscompile import (
     JSCompileError,
     compile_js_map_fn,
+    parse_js_map,
 )
 from mapreduce_spark.functions.jsvariant import (
     VariantJSView,
@@ -55,12 +56,12 @@ def _group_rows(eng, name):
 
 
 def test_referenced_fields():
-    assert referenced_doc_fields(JS) == ["lang", "n"]
-    assert referenced_doc_fields("function(doc){}") is None
+    assert referenced_doc_fields(parse_js_map(JS)) == ["lang", "n"]
+    assert referenced_doc_fields(parse_js_map("function(doc){}")) is None
     # nested paths carry dotted (round-7: the variant tier compiles
     # them to '$.a.b' extraction paths)
     assert referenced_doc_fields(
-        "function(doc){ emit(doc.a.b, 1); }"
+        parse_js_map("function(doc){ emit(doc.a.b, 1); }")
     ) == ["a.b"]
 
 
@@ -645,10 +646,9 @@ def test_foreach_nested_in_forloop_falls_back(spark, tag_sf, tmp_path):
     reading the WRONG array's elements)."""
     js = ("function(doc) { for (var i = 0; i < doc.tags.length; i++) "
           "{ doc.nums.forEach(function (t) { emit(t, i); }); } }")
-    from mapreduce_spark.functions.jscompile import _Parser
     with pytest.raises(JSCompileError,
                        match="nested loops are outside"):
-        _Parser(js).parse()
+        parse_js_map(js)
     vd, eng, eng2 = _both_tiers(spark, tag_sf, tmp_path, js)
     assert not isinstance(vd.map_def, VariantJSView)  # interpreter
     rows = [(r["key"], r["id"], r["value"])
@@ -888,8 +888,6 @@ def test_forin_string_field_drifts_to_char_iteration(
 def test_forin_nested_rejects(spark):
     """for-in refuses to nest with any other compiled loop — both
     directions land on the statement interpreter."""
-    from mapreduce_spark.functions.jscompile import _Parser
-
     for js in [
         ("function(doc) { for (var k in doc.a) { "
          "doc.b.forEach(function (t) { emit(t, k); }); } }"),
@@ -900,7 +898,7 @@ def test_forin_nested_rejects(spark):
     ]:
         with pytest.raises(JSCompileError,
                            match="nested loops are outside"):
-            _Parser(js).parse()
+            parse_js_map(js)
 
 
 def test_forin_plan_no_python_and_one_parse(spark, obj_sf):
