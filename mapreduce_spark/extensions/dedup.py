@@ -5,18 +5,15 @@ Scale design (the 100 TB contract for each operator):
 
 - **exact_dedup** — one hash-groupBy on md5(text); the only shuffle is
   on the 16-byte digest, never the document body.
-- **jaccard_pairs** — inverted-index self-join (explode shingles, join
-  on the shingle, count co-occurrences) — NEVER an all-pairs cross
-  join.  Cost is Σ_s C(df_s, 2) over shingle document-frequencies, so
-  a stopword-shingle cap (``max_df``) keeps skewed shingles from
+- **jaccard_pairs** — inverted-index self-join on a prefix of each
+  doc's rarest shingles — NEVER an all-pairs cross join; a
+  stopword-shingle cap (``max_df``) keeps skewed shingles from
   exploding the join at corpus scale.
 - **minhash_lsh_pairs** — the scale path: signatures are 96 md5-based
-  permutations, 100% JVM (round 7: md5 + affine-min fold as codegen'd
-  ``min`` aggregates over exploded shingles — zero Python workers
-  anywhere), banded b=32 × r=3 so a pair at Jaccard 0.9 is missed
-  with probability (1-0.9³)³² ≈ 1e-18; candidates are verified with
-  exact Jaccard so output equals the exact operator on any corpus
-  where the LSH recall holds (property-checked in tests).
+  permutations, 100% JVM (md5 + affine-min fold as codegen'd ``min``
+  aggregates over exploded shingles — zero Python workers anywhere),
+  banded b=32 × r=3 so a pair at Jaccard 0.9 is missed with
+  probability (1-0.9³)³² ≈ 1e-18.
 - **simhash** — 64-bit sign-of-weighted-sum over token md5s, computed
   as 64 conditional-sum aggregates in ONE shuffle; near-dup pairs are
   blocked on 16-bit bands (pigeonhole: hamming ≤ 3 ⇒ one of 4 bands
@@ -25,8 +22,18 @@ Scale design (the 100 TB contract for each operator):
   distributed GEMM (tile self-product via applyInPandas); the exact
   answer at any threshold with bounded task memory and no nested-loop
   join.  ``embedding_near_dup`` (plain pair join) stays as the tiny
-  cross-check baseline; ``similarity.near_dup_lsh`` is the linear-ish
-  candidates-then-verify path for genuinely-near duplicates.
+  cross-check baseline; ``similarity.near_dup_lsh`` is the banded
+  path for genuinely-near duplicates.
+
+Every pair operator is filter-and-refine over one shared core
+(``extensions/util.py``): candidates from one bucket join
+(``bucket_pairs``; jaccard_pairs' prefix join is its own filter),
+then one exact verification (``verify_pairs``) that reports the TRUE
+Jaccard or cosine of each pair — so a banded operator's output equals
+the exact operator's wherever its recall holds (property-checked in
+tests).  ``jaccard_dedup_pairs`` and ``embedding_near_dup_pairs``
+choose between the exact and the banded path with one router
+(``_route_lsh``).
 
 All hashes are md5 (bit-identical in DuckDB) so every operator here is
 value-checkable against a SQL oracle.
@@ -44,7 +51,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_spark.extensions.text import shingles, tokens
-from mapreduce_spark.extensions.util import release_local_checkpoint
+from mapreduce_spark.extensions.util import (
+    bucket_pairs,
+    dot_col as _dot,
+    jaccard_col,
+    normalized_vectors,
+    release_local_checkpoint,
+    verify_pairs,
+)
 from mapreduce_spark.plans.sizing import spread
 
 log = logging.getLogger("mapreduce_spark.dedup")
@@ -144,10 +158,8 @@ def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
     one prefix token under any consistent global order (PPJoin
     Lemma 1), and rare-token prefixes collide orders of magnitude less
     than stopword-ish full postings.  Candidates additionally pass the
-    length filter (τ·|A| ≤ |B| ≤ |A|/τ), then verification computes
-    the TRUE intersection via ``array_intersect`` on the full shingle
-    arrays — so the reported Jaccard is exact regardless of where the
-    candidate came from.
+    length filter (τ·|A| ≤ |B| ≤ |A|/τ) before the shared exact
+    verification.
 
     ``max_df`` still caps candidate-generation postings as skew armor
     (a prefix token in k docs contributes C(k,2) candidate rows), but
@@ -219,23 +231,39 @@ def jaccard_pairs(df: DataFrame, threshold: float, n: int = 3,
         )
         .distinct()
     )
-    sa = sets_df.select(F.col("doc_id").alias("id_a"),
-                        F.col("sh").alias("sh_a"))
-    sb = sets_df.select(F.col("doc_id").alias("id_b"),
-                        F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    j = inter / (
-        F.size("sh_a") + F.size("sh_b") - inter
-    )
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", j.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return verify_pairs(cand, sets_df, "sh", jaccard_col, "jaccard",
+                        threshold)
 
 
-# auto-routing bounds for jaccard_dedup_pairs (the
-# embedding_near_dup_pairs pattern): the exact prefix-filtered
+def _route_lsh(op: str, exact: bool | None, corpus_count: int | None,
+               ids: DataFrame, threshold: float, max_exact: int,
+               lsh_floor: float) -> tuple[bool, int | None]:
+    """The exact-or-LSH router of the two ``*_pairs`` entry points:
+    ``(use_lsh, n)``, n the corpus count when it was taken.
+
+    ``exact`` pins the path.  Otherwise corpora of at most
+    ``max_exact`` rows run exact; larger ones run LSH when
+    ``threshold`` reaches the banding recall floor ``lsh_floor``, and
+    keep the exact path with a loud log when it does not (a silent
+    recall hole is worse than a slow exact answer; pass exact=False
+    to override).  ``corpus_count`` skips the count of ``ids``."""
+    if exact is not None:
+        return not exact, None
+    n = int(corpus_count) if corpus_count is not None else ids.count()
+    if n <= max_exact:
+        return False, n
+    if threshold >= lsh_floor:
+        return True, n
+    log.warning(
+        "%s: corpus of %d rows with threshold %.2f — below the LSH "
+        "recall floor (%.2f), so the EXACT path runs; pass "
+        "exact=False to accept approximate recall instead",
+        op, n, threshold, lsh_floor,
+    )
+    return False, n
+
+
+# auto-routing bounds for jaccard_dedup_pairs: the exact prefix-filtered
 # AllPairs join is linear-but-heavy — measured sf10 (500k docs) ≈
 # 200 s on local[32], scaling exponent 0.96 (BASELINE.md round 7) —
 # so past ~1M docs it stops being a defensible default; MinHash-LSH
@@ -254,49 +282,21 @@ def jaccard_dedup_pairs(
     max_df: int | None = JACCARD_MAX_DF,
 ) -> DataFrame:
     """Jaccard near-dup pairs with scale-aware routing — THE entry
-    point pipelines should call (mirrors ``embedding_near_dup_pairs``).
-
-    ``exact=True`` pins the prefix-filtered AllPairs join
-    (``jaccard_pairs`` — exact by contract, linear but heavy);
-    ``exact=False`` pins MinHash-LSH banding + exact-Jaccard
-    verification (``minhash_lsh_pairs`` — near-linear; output equals
-    the exact operator wherever banding recall holds, which the
-    threshold floor guards).  The default (None) routes: corpora ≤
-    JACCARD_EXACT_MAX_DOCS run exact, larger corpora run LSH when
-    ``threshold ≥ JACCARD_LSH_MIN_THRESHOLD`` — and keep the exact
-    join with a loud log when it does not (a silent recall hole is
-    worse than a slow exact answer; opt into LSH explicitly to
-    override).  Both paths report the TRUE Jaccard per pair (each
-    verifies with array_intersect over full shingle sets), so the
-    router never changes the meaning of a returned row — only which
-    pairs can be missed, per the documented recall bound.
-
-    ``corpus_count`` skips the sizing count when the caller knows N.
-    """
-    if exact is True:
-        return jaccard_pairs(df, threshold, n, text, id_col, max_df)
-    if exact is False:
+    point pipelines should call: the exact prefix-filtered AllPairs
+    join (``jaccard_pairs``, linear but heavy) up to
+    JACCARD_EXACT_MAX_DOCS, MinHash-LSH (``minhash_lsh_pairs``) past it
+    at ``threshold ≥ JACCARD_LSH_MIN_THRESHOLD`` (see
+    :func:`_route_lsh`).  Both report the TRUE Jaccard per pair, so
+    the router changes only which pairs can be missed, never the
+    meaning of a returned row."""
+    use_lsh, _ = _route_lsh(
+        "jaccard_dedup_pairs", exact, corpus_count, df.select(id_col),
+        threshold, JACCARD_EXACT_MAX_DOCS, JACCARD_LSH_MIN_THRESHOLD,
+    )
+    if use_lsh:
         return minhash_lsh_pairs(
             df, threshold, n=n, text=text, id_col=id_col
         )
-    n_docs = (
-        int(corpus_count)
-        if corpus_count is not None
-        else df.select(id_col).count()
-    )
-    if n_docs <= JACCARD_EXACT_MAX_DOCS:
-        return jaccard_pairs(df, threshold, n, text, id_col, max_df)
-    if threshold >= JACCARD_LSH_MIN_THRESHOLD:
-        return minhash_lsh_pairs(
-            df, threshold, n=n, text=text, id_col=id_col
-        )
-    log.warning(
-        "jaccard_dedup_pairs: corpus of %d docs with threshold %.2f — "
-        "below the LSH banding recall floor (%.2f), so the EXACT "
-        "prefix-filtered AllPairs join runs; pass exact=False to "
-        "accept approximate recall instead",
-        n_docs, threshold, JACCARD_LSH_MIN_THRESHOLD,
-    )
     return jaccard_pairs(df, threshold, n, text, id_col, max_df)
 
 
@@ -410,12 +410,20 @@ def minhash_signatures_from_sets(
     return out.select(*cols)
 
 
-def _band_buckets(num_perm: int, bands: int) -> Column:
-    """Band bucket array: polynomial fold of each band's minhash
-    values in the 31-bit domain (spurious bucket collisions only add
-    candidates, which the exact-Jaccard verification discards)."""
+def _band_buckets(sigs: DataFrame, num_perm: int,
+                  bands: int) -> DataFrame:
+    """(doc_id, band, bkt) rows: a polynomial fold of each band's
+    minhash values in the 31-bit domain (spurious bucket collisions
+    only add candidates, which the exact-Jaccard verification
+    discards).
+
+    Empty-shingle docs (shorter than n words) can never reach any
+    Jaccard threshold > 0, but their shared sentinel signature would
+    collide in every band — 32·C(k,2) candidate rows for k short
+    docs, a quadratic shuffle blowup on short-doc-heavy corpora — so
+    they are dropped before bucketing."""
     rows = num_perm // bands
-    return F.array(
+    band_arr = F.array(
         *[
             F.aggregate(
                 F.slice("sig", b * rows + 1, rows),
@@ -426,6 +434,9 @@ def _band_buckets(num_perm: int, bands: int) -> Column:
             for b in range(bands)
         ]
     )
+    return sigs.filter(F.col("sz") > 0).select(
+        "doc_id", F.posexplode(band_arr).alias("band", "bkt")
+    )
 
 
 def minhash_lsh_pairs(df: DataFrame, threshold: float,
@@ -433,15 +444,8 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float,
                       bands: int = LSH_BANDS, n: int = 3,
                       text: str = "text",
                       id_col: str = "doc_id") -> DataFrame:
-    """Near-dup pairs (Jaccard ≥ threshold) via MinHash banding, with
-    exact-Jaccard verification of the candidates.
-
-    The only shuffles are (1) the band-bucket self-join — keys are
-    md5(band slice), uniformly distributed unless docs are true
-    near-dups — and (2) the final distinct.  Candidate verification is
-    an array_intersect over the two shingle sets carried alongside the
-    signatures (near-dup candidate sets are tiny relative to the
-    corpus).
+    """Near-dup pairs (Jaccard ≥ threshold) via MinHash banding: the
+    band-bucket self-join, then exact Jaccard over the shingle sets.
     """
     # the shingle frame feeds the signature fold AND both candidate-
     # verification joins; the signature frame feeds both sides of the
@@ -455,99 +459,29 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float,
     sigs = minhash_signatures_from_sets(
         sets_, num_perm, with_sh=False
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    return minhash_pairs_from_sigs(sigs, threshold, num_perm, bands,
-                                   sets=sets_)
+    cand = bucket_pairs(_band_buckets(sigs, num_perm, bands))
+    return verify_pairs(cand, sets_, "sh", jaccard_col, "jaccard",
+                        threshold)
 
 
 def minhash_pairs_from_sigs(sigs: DataFrame, threshold: float,
                             num_perm: int = MINHASH_PERMS,
                             bands: int = LSH_BANDS,
-                            sets: DataFrame | None = None) -> DataFrame:
-    """The band-join + verify half of ``minhash_lsh_pairs``, over an
-    existing ``minhash_signatures`` frame (doc_id, sig, sz[, sh]) —
-    the reusable piece for incremental/streaming dedup, where
-    signatures are computed once and stored.  ``sets`` supplies the
-    shingle frame for exact-Jaccard verification when the signature
-    frame omits ``sh`` (the codegen-fast ``with_sh=False`` shape)."""
-    band_arr = _band_buckets(num_perm, bands)
-    # empty-shingle docs (shorter than n words) can never reach any
-    # Jaccard threshold > 0, but their shared sentinel signature would
-    # collide in every band — 32·C(k,2) candidate rows for k short
-    # docs, a quadratic shuffle blowup on short-doc-heavy corpora.
-    # Drop them before bucketing; output is unchanged (their pairs
-    # compute 0/0 Jaccard = null and are filtered anyway).
-    buckets = sigs.filter(F.col("sz") > 0).select(
-        "doc_id", F.posexplode(band_arr).alias("band", "bkt")
+                            other: DataFrame | None = None) -> DataFrame:
+    """Verified near-dup pairs (Jaccard ≥ threshold) over stored
+    ``minhash_signatures`` frames (doc_id, sig, sz, sh) — the reusable
+    piece for incremental/streaming dedup, where signatures are
+    computed once.  Alone: the pairs within ``sigs`` (id_a < id_b).
+    With ``other``: the pairs between ``sigs`` (id_a) and ``other``
+    (id_b) — a new batch probed against an accumulated signature
+    index, whose stored side should be bucketed by (band, bkt) at
+    index scale so the probe join prunes to matching buckets."""
+    cand = bucket_pairs(
+        _band_buckets(sigs, num_perm, bands),
+        None if other is None else _band_buckets(other, num_perm, bands),
     )
-    a, b_ = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkt") == F.col("b.bkt"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
-    shs = sets if sets is not None else sigs
-    sa = shs.select(F.col("doc_id").alias("id_a"),
-                    F.col("sh").alias("sh_a"))
-    sb = shs.select(F.col("doc_id").alias("id_b"),
-                    F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (inter / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_pairs_between(sigs_a: DataFrame, sigs_b: DataFrame,
-                          threshold: float,
-                          num_perm: int = MINHASH_PERMS,
-                          bands: int = LSH_BANDS) -> DataFrame:
-    """Verified near-dup pairs (id_a from ``sigs_a``, id_b from
-    ``sigs_b``, Jaccard ≥ threshold) BETWEEN two signature frames —
-    the probe step of incremental dedup, where a new batch is checked
-    against an accumulated signature index.  Same band-bucket equi-join
-    + exact-Jaccard verification as the self-join variant; at index
-    scale the stored side should be bucketed by (band, bkt) so the
-    probe join prunes to matching buckets.
-    """
-    band_arr = _band_buckets(num_perm, bands)
-
-    def buckets(s, side):
-        return s.filter(F.size("sh") > 0).select(
-            F.col("doc_id").alias(f"id_{side}"),
-            F.posexplode(band_arr).alias("band", "bkt"),
-        )
-
-    cand = (
-        buckets(sigs_a, "a")
-        .join(buckets(sigs_b, "b"), ["band", "bkt"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sigs_a.select(F.col("doc_id").alias("id_a"),
-                       F.col("sh").alias("sh_a"))
-    sb = sigs_b.select(F.col("doc_id").alias("id_b"),
-                       F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sa, "id_a").join(sb, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return verify_pairs(cand, sigs, "sh", jaccard_col, "jaccard",
+                        threshold, other=other)
 
 
 # ---------------------------------------------------------------------------
@@ -628,39 +562,19 @@ def simhash_pairs(df: DataFrame, max_hamming: int = 6,
     )
     blk = sh.select(
         "doc_id", "sim_hi", "sim_lo",
-        F.posexplode(bands_).alias("band", "bval"),
+        F.posexplode(bands_).alias("band", "bkt"),
     )
-    a, b_ = blk.alias("a"), blk.alias("b")
     ham = F.bit_count(
         F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi"))
     ) + F.bit_count(F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo")))
-    return (
-        a.join(
-            b_,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    return bucket_pairs(blk, extra=[ham.alias("hamming")]).filter(
+        F.col("hamming") <= max_hamming
     )
 
 
 # ---------------------------------------------------------------------------
 # embedding-cosine near-dup (exact baseline)
 # ---------------------------------------------------------------------------
-
-from mapreduce_spark.extensions.util import (  # noqa: E402
-    dot_col as _dot,
-    norm_col as _norm,
-    normalized_vectors,
-)
-
 
 def embedding_near_dup(emb: DataFrame, threshold: float,
                        id_col: str = "vec_id",
@@ -798,49 +712,26 @@ def embedding_near_dup_pairs(
     corpus_count: int | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs with scale-aware routing — THE entry
-    point composed pipelines should call.
-
-    ``exact=True`` pins the blocked-GEMM tile product (exact by
-    contract, O(N²·d)); ``exact=False`` pins the random-hyperplane
-    LSH candidates-then-verify path (linear-ish, recall ≈ 1 only for
-    cosine ≥ ~0.8).  The default (None) routes: corpora ≤
-    EXACT_MAX_DOCS get the exact form, larger corpora get LSH when
-    the threshold supports it — and keep the exact form with a loud
-    log when it does not (a silent 0.3-recall answer is worse than a
-    slow exact one; opt in to LSH explicitly to override).
-
-    ``corpus_count`` skips the sizing count when the caller already
-    knows N (pipelines usually do).
-    """
-    if exact is True:
-        return embedding_near_dup_blocked(
-            emb, threshold, id_col, vec_col
-        )
-    if exact is False:
+    point composed pipelines should call: the exact blocked-GEMM tile
+    product (O(N²·d)) up to EXACT_MAX_DOCS, the random-hyperplane LSH
+    path (``similarity.near_dup_lsh``, recall ≈ 1 only for cosine
+    ≥ ~0.8) past it at ``threshold ≥ LSH_MIN_THRESHOLD`` (see
+    :func:`_route_lsh`)."""
+    use_lsh, n = _route_lsh(
+        "embedding_near_dup_pairs", exact, corpus_count,
+        emb.select(id_col), threshold, EXACT_MAX_DOCS,
+        LSH_MIN_THRESHOLD,
+    )
+    if use_lsh:
         from mapreduce_spark.extensions.similarity import near_dup_lsh
 
         return near_dup_lsh(emb, threshold, id_col, vec_col)
-    n = (
-        int(corpus_count)
-        if corpus_count is not None
-        else emb.select(id_col).count()
+    # a count that routed the corpus as small also sizes the tiles
+    small = n is not None and n <= EXACT_MAX_DOCS
+    return embedding_near_dup_blocked(
+        emb, threshold, id_col, vec_col,
+        n_blocks=max(1, -(-n // NEAR_DUP_BLOCK_ROWS)) if small else None,
     )
-    if n <= EXACT_MAX_DOCS:
-        return embedding_near_dup_blocked(
-            emb, threshold, id_col, vec_col,
-            n_blocks=max(1, -(-n // NEAR_DUP_BLOCK_ROWS)),
-        )
-    if threshold >= LSH_MIN_THRESHOLD:
-        from mapreduce_spark.extensions.similarity import near_dup_lsh
-
-        return near_dup_lsh(emb, threshold, id_col, vec_col)
-    log.warning(
-        "embedding_near_dup_pairs: corpus of %d vectors with cosine "
-        "threshold %.2f — below the LSH recall floor (%.2f), so the "
-        "EXACT O(N²·d) tile product runs; pass exact=False to accept "
-        "approximate recall instead", n, threshold, LSH_MIN_THRESHOLD,
-    )
-    return embedding_near_dup_blocked(emb, threshold, id_col, vec_col)
 
 
 SEMANTIC_MAX_CELL = 20_000
@@ -897,7 +788,7 @@ def semantic_dedup(emb: DataFrame, threshold: float,
     if n_cells is None:
         n = (int(corpus_count) if corpus_count is not None
              else emb.select(id_col).count())
-        n_cells = max(8, min(4096, int(n ** 0.5)))
+        n_cells = sim._sqrt_cells(n)
     cents = sim.ivf_centroids(
         emb, n_cells, id_col=id_col, vec_col=vec_col, nd=nd
     )
@@ -911,15 +802,13 @@ def semantic_dedup(emb: DataFrame, threshold: float,
     # shape would reference the assignment subtree twice and evaluate
     # the corpus-wide pandas UDF two times; the window rides the same
     # by-cell exchange the applyInPandas needs anyway
-    from pyspark.sql import Window as _W
-
     staged = assigned.withColumn(
         "_sub",
         F.pmod(
             F.xxhash64("vid"),
             F.greatest(
                 F.ceil(
-                    F.count(F.lit(1)).over(_W.partitionBy("cell"))
+                    F.count(F.lit(1)).over(Window.partitionBy("cell"))
                     / F.lit(int(max_cell))
                 ),
                 F.lit(1),

@@ -21,6 +21,11 @@ Two paths:
   volume is corpus · nprobe/k regardless of how weak the similarity
   structure is — unlike sign-LSH, whose bucket-collision probability
   collapses when true cosines are modest.
+
+All three rank their scored ``(qid, vid, cosine)`` candidates with one
+top-k ranker (``_rank_topk``).  ``near_dup_lsh`` is a pair operator on
+the filter-and-refine core the dedup operators share
+(``extensions/util.py``: one bucket join, one exact verification).
 """
 
 from __future__ import annotations
@@ -39,9 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_spark.extensions.util import (
+    bucket_pairs,
     dot_col as _dot,
     normalized_vectors,
     release_local_checkpoint,
+    verify_pairs,
 )
 
 # 8 bands × 4 bits: band-match prob for cosine s is (1-acos(s)/π)^4,
@@ -49,6 +56,25 @@ from mapreduce_spark.extensions.util import (
 # structured corpora, while each band still has 16 buckets to prune.
 N_PLANES = 32
 LSH_BAND_BITS = 4
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k ranker over ``(qid, vid, cosine)``: per query, rank by
+    cosine descending (ties to the lower vid) and keep ranks ≤ k."""
+    w = Window.partitionBy("qid").orderBy(
+        F.col("cosine").desc(), F.col("vid")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "vid", "cosine", "rank")
+    )
+
+
+def _sqrt_cells(n: int) -> int:
+    """IVF cell count for an n-vector corpus: ≈ √N, clamped to
+    [8, 4096]."""
+    return max(8, min(4096, int(n ** 0.5)))
 
 
 def cosine_topk(emb: DataFrame, query_ids: list[int], k: int,
@@ -73,15 +99,7 @@ def cosine_topk(emb: DataFrame, query_ids: list[int], k: int,
     )
     pairs = nd.join(F.broadcast(q), F.col("vid") != F.col("qid"))
     cos = _dot(F.col("nv"), F.col("qv"))
-    scored = pairs.select("qid", "vid", cos.alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vid", "cosine", "rank")
-    )
+    return _rank_topk(pairs.select("qid", "vid", cos.alias("cosine")), k)
 
 
 def _hyperplanes(dim: int, n_planes: int = N_PLANES) -> list[list[float]]:
@@ -140,15 +158,7 @@ def rp_lsh_topk(emb: DataFrame, query_ids: list[int], k: int,
     """Approximate top-k: LSH candidates reranked by exact cosine."""
     cand = rp_lsh_candidates(emb, query_ids, id_col, vec_col, nd=nd)
     cos = _dot(F.col("nv"), F.col("qv"))
-    scored = cand.select("qid", "vid", cos.alias("cosine"))
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vid", "cosine", "rank")
-    )
+    return _rank_topk(cand.select("qid", "vid", cos.alias("cosine")), k)
 
 
 # ---------------------------------------------------------------------------
@@ -206,7 +216,7 @@ def near_dup_lsh(emb: DataFrame, threshold: float,
                  id_col: str = "vec_id", vec_col: str = "embedding",
                  n_planes: int = 128, band_bits: int = 8) -> DataFrame:
     """Near-dup pairs (cosine ≥ threshold) via random-hyperplane LSH
-    banding + exact-cosine verification — the linear-ish scale path
+    banding, verified by exact cosine — the linear-ish scale path
     for corpora whose duplicates are actually near.
 
     Recall math (why this needs a HIGH threshold): two vectors at
@@ -217,40 +227,16 @@ def near_dup_lsh(emb: DataFrame, threshold: float,
     banding parameters fix that, which is why the exact blocked-GEMM
     operator (``dedup.embedding_near_dup_blocked``) ships for
     low-threshold jobs and this one for true near-dup detection.
-
-    Shuffles: band-bucket self-join (uniform md5-seeded hyperplane
-    buckets) + candidate distinct + two verification joins — the same
-    candidates-then-verify shape as MinHash LSH.
     """
     sigs = normalized_vectors(emb, id_col, vec_col).withColumn(
         "bands", _band_values(n_planes, band_bits)(F.col("nv"))
     ).persist()
-    buckets = sigs.select(
-        "vid", F.posexplode("bands").alias("band", "bval")
+    cand = bucket_pairs(
+        sigs.select("vid", F.posexplode("bands").alias("band", "bkt")),
+        id_col="vid",
     )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bval") == F.col("b.bval"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(
-            F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b")
-        )
-        .distinct()
-    )
-    va = sigs.select(F.col("vid").alias("id_a"),
-                     F.col("nv").alias("nv_a"))
-    vb = sigs.select(F.col("vid").alias("id_b"),
-                     F.col("nv").alias("nv_b"))
-    cos = _dot(F.col("nv_a"), F.col("nv_b"))
-    return (
-        cand.join(va, "id_a").join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return verify_pairs(cand, sigs, "nv", _dot, "cosine", threshold,
+                        id_col="vid")
 
 
 # ---------------------------------------------------------------------------
@@ -473,8 +459,7 @@ def ivf_index(emb: DataFrame, n_cells: int | None = None,
     :func:`write_ivf_index` so the bundle meta records it and
     :func:`ivf_topk` dedupes candidates."""
     if n_cells is None:
-        n = emb.count()
-        n_cells = max(8, min(4096, int(n ** 0.5)))
+        n_cells = _sqrt_cells(emb.count())
     if nd is None:
         nd = normalized_vectors(emb, id_col, vec_col)
     cents = ivf_centroids(
@@ -1010,7 +995,7 @@ def ivf_maintain(spark, path: str,
         n_total = int(meta.get("base_n") or 0) + int(
             meta.get("appended_n") or 0
         )
-        k = max(8, min(4096, int(n_total ** 0.5))) if n_total else 8
+        k = _sqrt_cells(n_total)
         # the k-means sample is drawn in vid-HASH order, not vid
         # order: ivf_centroids' bounded limit would otherwise train
         # only on the lowest vids — typically the ORIGINAL corpus —
@@ -1121,7 +1106,7 @@ def ivf_topk(emb: DataFrame | None, query_ids: list[int] | None,
         if n_cells is None or nprobe is None:
             n = emb.count()
             if n_cells is None:
-                n_cells = max(8, min(4096, int(n ** 0.5)))
+                n_cells = _sqrt_cells(n)
             if nprobe is None:
                 nprobe = max(4, n_cells // 4)
 
@@ -1206,11 +1191,4 @@ def ivf_topk(emb: DataFrame | None, query_ids: list[int] | None,
         scored = scored.groupBy("qid", "vid").agg(
             F.max("cosine").alias("cosine")
         )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("cosine").desc(), F.col("vid")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vid", "cosine", "rank")
-    )
+    return _rank_topk(scored, k)

@@ -1,4 +1,7 @@
-"""Shared helpers for the extension operators."""
+"""Shared helpers for the extension operators, among them the
+filter-and-refine core of every pair operator: :func:`bucket_pairs`
+(candidates from one bucket join) and :func:`verify_pairs` (one exact
+verification)."""
 
 from __future__ import annotations
 
@@ -94,3 +97,53 @@ def normalized_vectors(emb: DataFrame, id_col: str = "vec_id",
         "vid",
         F.transform("_v", lambda x: x / F.col("_n")).alias("nv"),
     )
+
+
+def bucket_pairs(left: DataFrame, right: DataFrame | None = None,
+                 id_col: str = "doc_id", extra=()) -> DataFrame:
+    """Distinct candidate pairs ``(id_a, id_b, *extra)`` from one
+    equi-join on the ``(band, bkt)`` bucket columns.
+
+    Without ``right`` it is a self-join of ``left`` that keeps
+    ``id_a < id_b``; with ``right`` it pairs ``left`` (id_a) with
+    ``right`` (id_b).  ``extra`` columns may read either side through
+    the ``a`` / ``b`` aliases.  Bucket keys are hashes, spread
+    uniformly unless the rows really are near-duplicates."""
+    a = left.alias("a")
+    b = (left if right is None else right).alias("b")
+    on = (F.col("a.band") == F.col("b.band")) \
+        & (F.col("a.bkt") == F.col("b.bkt"))
+    if right is None:
+        on = on & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return a.join(b, on).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *extra,
+    ).distinct()
+
+
+def verify_pairs(cand: DataFrame, items: DataFrame, col: str, score,
+                 name: str, threshold: float, id_col: str = "doc_id",
+                 other: DataFrame | None = None) -> DataFrame:
+    """Exact verification of candidate pairs: join ``col`` of both
+    sides onto the distinct ``(id_a, id_b)`` candidates (``items``
+    for id_a, ``other`` — ``items`` when None — for id_b), score each
+    pair with ``score(col_a, col_b)`` into ``name`` and keep the pairs
+    at or above ``threshold``.  The reported score is exact whatever
+    produced the candidate."""
+    sa = items.select(F.col(id_col).alias("id_a"),
+                      F.col(col).alias(f"{col}_a"))
+    sb = (items if other is None else other).select(
+        F.col(id_col).alias("id_b"), F.col(col).alias(f"{col}_b"))
+    return (
+        cand.join(sa, "id_a").join(sb, "id_b")
+        .select("id_a", "id_b",
+                score(F.col(f"{col}_a"), F.col(f"{col}_b")).alias(name))
+        .filter(F.col(name) >= threshold)
+    )
+
+
+def jaccard_col(x: Column, y: Column) -> Column:
+    """|x ∩ y| / |x ∪ y| of two set-valued array columns."""
+    inter = F.size(F.array_intersect(x, y))
+    return inter / (F.size(x) + F.size(y) - inter)

@@ -51,7 +51,8 @@ Supported subset (each maps 1:1 onto a MapSpec capability):
 - the conditional operator ``c ? a : b`` in keys and values
   (``CASE WHEN``; same-kind branches; branch throw-guards gated on
   the condition — JS evaluates only the taken branch);
-- ``log(...)`` calls (upstream sandbox global) parsed and discarded;
+- ``log(...)`` calls (upstream sandbox global) discarded when no
+  argument can throw (literals, bound names, ``doc.f``, operators);
 - multiple emits (one MapSpec per emit, unioned with emit ordinals).
 
 On raw doc sources (functions/jsvariant.py) the same subset also
@@ -206,7 +207,10 @@ class _Lowering:
                 return
             if fn == ("name", "log"):
                 # upstream sandbox global (F1): debugging output, no
-                # effect on the view
+                # effect on the view — but JS evaluates its arguments,
+                # so only arguments that cannot throw are dropped
+                for a in args:
+                    self.log_arg(a)
                 return
             if fn[0] == "member" and fn[2] == "forEach":
                 self.foreach(fn[1], args, guards)
@@ -216,6 +220,29 @@ class _Lowering:
             "emit(...), if/else guards, single-assignment declarations, "
             "log() and one forEach / for / for-in loop; the "
             "interpreter tier runs the rest"
+        )
+
+    def log_arg(self, e: Any) -> None:
+        """Accept a ``log(...)`` argument whose evaluation cannot throw:
+        literals, bound names, ``doc.<field>`` at depth 1 and
+        operators over them.  A deeper path (``doc.p.x`` throws when
+        ``doc.p`` is undefined), a call or an unbound name raises
+        :class:`JSCompileError`, and the interpreter tier runs the
+        view."""
+        tag = e[0]
+        if tag == "lit":
+            return
+        if tag == "name" and (e[1] == self.doc or e[1] in self.scope):
+            return
+        if tag in ("member", "index") and len(self.doc_path(e) or ()) == 1:
+            return
+        if tag in ("bin", "un", "ternary"):
+            for sub in e[2:] if tag != "ternary" else e[1:]:
+                self.log_arg(sub)
+            return
+        raise JSCompileError(
+            "log() arguments beyond literals, bound names, doc.<field> "
+            "and operators may throw; the interpreter tier runs them"
         )
 
     def foreach(self, recv: Any, args: list, guards: list) -> None:

@@ -42,57 +42,10 @@ import inspect
 import json
 import os
 import shutil
-import tempfile
 import threading
 import time
+import uuid
 from typing import Any
-
-def _proc_umask() -> int | None:
-    """Process umask via /proc (Linux): a pure READ — no setter
-    round-trip, so no process-wide RMW race with any thread, and no
-    staleness when the host application changes its umask later."""
-    try:
-        with open("/proc/self/status") as fh:
-            for line in fh:
-                if line.startswith("Umask:"):
-                    return int(line.split()[1], 8)
-    except (OSError, ValueError, IndexError):
-        pass
-    return None
-
-
-# Non-/proc platforms fall back to probing ONCE at import time (imports
-# run holding the import lock, before this module spawns any threads).
-# The previous inline probe — os.umask(0) then restore inside
-# __init__ — was a process-wide read-modify-write race: with concurrent
-# constructors, thread B can capture the 0 that thread A just set and
-# "restore" it after A's real restore, leaving the process umask 0
-# forever and every subsequently created file world-writable (ADVICE
-# r13).  Residual (documented) limit of the fallback only: a host app
-# whose OTHER threads create files during this first import races the
-# probe, and later umask changes are not observed.
-_last_umask = _proc_umask()
-if _last_umask is None:  # pragma: no cover — non-Linux
-    _UMASK = os.umask(0)
-    os.umask(_UMASK)
-else:
-    _UMASK = None
-
-
-def _current_umask() -> int:
-    global _last_umask
-    v = _proc_umask()
-    if v is not None:
-        _last_umask = v
-        return v
-    if _last_umask is not None:
-        # /proc read failed transiently (EMFILE, hidden after
-        # container start): the LAST successful read beats guessing —
-        # a 0o022 default could hand out group/world bits a 0o077
-        # process never intended
-        return _last_umask
-    return _UMASK if _UMASK is not None else 0o022  # pragma: no cover
-
 
 def definition_repr(map_def: Any, reduce_def: Any) -> str:
     """Stable textual identity of a view definition (md5'd for the sig)."""
@@ -117,7 +70,7 @@ def signature(map_def: Any, reduce_def: Any) -> str:
     return hashlib.md5(definition_repr(map_def, reduce_def).encode()).hexdigest()
 
 
-try:  # POSIX advisory locks; absent on some platforms → in-process only
+try:  # POSIX advisory locks; absent on some platforms → _leased
     import fcntl as _fcntl
 except ImportError:  # pragma: no cover
     _fcntl = None
@@ -317,39 +270,6 @@ def _flocked(path: str):
         fh.close()
 
 
-class _ViewLock:
-    """Context manager: in-process mutex + cross-process flock."""
-
-    def __init__(self, tlock: threading.Lock, path: str) -> None:
-        self._t = tlock
-        self._path = path
-        self._fh = None
-
-    def __enter__(self) -> "_ViewLock":
-        self._t.acquire()
-        if _fcntl is not None:
-            try:
-                os.makedirs(os.path.dirname(self._path), exist_ok=True)
-                self._fh = open(self._path, "a+")
-                _fcntl.flock(self._fh, _fcntl.LOCK_EX)
-            except OSError:
-                if self._fh is not None:
-                    self._fh.close()
-                    self._fh = None
-                self._t.release()
-                raise
-        return self
-
-    def __exit__(self, *exc) -> None:
-        try:
-            if self._fh is not None:
-                _fcntl.flock(self._fh, _fcntl.LOCK_UN)
-                self._fh.close()
-                self._fh = None
-        finally:
-            self._t.release()
-
-
 class Registry:
     """Driver-side view catalog persisted as JSON.
 
@@ -403,20 +323,18 @@ class Registry:
             # (os.replace would).  Write a unique temp, then hardlink
             # it into place — link(2) fails with EEXIST if anyone got
             # there first.
-            # mkstemp, not a pid-derived name: two Registry instances
-            # in ONE process would share a pid suffix, and the winner's
-            # cleanup unlink makes the loser's os.link raise
-            # FileNotFoundError (ADVICE r12)
-            fd, tmp = tempfile.mkstemp(
-                prefix="registry.json.init.", dir=storage_dir
+            # a unique name, not a pid-derived one: two Registry
+            # instances in ONE process would share a pid suffix, and
+            # the winner's cleanup unlink makes the loser's os.link
+            # raise FileNotFoundError (ADVICE r12).  Mode 0o666 lets
+            # the kernel apply the current umask, as a plain open()
+            # would, so a shared-warehouse reader under another uid
+            # keeps read access (review r13).
+            tmp = os.path.join(
+                storage_dir, f"registry.json.init.{uuid.uuid4().hex}"
             )
-            # mkstemp creates 0600; restore the umask-derived mode a
-            # plain open() would have produced so a shared-warehouse
-            # reader under another uid keeps read access (review r13).
-            # _current_umask() is a /proc READ on Linux (no RMW race,
-            # tracks later umask changes); elsewhere it is the
-            # import-time constant (ADVICE r13).
-            os.fchmod(fd, 0o666 & ~_current_umask())
+            fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY,
+                         0o666)
             with os.fdopen(fd, "w") as f:
                 json.dump({"designs": {}, "views": {}}, f, indent=1)
             try:
@@ -527,7 +445,8 @@ class Registry:
     def _registry_lock_path(self) -> str:
         return os.path.join(self.storage_dir, "locks", "registry.lock")
 
-    def view_lock(self, sig: str) -> "_ViewLock":
+    @contextmanager
+    def view_lock(self, sig: str):
         """Per-view build serialization (upstream TaskQueue parity).
 
         Two layers: an in-process mutex (threads of one driver), plus
@@ -535,12 +454,15 @@ class Registry:
         SEVERAL drivers sharing one view store — notebook users against
         a common warehouse — serialize builds too.  Registry state was
         already multi-process-safe (atomic rename); this closes the
-        build-work race.  Non-reentrant, like the mutex it wraps."""
+        build-work race.  The file lock is :func:`_flocked`, so it
+        takes the lease protocol where ``fcntl`` does not exist.
+        Non-reentrant, like the mutex it wraps."""
         with self._lock:
             t = self._view_locks.setdefault(sig, threading.Lock())
-        return _ViewLock(
-            t, os.path.join(self.storage_dir, "locks", f"{sig}.lock")
-        )
+        with t, _flocked(
+            os.path.join(self.storage_dir, "locks", f"{sig}.lock")
+        ):
+            yield
 
     # -- designs -------------------------------------------------------
 

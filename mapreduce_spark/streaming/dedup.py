@@ -16,10 +16,10 @@ shapes the batch operators (extensions/dedup.py) don't cover:
 - **incremental_minhash_dedup** — NEAR-dup dedup against all of
   history, as a ``foreachBatch`` sink maintaining a MinHash signature
   index: each micro-batch is (1) probed against the accumulated index
-  (band-bucket equi-join + exact-Jaccard verification — the
-  `minhash_pairs_between` machinery), (2) internally clustered
-  (connected components, min-id representative), and (3) the surviving
-  novel docs are appended to the index.  State is the signature index
+  (``minhash_pairs_from_sigs`` with the index as its second frame),
+  (2) internally clustered (connected components, min-id
+  representative), and (3) the surviving novel docs are appended to
+  the index.  State is the signature index
   itself — O(unique docs), stored as parquet, never per-stream-row
   state-store entries.
 
@@ -40,7 +40,6 @@ from mapreduce_spark.extensions.dedup import (
     LSH_BANDS,
     MINHASH_PERMS,
     connected_components,
-    minhash_pairs_between,
     minhash_pairs_from_sigs,
     minhash_signatures,
 )
@@ -132,8 +131,8 @@ def incremental_minhash_dedup(index_dir: str, threshold: float, *,
             cur = sigs
             if have_index:
                 hit = (
-                    minhash_pairs_between(
-                        cur, idx, threshold, num_perm, bands
+                    minhash_pairs_from_sigs(
+                        cur, threshold, num_perm, bands, other=idx
                     )
                     .select(F.col("id_a").alias("doc_id"))
                     .distinct()

@@ -124,3 +124,41 @@ def test_view_defs_cover_ceiling_table():
     )
     assert set(JOB_CEILINGS) == inv_names
     assert VIEW_DEFS  # the warm fixture actually has views to build
+
+
+# Extension rows that run the shared filter-and-refine core (bucket
+# join, exact verification, top-k ranker, exact-or-LSH router):
+# warm-run job counts measured at sf0.001 on local[4] (2026-10-20).
+# Each measured run starts from an empty cache, so minhash_lsh_pairs'
+# persisted frames never carry over from one row to the next.
+EXT_JOB_CEILINGS = {
+    "x_dedup_jaccard": 13, "x_dedup_minhash": 10,
+    "x_dedup_clusters": 34, "x_dedup_embedding": 6,
+    "x_sim_topk": 6, "x_sim_lsh": 18, "x_sim_ivf": 19,
+    "x_pipeline": 40,
+}
+
+
+def test_extension_job_ceilings(spark, sf_dir):
+    """Every extension row in EXT_JOB_CEILINGS stays at or below its
+    pinned job count: one warmup run, then one measured run, each
+    after ``clearCache()``."""
+    from mapreduce_spark.extensions.inventory import EXT_QUERIES
+
+    over = []
+    counts = {}
+    for name, ceiling in EXT_JOB_CEILINGS.items():
+        fn = EXT_QUERIES[name]
+        spark.catalog.clearCache()
+        fn(spark, sf_dir).collect()
+        spark.catalog.clearCache()
+        with measure(spark, f"extgate-{name}") as m:
+            fn(spark, sf_dir).collect()
+        jobs = counts[name] = m["jobs"]
+        if jobs > ceiling:
+            over.append(f"{name}: {jobs} jobs > ceiling {ceiling}")
+    print("extension jobs per row: " +
+          ", ".join(f"{k}={v}" for k, v in counts.items()))
+    assert not over, (
+        "extension job-count regression:\n  " + "\n  ".join(over)
+    )

@@ -268,6 +268,44 @@ def test_null_guard_on_raw_docs_matches_js(spark, tmp_path):
         TABLES.pop("zdocs", None)
 
 
+def test_log_arguments_are_evaluated_on_raw_docs(spark, tmp_path):
+    """JS evaluates log()'s arguments: ``doc.p.x.y`` throws where
+    ``doc.p.x`` is undefined, so the doc is skipped.  The routed view
+    emits what the interpreter emits; a log argument that cannot
+    throw changes nothing."""
+    from mapreduce_spark.functions.jscompile import compile_js_map_fn
+    from mapreduce_spark.sources.docs import (
+        TABLES,
+        raw_doc_table,
+        register_table,
+    )
+
+    docs = [{"_id": "a", "p": "s"}, {"_id": "b", "p": {"x": {"y": 1}}},
+            {"_id": "c"}]
+    sf = str(tmp_path / "sf")
+    register_table(raw_doc_table("logdocs"))
+    spark.createDataFrame(
+        [(d["_id"], i, json.dumps(d)) for i, d in enumerate(docs)],
+        "_id string, seq long, doc_json string",
+    ).write.parquet(f"{sf}/logdocs.parquet")
+    try:
+        eng = Engine(spark, sf, str(tmp_path / "views"))
+        srcs = {
+            "deep": "function(doc){ log(doc.p.x.y); emit(doc._id, 1); }",
+            "flat": "function(doc){ log('seen ' + doc.p); "
+                    "emit(doc._id, 1); }",
+        }
+        eng.put_design("dd", {v: {"map": ("logdocs", src)}
+                              for v, src in srcs.items()})
+        for v, want in (("deep", ["b"]), ("flat", ["a", "b", "c"])):
+            got = sorted(r["id"] for r in eng.query(f"dd/{v}").rows())
+            interp = eng.query(("logdocs", compile_js_map_fn(srcs[v])),
+                               reduce=False).rows()
+            assert got == sorted(r["id"] for r in interp) == want, v
+    finally:
+        TABLES.pop("logdocs", None)
+
+
 def test_fallback_is_picklable_and_signature_stable():
     import pickle
 

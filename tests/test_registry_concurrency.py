@@ -303,15 +303,12 @@ def test_view_cleanup_spares_resurrected_view(tmp_path):
 
 def test_registry_init_leaves_process_umask_alone(tmp_path):
     """ADVICE r13: the old per-__init__ umask probe (set 0 / restore)
-    was a process-wide RMW race under concurrent constructors; the fix
-    reads the umask via /proc on Linux (a pure read that also tracks
-    runtime umask changes) with an import-time probe as the non-/proc
-    fallback.  __init__ must not touch the process umask at all, and
-    the created registry.json carries the CURRENT umask-derived mode,
-    not a stale import-time one."""
+    was a process-wide RMW race under concurrent constructors.  The
+    init temp is now created with mode 0o666 and the kernel applies the
+    umask, so __init__ never touches the process umask, and the created
+    registry.json carries the CURRENT umask-derived mode on every
+    platform."""
     import os
-
-    from mapreduce_spark.plans import registry as R
 
     prev = os.umask(0o027)
     try:
@@ -333,12 +330,9 @@ def test_registry_init_leaves_process_umask_alone(tmp_path):
             f"Registry.__init__ perturbed the process umask: {oct(now)}"
         )
         mode = os.stat(tmp_path / "w0" / "registry.json").st_mode & 0o777
-        if R._proc_umask() is not None:
-            # /proc path: must reflect the umask set ABOVE (0o027),
-            # even though the module was imported under a different one
-            assert mode == 0o666 & ~0o027, oct(mode)
-        else:  # pragma: no cover — non-Linux fallback
-            assert mode == 0o666 & ~R._UMASK, oct(mode)
+        # the umask set ABOVE (0o027), though the module was imported
+        # under a different one
+        assert mode == 0o666 & ~0o027, oct(mode)
     finally:
         os.umask(prev)
 
@@ -602,6 +596,14 @@ def test_two_engines_concurrent_build_converges_lease(
     two Engines sharing one warehouse build the same view
     concurrently and converge to one correct index."""
     test_two_engines_concurrent_build_converges(spark, sf_dir, tmp_path)
+
+
+def test_two_engines_same_view_refresh_serializes_lease(
+    spark, sf_dir, tmp_path, lease_mode
+):
+    """The flock-path same-view refresh test, through the lease path:
+    the per-view build lock serializes two Engines without fcntl too."""
+    test_two_engines_same_view_refresh_serializes(spark, sf_dir, tmp_path)
 
 
 def test_sweep_clears_crashed_stealer_debris(tmp_path):
