@@ -530,8 +530,7 @@ def extract_audio_features(media: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame,
-                     batch_rows: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Binary → fixed-width feature vectors via mapInPandas.
 
     One Arrow batch of (media_id, data) in, FEATURE_SCHEMA out.  The

@@ -1,16 +1,18 @@
-"""Spark-side collation encoding: vectorized Arrow/pandas UDFs + Column
-composition.
+"""Spark-side collation encoding: pure Column expressions.
 
 The pure-Python codec lives in ``mapreduce_spark.collate``; this module
-makes it fast inside Spark jobs:
+re-expresses it as JVM-side Column expressions, so a build encodes
+keys with no Python and no Arrow crossing:
 
-- numbers: numpy bit-twiddle (``float64.view(uint64)`` + flip) — one C
-  pass per Arrow batch, no per-row Python in the common case;
-- strings: vectorized pandas ``str.replace`` escaping, with a per-row
-  fallback only for rows containing code points ≥ U+D7FF (the UTF-16
-  code-unit order edge, SURVEY.md §1.3);
-- arrays/composites: JVM-side ``concat`` of the component encodings —
-  the encoding is prefix-compositional by design.
+- numbers: ``Double.doubleToRawLongBits`` via ``reflect`` plus the
+  sign-flip bit transform, rendered as 16 hex digits;
+- strings: the UTF-16 code-unit order transform (SURVEY.md §1.3) as
+  ``regexp_replace`` passes, then terminator escaping as literal
+  ``replace``s;
+- arrays/composites: ``concat`` of the component encodings — the
+  encoding is prefix-compositional by design.
+
+Callers fold NaN/±Infinity to null first (``mapphase.fold_nonfinite``).
 
 Query-time range bounds are encoded driver-side with the pure-Python
 codec into *constants*, so every scan predicate is a plain string
@@ -21,64 +23,10 @@ startkey/endkey to its sorted KV store (SURVEY.md §4 X3).
 
 from __future__ import annotations
 
-import binascii
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from mapreduce_spark.collate import encode_string_body
-
 _TERM = "\x00"
-# chars that force the generic per-row string path (UTF-16 order edge)
-_EDGE_RE = "[^\x00-퟾]"
-
-
-def enc_num_np(values: np.ndarray) -> list[str]:
-    """float64 array → list of 17-char encodings ('3' + 16 hex)."""
-    values = values + 0.0  # -0.0 → 0.0
-    bits = values.view("uint64").copy()
-    neg = (bits >> 63).astype(bool)
-    bits[neg] ^= np.uint64(0xFFFFFFFFFFFFFFFF)
-    bits[~neg] |= np.uint64(0x8000000000000000)
-    h = binascii.hexlify(bits.astype(">u8").tobytes()).decode()
-    return ["3" + h[i : i + 16] for i in range(0, len(h), 16)]
-
-
-def enc_num_series(s: pd.Series) -> pd.Series:
-    """Nullable float series → full encodings; null → '1' (null key)."""
-    mask = s.isna()
-    out = pd.Series(
-        enc_num_np(s.fillna(0.0).to_numpy(dtype="float64")), index=s.index
-    )
-    out[mask] = "1"
-    return out
-
-
-def enc_str_series(s: pd.Series) -> pd.Series:
-    """Nullable string series → full encodings ('4' body '\\x00');
-    null → '1'."""
-    mask = s.isna()
-    base = s.fillna("")
-    # vectorized terminator escaping (identical to collate._esc)
-    esc = (
-        base.str.replace("\x02", "\x02\x02", regex=False)
-        .str.replace("\x01", "\x01\x02", regex=False)
-        .str.replace("\x00", "\x01\x01", regex=False)
-    )
-    edge = base.str.contains(_EDGE_RE, regex=True)
-    if edge.any():
-        # rare path: full per-row codec (astral / U+D7FF.. chars need the
-        # UTF-16 code-unit order transform before escaping)
-        esc = esc.where(~edge, base[edge].map(encode_string_body))
-    # NB: `series + "\x00"` silently drops the NUL (numpy object-array
-    # add treats it as a C-string terminator) — str.cat preserves it.
-    out = ("4" + esc).str.cat([_TERM] * len(esc))
-    out[mask] = "1"
-    return out
-
-
 _ESC_HI = "퟿"
 
 
@@ -86,14 +34,13 @@ def _enc_num_col(col: Column) -> Column:
     """Number encoding as a Column — JVM-side via
     ``Double.doubleToRawLongBits`` reflection (no Arrow crossing).
 
-    Bit transform identical to :func:`enc_num_np`: negative → flip all
-    bits, else set the sign bit; ``+0.0`` first so ``-0.0`` encodes as
-    ``0.0``.  NaN encodes as ``'1'`` (null key), matching the pandas
-    path's ``isna`` mask.  ``reflect`` is CodegenFallback (boxed, not
-    codegen'd) but stays in the JVM: it benchmarks at parity with the
-    vectorized pandas UDF per column and lets whole-stage CSE share
-    the encode between ``key_enc`` and ``key_parts_enc``, which two
-    ArrowEvalPython nodes never could.
+    Bit transform identical to ``collate``'s number codec: negative →
+    flip all bits, else set the sign bit; ``+0.0`` first so ``-0.0``
+    encodes as ``0.0``.  NaN encodes as ``'1'`` (null key).  ``reflect``
+    is CodegenFallback (boxed, not codegen'd) but stays in the JVM: it
+    benchmarked at parity with a vectorized pandas UDF per column and
+    lets whole-stage CSE share the encode between ``key_enc`` and
+    ``key_parts_enc``, which two ArrowEvalPython nodes never could.
     """
     d = col.cast("double") + F.lit(0.0)
     b = F.reflect(

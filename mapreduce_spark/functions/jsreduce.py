@@ -919,12 +919,6 @@ _LIST_METHODS = frozenset(
     "keys values entries fill copyWithin at "
     "findLast findLastIndex toSorted toReversed toSpliced with".split()
 )
-# real JS Array methods OUTSIDE the subset: accessing one fails LOUD
-# (letting it run would silently skip every doc, since real JS would
-# have executed it); names JS Arrays don't have at all fall through to
-# undefined → a faithful runtime TypeError on call.  Empty since the
-# round-8 ES2023 additions — kept for the dispatch structure.
-_LIST_METHODS_JS = frozenset(())
 _STR_METHODS = frozenset(
     "toLowerCase toUpperCase substring substr slice split indexOf "
     "lastIndexOf charAt charCodeAt trim replace concat startsWith "
@@ -1401,13 +1395,9 @@ def _eval(e: Any, env: dict) -> Any:
         if isinstance(obj, list):
             if name in _LIST_METHODS:
                 return ("__method__", obj, name)
-            if name in _LIST_METHODS_JS:
-                # real JS would run this — fail LOUD rather than let a
-                # .sort()/.every() ddoc silently skip every doc
-                raise JSReduceError(
-                    f"Array.{name} is outside the subset"
-                )
-            return _UNDEF  # not an Array member in JS either
+            # any other name reads as undefined: calling it is a
+            # runtime TypeError
+            return _UNDEF
         if isinstance(obj, str):
             if name in _STR_METHODS:
                 return ("__method__", obj, name)

@@ -10,9 +10,9 @@ Two execution paths, Spark-first:
 
 1. **Structured fast path** (``MapSpec``, ``build_view_structured_on``):
    when the map function is expressible as column expressions — which
-   covers every declared fixture view — the whole build is JVM-side
-   except the collation encoding (vectorized Arrow/pandas UDFs over
-   one column each).
+   covers every declared fixture view — the whole build is JVM-side,
+   the collation encoding included (``functions/encode.py`` Column
+   expressions).
    Filters in ``MapSpec.where`` reference *raw* parquet columns, so
    Catalyst pushes them into the scan; unused columns are pruned.
    This is the 100 TB path: no Python row loop anywhere.
@@ -392,6 +392,19 @@ def _json_sanitize(v: Any) -> Any:
     return v
 
 
+def value_nums(value: Any) -> tuple[float | None, list[float] | None]:
+    """(value_num, value_num_arr) of a sanitized value — a number, or a
+    non-empty array of numbers — for the native aggregates."""
+    def is_num(x: Any) -> bool:
+        return isinstance(x, (int, float)) and not isinstance(x, bool)
+
+    if is_num(value):
+        return float(value), None
+    if isinstance(value, list) and value and all(map(is_num, value)):
+        return None, [float(x) for x in value]
+    return None, None
+
+
 def emit_to_view_row(doc_id: str, ord_: int, key: Any, value: Any) -> dict:
     """One emit → one VIEW_SCHEMA row (dict). Pure Python, reused by the
     incremental maintainer and tests."""
@@ -414,21 +427,7 @@ def emit_to_view_row(doc_id: str, ord_: int, key: Any, value: Any) -> dict:
         if value is None
         else json.dumps(value, separators=(",", ":"), ensure_ascii=False)
     )
-    value_num = (
-        float(value)
-        if isinstance(value, (int, float)) and not isinstance(value, bool)
-        else None
-    )
-    value_num_arr = None
-    if (
-        isinstance(value, list)
-        and value
-        and all(
-            isinstance(x, (int, float)) and not isinstance(x, bool)
-            for x in value
-        )
-    ):
-        value_num_arr = [float(x) for x in value]
+    value_num, value_num_arr = value_nums(value)
     value_link_id = None
     if isinstance(value, dict) and isinstance(value.get("_id"), str):
         value_link_id = value["_id"]

@@ -29,10 +29,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_spark.collate import MAX_ENC, to_indexable_string
 from mapreduce_spark.plans.spec import UNSET, QueryOptions
-from mapreduce_spark.operators.reduce import (
-    reduce_builtin,
-    reduce_custom,
-)
+from mapreduce_spark.operators.reduce import reduce_rows
 
 # Small-result sort fusion (VERDICT r10 #1): when registry stats bound
 # the sorted result set at or below this many rows, the global orderBy
@@ -177,22 +174,7 @@ def _keys_lookup(view: DataFrame, keys: list, descending: bool,
     RDD) carrying the request ordinal, which re-introduces request
     order and duplicate keys.
     """
-    spark = view.sparkSession
-    pairs = [(i, to_indexable_string(k)) for i, k in enumerate(keys)]
-    encs = sorted({e for _, e in pairs})
-    keys_df = spark.range(1).select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("_key_ord"),
-                        F.lit(e).alias("_key_enc"),
-                    )
-                    for i, e in pairs
-                ]
-            )
-        )
-    )
+    encs, keys_df = _request_keys(view, keys)
     rows = (
         view.filter(F.col("key_enc").isin(encs))
         .join(
@@ -206,6 +188,28 @@ def _keys_lookup(view: DataFrame, keys: list, descending: bool,
     # _key_ord is kept so callers can re-establish request order after a
     # doc join; the engine's final column selection drops it.
     return fused_sort(rows, order, rows_bound, narrow=narrow)
+
+
+def _request_keys(view: DataFrame,
+                  keys: list) -> tuple[list[str], DataFrame]:
+    """The ``isin`` list of a keys= request (its distinct encodings,
+    sorted) and its request-ordinal table (``_key_ord``, ``_key_enc``):
+    an all-literal inline table, so a LocalTableScan, no Python RDD."""
+    pairs = [(i, to_indexable_string(k)) for i, k in enumerate(keys)]
+    keys_df = view.sparkSession.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("_key_ord"),
+                        F.lit(e).alias("_key_enc"),
+                    )
+                    for i, e in pairs
+                ]
+            )
+        )
+    )
+    return sorted({e for _, e in pairs}), keys_df
 
 
 def _paginate(rows: DataFrame, opts: QueryOptions) -> DataFrame:
@@ -230,83 +234,47 @@ def query_reduced(
     repeated, absent keys omitted — re-established here by joining the
     grouped rows back to the request-ordinal table.
     """
-    if opts.keys is not UNSET:
-        return _keys_reduced(view, opts, reduce_def, value_hint,
-                             observed_width)
-    rows = scan_rows(view, opts)
-    if callable(reduce_def):
-        red = reduce_custom(
-            rows,
-            reduce_def,
-            grouped=opts.is_grouped,
-            group_level=opts.group_level,
-        )
+    keyed = opts.keys is not UNSET
+    if keyed:
+        encs, keys_df = _request_keys(view, opts.keys)
+        rows = view.filter(F.col("key_enc").isin(encs))
     else:
-        red = reduce_builtin(
-            rows,
-            reduce_def,
-            grouped=opts.is_grouped,
-            group_level=opts.group_level,
-            value_hint=value_hint,
-            observed_width=observed_width,
+        rows = scan_rows(view, opts)
+    red = reduce_rows(
+        rows,
+        reduce_def,
+        grouped=opts.is_grouped,
+        group_level=opts.group_level,
+        value_hint=value_hint,
+        observed_width=observed_width,
+    )
+    if keyed:
+        # request order unconditionally: upstream processes `keys` in
+        # the order given regardless of descending (matching
+        # _keys_lookup); ≤ len(keys) result rows by construction, so
+        # always fused
+        red = red.join(
+            F.broadcast(keys_df), red["gk_enc"] == keys_df["_key_enc"]
         )
-    order = [
-        F.col("gk_enc").desc() if opts.descending else F.col("gk_enc")
-    ]
-    # grouped output is bounded by the view's distinct-key count
-    # (group_level truncation only merges groups); a global reduce is
-    # exactly one row.  ``narrow=True``: the coalesce(1) sits directly
-    # above the aggregation exchange, so map-side partial aggregation
-    # and scan parallelism are untouched — only the (tiny) final
-    # aggregate + sort run single-task, dropping the sort's range
-    # exchange AND its bounds-sampling job from the plan.
-    bound = keys_bound if opts.is_grouped else 1
-    if opts.limit is None:
+        order, bound = [F.col("_key_ord")], len(opts.keys)
+    else:
+        order = [
+            F.col("gk_enc").desc() if opts.descending else F.col("gk_enc")
+        ]
+        # grouped output is bounded by the view's distinct-key count
+        # (group_level truncation only merges groups); a global reduce
+        # is exactly one row
+        bound = keys_bound if opts.is_grouped else 1
+    # ``narrow=True``: the coalesce(1) sits directly above the
+    # aggregation exchange, so map-side partial aggregation and scan
+    # parallelism are untouched — only the (tiny) final aggregate, the
+    # keys= broadcast join and the sort run single-task, dropping the
+    # sort's range exchange AND its bounds-sampling job from the plan.
+    if keyed or opts.limit is None:
         red = fused_sort(red, order, bound, narrow=True)
     else:
         red = red.orderBy(*order)
-    return _paginate(red, opts).drop("gk_enc")
-
-
-def _keys_reduced(view: DataFrame, opts: QueryOptions, reduce_def: Any,
-                  value_hint: tuple | None,
-                  observed_width: int | None = None) -> DataFrame:
-    spark = view.sparkSession
-    pairs = [
-        (i, to_indexable_string(k)) for i, k in enumerate(opts.keys)
-    ]
-    encs = sorted({e for _, e in pairs})
-    rows = view.filter(F.col("key_enc").isin(encs))
-    if callable(reduce_def):
-        red = reduce_custom(rows, reduce_def, grouped=True,
-                            group_level=None)
-    else:
-        red = reduce_builtin(rows, reduce_def, grouped=True,
-                             group_level=None, value_hint=value_hint,
-                             observed_width=observed_width)
-    keys_df = spark.range(1).select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("_key_ord"),
-                        F.lit(e).alias("_key_enc"),
-                    )
-                    for i, e in pairs
-                ]
-            )
-        )
-    )
-    # request order unconditionally: upstream processes `keys` in the
-    # order given regardless of descending (matching _keys_lookup)
-    out = red.join(
-        F.broadcast(keys_df), red["gk_enc"] == keys_df["_key_enc"]
-    )
-    # ≤ len(keys) result rows by construction: always fused.  narrow —
-    # the coalesce(1) collapses only the broadcast join + final
-    # aggregate above the agg exchange into one task.
-    out = fused_sort(out, [F.col("_key_ord")], len(pairs), narrow=True)
-    return _paginate(out, opts).drop("gk_enc", "_key_enc", "_key_ord")
+    return _paginate(red, opts).drop("gk_enc", "_key_enc", "_key_ord")
 
 
 def attach_docs(rows: DataFrame, docs: DataFrame,

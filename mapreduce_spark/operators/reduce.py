@@ -1,5 +1,7 @@
-"""Reduce phase: builtin reductions as native Catalyst aggregates +
-custom Python reduce as a two-phase (rereduce-capable) aggregation.
+"""Reduce phase: one dispatch, ``reduce_rows``, for every reduce read —
+builtin names as native Catalyst aggregates, custom functions as a
+two-phase (rereduce-capable) aggregation.  ``query_reduced`` calls it
+for range and ``keys=`` reads alike.
 
 Reference semantics (SURVEY.md §2 A1-A8, U2, U3; upstream
 ``pouchdb-abstract-mapreduce/src/index.js#reduceView``, ``builtInReduce``):
@@ -13,15 +15,22 @@ Reference semantics (SURVEY.md §2 A1-A8, U2, U3; upstream
   runs a real distributed partial(+map-side combine) → final rereduce,
   a deliberate, documented semantic strengthening (reduce fns must be
   rereduce-safe — exactly the contract CouchDB documents);
-- extension: ``_approx_count_distinct`` (CouchDB has it, PouchDB does
-  not) → native ``approx_count_distinct`` over the value.
+- extensions: ``_approx_count_distinct`` (CouchDB has it, PouchDB does
+  not) → native ``approx_count_distinct`` over the key; ``_min``,
+  ``_max`` and ``_sum_count``, the lowering targets of common JS
+  reduces (functions/jsreduce.py).
 
-Builtins never leave the JVM: they compile to whole-stage-codegen'd
-hash aggregates with map-side partial aggregation — Spark's automatic
-partial/final split is the distributed analog of rereduce (SURVEY §4
-X9/X10).  Array ``_sum`` avoids a posexplode+regroup double shuffle by
-summing per-position with ``element_at`` after one cheap max-size
-lookup, keeping a single shuffle.
+The builtins are one table, ``_BUILTINS``: each name's aggregates,
+ending in one REDUCED_SCHEMA projection of one of three shapes —
+scalar (``_count``, ``_approx_count_distinct``, ``_min``, ``_max``,
+``_sum`` over numbers), object (``_stats``, ``_sum_count``) or array
+(``_sum`` over arrays).  They never leave the JVM: they compile to
+whole-stage-codegen'd hash aggregates with map-side partial
+aggregation — Spark's automatic partial/final split is the distributed
+analog of rereduce (SURVEY §4 X9/X10).  Array ``_sum`` avoids a
+posexplode+regroup double shuffle by summing per-position with
+``element_at`` after one cheap max-size lookup, keeping a single
+shuffle.
 """
 
 from __future__ import annotations
@@ -35,9 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mapreduce_spark.errors import BuiltInError
-
-BUILTIN_NAMES = ("_sum", "_count", "_stats", "_approx_count_distinct",
-                 "_min", "_max", "_sum_count")
+from mapreduce_spark.operators.mapphase import _json_sanitize, value_nums
 
 _TERM = "\x00"
 
@@ -52,23 +59,61 @@ REDUCED_SCHEMA = T.StructType(
 )
 
 
+# The builtins as one table: name → its aggregates over ``value_num``,
+# keyed by output name.  A lone ``value_num`` aggregate is a scalar
+# result; ``_stats`` and ``_sum_count`` are objects with one JSON field
+# per aggregate, in order; ``_sum`` over arrays is the third shape (see
+# ``_sum_array_aggs``).
+#
+# ``_min``/``_max`` are engine extensions (like
+# ``_approx_count_distinct``) and the lowering targets for JS
+# ``Math.min/max.apply(null, values)`` and the canonical min/max
+# for-loop; ``_sum_count`` lowers the canonical JS ``{sum: sum(values),
+# count: values.length}`` average accumulator (functions/jsreduce.py).
+# They read numeric values only: non-numeric rows carry a null
+# ``value_num``, which the JVM aggregate ignores — the documented
+# divergence from JS NaN poisoning, same class as the
+# ``values.length`` → ``_count`` lowering.
+_BUILTINS: dict[str, Callable[[Column], dict[str, Column]]] = {
+    "_sum": lambda v: {"value_num": F.sum(v)},
+    "_count": lambda v: {"value_num": F.count(F.lit(1)).cast("double")},
+    "_stats": lambda v: {
+        "sum": F.sum(v), "count": F.count(v).cast("double"),
+        "min": F.min(v), "max": F.max(v), "sumsqr": F.sum(v * v),
+    },
+    "_approx_count_distinct": lambda v: {
+        "value_num": F.approx_count_distinct("key_enc").cast("double"),
+    },
+    "_min": lambda v: {"value_num": F.min(v)},
+    "_max": lambda v: {"value_num": F.max(v)},
+    "_sum_count": lambda v: {
+        "sum": F.sum(v), "count": F.count(v).cast("double"),
+    },
+}
+
+
 def check_reduce(reduce_def: Any) -> None:
     """Unknown '_'-prefixed builtin → BuiltInError (upstream parity)."""
     if isinstance(reduce_def, str) and reduce_def.startswith("_"):
-        if reduce_def not in BUILTIN_NAMES:
+        if reduce_def not in _BUILTINS:
             raise BuiltInError(f"{reduce_def} is not a supported reduce function")
     elif reduce_def is not None and not callable(reduce_def):
         raise BuiltInError(f"invalid reduce function: {reduce_def!r}")
 
 
-def group_key_cols(group_level: int | None) -> tuple[Column, Column]:
+def group_key_cols(grouped: bool,
+                   group_level: int | None) -> tuple[Column, Column]:
     """(gk_enc, gk_json) grouping expressions over VIEW_SCHEMA columns.
 
-    group_level=N on an array key groups by ``key[:N]`` — thanks to the
-    prefix-compositional encoding this is a pure-JVM concat of the first
-    N element encodings (SURVEY §2 A6).  Non-array keys group by the key
-    itself; group_level=None means exact-key grouping (group=true).
+    ``grouped=False`` is the global reduce: one group whose key is null
+    (SURVEY §2 A7).  group_level=N on an array key groups by
+    ``key[:N]`` — thanks to the prefix-compositional encoding this is a
+    pure-JVM concat of the first N element encodings (SURVEY §2 A6).
+    Non-array keys group by the key itself; group_level=None means
+    exact-key grouping (group=true).
     """
+    if not grouped:
+        return F.lit("1"), F.lit("null")
     if group_level is None:
         return F.col("key_enc"), F.col("key_json")
     n = group_level
@@ -93,16 +138,17 @@ def group_key_cols(group_level: int | None) -> tuple[Column, Column]:
     return gk_enc, gk_json
 
 
-def reduce_builtin(
+def reduce_rows(
     rows: DataFrame,
-    name: str,
+    reduce_def: Any,
     *,
     grouped: bool,
     group_level: int | None,
     value_hint: tuple | None = None,
     observed_width: int | None = None,
 ) -> DataFrame:
-    """Builtin reduce → REDUCED_SCHEMA DataFrame (one row per group).
+    """Reduce ``rows`` (VIEW_SCHEMA) → REDUCED_SCHEMA, one row per group:
+    a callable runs ``reduce_custom``, a builtin name its aggregates.
 
     ``value_hint``: static value-shape info from the view definition —
     ``('num',)`` or ``('num_arr', width)``.  With a hint, ``_sum`` skips
@@ -114,107 +160,58 @@ def reduce_builtin(
     skips the probe scan but KEEPS the value guard (a Python map fn can
     emit anything; error parity must still hold at execution).
     """
-    if name == "_sum" and value_hint is None:
-        rows = _guard_sum_values(rows)
-    if grouped:
-        gk_enc, gk_json = group_key_cols(group_level)
-    else:  # global reduce: single group, key = null (SURVEY §2 A7)
-        gk_enc, gk_json = F.lit("1"), F.lit("null")
-    g = rows.groupBy(
+    if callable(reduce_def):
+        return reduce_custom(rows, reduce_def, grouped=grouped,
+                             group_level=group_level)
+    if reduce_def not in _BUILTINS:
+        raise BuiltInError(f"{reduce_def} is not a supported reduce function")
+    width = 0
+    if reduce_def == "_sum":
+        if value_hint is None:
+            rows = _guard_sum_values(rows)
+        width = _sum_width(rows, value_hint, observed_width)
+    aggs = (_sum_array_aggs(width) if width > 0
+            else _BUILTINS[reduce_def](F.col("value_num")))
+    gk_enc, gk_json = group_key_cols(grouped, group_level)
+    agg = rows.groupBy(
         gk_enc.alias("gk_enc"), gk_json.alias("key_json")
+    ).agg(*[c.alias(n) for n, c in aggs.items()])
+    fields = [F.col(n) for n in aggs]
+    null_num = F.lit(None).cast("double")
+    null_arr = F.lit(None).cast("array<double>")
+    if width > 0:  # array
+        num, arr = null_num, F.array(*fields)
+        value_json = F.to_json(arr)
+    elif list(aggs) == ["value_num"]:  # scalar
+        num, arr = F.col("value_num"), null_arr
+        value_json = _num_json(num)
+    else:  # object
+        num, arr = null_num, null_arr
+        value_json = F.to_json(F.struct(*fields))
+    return agg.select(
+        "gk_enc",
+        "key_json",
+        value_json.alias("value_json"),
+        num.alias("value_num"),
+        arr.alias("value_num_arr"),
     )
 
-    null_arr = F.lit(None).cast("array<double>")
-    if name == "_count":
-        agg = g.agg(F.count(F.lit(1)).cast("double").alias("value_num"))
-        return agg.select(
-            "gk_enc",
-            "key_json",
-            _num_json(F.col("value_num")).alias("value_json"),
-            "value_num",
-            null_arr.alias("value_num_arr"),
+
+def _sum_array_aggs(width: int) -> dict[str, Column]:
+    """``_sum`` over arrays: one sum per position.  A scalar value v
+    counts as [v] (CouchDB sum() parity); ``try_element_at`` zero-pads
+    shorter arrays (plain element_at ERRORS on out-of-bounds under ANSI
+    mode, Spark 4's default)."""
+    v = F.col("value_num")
+    eff = F.coalesce(
+        F.col("value_num_arr"), F.when(v.isNotNull(), F.array(v))
+    )
+    return {
+        f"_s{i}": F.sum(
+            F.coalesce(F.try_element_at(eff, F.lit(i + 1)), F.lit(0.0))
         )
-    if name == "_approx_count_distinct":
-        agg = g.agg(
-            F.approx_count_distinct("key_enc").cast("double").alias(
-                "value_num"
-            )
-        )
-        return agg.select(
-            "gk_enc",
-            "key_json",
-            _num_json(F.col("value_num")).alias("value_json"),
-            "value_num",
-            null_arr.alias("value_num_arr"),
-        )
-    if name == "_stats":
-        v = F.col("value_num")
-        agg = g.agg(
-            F.sum(v).alias("s"),
-            F.count(v).cast("double").alias("c"),
-            F.min(v).alias("mn"),
-            F.max(v).alias("mx"),
-            F.sum(v * v).alias("sq"),
-        )
-        stats = F.struct(
-            F.col("s").alias("sum"),
-            F.col("c").alias("count"),
-            F.col("mn").alias("min"),
-            F.col("mx").alias("max"),
-            F.col("sq").alias("sumsqr"),
-        )
-        return agg.select(
-            "gk_enc",
-            "key_json",
-            F.to_json(stats).alias("value_json"),
-            F.lit(None).cast("double").alias("value_num"),
-            null_arr.alias("value_num_arr"),
-        )
-    if name == "_sum_count":
-        # engine extension: the lowering target for the canonical JS
-        # {sum: sum(values), count: values.length} average accumulator
-        # (functions/jsreduce.py) — a _stats subset, one hash agg with
-        # map-side partials.  Numeric values only (same documented
-        # divergence class as _min/_max: the interpreter would throw
-        # on non-numbers where the JVM agg skips nulls).
-        v = F.col("value_num")
-        agg = g.agg(
-            F.sum(v).alias("s"),
-            F.count(v).cast("double").alias("c"),
-        )
-        sc = F.struct(
-            F.col("s").alias("sum"),
-            F.col("c").alias("count"),
-        )
-        return agg.select(
-            "gk_enc",
-            "key_json",
-            F.to_json(sc).alias("value_json"),
-            F.lit(None).cast("double").alias("value_num"),
-            null_arr.alias("value_num_arr"),
-        )
-    if name in ("_min", "_max"):
-        # engine extension (like _approx_count_distinct) and the
-        # lowering target for JS ``Math.min/max.apply(null, values)``
-        # and the canonical min/max for-loop (functions/jsreduce.py).
-        # Numeric values only: non-numeric rows carry a null value_num,
-        # which the JVM aggregate ignores — the documented divergence
-        # from JS NaN poisoning, same class as the values.length →
-        # _count lowering.
-        v = F.col("value_num")
-        agg = g.agg(
-            (F.min(v) if name == "_min" else F.max(v)).alias("value_num")
-        )
-        return agg.select(
-            "gk_enc",
-            "key_json",
-            _num_json(F.col("value_num")).alias("value_json"),
-            "value_num",
-            null_arr.alias("value_num_arr"),
-        )
-    if name == "_sum":
-        return _reduce_sum(rows, g, value_hint, observed_width)
-    raise BuiltInError(f"{name} is not a supported reduce function")
+        for i in range(width)
+    }
 
 
 def _guard_sum_values(rows: DataFrame) -> DataFrame:
@@ -251,9 +248,9 @@ def _num_json(c: Column) -> Column:
     return j.substr(F.lit(2), F.length(j) - 2)
 
 
-def _reduce_sum(rows: DataFrame, grouped, value_hint=None,
-                observed_width=None) -> DataFrame:
-    """_sum over numbers and/or element-wise arrays, single shuffle.
+def _sum_width(rows: DataFrame, value_hint: tuple | None,
+               observed_width: int | None) -> int:
+    """Array width of a ``_sum``; ≤ 0 sums numbers only.
 
     CouchDB semantics (upstream ``pouchdb-mapreduce-utils#sum``): mixed
     numbers+arrays treat a number as [number]; shorter arrays are
@@ -263,50 +260,15 @@ def _reduce_sum(rows: DataFrame, grouped, value_hint=None,
     dynamic views only — one arity probe scan.  Avoids posexplode +
     double shuffle either way.
     """
-    null_arr = F.lit(None).cast("array<double>")
     if value_hint is not None:
-        width = value_hint[1] if value_hint[0] == "num_arr" else -1
-    elif observed_width is not None:
-        width = observed_width
-    else:
-        # unpersisted dynamic views: probe array arity (one
-        # column-pruned scan); persisted views never reach here — the
-        # registry records the width at materialization time
-        probe = rows.agg(
-            F.max(F.size("value_num_arr")).alias("w")
-        ).collect()[0]
-        width = probe["w"] if probe["w"] is not None else -1
-    if width is None or width <= 0:
-        agg = grouped.agg(F.sum("value_num").alias("value_num"))
-        return agg.select(
-            "gk_enc",
-            "key_json",
-            _num_json(F.col("value_num")).alias("value_json"),
-            "value_num",
-            null_arr.alias("value_num_arr"),
-        )
-    # array path: scalar value v counts as [v] (CouchDB sum() parity)
-    eff = F.coalesce(
-        F.col("value_num_arr"),
-        F.when(F.col("value_num").isNotNull(), F.array(F.col("value_num"))),
-    )
-    # try_element_at: shorter arrays zero-pad (plain element_at ERRORS
-    # on out-of-bounds under ANSI mode, Spark 4's default)
-    sums = [
-        F.sum(
-            F.coalesce(F.try_element_at(eff, F.lit(i + 1)), F.lit(0.0))
-        ).alias(f"_s{i}")
-        for i in range(width)
-    ]
-    agg = grouped.agg(*sums)
-    arr = F.array(*[F.col(f"_s{i}") for i in range(width)])
-    return agg.select(
-        "gk_enc",
-        "key_json",
-        F.to_json(arr).alias("value_json"),
-        F.lit(None).cast("double").alias("value_num"),
-        arr.alias("value_num_arr"),
-    )
+        return value_hint[1] if value_hint[0] == "num_arr" else -1
+    if observed_width is not None:
+        return observed_width
+    # unpersisted dynamic views: probe array arity (one column-pruned
+    # scan); persisted views never reach here — the registry records
+    # the width at materialization time
+    probe = rows.agg(F.max(F.size("value_num_arr")).alias("w")).collect()[0]
+    return probe["w"] if probe["w"] is not None else -1
 
 
 # ---------------------------------------------------------------------------
@@ -319,26 +281,17 @@ def reduce_custom(
     *,
     grouped: bool,
     group_level: int | None,
-    salt_partials: int | None = None,
 ) -> DataFrame:
     """Distributed custom reduce (SURVEY §2 A4/U2).
 
     Phase 1 (map-side combine): within each Arrow batch, group and call
     ``reduce_fn(keys, values, rereduce=False)`` with keys=[[key, id]…].
     Phase 2 (final): shuffle the partials by group key and call
-    ``reduce_fn(None, partials, rereduce=True)``.
-
-    ``salt_partials=N``: insert a salted intermediate rereduce — group
-    partials by (key, hash % N) and fold before the final fold.  Use
-    when one group dominates the corpus (a hot key at 100 TB produces
-    one partial per Arrow batch; the salt tier fans that fold across N
-    tasks instead of one).  Requires a rereduce-safe fn, which the
-    contract already demands.
+    ``reduce_fn(None, partials, rereduce=True)``.  The final result
+    takes the emit rule (NaN/±Infinity → null) and the emit's numeric
+    value columns.
     """
-    if grouped:
-        gk_enc, gk_json = group_key_cols(group_level)
-    else:
-        gk_enc, gk_json = F.lit("1"), F.lit("null")
+    gk_enc, gk_json = group_key_cols(grouped, group_level)
     staged = rows.select(
         gk_enc.alias("gk_enc"),
         gk_json.alias("key_json"),
@@ -391,66 +344,20 @@ def reduce_custom(
 
     def phase2(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = [json.loads(p) for p in pdf["partial_json"]]
-        final = reduce_fn(None, vals, True)
-        fj = json.dumps(final, separators=(",", ":"), ensure_ascii=False)
-        num = (
-            float(final)
-            if isinstance(final, (int, float))
-            and not isinstance(final, bool)
-            else None
-        )
-        arr = None
-        if isinstance(final, list) and final and all(
-            isinstance(x, (int, float)) and not isinstance(x, bool)
-            for x in final
-        ):
-            arr = [float(x) for x in final]
+        final = _json_sanitize(reduce_fn(None, vals, True))
+        num, arr = value_nums(final)
         return pd.DataFrame(
             [
                 {
                     "gk_enc": pdf["gk_enc"].iloc[0],
                     "key_json": pdf["key_json"].iloc[0],
-                    "value_json": fj,
+                    "value_json": json.dumps(
+                        final, separators=(",", ":"), ensure_ascii=False
+                    ),
                     "value_num": num,
                     "value_num_arr": arr,
                 }
             ]
-        )
-
-    if salt_partials:
-        salt_schema = T.StructType(
-            [
-                T.StructField("gk_enc", T.StringType(), False),
-                T.StructField("key_json", T.StringType(), False),
-                T.StructField("partial_json", T.StringType(), True),
-            ]
-        )
-
-        def fold_salted(pdf: pd.DataFrame) -> pd.DataFrame:
-            vals = [json.loads(p) for p in pdf["partial_json"]]
-            part = reduce_fn(None, vals, True)
-            return pd.DataFrame(
-                [
-                    {
-                        "gk_enc": pdf["gk_enc"].iloc[0],
-                        "key_json": pdf["key_json"].iloc[0],
-                        "partial_json": json.dumps(
-                            part, separators=(",", ":"),
-                            ensure_ascii=False,
-                        ),
-                    }
-                ]
-            )
-
-        salted = partials.withColumn(
-            "_salt", F.pmod(F.xxhash64("partial_json"),
-                            F.lit(salt_partials))
-        )
-        partials = salted.groupBy(
-            "gk_enc", "key_json", "_salt"
-        ).applyInPandas(
-            lambda pdf: fold_salted(pdf.drop(columns=["_salt"])),
-            salt_schema,
         )
 
     return partials.groupBy("gk_enc", "key_json").applyInPandas(
